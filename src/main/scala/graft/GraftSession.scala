@@ -7,8 +7,15 @@ import org.apache.spark.sql.SparkSession
   * shuffle parallelism = cores (not the 200 default), UTC, the
   * TIMESTAMP(NANOS) legacy read, and the graft SQL extensions
   * registered so `norm_quantile`/`gamma_cdf`/`cosine_sim` work from
-  * plain SQL too. */
+  * plain SQL too, and generated code compiled once per JVM. */
 object GraftSession {
+  /** Bound of Spark's generated-class cache. A first pass over the
+    * whole query registry at sf0.1 compiles 3,101 classes, the eleven
+    * benchmark batch ops about 235 (BENCH_NOTES, "Codegen cache"), so
+    * this holds the full working set with headroom. Holding it costs
+    * about 23 MB of metaspace. */
+  val CodegenCacheEntries = 4096
+
   def builder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
@@ -34,9 +41,8 @@ object GraftSession {
       // cluster scale heavy stages are governed by
       // advisoryPartitionSizeInBytes (unchanged, 64m) — the floor only
       // binds on tiny shuffles (report tails), where extra parallelism
-      // is harmless. Env-tunable for cluster profiles.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE_BYTES", "64k"))
+      // is harmless.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       // InferFiltersFromGenerate synthesizes `isnotnull(arr) AND
       // size(arr) > 0` under every explode; when the array is a
       // COMPUTED column (the tokenize/shingle projections all over
@@ -53,6 +59,22 @@ object GraftSession {
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .config("spark.ui.enabled", "false")
+      // Compile each generated class once per JVM. A cron re-runs the
+      // same query shapes, so every Janino compile after the first is a
+      // cache miss with one of three causes: the cache bound (Spark's
+      // default of 100 entries is below one batch pass), the stage id
+      // in `GeneratedIteratorForCodegenStage<N>` (AQE numbers stages in
+      // the order their inputs finish, so the same pipeline's source
+      // differs from run to run), and the per-session artifact
+      // classloader in the cache key (every `Trigger.AvailableNow` tick
+      // runs on a cloned session). graft adds no session artifacts, so
+      // sharing the classloader changes nothing else. `CodeGenerator`
+      // reads the bound once per JVM, when it is first used: no codegen
+      // may run before the first session exists (CodegenReuseSpec holds
+      // this).
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.codegen.useIdInClassName", "false")
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .withExtensions(new graft.expressions.GraftExtensions)
 
   def create(cpus: String): SparkSession = {

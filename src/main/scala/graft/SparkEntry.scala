@@ -795,25 +795,18 @@ object SparkEntry {
     * anchor segments interpolated linearly; the normal branch is the
     * closed form. */
   private def biasParametricSql: String = {
-    // the E0 suffix forces DOUBLE inference — a short first-row
-    // literal like 45.0 would otherwise type the VALUES column
-    // DECIMAL and overflow on later rows
-    def d(x: Double): String = {
-      val s = java.lang.Double.toString(x)
-      if (s.contains("E") || s.contains("e")) s else s + "E0"
-    }
     val parRows = graft.operators.Climate.pretrainedParametric.map {
       case (g, muF, sdF, muO, sdO, aF, bF, aO, bO) =>
-        s"($g, ${d(muF)}, ${d(sdF)}, ${d(muO)}, ${d(sdO)}, " +
-          s"${d(aF)}, ${d(bF)}, ${d(aO)}, ${d(bO)})"
+        s"($g, ${dLit(muF)}, ${dLit(sdF)}, ${dLit(muO)}, ${dLit(sdO)}, " +
+          s"${dLit(aF)}, ${dLit(bF)}, ${dLit(aO)}, ${dLit(bO)})"
     }.mkString(",\n  ")
     val segRows = graft.operators.Climate.pretrainedGammaAnchors.flatMap {
       case (g, as) => as.zip(as.tail).map { case ((pl, ql), (ph, qh)) =>
-        s"($g, ${d(pl)}, ${d(ql)}, ${d(ph)}, ${d(qh)})"
+        s"($g, ${dLit(pl)}, ${dLit(ql)}, ${dLit(ph)}, ${dLit(qh)})"
       }
     }.mkString(",\n  ")
-    val p0 = d(graft.operators.Climate.ParamQGrid.head)
-    val p1 = d(graft.operators.Climate.ParamQGrid.last)
+    val p0 = dLit(graft.operators.Climate.ParamQGrid.head)
+    val p1 = dLit(graft.operators.Climate.ParamQGrid.last)
     s"""WITH RECURSIVE par(grp, mu_f, sd_f, mu_o, sd_o, a_f, b_f, a_o, b_o)
       |  AS (VALUES
       |  $parRows),
@@ -1372,16 +1365,16 @@ object SparkEntry {
 
   /** The [[graft.operators.Climate.biasBsplineApply]] oracle: the
     * pretrained (t, c, dmin, dmax) rows rendered as literal DuckDB
-    * lists (shortest-round-trip `Double.toString`, parsed back to
-    * the identical bits) and `splev`'s unrolled k=3 de Boor
-    * triangle in the canonical op order of
+    * DOUBLE lists ([[dLit]]; bare decimals would type the lists
+    * DECIMAL(3,1)[] and DECIMAL(19,16)[], and DuckDB's DECIMAL→DOUBLE
+    * cast is not correctly rounded) and `splev`'s unrolled k=3 de
+    * Boor triangle in the canonical op order of
     * [[graft.functions.SplineKernels.splev]]. */
   private def bsplineApplyOracle: String = {
-    def d(x: Double): String = java.lang.Double.toString(x)
     val rows = graft.operators.Climate.pretrainedBspline.map {
       case (g, t, c, dmin, dmax) =>
-        s"($g, [${t.map(d).mkString(", ")}], [${c.map(d).mkString(", ")}], " +
-          s"${d(dmin)}, ${d(dmax)})"
+        s"($g, [${t.map(dLit).mkString(", ")}], [${c.map(dLit).mkString(", ")}], " +
+          s"${dLit(dmin)}, ${dLit(dmax)})"
     }.mkString(",\n  ")
     s"""WITH par(grp, t, c, dmin, dmax) AS (VALUES
       |  $rows),
@@ -1423,7 +1416,7 @@ object SparkEntry {
       |  FROM ff)
       |SELECT event_id, CAST(grp AS BIGINT) AS grp,
       |  round(x, 2) AS fcst_value, oob,
-      |  floor(raw * 1e4 + 0.5) / 1e4 AS corrected
+      |  floor(raw * 1e4 + 0.5E0) / 1e4 AS corrected
       |FROM ss""".stripMargin
   }
 

@@ -771,6 +771,17 @@ class ClimateSpec extends SparkSpec {
     assert(got.map(_.getAs[String]("oob")).toSet === Set("low", "high", "in"))
   }
 
+  test("bias_bspline_apply oracle: every fractional literal carries an exponent") {
+    // DuckDB types a bare decimal such as 33.85 as DECIMAL, and its
+    // DECIMAL→DOUBLE cast is not correctly rounded: at sf0.1 two rows
+    // of the oracle then missed the engine's exact result by 1e-4
+    val sql = SparkEntry.oracleSql("bias_bspline_apply")
+    val bare = """(?<![\w.])\d+\.\d+(?![\d.eE])""".r.findAllIn(sql).toList
+    assert(bare.isEmpty, s"bare decimal literals: ${bare.take(5)}")
+    val params = Climate.pretrainedBspline.map { case (_, t, c, _, _) => t.size + c.size + 2 }.sum
+    assert("""\d\.\d+E-?\d+""".r.findAllIn(sql).size >= params)
+  }
+
   test("bsplineTransfer: fit/apply split — anchors interpolated, edge deltas equal the FC family, parquet round-trip") {
     val sf01 = "/root/testdata/sf0.01"
     val ev = Tables.events(spark, sf01)
