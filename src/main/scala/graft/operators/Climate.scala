@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.expressions.StatColumns
+import graft.operators.TimeSeries.{byDay, dayLabel}
 
 /** Geo/climate analytics — the reference's derived products
   * re-expressed as distributed plans (SURVEY §2 ops 12-22).
@@ -19,6 +20,19 @@ import graft.expressions.StatColumns
 object Climate {
 
   private val evOrder = Seq(col("ts"), col("event_id"))
+
+  /** Exact integer cent sum of a group's readings (see
+    * [[TimeSeries.cents]]): the numerator of every exact mean here. */
+  private val cents = sum(TimeSeries.cents(col("value")))
+
+  /** Weekly mean per (station, `extra`…, Monday `week` label) in exact
+    * integer 1e-4 units `u`: the cent sum over the count, floored once.
+    * The forecast-verification scores all compare these. */
+  private[graft] def weeklyU(df: DataFrame, extra: Seq[Column]): DataFrame =
+    df.groupBy(col("user_id") +: extra :+
+        date_format(date_trunc("WEEK", col("ts")), "yyyy-MM-dd").as("week"): _*)
+      .agg(floor(cents.cast("double") / count(lit(1)) * 100.0 + 0.5)
+        .cast("long").as("u"))
 
   /** Pseudo-coordinates derived deterministically from the key
     * (SURVEY §3): stands in for the station/grid-cell position. */
@@ -68,7 +82,7 @@ object Climate {
     * engine-invariant quantization). */
   private[graft] def zScore4(valueCol: Column,
       w: org.apache.spark.sql.expressions.WindowSpec): Column =
-    floor(zExactOfInt(floor(valueCol * 100 + 0.5).cast("long"), w)
+    floor(zExactOfInt(TimeSeries.cents(valueCol), w)
       * 1e4 + 0.5) / 1e4
 
   /** Standardized anomaly (z-score) per (station, variable) — the
@@ -343,10 +357,8 @@ object Climate {
     // pin the O(cells × days) daily table: ref, forecast, the
     // anti-join's build side and the evaluated-row branch all read
     // it — unpinned, each is another full scan of the fact table
-    val daily = Tables.events(spark, dir)
-      .groupBy(col("user_id"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
-      .agg(sum(floor(col("value") * 100 + 0.5).cast("long")).as("c"))
+    val daily = byDay(Tables.events(spark, dir))
+      .agg(cents.as("c"))
       .localCheckpoint()
     val ref = daily.filter(col("day") <= CoverageRefEnd)
     val members = (0 until 5).toDF("member")
@@ -384,7 +396,7 @@ object Climate {
     // rows yields a null mean, matching the former left-join shape.
     val means = ev.filter(col("event_type").isin("view", "click"))
       .select(col("user_id"), col("event_type"),
-        floor(col("value") * 100 + 0.5).cast("long").as("c"))
+        TimeSeries.cents(col("value")).as("c"))
       .groupBy(col("user_id"))
       .agg(sum(when(col("event_type") === "view", col("c"))).as("rs"),
         count(when(col("event_type") === "view", lit(1))).as("rn"),
@@ -648,6 +660,55 @@ object Climate {
         * 1e4 + 0.5) / 1e4).as("corrected"))
   }
 
+  /** Fit preamble shared by [[quantileMapFit]] and
+    * [[quantileMapSplineParams]]: forecast knots `fk` (keys…, fv, tie,
+    * fidx), reference knots `rk` (keys…, idx_lo, v_lo, v_next) and the
+    * per-key count/min/max of each train side (`fagg`: nf, fmin, fmax;
+    * `ragg`: nr, rmin, rmax). */
+  private def quantileMapKnots(kcols: Seq[Column], fcstTrain: DataFrame,
+      refTrain: DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    def byKey = Window.partitionBy(kcols: _*)
+    val fk = fcstTrain
+      .select(kcols :+ col("value").as("fv") :+ col("event_id").as("tie"): _*)
+      .withColumn("fidx",
+        row_number().over(byKey.orderBy(col("fv"), col("tie"))) - 1)
+    // each reference knot carries its successor via lead() on the
+    // SAME sort that assigns ridx: one equi-join on idx_lo retrieves
+    // both bracketing quantiles (idx_hi = ceil(fpos) ∈ {lo, lo+1}) —
+    // the quantileMap trick, one join and one rk expansion fewer
+    val wRef = byKey.orderBy(col("rv"), col("tie"))
+    val rk = refTrain
+      .select(kcols :+ col("value").as("rv") :+ col("event_id").as("tie"): _*)
+      .withColumn("ridx", row_number().over(wRef) - 1)
+      .withColumn("rv_next", lead(col("rv"), 1).over(wRef))
+      .select(kcols ++ Seq(col("ridx").as("idx_lo"),
+        col("rv").as("v_lo"), col("rv_next").as("v_next")): _*)
+    // count/min/max need no rank window: aggregate the RAW train
+    // frames so neither agg re-expands a per-key sort
+    val fagg = fcstTrain.groupBy(kcols: _*).agg(count(lit(1)).as("nf"),
+      min(col("value")).as("fmin"), max(col("value")).as("fmax"))
+    val ragg = refTrain.groupBy(kcols: _*).agg(count(lit(1)).as("nr"),
+      min(col("value")).as("rmin"), max(col("value")).as("rmax"))
+    (fk, rk, fagg, ragg)
+  }
+
+  /** Shared tail of the quantile-map transfers: outside the fitted
+    * range (`oob` low/high) the constant edge delta (`:349-358`),
+    * inside it `inRange`; then clamp at 0 (`:389`), floor-quantized
+    * for engine invariance. */
+  private def correctedOf(positioned: DataFrame, kcols: Seq[Column],
+      inRange: Column): DataFrame =
+    positioned
+      .withColumn("mapped_raw",
+        when(col("oob") === "low", col("x") + (col("rmin") - col("fmin")))
+          .when(col("oob") === "high", col("x") + (col("rmax") - col("fmax")))
+          .otherwise(inRange))
+      .select((col("event_id") +: kcols) ++ Seq(
+        round(col("x"), 2).as("fcst_value"),
+        col("oob"),
+        (floor(greatest(col("mapped_raw"), lit(0.0)) * 1e4 + 0.5) / 1e4)
+          .as("corrected")): _*)
+
   /** FIT-THEN-APPLY empirical quantile mapping over a COMPOSITE key —
     * the reference's actual bias-correction mechanics
     * (`bias_correction_cds_process.py:311-320` params per (member r,
@@ -692,25 +753,7 @@ object Climate {
       refTrain: DataFrame, applyRows: DataFrame): DataFrame = {
     val kcols = keys.map(col)
     def byKey = Window.partitionBy(kcols: _*)
-    val fk = fcstTrain
-      .select(kcols :+ col("value").as("fv") :+ col("event_id").as("tie"): _*)
-      .withColumn("fidx",
-        row_number().over(byKey.orderBy(col("fv"), col("tie"))) - 1)
-    // each reference knot carries its successor via lead() on the
-    // SAME sort that assigns ridx: one equi-join on idx_lo retrieves
-    // both bracketing quantiles (idx_hi = ceil(fpos) ∈ {lo, lo+1}) —
-    // the quantileMap trick, one join and one rk expansion fewer
-    val wRef = byKey.orderBy(col("rv"), col("tie"))
-    val rk = refTrain
-      .select(kcols :+ col("value").as("rv") :+ col("event_id").as("tie"): _*)
-      .withColumn("ridx", row_number().over(wRef) - 1)
-      .withColumn("rv_next", lead(col("rv"), 1).over(wRef))
-    // count/min/max need no rank window: aggregate the RAW train
-    // frames so neither agg re-expands a per-key sort
-    val fagg = fcstTrain.groupBy(kcols: _*).agg(count(lit(1)).as("nf"),
-      min(col("value")).as("fmin"), max(col("value")).as("fmax"))
-    val ragg = refTrain.groupBy(kcols: _*).agg(count(lit(1)).as("nr"),
-      min(col("value")).as("rmin"), max(col("value")).as("rmax"))
+    val (fk, rk, fagg, ragg) = quantileMapKnots(kcols, fcstTrain, refTrain)
     val knotRows = fk.select(kcols ++ Seq(
       col("fv").as("sortv"), lit(0).as("kind"), col("tie"),
       col("fidx").as("k_idx"), col("fv").as("k_fv"),
@@ -745,26 +788,14 @@ object Climate {
       .withColumn("fpos", col("fr") / (col("nf") - 1) * (col("nr") - 1))
       .withColumn("idx_lo", floor(col("fpos")).cast("int"))
       .withColumn("idx_hi", ceil(col("fpos")).cast("int"))
-    withPos
-      .join(rk.select(kcols ++ Seq(col("ridx").as("idx_lo"),
-          col("rv").as("v_lo"), col("rv_next").as("v_next")): _*),
-        keys :+ "idx_lo", "left")
+    val bracketed = withPos.join(rk, keys :+ "idx_lo", "left")
       // integral fpos (incl. the last knot, whose successor is null)
       // brackets to itself; otherwise idx_hi = idx_lo + 1 = v_next
       .withColumn("v_hi",
         when(col("idx_hi") === col("idx_lo"), col("v_lo"))
           .otherwise(col("v_next")))
-      .withColumn("mapped_raw",
-        when(col("oob") === "low", col("x") + (col("rmin") - col("fmin")))
-          .when(col("oob") === "high", col("x") + (col("rmax") - col("fmax")))
-          .otherwise(col("v_lo")
-            + (col("fpos") - col("idx_lo")) * (col("v_hi") - col("v_lo"))))
-      .select((col("event_id") +: kcols) ++ Seq(
-        round(col("x"), 2).as("fcst_value"),
-        col("oob"),
-        // clamp at 0 (`:389`), floor-quantized for engine invariance
-        (floor(greatest(col("mapped_raw"), lit(0.0)) * 1e4 + 0.5) / 1e4)
-          .as("corrected")): _*)
+    correctedOf(bracketed, kcols,
+      col("v_lo") + (col("fpos") - col("idx_lo")) * (col("v_hi") - col("v_lo")))
   }
 
   /** MONOTONE-CUBIC (Fritsch–Carlson) variant of [[quantileMapFit]] —
@@ -824,25 +855,7 @@ object Climate {
       refTrain: DataFrame): DataFrame = {
     val kcols = keys.map(col)
     def byKey = Window.partitionBy(kcols: _*)
-    val fk = fcstTrain
-      .select(kcols :+ col("value").as("fv") :+ col("event_id").as("tie"): _*)
-      .withColumn("fidx",
-        row_number().over(byKey.orderBy(col("fv"), col("tie"))) - 1)
-    // each reference knot carries its successor via lead() on the
-    // SAME sort that assigns ridx: one equi-join on idx_lo retrieves
-    // both bracketing quantiles (idx_hi = ceil(fpos) ∈ {lo, lo+1}) —
-    // the quantileMap trick, one join and one rk expansion fewer
-    val wRef = byKey.orderBy(col("rv"), col("tie"))
-    val rk = refTrain
-      .select(kcols :+ col("value").as("rv") :+ col("event_id").as("tie"): _*)
-      .withColumn("ridx", row_number().over(wRef) - 1)
-      .withColumn("rv_next", lead(col("rv"), 1).over(wRef))
-    // count/min/max need no rank window: aggregate the RAW train
-    // frames so neither agg re-expands a per-key sort
-    val fagg = fcstTrain.groupBy(kcols: _*).agg(count(lit(1)).as("nf"),
-      min(col("value")).as("fmin"), max(col("value")).as("fmax"))
-    val ragg = refTrain.groupBy(kcols: _*).agg(count(lit(1)).as("nr"),
-      min(col("value")).as("rmin"), max(col("value")).as("rmax"))
+    val (fk, rk, fagg, ragg) = quantileMapKnots(kcols, fcstTrain, refTrain)
     // strictly-increasing transfer knots + reference-quantile ordinate
     val fknots = fk.groupBy(kcols :+ col("fv"): _*)
       .agg(max(col("fidx")).as("fidx"))
@@ -852,10 +865,7 @@ object Climate {
           .otherwise(col("fidx") / (col("nf") - 1) * (col("nr") - 1)))
       .withColumn("idx_lo", floor(col("fpos")).cast("int"))
       .withColumn("idx_hi", ceil(col("fpos")).cast("int"))
-    val withY = pos
-      .join(rk.select(kcols ++ Seq(col("ridx").as("idx_lo"),
-          col("rv").as("v_lo"), col("rv_next").as("v_next")): _*),
-        keys :+ "idx_lo")
+    val withY = pos.join(rk, keys :+ "idx_lo")
       // fit fpos ≤ nr−1 by construction, so a missing successor can
       // only coincide with integral fpos → the v_lo branch
       .withColumn("v_hi",
@@ -928,23 +938,14 @@ object Climate {
         h * col("sg.m0") * t * omt * omt +
         col("sg.y1") * t * t * (lit(3.0) - lit(2.0) * t) +
         h * col("sg.m1") * t * t * (t - lit(1.0))
-    positioned
-      .join(edges, keys)
-      // carried-last-knot-has-no-successor ⟺ x ≥ fmax: same edge
-      // classification as the linear variant (x == fmax is "high"
-      // there too, and the constant delta reproduces rmax exactly)
+    // carried-last-knot-has-no-successor ⟺ x ≥ fmax: same edge
+    // classification as the linear variant (x == fmax is "high"
+    // there too, and the constant delta reproduces rmax exactly)
+    val classified = positioned.join(edges, keys)
       .withColumn("oob", when(col("sg").isNull, "low")
         .when(col("sg.x1").isNull, "high")
         .otherwise("in"))
-      .withColumn("mapped_raw",
-        when(col("oob") === "low", col("x") + (col("rmin") - col("fmin")))
-          .when(col("oob") === "high", col("x") + (col("rmax") - col("fmax")))
-          .otherwise(hermite))
-      .select((col("event_id") +: kcols) ++ Seq(
-        round(col("x"), 2).as("fcst_value"),
-        col("oob"),
-        (floor(greatest(col("mapped_raw"), lit(0.0)) * 1e4 + 0.5) / 1e4)
-          .as("corrected")): _*)
+    correctedOf(classified, kcols, hermite)
   }
 
   /** Quantile-anchor count for the literal B-spline transfer fit. */
@@ -1010,15 +1011,6 @@ object Climate {
         round(col("x"), 2).as("fcst_value"), col("oob"),
         (floor(col("raw") * 1e4 + 0.5) / 1e4).as("corrected")): _*)
   }
-
-  /** Fit + apply in one call — the literal-spline counterpart of
-    * [[quantileMapFitSpline]]; the param table pins for the same
-    * two-reads reason. */
-  def quantileMapFitBspline(keys: Seq[String], fcstTrain: DataFrame,
-      refTrain: DataFrame, applyRows: DataFrame): DataFrame =
-    bsplineTransferApply(keys,
-      bsplineTransferParams(keys, fcstTrain, refTrain).localCheckpoint(),
-      applyRows)
 
   /** PRETRAINED literal spline params, one row per station group —
     * the reference's param-FILE seam (`load_param_file` reads
@@ -1146,19 +1138,8 @@ object Climate {
     * segment); ClimateSpec adds knot agreement with the linear
     * variant, dense-grid monotonicity, and the param-table parquet
     * round-trip. */
-  def biasQmapSpline(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-      .withColumn("grp", col("user_id") % 20)
-      .withColumn("member", col("event_id") % 3)
-    val split = lit("2024-01-16T00:00:00Z").cast("timestamp")
-    def slice(t: String, cond: Column) =
-      ev.filter(col("event_type") === t && cond)
-        .select("event_id", "grp", "member", "value")
-    quantileMapFitSpline(Seq("grp", "member"),
-      slice("click", col("ts") < split),
-      slice("view", col("ts") < split),
-      slice("click", col("ts") >= split))
-  }
+  def biasQmapSpline(spark: SparkSession, dir: String): DataFrame =
+    keyedQmap(spark, dir, quantileMapFitSpline)
 
   /** Composite-key bias correction on the test mapping: key =
     * (station group, ensemble member), fit on the first half of the
@@ -1171,7 +1152,13 @@ object Climate {
     * `apply_bias_factors` (its fc-CDF → standard-normal bridge →
     * obs-PPF chain is numerically plain quantile mapping: the
     * norm.ppf∘norm.cdf round-trip is identity). */
-  def biasQmapKey(spark: SparkSession, dir: String): DataFrame = {
+  def biasQmapKey(spark: SparkSession, dir: String): DataFrame =
+    keyedQmap(spark, dir, quantileMapFit)
+
+  /** The (station group, member) test mapping of [[biasQmapKey]] run
+    * through a fit+apply transfer `fit`. */
+  private def keyedQmap(spark: SparkSession, dir: String,
+      fit: (Seq[String], DataFrame, DataFrame, DataFrame) => DataFrame): DataFrame = {
     val ev = Tables.events(spark, dir)
       .withColumn("grp", col("user_id") % 20)
       .withColumn("member", col("event_id") % 3)
@@ -1179,7 +1166,7 @@ object Climate {
     def slice(t: String, cond: Column) =
       ev.filter(col("event_type") === t && cond)
         .select("event_id", "grp", "member", "value")
-    quantileMapFit(Seq("grp", "member"),
+    fit(Seq("grp", "member"),
       slice("click", col("ts") < split),
       slice("view", col("ts") < split),
       slice("click", col("ts") >= split))
@@ -1292,10 +1279,8 @@ object Climate {
     * station window carrying the sorted-array order statistic (the
     * `ts_extreme_day_freq` discipline), one station rollup. */
   def potGpd(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(spark, dir)
-      .groupBy(col("user_id"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
-      .agg(sum(floor(col("value") * 100 + 0.5).cast("long")).as("c"))
+    val daily = byDay(Tables.events(spark, dir))
+      .agg(cents.as("c"))
     val w = Window.partitionBy(col("user_id"))
     val s = daily
       .withColumn("cs", array_sort(collect_list(col("c")).over(w)))
@@ -1327,7 +1312,7 @@ object Climate {
       .groupBy(col("user_id"),
         datediff(to_date(date_trunc("DAY", col("ts"))), lit("2024-01-01"))
           .as("x"))
-      .agg(sum(floor(col("value") * 100 + 0.5).cast("long")).as("cents"))
+      .agg(cents.as("cents"))
     val wk = daily
       .groupBy(col("user_id"), floor(col("x") / 7).cast("int").as("w"))
       .agg(max(col("cents")).as("bm"))
@@ -1383,7 +1368,7 @@ object Climate {
       .groupBy(col("user_id"),
         datediff(to_date(date_trunc("DAY", col("ts"))), lit("2024-01-01"))
           .as("x"))
-      .agg((sum(floor(col("value") * 100 + 0.5).cast("long")).cast("double")
+      .agg((cents.cast("double")
         / (count(lit(1)) * lit(100.0))).as("y"))
     daily.groupBy(col("user_id"))
       .agg(sort_array(collect_list(col("y")), asc = false).as("qs"))
@@ -1434,7 +1419,7 @@ object Climate {
       .groupBy(col("user_id"),
         datediff(to_date(date_trunc("DAY", col("ts"))), lit("2024-01-01"))
           .as("x"))
-      .agg((sum(floor(col("value") * 100 + 0.5).cast("long")).cast("double")
+      .agg((cents.cast("double")
         / (count(lit(1)) * lit(100.0))).as("y"))
     daily.groupBy(col("user_id"))
       .agg(sort_array(collect_list(struct(col("x"), col("y")))).as("pts"))
@@ -1482,15 +1467,13 @@ object Climate {
   def petHargreaves(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val raTbl = raByDoy.toDF("doy", "ra")
-    val daily = Tables.events(spark, dir)
-      .groupBy(col("user_id"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
+    val daily = byDay(Tables.events(spark, dir))
       .agg(
         (max(col("value")) / 10.0).as("tmax"),
         (min(col("value")) / 10.0).as("tmin"),
         // exact cent sum, one division (avg/10 = cents/(1000·n)) —
         // the raw-double avg's ulps would reach every derived pet
-        (sum(floor(col("value") * 100 + 0.5).cast("long")).cast("double")
+        (cents.cast("double")
           / (count(lit(1)) * lit(1000.0))).as("tmean"))
       .withColumn("doy", dayofyear(to_date(col("day"))))
     val wCum = Window.partitionBy(col("user_id")).orderBy(col("day"))
@@ -1519,13 +1502,11 @@ object Climate {
   def petOudin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val raTbl = raByDoy.toDF("doy", "ra")
-    val daily = Tables.events(spark, dir)
-      .groupBy(col("user_id"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
+    val daily = byDay(Tables.events(spark, dir))
       .agg(
-        (sum(floor(col("value") * 100 + 0.5).cast("long")).cast("double")
+        (cents.cast("double")
           / (count(lit(1)) * lit(1000.0))).as("ta"),
-        (sum(floor(col("value") * 100 + 0.5).cast("long")).cast("double")
+        (cents.cast("double")
           / (count(lit(1)) * lit(5000.0))).as("p"))
       .withColumn("doy", dayofyear(to_date(col("day"))))
     val lam = lit(2.501) - lit(0.002361) * col("ta")
@@ -1559,10 +1540,7 @@ object Climate {
   def speiZscore(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val raTbl = raByDoy.toDF("doy", "ra")
-    val cents = sum(floor(col("value") * 100 + 0.5).cast("long"))
-    val daily = Tables.events(spark, dir)
-      .groupBy(col("user_id"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
+    val daily = byDay(Tables.events(spark, dir))
       .agg(
         (max(col("value")) / 10.0).as("tmax"),
         (min(col("value")) / 10.0).as("tmin"),
@@ -1612,9 +1590,7 @@ object Climate {
     * units so the running total is an exact long sum
     * (merge-order-free, the [[speiZscore]] discipline). */
   def growingDegreeDays(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(spark, dir)
-      .groupBy(col("user_id"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
+    val daily = byDay(Tables.events(spark, dir))
       .agg((max(col("value")) / 10.0).as("tmax"),
         (min(col("value")) / 10.0).as("tmin"))
     val wCum = Window.partitionBy(col("user_id")).orderBy(col("day"))
@@ -1655,10 +1631,8 @@ object Climate {
   /** [[heatWaveEpisodes]] over an arbitrary (ts, user_id, value)
     * frame — seam for spec-testing the calendar-gap run break. */
   private[graft] def heatWaveEpisodesOf(ev: DataFrame): DataFrame = {
-    val daily = ev
-      .groupBy(col("user_id"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
-      .agg(max(floor(col("value") * 100 + 0.5).cast("long")).as("tmax_u"))
+    val daily = byDay(ev)
+      .agg(max(TimeSeries.cents(col("value"))).as("tmax_u"))
     val wOrd = Window.partitionBy(col("user_id")).orderBy(col("day"))
     val wAll = wOrd.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)
@@ -1717,10 +1691,7 @@ object Climate {
     * seam for spec-testing the clamped closed form against the
     * sequential water-bank fold. */
   private[graft] def snowPackDdmOf(ev: DataFrame): DataFrame = {
-    val cents = sum(floor(col("value") * 100 + 0.5).cast("long"))
-    val daily = ev
-      .groupBy(col("user_id"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
+    val daily = byDay(ev)
       .agg((cents.cast("double") / (count(lit(1)) * lit(1000.0))).as("tmean"),
         (cents.cast("double") / (count(lit(1)) * lit(100.0))).as("prcp"))
     val wSeq = Window.partitionBy(col("user_id")).orderBy(col("day"))
@@ -1775,7 +1746,7 @@ object Climate {
       .groupBy((col("user_id") % 8).as("gy"),
         expr("user_id div 8 % 8").as("gx"))
       .agg(count(lit(1)).as("n"),
-        sum(floor(col("value") * 100 + 0.5).cast("long")).as("sum_c"))
+        cents.as("sum_c"))
       // exact cent sum → one division → 6dp quantize (§5: a raw
       // double avg can sit on a half-quantum of the 1e-6 grid)
       .select(col("gy"), col("gx"),
@@ -1819,7 +1790,7 @@ object Climate {
     val grid = Tables.events(spark, dir)
       .groupBy((col("user_id") % 8).as("gy"),
         expr("user_id div 8 % 8").as("gx"))
-      .agg(sum(floor(col("value") * 100 + 0.5).cast("long")).as("sum_c"),
+      .agg(cents.as("sum_c"),
         count(lit(1)).as("n"))
       .select(col("gy"), col("gx"),
         (floor((col("sum_c") * 10000L).cast("double") / col("n") + 0.5) / 1e6)
@@ -1879,7 +1850,7 @@ object Climate {
   def gridIdw(spark: SparkSession, dir: String): DataFrame = {
     val st = Tables.events(spark, dir)
       .groupBy(col("user_id"))
-      .agg(floor(sum(floor(col("value") * 100 + 0.5).cast("long"))
+      .agg(floor(cents
         .cast("double") * 100.0 / count(lit(1)) + 0.5).cast("long").as("v_u"))
       .select(col("v_u"),
         pseudoLat(col("user_id")).as("slat"),
@@ -1920,7 +1891,7 @@ object Climate {
     val grid = Tables.events(spark, dir)
       .groupBy((col("user_id") % 8).as("gy"),
         expr("user_id div 8 % 8").as("gx"))
-      .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
+      .agg(floor((cents * 10000L)
           .cast("double") / count(lit(1)) + 0.5).cast("long").as("v_us"),
         count(lit(1)).as("n_obs"))
     grid.groupBy((col("gy") - (col("gy") % 2)).as("block_y"),
@@ -1946,7 +1917,7 @@ object Climate {
     val cells = Tables.events(spark, dir)
       .groupBy((col("user_id") % 8).as("gy"),
         expr("user_id div 8 % 8").as("gx"))
-      .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
+      .agg(floor((cents * 10000L)
           .cast("double") / count(lit(1)) + 0.5).cast("long").as("v_us"),
         count(lit(1)).as("n_obs"))
       .select(col("gy"), col("gx"), col("v_us"), col("n_obs"),
@@ -1999,7 +1970,7 @@ object Climate {
     Tables.events(spark, dir)
       .groupBy((col("user_id") % 8).as("gy"),
         expr("user_id div 8 % 8").as("gx"))
-      .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
+      .agg(floor((cents * 10000L)
           .cast("double") / count(lit(1)) + 0.5).cast("long").as("v_us"))
       .localCheckpoint()
 
@@ -2053,10 +2024,8 @@ object Climate {
   def etccdiIndices(spark: SparkSession, dir: String): DataFrame = {
     val WetCents = 100L   // 1.00 units/day — the ETCCDI wet-day line
     val HeavyCents = 1000L // 10.00 units/day — R10mm's threshold
-    val daily = Tables.events(spark, dir)
-      .groupBy(col("user_id"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
-      .agg(sum(floor(col("value") * 100 + 0.5).cast("long")).as("c"))
+    val daily = byDay(Tables.events(spark, dir))
+      .agg(cents.as("c"))
       .withColumn("dn", datediff(col("day").cast("date"),
         lit("2024-01-01").cast("date")))
       .withColumn("wet", col("c") >= WetCents)
@@ -2169,10 +2138,8 @@ object Climate {
     * everything after the daily reduction is O(stations × days). */
   val ExtremalRunGap = 2
   def extremalIndex(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(spark, dir)
-      .groupBy(col("user_id"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
-      .agg(sum(floor(col("value") * 100 + 0.5).cast("long")).as("c"))
+    val daily = byDay(Tables.events(spark, dir))
+      .agg(cents.as("c"))
       .withColumn("dn", datediff(col("day").cast("date"),
         lit("2024-01-01").cast("date")))
       .localCheckpoint() // the rank pick and the exceedance scan both read it
@@ -2243,11 +2210,9 @@ object Climate {
   def etccdiTemperature(spark: SparkSession, dir: String): DataFrame = {
     val FrostCents = 2000L // 20.00 units — the synthetic freeze line
     val WarmCents = 8000L  // 80.00 units — the synthetic summer line
-    val daily = Tables.events(spark, dir)
-      .groupBy(col("user_id"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
-      .agg(min(floor(col("value") * 100 + 0.5).cast("long")).as("tn"),
-        max(floor(col("value") * 100 + 0.5).cast("long")).as("tx"))
+    val daily = byDay(Tables.events(spark, dir))
+      .agg(min(TimeSeries.cents(col("value"))).as("tn"),
+        max(TimeSeries.cents(col("value"))).as("tx"))
       .localCheckpoint()
     val flat = daily.groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_days"),
@@ -2331,10 +2296,7 @@ object Climate {
   /** [[freezeThawCycles]] over an arbitrary (ts, user_id, value)
     * frame — seam for spec-testing crossing counts. */
   private[graft] def freezeThawCyclesOf(ev: DataFrame): DataFrame = {
-    val cents = sum(floor(col("value") * 100 + 0.5).cast("long"))
-    val daily = ev
-      .groupBy(col("user_id"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
+    val daily = byDay(ev)
       .agg((cents.cast("double") / (count(lit(1)) * lit(1000.0))).as("tmean"))
     val wOrd = Window.partitionBy(col("user_id")).orderBy(col("day"))
     daily
@@ -2558,10 +2520,8 @@ object Climate {
     * 1e-4 longs, raw-sum Pearson with the overflow-safe double cast
     * only inside the sqrt. */
   def stationNeighborCorr(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(spark, dir)
-      .groupBy(col("user_id"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
-      .agg(floor(sum(floor(col("value") * 100 + 0.5).cast("long"))
+    val daily = byDay(Tables.events(spark, dir))
+      .agg(floor(cents
         .cast("double") * 100.0 / count(lit(1)) + 0.5).cast("long").as("m_u"))
       // LAZY pin (r18): the neighbor search's eager cell pin is the
       // first consumer and sits downstream of a LINEAR lineage through
@@ -2613,10 +2573,7 @@ object Climate {
     * the (station, day) resample and the station-keyed windows; the
     * day-keyed reference agg rides the tiny daily grain. */
   def doubleMass(spark: SparkSession, dir: String): DataFrame = {
-    val cents = sum(floor(col("value") * 100 + 0.5).cast("long"))
-    val daily = Tables.events(spark, dir)
-      .groupBy(col("user_id"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
+    val daily = byDay(Tables.events(spark, dir))
       .agg(cents.as("day_c"))
       .localCheckpoint()
     val ref = daily.groupBy(col("day"))
@@ -2646,10 +2603,7 @@ object Climate {
     * One (station; day) sort carries the resample, the lag, and the
     * ratio; the rollup is a bounded-group percentile. */
   def recessionConstant(spark: SparkSession, dir: String): DataFrame = {
-    val cents = sum(floor(col("value") * 100 + 0.5).cast("long"))
-    val daily = Tables.events(spark, dir)
-      .groupBy(col("user_id"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
+    val daily = byDay(Tables.events(spark, dir))
       .agg((cents.cast("double") / (count(lit(1)) * lit(100.0))).as("q"))
     val wOrd = Window.partitionBy(col("user_id")).orderBy(col("day"))
     daily
@@ -2903,7 +2857,7 @@ object Climate {
     val cells = Tables.events(spark, dir)
       .groupBy((col("user_id") % 8).as("gy"),
         expr("user_id div 8 % 8").as("gx"))
-      .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
+      .agg(floor((cents * 10000L)
           .cast("double") / count(lit(1)) + 0.5).cast("long").as("v_us"))
       .withColumn("masked", (col("gx") * 8 + col("gy")) % 7 === 3)
       .localCheckpoint()
@@ -2947,9 +2901,9 @@ object Climate {
     * groupBy to cells, elementwise CASE, one groupBy to bands. */
   def gridContourBands(spark: SparkSession, dir: String): DataFrame = {
     val cell = Tables.events(spark, dir)
-      .groupBy(date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"),
+      .groupBy(dayLabel,
         col("user_id"))
-      .agg(sum(floor(col("value") * 100 + 0.5).cast("long")).as("sum_c"),
+      .agg(cents.as("sum_c"),
         count(lit(1)).as("n_obs"))
     def ge(l: Int) = col("sum_c") >= lit(l.toLong * 100) * col("n_obs")
     // foldLeft nests the LAST element outermost: lvl_min checks the
@@ -2984,7 +2938,7 @@ object Climate {
         count(lit(1)).as("n"),
         // exact cent sum, one division (§5: a raw-double group mean
         // can land on a half-quantum of the 1e-4 grid and flip)
-        sum(floor(col("value") * 100 + 0.5).cast("long")).as("sum_c"),
+        cents.as("sum_c"),
         round(min(col("value")), 2).as("min_value"),
         round(max(col("value")), 2).as("max_value"))
       .select(col("zone_y"), col("zone_x"), col("n"),
@@ -3154,7 +3108,7 @@ object Climate {
       // longs): the standardization's window moments then run on
       // integers — merge-order-free on both engines, closing the last
       // raw-double window-σ in the family
-      .agg(floor(sum(floor(col("value") * 100 + 0.5).cast("long"))
+      .agg(floor(cents
         .cast("double") * 1e4 / count(lit(1)) + 0.5).cast("long").as("qc"))
     val wKey = Window.partitionBy(col("user_id"), col("member"))
     val z = cell.withColumn("z", zExactOfInt(col("qc"), wKey))
@@ -3187,12 +3141,6 @@ object Climate {
     * high-cardinality (station, week) key. */
   def forecastCrps(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
-    val cents = sum(floor(col("value") * 100 + 0.5).cast("long"))
-    def weeklyU(df: DataFrame, extra: Seq[Column]): DataFrame =
-      df.groupBy(col("user_id") +: extra :+
-          date_format(date_trunc("WEEK", col("ts")), "yyyy-MM-dd").as("week"): _*)
-        .agg(floor(cents.cast("double") / count(lit(1)) * 100.0 + 0.5)
-          .cast("long").as("u"))
     val obs = weeklyU(ev.filter(col("event_type") === "view"), Nil)
       .withColumnRenamed("u", "y_u")
     val mem = weeklyU(ev.filter(col("event_type") === "click")
@@ -3226,12 +3174,6 @@ object Climate {
     * histogram with a windowed share. */
   def forecastRankHist(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
-    val cents = sum(floor(col("value") * 100 + 0.5).cast("long"))
-    def weeklyU(df: DataFrame, extra: Seq[Column]): DataFrame =
-      df.groupBy(col("user_id") +: extra :+
-          date_format(date_trunc("WEEK", col("ts")), "yyyy-MM-dd").as("week"): _*)
-        .agg(floor(cents.cast("double") / count(lit(1)) * 100.0 + 0.5)
-          .cast("long").as("u"))
     val obs = weeklyU(ev.filter(col("event_type") === "view"), Nil)
       .withColumnRenamed("u", "y_u")
     val mem = weeklyU(ev.filter(col("event_type") === "click")
@@ -3269,12 +3211,6 @@ object Climate {
     * key, one station rollup — no window, no sort, no fan-out. */
   def forecastSkill(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
-    val cents = sum(floor(col("value") * 100 + 0.5).cast("long"))
-    def weeklyU(df: DataFrame, extra: Seq[Column]): DataFrame =
-      df.groupBy(col("user_id") +: extra :+
-          date_format(date_trunc("WEEK", col("ts")), "yyyy-MM-dd").as("week"): _*)
-        .agg(floor(cents.cast("double") / count(lit(1)) * 100.0 + 0.5)
-          .cast("long").as("u"))
     val obs = weeklyU(ev.filter(col("event_type") === "view"), Nil)
       .withColumnRenamed("u", "y_u")
     // ensemble mean quantizes ONCE to the same 1e-4 grid (exact
@@ -3320,12 +3256,6 @@ object Climate {
     * integer 1e-8 units, so cross-week sums stay merge-order-free. */
   private def exceedanceFrame(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
-    val cents = sum(floor(col("value") * 100 + 0.5).cast("long"))
-    def weeklyU(df: DataFrame, extra: Seq[Column]): DataFrame =
-      df.groupBy(col("user_id") +: extra :+
-          date_format(date_trunc("WEEK", col("ts")), "yyyy-MM-dd").as("week"): _*)
-        .agg(floor(cents.cast("double") / count(lit(1)) * 100.0 + 0.5)
-          .cast("long").as("u"))
     // pinned: the weekly observation sliver feeds BOTH the threshold
     // fit and the member join — unpinned, the events scan+agg runs
     // once per consumer (plan-audited: 7 exchanges → 5, one scan)
@@ -3420,12 +3350,12 @@ object Climate {
     val memberDaily = Tables.events(spark, dir)
       .withColumn("member", col("event_id") % 5)
       .groupBy(col("user_id"), col("member"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
+        dayLabel)
       // member-mean via exact integer cents (2-dec inputs), ONE double
       // division at the end — bit-identical regardless of either
       // engine's partial-aggregation merge order (a float sum's fold
       // order is engine-chosen; an integer sum's isn't)
-      .agg((sum(floor(col("value") * 100 + 0.5).cast("long")).cast("double")
+      .agg((cents.cast("double")
         / (lit(100.0) * count(lit(1))) - lit(50.0)).as("delta"))
     val grouped = memberDaily.groupBy(col("user_id"), col("day"))
       .agg(array_sort(collect_list(col("delta"))).as("ds"),
@@ -3705,7 +3635,7 @@ object Climate {
       .partitionBy(col("user_id"), col("day"))
       .orderBy(col("ts"), col("event_id"))
     Tables.events(spark, dir)
-      .withColumn("day", date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd"))
+      .select(col("*"), dayLabel)
       .withColumn("q_prev", lag(col("value"), 1).over(w))
       .withColumn("t_prev", lag(col("ts"), 1).over(w))
       .withColumn("term_u",
@@ -3730,7 +3660,7 @@ object Climate {
         col("lon") >= -60 && col("lon") <= 60)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(floor(col("value") * 100 + 0.5).cast("long")).as("sum_c"))
+        cents.as("sum_c"))
       .select(col("event_type"), col("n"),
         // exact cent sum, one division — see zonalStats
         (floor(col("sum_c").cast("double") * 100.0 / col("n") + 0.5) / 1e4)

@@ -991,26 +991,34 @@ object Dedup {
     // both read the bucket table; unpinned each re-runs the
     // signature pass
     val bk = bandBuckets(shArr).localCheckpoint()
-    val cand = cappedCandidatesFrom(bk)
-      .withColumn("found", lit(1))
-    // every dropped row carries its bucket's size, so the whole
-    // dropped-mass summary is ONE aggregate: Σ(m−1) over rows equals
-    // Σ m(m−1) over buckets, halved = the lost candidate pairs
-    val dropSummary = bk.filter(col("bucket_n") > BucketCap)
-      .agg(count_distinct(struct(col("band"), col("bh")))
-          .as("dropped_buckets"),
-        count(lit(1)).as("dropped_memberships"),
-        count_distinct(col("doc_id")).as("dropped_docs"),
-        expr("coalesce(sum(bucket_n - 1), 0) div 2").as("est_dropped_pairs"))
-    truth.join(cand, Seq("doc_a", "doc_b"), "left")
+    decileRecall(truth, cappedCandidatesFrom(bk), Seq("doc_a", "doc_b"))
+      .crossJoin(broadcast(droppedMass(bk)))
+  }
+
+  /** The recall audits' per-decile table: `truth` pairs (with their
+    * `jaccard`) left-joined on `pair` to the LSH candidate pairs
+    * `cand`, bucketed by similarity decile. */
+  private def decileRecall(truth: DataFrame, cand: DataFrame,
+      pair: Seq[String]): DataFrame =
+    truth.join(cand.withColumn("found", lit(1)), pair, "left")
       .withColumn("bucket", least(floor(col("jaccard") * 10), lit(9L)) / 10.0)
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_true"),
         sum(coalesce(col("found"), lit(0))).cast("long").as("n_found"),
         round(sum(coalesce(col("found"), lit(0)))
           / count(lit(1)).cast("double"), 4).as("recall"))
-      .crossJoin(broadcast(dropSummary))
-  }
+
+  /** The recall audits' one-row DROPPED-MASS ledger over the pinned
+    * bucket table `bk`. Every dropped row carries its bucket's size,
+    * so the whole summary is ONE aggregate: Σ(m−1) over rows equals
+    * Σ m(m−1) over buckets, halved = the lost candidate pairs. */
+  private def droppedMass(bk: DataFrame): DataFrame =
+    bk.filter(col("bucket_n") > BucketCap)
+      .agg(count_distinct(struct(col("band"), col("bh")))
+          .as("dropped_buckets"),
+        count(lit(1)).as("dropped_memberships"),
+        count_distinct(col("doc_id")).as("dropped_docs"),
+        expr("coalesce(sum(bucket_n - 1), 0) div 2").as("est_dropped_pairs"))
 
   /** Deterministic md5-prefix PROBE SAMPLE shared by the sampled
     * audit lanes: a doc/vector is a probe iff the first hex char of
@@ -1068,25 +1076,12 @@ object Dedup {
         col("bh")), Seq("band", "bh"))
       .filter(col("probe_id") =!= col("doc_b"))
       .select("probe_id", "doc_b").distinct()
-      .withColumn("found", lit(1))
-    val dropSummary = bk.filter(col("bucket_n") > BucketCap)
-      .agg(count_distinct(struct(col("band"), col("bh")))
-          .as("dropped_buckets"),
-        count(lit(1)).as("dropped_memberships"),
-        count_distinct(col("doc_id")).as("dropped_docs"),
-        expr("coalesce(sum(bucket_n - 1), 0) div 2").as("est_dropped_pairs"))
     val np = docs.filter(auditSampled(col("doc_id")))
       .agg(count(lit(1)).as("n_probes"))
-    truth.join(cand, Seq("probe_id", "doc_b"), "left")
-      .withColumn("bucket", least(floor(col("jaccard") * 10), lit(9L)) / 10.0)
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n_true"),
-        sum(coalesce(col("found"), lit(0))).cast("long").as("n_found"),
-        round(sum(coalesce(col("found"), lit(0)))
-          / count(lit(1)).cast("double"), 4).as("recall"))
+    decileRecall(truth, cand, Seq("probe_id", "doc_b"))
       .withColumn("sample_rate", lit(AuditSampleRate))
       .crossJoin(broadcast(np))
-      .crossJoin(broadcast(dropSummary))
+      .crossJoin(broadcast(droppedMass(bk)))
   }
 
   /** QUALITY-vs-DUPLICATION cross-table — the curation question the

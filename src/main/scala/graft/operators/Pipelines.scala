@@ -132,7 +132,7 @@ object Pipelines {
         Climate.pseudoLat(col("user_id")).as("lat"),
         Climate.pseudoLon(col("user_id")).as("lon"),
         round(col("value"), 4).as("value"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
+        TimeSeries.dayLabel)
     def clipped(df: DataFrame): DataFrame =
       df.filter(Climate.pointInPoly(col("lon"), col("lat"), landmassClip))
     // the previously published collection: clipped at ITS publish

@@ -438,7 +438,7 @@ object Relational {
   def distinctUsersDaily(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
       .groupBy(col("event_type"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
+        TimeSeries.dayLabel)
       .agg(count_distinct(col("user_id")).as("n_users"),
         count(lit(1)).as("n_events"))
 
@@ -452,7 +452,7 @@ object Relational {
   def distinctUsersDailyApprox(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
       .groupBy(col("event_type"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
+        TimeSeries.dayLabel)
       .agg(approx_count_distinct(col("user_id"), 0.02).as("n_users_approx"),
         count(lit(1)).as("n_events"))
 

@@ -68,7 +68,7 @@ object Serving {
           pow(lit(2.0), col("z")) - 1).cast("long"))
       .groupBy(col("z").cast("long").as("z"), col("x"), col("y"))
       .agg(count(lit(1)).as("n"),
-        (floor(sum(floor(col("value") * 100 + 0.5).cast("long"))
+        (floor(sum(TimeSeries.cents(col("value")))
           .cast("double") * 100.0 / count(lit(1)) + 0.5) / 1e4).as("mean_value"))
 
   /** The SECOND page of [[itemsQuery]], by CURSOR — stable pagination
@@ -202,8 +202,8 @@ object Serving {
       .select(col("user_id").as("station"),
         col("event_type").as("var"),
         when(col("event_id") % 2 === 0, "ec").otherwise("mf").as("model"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
+        TimeSeries.dayLabel,
+        TimeSeries.cents(col("value")).as("cents"))
       .groupBy(col("station"), col("var"), col("model"), col("day"))
       .agg(floor(sum(col("cents")).cast("double") / count(lit(1)) + 0.5)
         .cast("long").as("c"))

@@ -1775,25 +1775,14 @@ object Similarity {
     val bucketed = pairBuckets(spark, dir).localCheckpoint()
     val cand = cappedPairsFrom(bucketed)
       .select(col("id_a"), col("id_b"), lit(1).as("found"))
-    val dropSummary = bucketed.filter(col("bucket_n") > EmbBucketCap)
-      .agg(count_distinct(struct(col("t"), col("sig")))
-          .as("dropped_buckets"),
-        count(lit(1)).as("dropped_memberships"),
-        expr("coalesce(sum(bucket_n - 1), 0) div 2").as("est_dropped_pairs"))
     val truth = v.select(col("vec_id").as("id_a"), col("emb").as("ea"))
       .join(v.select(col("vec_id").as("id_b"), col("emb").as("eb")),
         col("id_a") < col("id_b"))
       .withColumn("cos4",
         floor(VectorColumns.cosine(col("ea"), col("eb")) * 1e4 + 0.5) / 1e4)
       .filter(col("cos4") >= 0.35)
-    truth.join(cand, Seq("id_a", "id_b"), "left")
-      .withColumn("bucket", least(floor(col("cos4") * 10), lit(9L)) / 10.0)
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n_true"),
-        sum(coalesce(col("found"), lit(0))).cast("long").as("n_found"),
-        (floor(sum(coalesce(col("found"), lit(0)))
-          / count(lit(1)).cast("double") * 1e4 + 0.5) / 1e4).as("recall"))
-      .crossJoin(broadcast(dropSummary))
+    decileRecall(truth, cand, Seq("id_a", "id_b"))
+      .crossJoin(broadcast(droppedMass(bucketed)))
   }
 
   /** SAMPLED twin of [[embeddingLshAudit]] — the embedding side of
@@ -1817,11 +1806,6 @@ object Similarity {
       .filter(col("probe_id") =!= col("id_b"))
       .select("probe_id", "id_b").distinct()
       .withColumn("found", lit(1))
-    val dropSummary = bucketed.filter(col("bucket_n") > EmbBucketCap)
-      .agg(count_distinct(struct(col("t"), col("sig")))
-          .as("dropped_buckets"),
-        count(lit(1)).as("dropped_memberships"),
-        expr("coalesce(sum(bucket_n - 1), 0) div 2").as("est_dropped_pairs"))
     val np = v.filter(Dedup.auditSampled(col("vec_id")))
       .agg(count(lit(1)).as("n_probes"))
     val truth = v.filter(Dedup.auditSampled(col("vec_id")))
@@ -1831,17 +1815,33 @@ object Similarity {
       .withColumn("cos4",
         floor(VectorColumns.cosine(col("ea"), col("eb")) * 1e4 + 0.5) / 1e4)
       .filter(col("cos4") >= 0.35)
-    truth.join(cand, Seq("probe_id", "id_b"), "left")
+    decileRecall(truth, cand, Seq("probe_id", "id_b"))
+      .withColumn("sample_rate", lit(Dedup.AuditSampleRate))
+      .crossJoin(broadcast(np))
+      .crossJoin(broadcast(droppedMass(bucketed)))
+  }
+
+  /** The embedding audits' per-decile table: `truth` pairs (with their
+    * quantized `cos4`) left-joined on `pair` to the candidate pairs
+    * `cand` (flagged `found`), bucketed by cosine decile. */
+  private def decileRecall(truth: DataFrame, cand: DataFrame,
+      pair: Seq[String]): DataFrame =
+    truth.join(cand, pair, "left")
       .withColumn("bucket", least(floor(col("cos4") * 10), lit(9L)) / 10.0)
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_true"),
         sum(coalesce(col("found"), lit(0))).cast("long").as("n_found"),
         (floor(sum(coalesce(col("found"), lit(0)))
           / count(lit(1)).cast("double") * 1e4 + 0.5) / 1e4).as("recall"))
-      .withColumn("sample_rate", lit(Dedup.AuditSampleRate))
-      .crossJoin(broadcast(np))
-      .crossJoin(broadcast(dropSummary))
-  }
+
+  /** The embedding audits' one-row dropped-bucket ledger over the
+    * pinned bucket table. */
+  private def droppedMass(bucketed: DataFrame): DataFrame =
+    bucketed.filter(col("bucket_n") > EmbBucketCap)
+      .agg(count_distinct(struct(col("t"), col("sig")))
+          .as("dropped_buckets"),
+        count(lit(1)).as("dropped_memberships"),
+        expr("coalesce(sum(bucket_n - 1), 0) div 2").as("est_dropped_pairs"))
 
   /** Probe sample for the SAMPLED ANN recall audit: two hex chars →
     * rate 1/256. The ANN truth side is brute force per probe (O(n)

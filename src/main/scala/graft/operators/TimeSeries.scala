@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -30,7 +30,30 @@ import graft.Tables
   */
 object TimeSeries {
 
-  private def day(c: Column): Column = date_format(date_trunc("DAY", c), "yyyy-MM-dd")
+  /** Exact integer cents of a 2-decimal reading, rounded half up. Every
+    * station series sums these, never raw doubles: an integer sum is
+    * merge-order-free, so both engines agree bit for bit. */
+  private[graft] def cents(v: Column): Column = floor(v * 100 + 0.5).cast("long")
+
+  /** Day index `x`: whole UTC days since 2024-01-01, as a long. */
+  private[graft] val dayX: Column =
+    datediff(date_trunc("DAY", col("ts")), lit("2024-01-01")).cast("long").as("x")
+
+  /** Day label `day`: the UTC day as a `yyyy-MM-dd` string (a string,
+    * not a DATE, so dumps hash alike on both engines). */
+  private[graft] val dayLabel: Column =
+    date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day")
+
+  /** The normalize step of the station-series operators: readings as
+    * integer cents `yc`, grouped per (station, day index `x`). Each
+    * caller supplies its own daily aggregate. */
+  private[graft] def dailyCents(ev: DataFrame): RelationalGroupedDataset =
+    ev.select(col("user_id"), dayX, cents(col("value")).as("yc"))
+      .groupBy(col("user_id"), col("x"))
+
+  /** Readings grouped per (station, day label `day`). */
+  private[graft] def byDay(ev: DataFrame): RelationalGroupedDataset =
+    ev.groupBy(col("user_id"), dayLabel)
 
   /** Daily resample: truncate-to-day groupBy aggregation.
     * Map-side partial agg reduces each scan partition to
@@ -43,10 +66,10 @@ object TimeSeries {
     * the [[trend]]/§5 discipline. */
   def resampleDaily(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
-      .groupBy(col("event_type"), day(col("ts")).as("day"))
+      .groupBy(col("event_type"), dayLabel)
       .agg(
         count(lit(1)).as("n"),
-        sum(floor(col("value") * 100 + 0.5).cast("long")).as("sum_c"))
+        sum(cents(col("value"))).as("sum_c"))
       .select(col("event_type"), col("day"), col("n"),
         (col("sum_c").cast("double") / 100.0).as("sum_value"),
         (floor(col("sum_c").cast("double") * 100.0 / col("n") + 0.5) / 1e4)
@@ -73,7 +96,7 @@ object TimeSeries {
       .groupBy(col("user_id"),
         date_format(date_trunc("MONTH", col("ts")), "yyyy-MM-dd").as("month"))
       .agg(count(lit(1)).as("n"),
-        sum(floor(col("value") * 100 + 0.5).cast("long")).as("sum_c"))
+        sum(cents(col("value"))).as("sum_c"))
       .select(col("user_id"), col("month"), col("n"),
         // exact integer numerators, ONE double division each — see
         // resampleDaily; avg·1e4 = cents·100/n, total·1e4 = cents·100·days/n
@@ -121,8 +144,8 @@ object TimeSeries {
       .rangeBetween(-6, Window.currentRow)
     events
       .withColumn("day_num", datediff(to_date(col("ts")), lit("1970-01-01")))
-      .withColumn("value_c", floor(col("value") * 100 + 0.5).cast("long"))
-      .select(col("event_id"), col("user_id"), day(col("ts")).as("day"),
+      .withColumn("value_c", cents(col("value")))
+      .select(col("event_id"), col("user_id"), dayLabel,
         (sum(col("value_c")).over(w) / 100.0).as("rolling_sum_7d"))
   }
 
@@ -189,7 +212,7 @@ object TimeSeries {
       .orderBy(col("ts"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     Tables.events(spark, dir)
-      .withColumn("cents", floor(col("value") * 100 + 0.5).cast("long"))
+      .withColumn("cents", cents(col("value")))
       .withColumn("mu", sum(col("cents")).over(wAll).cast("double")
         / (lit(100.0) * count(lit(1)).over(wAll)))
       .withColumn("d_u",
@@ -395,13 +418,11 @@ object TimeSeries {
     * half-quantum under a different merge order).
     * Degenerate keys (single day: zero x-variance) emit null slope. */
   def trend(spark: SparkSession, dir: String): DataFrame = {
-    val x = datediff(date_trunc("DAY", col("ts")), lit("2024-01-01")).cast("long")
     val sxx = col("n") * col("sx2") - col("sx") * col("sx")
     val syy = col("n") * col("sy2") - col("sy") * col("sy")
     val sxy = col("n") * col("sxy") - col("sx") * col("sy")
     Tables.events(spark, dir)
-      .select(col("user_id"), x.as("x"),
-        floor(col("value") * 100 + 0.5).cast("long").as("yc"))
+      .select(col("user_id"), dayX, cents(col("value")).as("yc"))
       .groupBy(col("user_id"))
       .agg(count(lit(1)).cast("double").as("n"),
         sum(col("x")).cast("double").as("sx"),
@@ -442,11 +463,7 @@ object TimeSeries {
     * statistic — unlike a sum it cannot see partition order. Output
     * quantized once at 1e-6. */
   def theilSen(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(spark, dir)
-      .select(col("user_id"),
-        datediff(date_trunc("DAY", col("ts")), lit("2024-01-01")).cast("long").as("x"),
-        floor(col("value") * 100 + 0.5).cast("long").as("yc"))
-      .groupBy(col("user_id"), col("x"))
+    val daily = dailyCents(Tables.events(spark, dir))
       .agg((sum(col("yc")).cast("double") / (count(lit(1)) * lit(100.0))).as("y"))
     daily.groupBy(col("user_id"))
       .agg(sort_array(collect_list(struct(col("x"), col("y")))).as("pts"))
@@ -493,11 +510,7 @@ object TimeSeries {
   /** [[mannKendall]] over an arbitrary (user_id, ts, value) frame —
     * seam for the planted-trend spec. */
   private[graft] def mannKendallOf(ev: DataFrame): DataFrame = {
-    val daily = ev
-      .select(col("user_id"),
-        datediff(date_trunc("DAY", col("ts")), lit("2024-01-01")).cast("long").as("x"),
-        floor(col("value") * 100 + 0.5).cast("long").as("yc"))
-      .groupBy(col("user_id"), col("x"))
+    val daily = dailyCents(ev)
       .agg((sum(col("yc")).cast("double") / (count(lit(1)) * lit(100.0))).as("y"))
     daily.groupBy(col("user_id"))
       .agg(sort_array(collect_list(struct(col("x"), col("y")))).as("pts"))
@@ -565,11 +578,7 @@ object TimeSeries {
     seasonalMannKendallOf(Tables.events(spark, dir))
 
   private[graft] def seasonalMannKendallOf(ev: DataFrame): DataFrame = {
-    val daily = ev
-      .select(col("user_id"),
-        datediff(date_trunc("DAY", col("ts")), lit("2024-01-01")).cast("long").as("x"),
-        floor(col("value") * 100 + 0.5).cast("long").as("yc"))
-      .groupBy(col("user_id"), col("x"))
+    val daily = dailyCents(ev)
       .agg((sum(col("yc")).cast("double") / (count(lit(1)) * lit(100.0))).as("y"))
       .withColumn("season", pmod(col("x"), lit(7L)))
     val per = daily.groupBy(col("user_id"), col("season"))
@@ -628,10 +637,8 @@ object TimeSeries {
     * subtraction is one exact-double op, so both engines agree
     * bit-for-bit; outputs quantized once at 1e-4. */
   def drawdown(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(spark, dir)
-      .groupBy(col("user_id"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
-      .agg((sum(floor(col("value") * 100 + 0.5).cast("long")).cast("double")
+    val daily = byDay(Tables.events(spark, dir))
+      .agg((sum(cents(col("value"))).cast("double")
         / (count(lit(1)) * lit(100.0))).as("level"))
     val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -671,11 +678,7 @@ object TimeSeries {
   /** [[runsTest]] over an arbitrary (user_id, ts, value) frame —
     * seam for the planted alternating/clumped specs. */
   private[graft] def runsTestOf(ev: DataFrame): DataFrame = {
-    val daily = ev
-      .select(col("user_id"),
-        datediff(date_trunc("DAY", col("ts")), lit("2024-01-01")).cast("long").as("x"),
-        floor(col("value") * 100 + 0.5).cast("long").as("yc"))
-      .groupBy(col("user_id"), col("x"))
+    val daily = dailyCents(ev)
       .agg((sum(col("yc")).cast("double") / (count(lit(1)) * lit(100.0))).as("y"))
     daily.groupBy(col("user_id"))
       .agg(sort_array(collect_list(struct(col("x"), col("y")))).as("pts"))
@@ -742,11 +745,7 @@ object TimeSeries {
   /** [[mannWhitney]] over an arbitrary (user_id, ts, value) frame —
     * seam for the planted shift/no-shift specs. */
   private[graft] def mannWhitneyOf(ev: DataFrame): DataFrame = {
-    val daily = ev
-      .select(col("user_id"),
-        datediff(date_trunc("DAY", col("ts")), lit("2024-01-01")).cast("long").as("x"),
-        floor(col("value") * 100 + 0.5).cast("long").as("yc"))
-      .groupBy(col("user_id"), col("x"))
+    val daily = dailyCents(ev)
       .agg((sum(col("yc")).cast("double") / (count(lit(1)) * lit(100.0))).as("y"))
       .withColumn("a", when(col("x") < 15, 1L).otherwise(0L))
     val wRank = Window.partitionBy(col("user_id")).orderBy(col("y"))
@@ -797,10 +796,8 @@ object TimeSeries {
     * threshold is an order statistic, comparisons and counts are
     * exact, one final division quantized at 1e-4. */
   def extremeDayFreq(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(spark, dir)
-      .groupBy(col("user_id"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
-      .agg((sum(floor(col("value") * 100 + 0.5).cast("long")).cast("double")
+    val daily = byDay(Tables.events(spark, dir))
+      .agg((sum(cents(col("value"))).cast("double")
         / (count(lit(1)) * lit(100.0))).as("y"))
     val w = Window.partitionBy(col("user_id"))
     val sorted = array_sort(collect_list(col("y")).over(w))
@@ -846,7 +843,7 @@ object TimeSeries {
   def coverageUptime(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
       .select(col("user_id"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"),
+        dayLabel,
         unix_timestamp(col("ts")).as("s"),
         col("event_id"))
     val w = Window.partitionBy(col("user_id"), col("day"))
@@ -885,10 +882,8 @@ object TimeSeries {
     * high-cardinality (millions of partitions of bounded length) —
     * the same distribution argument as every rolling op here. */
   def percentileOfRecord(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(spark, dir)
-      .groupBy(col("user_id"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
-      .agg((sum(floor(col("value") * 100 + 0.5).cast("long")).cast("double")
+    val daily = byDay(Tables.events(spark, dir))
+      .agg((sum(cents(col("value"))).cast("double")
         / (count(lit(1)) * lit(100.0))).as("level"))
     val byVal = Window.partitionBy(col("user_id")).orderBy(col("level"))
     val all = Window.partitionBy(col("user_id"))
@@ -975,9 +970,7 @@ object TimeSeries {
     * number; the gap scan is one lag on the (station; day) sort the
     * daily reduction already produced. */
   def tsMissingReport(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(spark, dir)
-      .groupBy(col("user_id"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
+    val daily = byDay(Tables.events(spark, dir))
       .agg(count(lit(1)).as("n_obs"))
       .withColumn("dn", datediff(col("day").cast("date"),
         lit("2024-01-01").cast("date")))
@@ -1007,7 +1000,7 @@ object TimeSeries {
     val cells = Tables.events(spark, dir)
       .groupBy(dayofweek(col("ts")).as("dow_sun1"), hour(col("ts")).as("hour"))
       .agg(count(lit(1)).as("n"),
-        sum(floor(col("value") * 100 + 0.5).cast("long")).as("sc"))
+        sum(cents(col("value"))).as("sc"))
       // Spark dayofweek is 1=Sunday; normalize to ISO 1=Monday
       .withColumn("dow", (col("dow_sun1") + 5) % 7 + 1)
     val tot = cells.agg(sum(col("n")).as("nn"))
@@ -1329,11 +1322,7 @@ object TimeSeries {
     * day): the lag join is a self-equi-join of the O(stations·days)
     * daily table on (station, x+k), never on raw events. */
   def autocorr(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(spark, dir)
-      .select(col("user_id"),
-        datediff(date_trunc("DAY", col("ts")), lit("2024-01-01")).cast("long").as("x"),
-        floor(col("value") * 100 + 0.5).cast("long").as("yc"))
-      .groupBy(col("user_id"), col("x"))
+    val daily = dailyCents(Tables.events(spark, dir))
       .agg(sum(col("yc")).as("sc"), count(lit(1)).as("cnt"))
     val stats = daily.groupBy(col("user_id"))
       .agg(sum(col("sc")).as("scs"), sum(col("cnt")).as("n_obs"))
@@ -1446,12 +1435,7 @@ object TimeSeries {
   /** [[changepoint]] over an arbitrary (user_id, ts, value) frame —
     * seam so the argmax is spec-testable on a constructed shift. */
   private[graft] def changepointOf(ev: DataFrame): DataFrame = {
-    val daily = ev
-      .select(col("user_id"),
-        datediff(date_trunc("DAY", col("ts")), lit("2024-01-01"))
-          .cast("long").as("x"),
-        floor(col("value") * 100 + 0.5).cast("long").as("yc"))
-      .groupBy(col("user_id"), col("x"))
+    val daily = dailyCents(ev)
       .agg(sum(col("yc")).as("sc"))
     val wOrd = Window.partitionBy(col("user_id")).orderBy(col("x"))
     val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1518,12 +1502,7 @@ object TimeSeries {
   /** [[periodogram]] over an arbitrary (user_id, ts, value) frame —
     * seam for the square-wave concentration spec. */
   private[graft] def periodogramOf(ev: DataFrame): DataFrame = {
-    val daily = ev
-      .select(col("user_id"),
-        datediff(date_trunc("DAY", col("ts")), lit("2024-01-01"))
-          .cast("long").as("x"),
-        floor(col("value") * 100 + 0.5).cast("long").as("yc"))
-      .groupBy(col("user_id"), col("x"))
+    val daily = dailyCents(ev)
       .agg(sum(col("yc")).as("sc"), count(lit(1)).as("cnt"))
       .localCheckpoint()
     val stats = daily.groupBy(col("user_id"))
@@ -1609,12 +1588,7 @@ object TimeSeries {
     dtwRefOf(Tables.events(spark, dir))
 
   private[graft] def dtwRefOf(ev: DataFrame): DataFrame = {
-    val daily = ev
-      .select(col("user_id"),
-        datediff(date_trunc("DAY", col("ts")), lit("2024-01-01"))
-          .cast("long").as("x"),
-        floor(col("value") * 100 + 0.5).cast("long").as("yc"))
-      .groupBy(col("user_id"), col("x"))
+    val daily = dailyCents(ev)
       .agg(sum(col("yc")).as("sc"), count(lit(1)).as("cnt"))
       .localCheckpoint()
     def q(sc: Column, cnt: Column): Column =
@@ -1645,12 +1619,7 @@ object TimeSeries {
   /** [[crossCorrRef]] over an arbitrary (user_id, ts, value) frame —
     * seam for the identical-station and zero-variance specs. */
   private[graft] def crossCorrRefOf(ev: DataFrame): DataFrame = {
-    val daily = ev
-      .select(col("user_id"),
-        datediff(date_trunc("DAY", col("ts")), lit("2024-01-01"))
-          .cast("long").as("x"),
-        floor(col("value") * 100 + 0.5).cast("long").as("yc"))
-      .groupBy(col("user_id"), col("x"))
+    val daily = dailyCents(ev)
       .agg(sum(col("yc")).as("sc"), count(lit(1)).as("cnt"))
       .localCheckpoint()
     val refAll = daily.agg(sum(col("sc")).as("tsc"), sum(col("cnt")).as("tcnt"))
@@ -1688,11 +1657,6 @@ object TimeSeries {
             * 1e4 + 0.5) / 1e4).as("r"))
   }
 
-  /** Holt linear-trend smoothing constants — BINARY-EXACT doubles
-    * (0.5, 0.25), so every multiply in the recursion is exact IEEE
-    * scaling and the fold's bits are engine-independent. */
-  private[graft] val HoltAlpha = 0.5
-  private[graft] val HoltBeta = 0.25
   private[graft] val HoltHorizons = Seq(1, 2, 3)
 
   /** HOLT double-exponential smoothing + h-step FORECAST per station
@@ -1722,17 +1686,15 @@ object TimeSeries {
   /** [[holtForecast]] over an arbitrary (user_id, ts, value) frame —
     * seam for the exact linear-series spec. */
   private[graft] def holtForecastOf(ev: DataFrame): DataFrame = {
-    val daily = ev
-      .select(col("user_id"),
-        datediff(date_trunc("DAY", col("ts")), lit("2024-01-01"))
-          .cast("long").as("x"),
-        floor(col("value") * 100 + 0.5).cast("long").as("yc"))
-      .groupBy(col("user_id"), col("x"))
+    val daily = dailyCents(ev)
       .agg((sum(col("yc")).cast("double") / (count(lit(1)) * lit(100.0)))
         .as("y"))
     daily.groupBy(col("user_id"))
       .agg(sort_array(collect_list(struct(col("x"), col("y")))).as("pts"))
       .filter(size(col("pts")) >= 2)
+      // α = 0.5, β = 0.25: BINARY-EXACT doubles, so every multiply in
+      // the recursion is exact IEEE scaling and the fold's bits are
+      // engine-independent
       .withColumn("st", expr(
         """aggregate(
           |  slice(pts, 3, size(pts) - 2),
@@ -1788,12 +1750,7 @@ object TimeSeries {
     val wRange = Window.partitionBy(col("user_id")).orderBy(col("x"))
       .rangeBetween(-3, 3)
     val wDow = Window.partitionBy(col("user_id"), col("dow"))
-    ev
-      .select(col("user_id"),
-        datediff(date_trunc("DAY", col("ts")), lit("2024-01-01"))
-          .cast("long").as("x"),
-        floor(col("value") * 100 + 0.5).cast("long").as("yc"))
-      .groupBy(col("user_id"), col("x"))
+    dailyCents(ev)
       .agg(sum(col("yc")).as("cents"))
       .withColumn("trend_u",
         floor(sum(col("cents")).over(wRange).cast("double") * 100.0
@@ -1854,7 +1811,7 @@ object TimeSeries {
     val digitCounts = (1 to 9).map(d =>
       sum(when(col("d1") === d.toString, 1L).otherwise(0L)).as(s"n$d"))
     val counted = ev
-      .withColumn("cents", floor(col("value") * 100 + 0.5).cast("long"))
+      .withColumn("cents", cents(col("value")))
       .filter(col("cents") > 0)
       .withColumn("d1", substring(col("cents").cast("string"), 1, 1))
       .groupBy(col("user_id"))
@@ -1872,8 +1829,7 @@ object TimeSeries {
   }
 
   def burstFlag(spark: SparkSession, dir: String): DataFrame = {
-    val perDay = Tables.events(spark, dir)
-      .groupBy(col("user_id"), day(col("ts")).as("day"))
+    val perDay = byDay(Tables.events(spark, dir))
       .agg(count(lit(1)).as("cnt"))
     perDay.groupBy(col("user_id"))
       .agg(sum(col("cnt")).as("n_events"),
@@ -1928,12 +1884,7 @@ object TimeSeries {
     lttbDownsampleOf(Tables.events(spark, dir))
 
   private[graft] def lttbDownsampleOf(ev: DataFrame): DataFrame = {
-    val daily = ev
-      .select(col("user_id"),
-        datediff(date_trunc("DAY", col("ts")), lit("2024-01-01"))
-          .cast("long").as("x"),
-        floor(col("value") * 100 + 0.5).cast("long").as("yc"))
-      .groupBy(col("user_id"), col("x"))
+    val daily = dailyCents(ev)
       .agg(sum(col("yc")).as("y"))
     val ser = daily.groupBy(col("user_id"))
       .agg(sort_array(collect_list(struct(col("x"), col("y")))).as("pts"))
@@ -2021,7 +1972,7 @@ object TimeSeries {
     val w = Window.partitionBy(col("user_id"))
     val scored = Tables.events(spark, dir)
       .select(col("user_id"),
-        floor(col("value") * 100 + 0.5).cast("long").as("c"))
+        cents(col("value")).as("c"))
       .withColumn("m2",
         (percentile(col("c"), lit(0.5)).over(w) * 2).cast("long"))
       .withColumn("dev2", abs(col("c") * 2 - col("m2")))
@@ -2099,7 +2050,7 @@ object TimeSeries {
       nD * col("sc2").cast("double")
         - col("sc").cast("double") * col("sc").cast("double"), lit(0.0))
     ev.select(col("user_id"), hour(col("ts")).as("hod"),
-        floor(col("value") * 100 + 0.5).cast("long").as("c"))
+        cents(col("value")).as("c"))
       .groupBy(col("user_id"), col("hod"))
       .agg(count(lit(1)).as("n_obs"),
         sum(col("c")).as("sc"), sum(col("c") * col("c")).as("sc2"))
@@ -2266,10 +2217,8 @@ object TimeSeries {
     * rows. Constant-series blocks (S = 0) are excluded; a station
     * missing either end of the ladder reports a null H. */
   def tsHurst(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(spark, dir)
-      .groupBy(col("user_id"),
-        date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
-      .agg(sum(floor(col("value") * 100 + 0.5).cast("long")).as("c"))
+    val daily = byDay(Tables.events(spark, dir))
+      .agg(sum(cents(col("value"))).as("c"))
     val wIdx = Window.partitionBy(col("user_id")).orderBy(col("day"))
     val indexed = daily
       .select(col("user_id"), col("c"),

@@ -2387,4 +2387,29 @@ class ClimateSpec extends SparkSpec {
     // sanity: sigma strictly positive wherever reported
     got.values.foreach { case (_, _, _, _, sg) => assert(sg > 0) }
   }
+
+  test("weeklyU: Monday week label, exact 1e-4 weekly mean per (station, extra)") {
+    import spark.implicits._
+    // 2024-01-01 and 2024-01-08 are Mondays, 2024-01-07 a Sunday
+    val ev = (Seq(
+      (1L, 0L, "2024-01-01 00:00:00", 1.00),
+      (1L, 0L, "2024-01-04 10:00:00", 2.00),
+      (1L, 0L, "2024-01-07 23:59:59", 2.00),
+      (1L, 1L, "2024-01-08 00:00:00", 0.01),
+      (1L, 1L, "2024-01-09 00:00:00", 0.02),
+      (2L, 0L, "2024-01-15 00:00:00", 0.01)) ++
+      // a mean of exactly 12.5e-4 rounds half up to 13
+      (1 to 7).map(h => (2L, 0L, f"2024-01-16 $h%02d:00:00", 0.0)))
+      .toDF("user_id", "member", "s", "value")
+      .withColumn("ts", to_timestamp(col("s")))
+    val perMember = Climate.weeklyU(ev, Seq(col("member")))
+    assert(perMember.columns.toSeq === Seq("user_id", "member", "week", "u"))
+    assert(perMember.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2)) -> r.getLong(3)).toMap ===
+      Map((1L, 0L, "2024-01-01") -> 16667L, (1L, 1L, "2024-01-08") -> 150L,
+        (2L, 0L, "2024-01-15") -> 13L))
+    val perStation = Climate.weeklyU(ev.filter(col("user_id") === 1L), Nil)
+    assert(perStation.collect().map(r => (r.getString(1), r.getLong(2))).toMap ===
+      Map("2024-01-01" -> 16667L, "2024-01-08" -> 150L))
+  }
 }

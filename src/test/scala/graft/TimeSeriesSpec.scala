@@ -1559,4 +1559,33 @@ class TimeSeriesSpec extends SparkSpec {
       assert(r.getDouble(5) > 0 && r.getDouble(5) <= 1.0)
     }
   }
+
+  test("series builders: half-cent quantize, one row per UTC day, day index and label") {
+    import spark.implicits._
+    import graft.operators.TimeSeries.{byDay, dailyCents}
+    val readings = Seq(
+      (1L, "2024-01-01 00:00:00", 1.005),
+      (1L, "2024-01-01 23:59:59", -1.005),
+      (1L, "2024-01-03 12:00:00", 2.125),
+      (2L, "2023-12-31 23:59:59", -0.015),
+      (2L, "2024-01-02 06:00:00", 0.005))
+    val ev = readings.toDF("user_id", "s", "value")
+      .withColumn("ts", to_timestamp(col("s")))
+    def c(v: Double): Long = math.floor(v * 100 + 0.5).toLong
+    val daily = dailyCents(ev).agg(sum(col("yc")).as("sc"), count(lit(1)).as("n"))
+    assert(daily.schema("x").dataType === org.apache.spark.sql.types.LongType)
+    val got = daily.collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
+    assert(got === Map(
+      (1L, 0L) -> (c(1.005) + c(-1.005), 2L),
+      (1L, 2L) -> (c(2.125), 1L),
+      (2L, -1L) -> (c(-0.015), 1L),
+      (2L, 1L) -> (c(0.005), 1L)))
+    assert(c(2.125) === 213L && c(0.005) === 1L)
+    val days = byDay(ev).agg(count(lit(1)).as("n")).collect()
+      .map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(days === Map((1L, "2024-01-01") -> 2L, (1L, "2024-01-03") -> 1L,
+      (2L, "2023-12-31") -> 1L, (2L, "2024-01-02") -> 1L))
+    assert(days.keys.forall(_._2.matches("""\d{4}-\d{2}-\d{2}""")))
+  }
 }
