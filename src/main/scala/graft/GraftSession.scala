@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
   * shuffle parallelism = cores (not the 200 default), UTC, the
   * TIMESTAMP(NANOS) legacy read, and the graft SQL extensions
   * registered so `norm_quantile`/`gamma_cdf`/`cosine_sim` work from
-  * plain SQL too, and generated code compiled once per JVM. */
+  * plain SQL too, generated code compiled once per JVM, and local files
+  * written without forking a process per file. */
 object GraftSession {
   /** Bound of Spark's generated-class cache. A first pass over the
     * whole query registry at sf0.1 compiles 3,101 classes, the eleven
@@ -75,6 +76,15 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // Local files without a process per file operation (LocalFiles):
+      // Hadoop's own local file system forks `chmod` and `readlink`.
+      // Hadoop caches a FileSystem by scheme, authority and user, not by
+      // configuration, so a `file://` FileSystem that anything creates
+      // before the first session keeps Hadoop's class for the life of
+      // the JVM, like the codegen bound above (LocalFilesSpec holds it).
+      .config("spark.hadoop.fs.file.impl", classOf[LocalFiles.ChecksummedFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[LocalFiles.ChecksummedFs].getName)
       .withExtensions(new graft.expressions.GraftExtensions)
 
   def create(cpus: String): SparkSession = {

@@ -427,30 +427,21 @@ object Catalog {
     * present in the incoming batch and leaves every other day's
     * files untouched — at a 10-year collection scale, the difference
     * between rewriting terabytes nightly and rewriting one day.
-    * Returns the refreshed registry row over the merged collection. */
+    * Write-only: [[publishedRegistry]] reads the merged collection back. */
   def publishIncremental(df: DataFrame, tsCol: String, collectionId: String,
-      outDir: String): DataFrame = {
-    val path = s"$outDir/$collectionId"
+      outDir: String): Unit =
     df.withColumn("p_day", to_date(col(tsCol)))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("p_day")
-      .parquet(path)
-    val merged = df.sparkSession.read.parquet(path)
-    merged.agg(
-      count(lit(1)).as("n_rows"),
-      date_format(min(col(tsCol)), "yyyy-MM-dd HH:mm:ss").as("time_start"),
-      date_format(max(col(tsCol)), "yyyy-MM-dd HH:mm:ss").as("time_end"))
-      .select(lit(collectionId).as("collection_id"), col("n_rows"),
-        col("time_start"), col("time_end"))
-  }
+      .parquet(s"$outDir/$collectionId")
 
   /** The registry frame of a PUBLISHED output lake — one
     * (collection_id, n_rows, time_start, time_end) row per collection
-    * that [[publishIncremental]] has landed under `outDir`, exactly
-    * the row shape each publish returns. This is the read-back half
-    * of a scheduled ingest cycle: after the due ticks run, the lake
-    * itself (not the runner's bookkeeping) says what exists, and
+    * that [[publishIncremental]] has landed under `outDir`. This is the
+    * read-back half of a scheduled ingest cycle: after the due ticks
+    * run, the lake itself (not the runner's bookkeeping) says what
+    * exists, and
     * [[healthOf]] turns it into freshness verdicts. Never-published
     * pipelines simply have no row. Stats-only scans — min/max/count
     * per collection. */

@@ -721,7 +721,8 @@ class StreamingSpec extends SparkSpec {
     val slice = ev.filter(d === "2024-01-03")
       .limit((day3Before / 2).toInt)
       .unionByName(ev.filter(d === "2024-01-06"))
-    val reg = Catalog.publishIncremental(slice, "ts", "inc", tmp).collect()(0)
+    Catalog.publishIncremental(slice, "ts", "inc", tmp)
+    val reg = Catalog.publishedRegistry(spark, tmp, Seq("inc")).collect()(0)
     val back = spark.read.parquet(s"$tmp/inc")
     // day 3 was REPLACED by the revision, not appended to
     assert(back.filter(col("p_day") === "2024-01-03").count() === day3Before / 2)
@@ -748,7 +749,7 @@ class StreamingSpec extends SparkSpec {
     Seq("2024-01-02", "2024-01-03").foreach { day =>
       Catalog.publishIncremental(
         ev.filter(to_date(col("ts")) === day).repartition(4),
-        "ts", "frag", tmp).collect()
+        "ts", "frag", tmp)
     }
     def dataFiles(day: String): Int =
       new java.io.File(s"$tmp/frag/p_day=$day")
