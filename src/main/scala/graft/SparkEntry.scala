@@ -314,13 +314,6 @@ object SparkEntry {
     "multimodal_resample" -> Multimodal.payloadResample _,
   )
 
-  /** SQL for one simple ring's even-odd ray-casting point-in-polygon
-    * test — generated from the SAME vertex data the Spark plan uses
-    * ([[Climate.pointInPoly]] over [[Climate.basinPolygons]]), edge
-    * for edge: half-open latitude span, cross-multiplied abscissa
-    * comparison with the inequality direction baked from the literal
-    * sign of (y2−y1), horizontal edges dropped. Both engines run the
-    * identical division-free multiply chain bit-for-bit. */
   /** VALUES rows for the periodogram's literal trig-weight table —
     * the SAME Scala-rendered doubles the Spark plan embeds, so both
     * engines parse identical bits (the polyCondSql literal pattern). */
@@ -331,6 +324,13 @@ object SparkEntry {
       (0 until t).map(r => s"($t, $r, ${cw(r)}, ${sw(r)})")
     }.mkString(", ")
 
+  /** SQL for one simple ring's even-odd ray-casting point-in-polygon
+    * test — generated from the SAME vertex data the Spark plan uses
+    * ([[Climate.pointInPoly]] over [[Climate.basinPolygons]]), edge
+    * for edge: half-open latitude span, cross-multiplied abscissa
+    * comparison with the inequality direction baked from the literal
+    * sign of (y2−y1), horizontal edges dropped. Both engines run the
+    * identical division-free multiply chain bit-for-bit. */
   private def polyCondSql(verts: Seq[(Double, Double)]): String = {
     val crossings = verts.indices.flatMap { i =>
       val (x1, y1) = verts(i)
@@ -371,26 +371,6 @@ object SparkEntry {
       s" ELSE ${pos(v)} END)"
   }
 
-  /** Full gamma-SPI oracle: Thom fit (SQL aggregates) → regularized
-    * lower incomplete gamma P(a, x/β) via the SAME power series and
-    * Lentz continued fraction as [[graft.functions.StatKernels
-    * .gammaP]], expressed as recursive CTEs stepping the identical
-    * recurrences with the identical constants and convergence tests
-    * (1e-14, 500 iterations, 1e-300 floor) → zero-correction
-    * H = q0 + (1−q0)·G → clamp → A&S 26.2.23 normal quantile. Every
-    * operation SEQUENCE matches the Scala kernels, so the two
-    * engines' doubles agree to the last few ulps and the final
-    * floor-quantization is the only rounding step; DuckDB can
-    * therefore hash-check the full fit+apply path even though it has
-    * no incomplete-gamma builtin.
-    *
-    * `accSql` must yield (event_id, keys…, [carry…,] x); the result
-    * has columns (event_id, keys…, carry…, accum, spi) matching
-    * [[graft.operators.Climate.spiGammaApply]]. `ridSql` must be a
-    * DETERMINISTIC per-row unique id over acc's columns (NOT
-    * row_number() — DuckDB inlines the CTE at each of its four
-    * references and would re-number in nondeterministic order,
-    * misaligning the joins). */
   /** The text_quality oracle body — factored out because the
     * curriculum-order query consumes the quality score (composition
     * mirrored on both sides). */
@@ -641,14 +621,22 @@ object SparkEntry {
         |  CAST(det_u - sea_u AS DOUBLE) / 1e4 AS residual
         |FROM sea""".stripMargin
 
+  /** The events grid's cell keys, oracle side: `gy`, `gx` of station
+    * `user_id` on the 8×8 lattice (`//` floors; user ids are ≥ 0). */
+  private val cellKeysSql = "user_id % 8 AS gy, (user_id // 8) % 8 AS gx"
+
+  /** A group's mean reading in exact integer micro-units, oracle side:
+    * the integer cent sum ×10⁴ over the count, rounded half up once. */
+  private val microMeanSql = "CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5)" +
+    " AS BIGINT)) * 10000 AS DOUBLE) / count(*) + 0.5) AS BIGINT)"
+
   /** The grid_gradient oracle body — factored out because the aspect
     * rose consumes the per-cell aspect (composition mirrored on both
     * sides). */
   private val gradientSql: String =
-    """WITH c AS (
-        |  SELECT user_id % 8 AS gy, (user_id // 8) % 8 AS gx,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10000
-        |      AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS v_us
+    s"""WITH c AS (
+        |  SELECT $cellKeysSql,
+        |    $microMeanSql AS v_us
         |  FROM events GROUP BY 1, 2)
         |SELECT c.gy, c.gx,
         |  floor((xp.v_us - xm.v_us) / 2.0 + 0.5) / 1e6 AS dzdx,
@@ -699,6 +687,26 @@ object SparkEntry {
         |       ELSE 'es' END AS lang_pred
         |FROM s""".stripMargin
 
+  /** Full gamma-SPI oracle: Thom fit (SQL aggregates) → regularized
+    * lower incomplete gamma P(a, x/β) via the SAME power series and
+    * Lentz continued fraction as [[graft.functions.StatKernels
+    * .gammaP]], expressed as recursive CTEs stepping the identical
+    * recurrences with the identical constants and convergence tests
+    * (1e-14, 500 iterations, 1e-300 floor) → zero-correction
+    * H = q0 + (1−q0)·G → clamp → A&S 26.2.23 normal quantile. Every
+    * operation SEQUENCE matches the Scala kernels, so the two
+    * engines' doubles agree to the last few ulps and the final
+    * floor-quantization is the only rounding step; DuckDB can
+    * therefore hash-check the full fit+apply path even though it has
+    * no incomplete-gamma builtin.
+    *
+    * `accSql` must yield (event_id, keys…, [carry…,] x); the result
+    * has columns (event_id, keys…, carry…, accum, spi) matching
+    * [[graft.operators.Climate.spiGammaApply]]. `ridSql` must be a
+    * DETERMINISTIC per-row unique id over acc's columns (NOT
+    * row_number() — DuckDB inlines the CTE at each of its four
+    * references and would re-number in nondeterministic order,
+    * misaligning the joins). */
   private def spiGammaSql(accSql: String, keys: Seq[String],
       carry: Seq[String] = Nil, fitWhere: String = "",
       ridSql: String = "acc.event_id", rowsWhere: String = ""): String = {
@@ -1008,16 +1016,6 @@ object SparkEntry {
       |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
       |  WHERE len(toks) >= 3""".stripMargin
 
-  /** MinHash+LSH oracle: the identical affine family
-    * g_i(h48) = (a_i·h + b_i) mod (2^61−1) with the constants
-    * interpolated from [[graft.operators.Dedup.minhashA]]/`minhashB`,
-    * the same 16×4 raw-tuple banding, the same bucket-frequency cap,
-    * and the same exact-Jaccard verification — all integer/md5
-    * arithmetic, so DuckDB reproduces the Spark output exactly. */
-  /** CTE chain ending in `lshp(doc_a, doc_b, jaccard)` — the
-    * verified MinHash+LSH pairs; shared by the operator oracle and
-    * the recall-audit oracle (which also reuses `sh`/`cnt` for the
-    * exhaustive truth pairs). */
   /** CTE chain for the D8 flow lane: aggregated grid cells → offset
     * table (rendered from the SAME [[graft.operators.Climate.D8]]
     * literals) → strictly-downhill candidates with the exact integer
@@ -1028,9 +1026,8 @@ object SparkEntry {
       .map { case (dy, dx, prio, name, mult) =>
         s"($dy, $dx, $prio, '$name', $mult)" }.mkString(", ")
     s"""c AS (
-       |  SELECT user_id % 8 AS gy, (user_id // 8) % 8 AS gx,
-       |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10000
-       |      AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS v_us
+       |  SELECT $cellKeysSql,
+       |    $microMeanSql AS v_us
        |  FROM events GROUP BY 1, 2),
        |offs(dy, dx, prio, dir, mult) AS (VALUES $offs),
        |cand AS (
@@ -1056,10 +1053,9 @@ object SparkEntry {
     * `fidx(name, sample, dts, size, sync, "offset")` — shared by the
     * index oracle and the keyframe-sampling oracle. */
   private def frameIndexCtes: String =
-    """s AS (
+    s"""s AS (
       |  SELECT user_id % 6 AS g,
-      |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10000
-      |      AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS seed
+      |    $microMeanSql AS seed
       |  FROM events GROUP BY 1),
       |p AS (
       |  SELECT g, abs(seed) AS a, 24 + (g % 3) * 12 AS nf,
@@ -1077,6 +1073,10 @@ object SparkEntry {
       |      AS BIGINT) AS "offset"
       |  FROM fi)""".stripMargin
 
+  /** CTE chain ending in `lshp(doc_a, doc_b, jaccard)` — the
+    * verified MinHash+LSH pairs; shared by the operator oracle and
+    * the recall-audit oracle (which also reuses `sh`/`cnt` for the
+    * exhaustive truth pairs). */
   private def minhashPairsCtes: String = {
     import graft.operators.Dedup
     val mins = (0 until Dedup.NumHashes).map { i =>
@@ -1150,6 +1150,12 @@ object SparkEntry {
       |    JOIN thr t ON m.user_id = t.user_id
       |  GROUP BY 1, 2)""".stripMargin
 
+  /** MinHash+LSH oracle: the identical affine family
+    * g_i(h48) = (a_i·h + b_i) mod (2^61−1) with the constants
+    * interpolated from [[graft.operators.Dedup.minhashA]]/`minhashB`,
+    * the same 16×4 raw-tuple banding, the same bucket-frequency cap,
+    * and the same exact-Jaccard verification — all integer/md5
+    * arithmetic, so DuckDB reproduces the Spark output exactly. */
   private def minhashLshSql: String =
     s"""WITH $minhashPairsCtes
        |SELECT doc_a, doc_b, jaccard FROM lshp""".stripMargin
@@ -4872,8 +4878,8 @@ object SparkEntry {
         |FROM b WHERE basin IS NOT NULL GROUP BY 1""".stripMargin,
 
     "grid_regrid" ->
-      """WITH g AS (
-        |  SELECT user_id % 8 AS gy, (user_id // 8) % 8 AS gx,
+      s"""WITH g AS (
+        |  SELECT $cellKeysSql,
         |    floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10000
         |      AS DOUBLE) / count(*) + 0.5) / 1e6 AS v
         |  FROM events GROUP BY 1, 2)
@@ -4894,7 +4900,7 @@ object SparkEntry {
       val vals = graft.operators.Climate.SamplePois
         .map { case (id, py, px) => s"($id, $py, $px)" }.mkString(", ")
       s"""WITH g AS (
-         |  SELECT user_id % 8 AS gy, (user_id // 8) % 8 AS gx,
+         |  SELECT $cellKeysSql,
          |    floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10000
          |      AS DOUBLE) / count(*) + 0.5) / 1e6 AS v
          |  FROM events GROUP BY 1, 2),
@@ -5004,10 +5010,9 @@ object SparkEntry {
         |FROM t GROUP BY 1""".stripMargin,
 
     "grid_coarsen" ->
-      """WITH g AS (
-        |  SELECT user_id % 8 AS gy, (user_id // 8) % 8 AS gx,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10000
-        |      AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS v_us,
+      s"""WITH g AS (
+        |  SELECT $cellKeysSql,
+        |    $microMeanSql AS v_us,
         |    count(*) AS n_obs
         |  FROM events GROUP BY 1, 2)
         |SELECT gy - gy % 2 AS block_y, gx - gx % 2 AS block_x,
@@ -5161,10 +5166,9 @@ object SparkEntry {
 
     // Σ|v−nᵢ| exact in micro-units; classes are integer thresholds
     "grid_ruggedness" ->
-      """WITH c AS (
-        |  SELECT user_id % 8 AS gy, (user_id // 8) % 8 AS gx,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10000
-        |      AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS v_us
+      s"""WITH c AS (
+        |  SELECT $cellKeysSql,
+        |    $microMeanSql AS v_us
         |  FROM events GROUP BY 1, 2)
         |SELECT c.gy, c.gx,
         |  CAST(abs(c.v_us - n00.v_us) + abs(c.v_us - n01.v_us)
@@ -5196,10 +5200,9 @@ object SparkEntry {
     // v·8 − Σ neighbors stays integer; the dead band is an integer
     // micro-unit threshold, /8 is exact (power of two)
     "grid_tpi" ->
-      """WITH c AS (
-        |  SELECT user_id % 8 AS gy, (user_id // 8) % 8 AS gx,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10000
-        |      AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS v_us
+      s"""WITH c AS (
+        |  SELECT $cellKeysSql,
+        |    $microMeanSql AS v_us
         |  FROM events GROUP BY 1, 2)
         |SELECT c.gy, c.gx,
         |  CAST(c.v_us * 8 - (n00.v_us + n01.v_us + n02.v_us + n10.v_us
@@ -5225,10 +5228,9 @@ object SparkEntry {
     // central second differences on exact micro-units; 'flat' is a
     // bit-exact zero class, not a tolerance
     "grid_curvature" ->
-      """WITH c AS (
-        |  SELECT user_id % 8 AS gy, (user_id // 8) % 8 AS gx,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10000
-        |      AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS v_us
+      s"""WITH c AS (
+        |  SELECT $cellKeysSql,
+        |    $microMeanSql AS v_us
         |  FROM events GROUP BY 1, 2)
         |SELECT c.gy, c.gx,
         |  CAST(xp.v_us - c.v_us * 2 + xm.v_us AS DOUBLE) / 1e6 AS d2zdx2,
@@ -5285,9 +5287,8 @@ object SparkEntry {
     // components; identical literal multiply/divide/sqrt chain
     "grid_hillshade" ->
       s"""WITH c AS (
-        |  SELECT user_id % 8 AS gy, (user_id // 8) % 8 AS gx,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10000
-        |      AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS v_us
+        |  SELECT $cellKeysSql,
+        |    $microMeanSql AS v_us
         |  FROM events GROUP BY 1, 2),
         |g AS (
         |  SELECT c.gy, c.gx,
@@ -5310,10 +5311,9 @@ object SparkEntry {
     // neighbor mean is integer micro-units summed (order-free) with
     // ONE final division; the mask is integer modular arithmetic
     "grid_fill_nodata" ->
-      """WITH c AS (
-        |  SELECT user_id % 8 AS gy, (user_id // 8) % 8 AS gx,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10000
-        |      AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS v_us
+      s"""WITH c AS (
+        |  SELECT $cellKeysSql,
+        |    $microMeanSql AS v_us
         |  FROM events GROUP BY 1, 2),
         |m AS (SELECT *, (gx * 8 + gy) % 7 = 3 AS masked FROM c),
         |f AS (
@@ -5333,10 +5333,9 @@ object SparkEntry {
         |FROM m LEFT JOIN f ON m.gy = f.gy AND m.gx = f.gx""".stripMargin,
 
     "grid_pyramid" ->
-      """WITH g AS (
-        |  SELECT user_id % 8 AS gy, (user_id // 8) % 8 AS gx,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10000
-        |      AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS v_us,
+      s"""WITH g AS (
+        |  SELECT $cellKeysSql,
+        |    $microMeanSql AS v_us,
         |    count(*) AS n_obs
         |  FROM events GROUP BY 1, 2),
         |c AS (SELECT *, gy - gy % 2 AS b2y, gx - gx % 2 AS b2x,
@@ -5674,10 +5673,9 @@ object SparkEntry {
     // .asc render + the Scala parser invert each other exactly (cell
     // centres are exact binary rationals — corner + half-cell)
     "grid_asc_decode" ->
-      """WITH c AS (
-        |  SELECT user_id % 8 AS gy, (user_id // 8) % 8 AS gx,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |      * 10000 AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS v_us
+      s"""WITH c AS (
+        |  SELECT $cellKeysSql,
+        |    $microMeanSql AS v_us
         |  FROM events GROUP BY 1, 2)
         |SELECT 'precip' AS var, '2024-01-15' AS day,
         |  42.125 + gy * 0.25 AS lat, -9.875 + gx * 0.25 AS lon,
@@ -5689,10 +5687,9 @@ object SparkEntry {
     // v_us mirrors the decoder's GDAL_NODATA skip exactly, so even a
     // real value colliding with the sentinel stays consistent)
     "grid_tiff_decode" ->
-      """WITH c AS (
-        |  SELECT user_id % 8 AS gy, (user_id // 8) % 8 AS gx,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |      * 10000 AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS v_us
+      s"""WITH c AS (
+        |  SELECT $cellKeysSql,
+        |    $microMeanSql AS v_us
         |  FROM events GROUP BY 1, 2)
         |SELECT 'precip' AS var, '2024-01-15' AS day,
         |  42.125 + gy * 0.25 AS lat, -9.875 + gx * 0.25 AS lon,
@@ -5704,10 +5701,9 @@ object SparkEntry {
     // oracle MULTIPLIES by 1e-6 (not divides by 1e6) because that is
     // the unpacking arithmetic the codec runs, bit-identical IEEE
     "grid_nc_decode" ->
-      """WITH c AS (
-        |  SELECT user_id % 8 AS gy, (user_id // 8) % 8 AS gx,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |      * 10000 AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS v_us
+      s"""WITH c AS (
+        |  SELECT $cellKeysSql,
+        |    $microMeanSql AS v_us
         |  FROM events GROUP BY 1, 2)
         |SELECT 'precip' AS var, '2024-01-15' AS day,
         |  42.125 + gy * 0.25 AS lat, -9.875 + gx * 0.25 AS lon,
@@ -5718,10 +5714,9 @@ object SparkEntry {
     // the GRIB-1 twin: N = v_us + 2^31 against IBM-float R = -2^31,
     // E = 0, D = 6 unpacks to exactly v_us / 1e6 on both engines
     "grid_grib_decode" ->
-      """WITH c AS (
-        |  SELECT user_id % 8 AS gy, (user_id // 8) % 8 AS gx,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |      * 10000 AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS v_us
+      s"""WITH c AS (
+        |  SELECT $cellKeysSql,
+        |    $microMeanSql AS v_us
         |  FROM events GROUP BY 1, 2)
         |SELECT 'p61' AS var, '2024-01-15' AS day,
         |  42.125 + gy * 0.25 AS lat, -9.875 + gx * 0.25 AS lon,
@@ -5733,10 +5728,9 @@ object SparkEntry {
     // padding, zlib, fill mask and the parsed scale_factor * raw —
     // v_us * 1e-6 is the identical IEEE multiply on both engines
     "grid_zarr_decode" ->
-      """WITH c AS (
-        |  SELECT user_id % 8 AS gy, (user_id // 8) % 8 AS gx,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |      * 10000 AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS v_us
+      s"""WITH c AS (
+        |  SELECT $cellKeysSql,
+        |    $microMeanSql AS v_us
         |  FROM events GROUP BY 1, 2)
         |SELECT 'precip' AS var, '2024-01-15' AS day,
         |  42.125 + gy * 0.25 AS lat, -9.875 + gx * 0.25 AS lon,
@@ -5747,10 +5741,9 @@ object SparkEntry {
     // the box-mean pyramid replays level by level; the POSITIONAL
     // checksum makes pixel placement load-bearing, not just masses
     "image_resize_pyramid" ->
-      """WITH grid AS (
+      s"""WITH grid AS (
         |  SELECT user_id % 8 AS y, (user_id // 8) % 8 AS x,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |      * 10000 AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS v_us
+        |    $microMeanSql AS v_us
         |  FROM events GROUP BY 1, 2),
         |lattice AS (
         |  SELECT g.n AS g, yy.n AS y, xx.n AS x
@@ -5788,10 +5781,9 @@ object SparkEntry {
     // pair means floor on an exactly-halved double — identical on
     // both engines even for negative odd sums
     "audio_resample_pcm" ->
-      """WITH seeds AS (
+      s"""WITH seeds AS (
         |  SELECT user_id % 8 AS g,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |      * 10000 AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS seed
+        |    $microMeanSql AS seed
         |  FROM events GROUP BY 1),
         |ser AS (
         |  SELECT s.g, r.k,
@@ -5817,10 +5809,9 @@ object SparkEntry {
     // both mvhd versions and the optional audio trak are g-arithmetic;
     // 16.16 dims come back as exact integral doubles on both engines
     "video_container_meta" ->
-      """WITH seeds AS (
+      s"""WITH seeds AS (
         |  SELECT user_id % 6 AS g,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |      * 10000 AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS seed
+        |    $microMeanSql AS seed
         |  FROM events GROUP BY 1),
         |m AS (
         |  SELECT g, abs(seed) % 600000 + 1000 AS duration,
@@ -5848,10 +5839,9 @@ object SparkEntry {
     // the events grid (all terms nonnegative, so % agrees across
     // engines); channels expand per the g→(color_type, nch) map
     "image_png_stats" ->
-      """WITH grid AS (
+      s"""WITH grid AS (
         |  SELECT user_id % 8 AS y, (user_id // 8) % 8 AS x,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |      * 10000 AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS v_us
+        |    $microMeanSql AS v_us
         |  FROM events GROUP BY 1, 2),
         |lattice AS (
         |  SELECT g.n AS g, yy.n AS y, xx.n AS x
@@ -5878,10 +5868,9 @@ object SparkEntry {
     // (seed + (k+1)*2654435761) stays positive, so truncated-division
     // mod agrees across engines; all features exact-integer
     "audio_wav_stats" ->
-      """WITH seeds AS (
+      s"""WITH seeds AS (
         |  SELECT user_id % 8 AS g,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |      * 10000 AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS seed
+        |    $microMeanSql AS seed
         |  FROM events GROUP BY 1),
         |ser AS (
         |  SELECT s.g, r.k,
@@ -5907,12 +5896,11 @@ object SparkEntry {
     // the cube carries comes back at v_us * 1e-6 (identical IEEE
     // multiply both engines); fill/padding cells never surface
     "zarr_publish_roundtrip" ->
-      """WITH g AS (
+      s"""WITH g AS (
         |  SELECT (day(ts) - 1) % 3 AS t,
         |    (user_id + day(ts)) % 8 AS i,
         |    (user_id * 3 + day(ts)) % 8 AS j,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |      * 10000 AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS v_us
+        |    $microMeanSql AS v_us
         |  FROM events GROUP BY 1, 2, 3)
         |SELECT 'precip' AS var,
         |  strftime(DATE '2024-01-15' + CAST(t AS INT), '%Y-%m-%d') AS day,
@@ -5925,12 +5913,11 @@ object SparkEntry {
     // closed-form ranges the coordinate arrays induce, missing cells
     // zero-filled exactly like the rendered raster
     "phenology_slices" ->
-      """WITH g AS (
+      s"""WITH g AS (
         |  SELECT (day(ts) - 1) % 3 AS t,
         |    (user_id + day(ts)) % 8 AS i,
         |    (user_id * 3 + day(ts)) % 8 AS j,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |      * 10000 AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS v_us
+        |    $microMeanSql AS v_us
         |  FROM events GROUP BY 1, 2, 3),
         |lattice AS (
         |  SELECT t.n AS t, yi.n AS i, xj.n AS j
@@ -5962,10 +5949,9 @@ object SparkEntry {
     // ensemble<=3, asset probe) are gid arithmetic; value = exact
     // micro-unit mean / 1e6 * factor 2.5 (both exact in IEEE)
     "stac_search_items" ->
-      """WITH g AS (
+      s"""WITH g AS (
         |  SELECT user_id % 12 AS gid, count(*) AS cnt,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |      * 10000 AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS v_us
+        |    $microMeanSql AS v_us
         |  FROM events GROUP BY 1)
         |SELECT 'item_' || lpad(CAST(gid AS VARCHAR), 3, '0') AS item_id,
         |  ['era5','cmip6','obs'][CAST(gid % 3 AS INT) + 1] AS collection,
@@ -5989,12 +5975,11 @@ object SparkEntry {
     // a parse bug cannot hash-match; percentiles are hand-rank
     // interpolated on exact micro-unit daily means
     "grid_affine_stack" ->
-      """WITH d AS (
-        |  SELECT user_id % 8 AS gy, (user_id // 8) % 8 AS gx,
+      s"""WITH d AS (
+        |  SELECT $cellKeysSql,
         |    strftime(date_trunc('month', ts), '%Y%m') AS ym,
         |    strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |      * 10000 AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS v_us
+        |    $microMeanSql AS v_us
         |  FROM events GROUP BY 1, 2, 3, 4),
         |files AS (
         |  SELECT 'creaf_fc_iberia_m_' || v.varname || '_' || m.ym AS filename,
@@ -6859,9 +6844,8 @@ object SparkEntry {
     // (row, x0) order — byte-identical across engines
     "grid_polygonize" ->
       s"""WITH RECURSIVE c AS (
-        |  SELECT user_id % 8 AS gy, (user_id // 8) % 8 AS gx,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10000
-        |      AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS v_us
+        |  SELECT $cellKeysSql,
+        |    $microMeanSql AS v_us
         |  FROM events GROUP BY 1, 2),
         |bd AS (
         |  SELECT gy, gx, CAST(floor(v_us / ${graft.operators.Polygonize.BandMicroUnits}) AS BIGINT) AS band
@@ -6935,8 +6919,7 @@ object SparkEntry {
     "video_codec_meta" ->
       s"""WITH s AS (
         |  SELECT user_id % 6 AS g,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10000
-        |      AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS seed
+        |    $microMeanSql AS seed
         |  FROM events GROUP BY 1),
         |p AS (
         |  SELECT g, abs(seed) AS a,
@@ -6981,8 +6964,7 @@ object SparkEntry {
     "audio_mp3_index" ->
       s"""WITH s AS (
         |  SELECT user_id % 8 AS g,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10000
-        |      AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS seed
+        |    $microMeanSql AS seed
         |  FROM events GROUP BY 1),
         |p AS (
         |  SELECT g, abs(seed) AS a,
@@ -7027,8 +7009,7 @@ object SparkEntry {
     "audio_adts_index" ->
       s"""WITH s AS (
         |  SELECT user_id % 8 AS g,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10000
-        |      AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS seed
+        |    $microMeanSql AS seed
         |  FROM events GROUP BY 1),
         |p AS (
         |  SELECT g, abs(seed) AS a,
@@ -7058,8 +7039,7 @@ object SparkEntry {
     "audio_ogg_index" ->
       s"""WITH s AS (
         |  SELECT user_id % 8 AS g,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10000
-        |      AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS seed
+        |    $microMeanSql AS seed
         |  FROM events GROUP BY 1),
         |p AS (
         |  SELECT g, abs(seed) AS a, 1 + g % 2 AS channels,
@@ -7101,8 +7081,7 @@ object SparkEntry {
     "audio_flac_decode" ->
       s"""WITH s AS (
         |  SELECT user_id % 8 AS g,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10000
-        |      AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS seed
+        |    $microMeanSql AS seed
         |  FROM events GROUP BY 1),
         |p AS (
         |  SELECT g, abs(seed) AS a,
@@ -7147,8 +7126,7 @@ object SparkEntry {
     "audio_flac_meta" ->
       s"""WITH s AS (
         |  SELECT user_id % 8 AS g,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10000
-        |      AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS seed
+        |    $microMeanSql AS seed
         |  FROM events GROUP BY 1),
         |p AS (
         |  SELECT g, abs(seed) AS a,
@@ -7178,10 +7156,9 @@ object SparkEntry {
     // 1e-6 — the MULTIPLY form, mirrored exactly (x·1e-6 and x/1e6
     // are different IEEE results)
     "grid_h5_decode" ->
-      """WITH c AS (
-        |  SELECT user_id % 8 AS gy, (user_id // 8) % 8 AS gx,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10000
-        |      AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS v_us,
+      s"""WITH c AS (
+        |  SELECT $cellKeysSql,
+        |    $microMeanSql AS v_us,
         |    CAST(count(*) AS BIGINT) AS n_obs
         |  FROM events GROUP BY 1, 2),
         |l AS (SELECT CAST(i // 8 AS BIGINT) AS gy, CAST(i % 8 AS BIGINT) AS gx
@@ -7227,8 +7204,8 @@ object SparkEntry {
     // fixed-width (null-terminated and space-padded) and vlen/GCOL
     // string datasets; the oracle rebuilds every label from events
     "grid_h5_text" ->
-      """WITH c AS (
-        |  SELECT user_id % 8 AS gy, (user_id // 8) % 8 AS gx,
+      s"""WITH c AS (
+        |  SELECT $cellKeysSql,
         |    CAST(count(*) AS BIGINT) AS n_obs
         |  FROM events GROUP BY 1, 2),
         |l AS (SELECT CAST(i AS BIGINT) AS i FROM range(0, 64) t(i)),
@@ -7251,9 +7228,8 @@ object SparkEntry {
       val lvls = graft.operators.Climate.contourLevels
         .map(l => s"($l)").mkString(", ")
       s"""WITH c AS (
-        |  SELECT user_id % 8 AS gy, (user_id // 8) % 8 AS gx,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10000
-        |      AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS v_us
+        |  SELECT $cellKeysSql,
+        |    $microMeanSql AS v_us
         |  FROM events GROUP BY 1, 2),
         |win AS (
         |  SELECT tl.gy, tl.gx, tl.v_us AS tl, tr.v_us AS tr,

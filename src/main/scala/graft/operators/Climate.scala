@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,6 +24,37 @@ object Climate {
   /** Exact integer cent sum of a group's readings (see
     * [[TimeSeries.cents]]): the numerator of every exact mean here. */
   private val cents = sum(TimeSeries.cents(col("value")))
+
+  /** A group's mean reading in exact integer micro-units (1e-6): the
+    * cent sum over the count, rounded half up once. Every events-grid
+    * cell value and every synthetic media `seed` is one of these. */
+  private[graft] val microMean: Column =
+    floor((cents * 10000L).cast("double") / count(lit(1)) + 0.5).cast("long")
+
+  /** The events grid's cell keys: station `user_id` lands on an 8×8
+    * lattice at row `gy = user_id % 8`, column `gx = user_id div 8 % 8`. */
+  private[graft] val cellKeys: Seq[Column] =
+    Seq((col("user_id") % 8).as("gy"), expr("user_id div 8 % 8").as("gx"))
+
+  /** Readings grouped per grid cell (and `extra`… keys); each caller
+    * supplies its own aggregate. */
+  private[graft] def byCell(ev: DataFrame, extra: Column*): RelationalGroupedDataset =
+    ev.groupBy(cellKeys ++ extra: _*)
+
+  /** All 64 `(gy, gx)` cells of the grid, readings or not: the left
+    * side of every codec lane's cell join. */
+  private[graft] def cellLattice(spark: SparkSession): DataFrame =
+    spark.range(64).select((col("id") % 8).as("gy"), expr("id div 8").as("gx"))
+
+  /** The synthetic nodata mask over `(gy, gx)`: (gx·8+gy) mod 7 = 3,
+    * ~1/7 of the cells, the same cells on both engines. */
+  private[graft] val nodata: Column = (col("gx") * 8 + col("gy")) % 7 === 3
+
+  /** One `seed` per group `g = user_id % n`: the group's micro-unit
+    * mean, the deterministic input of the synthetic media renders. */
+  private[graft] def seeds(spark: SparkSession, dir: String, n: Int): DataFrame =
+    Tables.events(spark, dir).groupBy((col("user_id") % n).as("g"))
+      .agg(microMean.as("seed"))
 
   /** Weekly mean per (station, `extra`…, Monday `week` label) in exact
     * integer 1e-4 units `u`: the cent sum over the count, floored once.
@@ -1237,28 +1268,6 @@ object Climate {
     Seq(2, 5, 10, 25, 50, 100).map(t =>
       t -> -math.log(-math.log(1.0 - 1.0 / t)))
 
-  /** T-year RETURN LEVELS per station from weekly block maxima — the
-    * extreme-value design flow behind fixed danger thresholds
-    * ([[dangerLevels]] categorizes against published levels
-    * `ll_nl_danger_levels.py:107-121`; this operator is how such
-    * levels are DERIVED from the record): Gumbel fit by method of
-    * moments on block maxima, levels at the [[ReturnPeriods]] grid.
-    *
-    * Exactness: daily totals are summed in integer CENTS and the
-    * block maxima / sufficient statistics (n, Σb, Σb²) stay integer
-    * through the shuffle, so the double math (mean, β, level) is a
-    * fixed post-aggregation expression on exact longs — the same
-    * merge-order-proof pattern as cusum/trend. Sum envelope: cents
-    * ≤ 5·10⁴ per event ⇒ Σb² per station overflows long only past
-    * ~4·10⁹ events/station-week; ANSI mode faults loudly, never
-    * wraps. Output quantized to 4dp via floor(x·1e4+0.5).
-    *
-    * Shape at scale: two narrow aggregations (station-day, then
-    * station-week) that AQE coalesces, one final per-station agg —
-    * rows shrink ~events→stations monotonically; the (T, y) grid
-    * rides a broadcast literal cross join (6 rows). Stations with
-    * n < 2 blocks cannot fit a variance and are excluded; zero
-    * variance emits NULL levels (both spec'd). */
   /** PEAKS-OVER-THRESHOLD / GPD tail fit — the other canonical
     * extreme-value lane beside [[returnLevels]]'s block maxima
     * (flood-frequency practice fits BOTH and compares: annual-max
@@ -1306,6 +1315,28 @@ object Climate {
       (floor(lit(0.5) * m * (r + lit(1.0)) * 1e4 + 0.5) / 1e4).as("sigma"))
   }
 
+  /** T-year RETURN LEVELS per station from weekly block maxima — the
+    * extreme-value design flow behind fixed danger thresholds
+    * ([[dangerLevels]] categorizes against published levels
+    * `ll_nl_danger_levels.py:107-121`; this operator is how such
+    * levels are DERIVED from the record): Gumbel fit by method of
+    * moments on block maxima, levels at the [[ReturnPeriods]] grid.
+    *
+    * Exactness: daily totals are summed in integer CENTS and the
+    * block maxima / sufficient statistics (n, Σb, Σb²) stay integer
+    * through the shuffle, so the double math (mean, β, level) is a
+    * fixed post-aggregation expression on exact longs — the same
+    * merge-order-proof pattern as cusum/trend. Sum envelope: cents
+    * ≤ 5·10⁴ per event ⇒ Σb² per station overflows long only past
+    * ~4·10⁹ events/station-week; ANSI mode faults loudly, never
+    * wraps. Output quantized to 4dp via floor(x·1e4+0.5).
+    *
+    * Shape at scale: two narrow aggregations (station-day, then
+    * station-week) that AQE coalesces, one final per-station agg —
+    * rows shrink ~events→stations monotonically; the (T, y) grid
+    * rides a broadcast literal cross join (6 rows). Stations with
+    * n < 2 blocks cannot fit a variance and are excluded; zero
+    * variance emits NULL levels (both spec'd). */
   def returnLevels(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val daily = Tables.events(spark, dir)
@@ -1742,16 +1773,10 @@ object Climate {
     * before interpolation so summation-order ulps never reach the
     * weighted sum). */
   def gridRegrid(spark: SparkSession, dir: String): DataFrame = {
-    val grid = Tables.events(spark, dir)
-      .groupBy((col("user_id") % 8).as("gy"),
-        expr("user_id div 8 % 8").as("gx"))
-      .agg(count(lit(1)).as("n"),
-        cents.as("sum_c"))
+    val grid = byCell(Tables.events(spark, dir))
       // exact cent sum → one division → 6dp quantize (§5: a raw
       // double avg can sit on a half-quantum of the 1e-6 grid)
-      .select(col("gy"), col("gx"),
-        (floor((col("sum_c") * 10000L).cast("double") / col("n") + 0.5) / 1e6)
-          .as("v"))
+      .agg((microMean / 1e6).as("v"))
       // pin the O(cells) table: bilinear references it four times,
       // and without the checkpoint each corner join re-expands the
       // aggregation lineage into its own FACT scan (plan-audited:
@@ -1787,14 +1812,8 @@ object Climate {
     * against the O(cells) grid. */
   def gridSamplePoi(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val grid = Tables.events(spark, dir)
-      .groupBy((col("user_id") % 8).as("gy"),
-        expr("user_id div 8 % 8").as("gx"))
-      .agg(cents.as("sum_c"),
-        count(lit(1)).as("n"))
-      .select(col("gy"), col("gx"),
-        (floor((col("sum_c") * 10000L).cast("double") / col("n") + 0.5) / 1e6)
-          .as("v"))
+    val grid = byCell(Tables.events(spark, dir))
+      .agg((microMean / 1e6).as("v"))
       // pinned: referenced by all four corner joins (the gridRegrid
       // idiom — without it each corner re-scans the fact table)
       .localCheckpoint()
@@ -1888,11 +1907,8 @@ object Climate {
     // (one division), not a raw double avg whose merge-order ulps
     // could flip the floor at a half-quantum (the §5 trap). The
     // block level then sums exact integers and divides once.
-    val grid = Tables.events(spark, dir)
-      .groupBy((col("user_id") % 8).as("gy"),
-        expr("user_id div 8 % 8").as("gx"))
-      .agg(floor((cents * 10000L)
-          .cast("double") / count(lit(1)) + 0.5).cast("long").as("v_us"),
+    val grid = byCell(Tables.events(spark, dir))
+      .agg(microMean.as("v_us"),
         count(lit(1)).as("n_obs"))
     grid.groupBy((col("gy") - (col("gy") % 2)).as("block_y"),
         (col("gx") - (col("gx") % 2)).as("block_x"))
@@ -1914,11 +1930,8 @@ object Climate {
     * grouping_id bitmask (3 = 2×2 blocks, 12 = 4×4 blocks, 15 =
     * global, encoded identically by both engines). */
   def gridPyramid(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Tables.events(spark, dir)
-      .groupBy((col("user_id") % 8).as("gy"),
-        expr("user_id div 8 % 8").as("gx"))
-      .agg(floor((cents * 10000L)
-          .cast("double") / count(lit(1)) + 0.5).cast("long").as("v_us"),
+    val cells = byCell(Tables.events(spark, dir))
+      .agg(microMean.as("v_us"),
         count(lit(1)).as("n_obs"))
       .select(col("gy"), col("gx"), col("v_us"), col("n_obs"),
         (col("gy") - (col("gy") % 2)).as("b2y"),
@@ -1943,6 +1956,15 @@ object Climate {
         col("n_cells"), col("n_obs"), col("v_mean"), col("v_min"), col("v_max"))
   }
 
+  /** The aggregated 8×8 elevation-grid cells (integer micro-units),
+    * PINNED — shared by the gradient/hillshade and the D8 flow lane.
+    * localCheckpoint stops each downstream shifted self-join from
+    * re-expanding the aggregation lineage over the fact table. */
+  private def gridCells(spark: SparkSession, dir: String): DataFrame =
+    byCell(Tables.events(spark, dir))
+      .agg(microMean.as("v_us"))
+      .localCheckpoint()
+
   /** Terrain-style GRADIENT of the gridded field — slope magnitude
     * and 8-way aspect per interior cell by central differences, the
     * raster-derivative primitive behind hillshade/slope/aspect
@@ -1962,18 +1984,6 @@ object Climate {
     * halved and quantized once; aspect classifies CROSS-MULTIPLIED
     * integers (|dy| vs 2|dx| octant rule), so no trig and no float
     * comparison anywhere — both engines agree bit-for-bit. */
-  /** The aggregated 8×8 elevation-grid cells (integer micro-units),
-    * PINNED — shared by the gradient/hillshade and the D8 flow lane.
-    * localCheckpoint stops each downstream shifted self-join from
-    * re-expanding the aggregation lineage over the fact table. */
-  private def gridCells(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .groupBy((col("user_id") % 8).as("gy"),
-        expr("user_id div 8 % 8").as("gx"))
-      .agg(floor((cents * 10000L)
-          .cast("double") / count(lit(1)) + 0.5).cast("long").as("v_us"))
-      .localCheckpoint()
-
   def gridGradient(spark: SparkSession, dir: String): DataFrame = {
     // one scan feeds four broadcast joins of the tiny pinned side
     // (the eventsRetention idiom) — see [[gridCells]]
@@ -2352,37 +2362,6 @@ object Climate {
     * applied to the station dim. */
   private[graft] val NnCellDeg = 10.0
 
-  /** EXACT nearest peer per station by SPATIAL-CELL BUCKETING — the
-    * grid-file search that replaces the stations² cross join. Input:
-    * (user_id, lat, lon); output: (user_id, neighbor_id, dist2) with
-    * dist2 = exact equirectangular squared degrees, argmin ties on
-    * the smaller neighbor_id, stations with no peer emit no row (the
-    * cross-join semantics preserved).
-    *
-    * Pass 1: stations land in [[NnCellDeg]]-degree cells; candidates
-    * come from one equi-join of each station's 9-cell neighborhood
-    * (3×3 offsets exploded) against the cell-keyed station table.
-    * A pick with d₁ ≤ C is PROVABLY exact — any station outside the
-    * 3×3 block differs by > C on at least one axis (cells are
-    * half-open, so the boundary case is strict), hence is strictly
-    * farther; ties inside the ring are resolved by the ordinary
-    * argmin ordering.
-    *
-    * Pass 2 (residual sliver only — stations whose pass-1 pick is
-    * > C away, or who saw no candidate at all): re-search a
-    * per-station ring of radius R = ⌊d₁/C⌋+1 cells (outside ring-R
-    * lies strictly beyond d₁, so the ring contains every possible
-    * winner), generated declaratively via sequence(−R, R)×²; a
-    * station with NO pass-1 candidate takes the network-extent
-    * radius from a 1-row aggregate that rides a literal-key
-    * broadcast equi-join (never a cross join).
-    *
-    * Scale shape: every pairing is an equi-join on integer cell
-    * keys; per-station candidate count is O(local density), and the
-    * quadratic candidate space of the old crossJoin never
-    * materializes. The plan contains no CartesianProduct /
-    * BroadcastNestedLoopJoin node (spec-asserted on a synthetic
-    * network plus the live query). */
   /** Station-grain wrapper over the cell search: co-located stations
     * (bit-equal (lat, lon) — sensor clusters, the pseudo-grid's
     * collapse) share every candidate distance, so the ring search
@@ -2436,8 +2415,40 @@ object Climate {
       .filter(col("neighbor_id").isNotNull)
   }
 
-  /** The cell-bucketed search proper — requires DISTINCT positions
-    * (the wrapper above guarantees it). */
+  /** EXACT nearest peer per station by SPATIAL-CELL BUCKETING — the
+    * grid-file search that replaces the stations² cross join. Input:
+    * (user_id, lat, lon); output: (user_id, neighbor_id, dist2) with
+    * dist2 = exact equirectangular squared degrees, argmin ties on
+    * the smaller neighbor_id, stations with no peer emit no row (the
+    * cross-join semantics preserved).
+    *
+    * Pass 1: stations land in [[NnCellDeg]]-degree cells; candidates
+    * come from one equi-join of each station's 9-cell neighborhood
+    * (3×3 offsets exploded) against the cell-keyed station table.
+    * A pick with d₁ ≤ C is PROVABLY exact — any station outside the
+    * 3×3 block differs by > C on at least one axis (cells are
+    * half-open, so the boundary case is strict), hence is strictly
+    * farther; ties inside the ring are resolved by the ordinary
+    * argmin ordering.
+    *
+    * Pass 2 (residual sliver only — stations whose pass-1 pick is
+    * > C away, or who saw no candidate at all): re-search a
+    * per-station ring of radius R = ⌊d₁/C⌋+1 cells (outside ring-R
+    * lies strictly beyond d₁, so the ring contains every possible
+    * winner), generated declaratively via sequence(−R, R)×²; a
+    * station with NO pass-1 candidate takes the network-extent
+    * radius from a 1-row aggregate that rides a literal-key
+    * broadcast equi-join (never a cross join).
+    *
+    * Scale shape: every pairing is an equi-join on integer cell
+    * keys; per-station candidate count is O(local density), and the
+    * quadratic candidate space of the old crossJoin never
+    * materializes. The plan contains no CartesianProduct /
+    * BroadcastNestedLoopJoin node (spec-asserted on a synthetic
+    * network plus the live query).
+    *
+    * Requires DISTINCT positions ([[nearestNeighborOf]], the
+    * station-grain wrapper above, guarantees it). */
   private def nearestDistinctOf(st: DataFrame): DataFrame = {
     val C = NnCellDeg
     val cells = st.select(col("user_id"), col("lat"), col("lon"),
@@ -2854,12 +2865,9 @@ object Climate {
     * No window, no cross product; neighbor arithmetic is pure integer
     * micro-units until one final division (merge-order-free). */
   def gridFillNodata(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Tables.events(spark, dir)
-      .groupBy((col("user_id") % 8).as("gy"),
-        expr("user_id div 8 % 8").as("gx"))
-      .agg(floor((cents * 10000L)
-          .cast("double") / count(lit(1)) + 0.5).cast("long").as("v_us"))
-      .withColumn("masked", (col("gx") * 8 + col("gy")) % 7 === 3)
+    val cells = byCell(Tables.events(spark, dir))
+      .agg(microMean.as("v_us"))
+      .withColumn("masked", nodata)
       .localCheckpoint()
     val valid = cells.filter(!col("masked"))
     val offsets = array((for (dy <- -1 to 1; dx <- -1 to 1
@@ -3422,8 +3430,7 @@ object Climate {
   def rijnDeficitWeekly(spark: SparkSession, dir: String): DataFrame = {
     val pd = forecastDeficitBands(spark, dir)
       .filter(col("q") === 0.5)
-      .withColumn("gy", col("user_id") % 8)
-      .withColumn("gx", expr("user_id div 8 % 8"))
+      .select(col("*") +: cellKeys: _*)
       .filter((col("gx") * 3 + col("gy") * 5) % 7 === 3)
       .withColumn("sunday", date_format(date_add(
         date_trunc("WEEK", col("day").cast("date")).cast("date"), 6),

@@ -550,22 +550,6 @@ object Dedup {
       graft.expressions.TextColumns.minhashSig(
         col("sh_arr"), minhashA, minhashB, MinhashP).as("sig"))
 
-  /** MinHash + LSH banding (`16 bands × 4 rows`): docs agreeing on
-    * any whole band become candidates; candidates are verified with
-    * the exact Jaccard — computed ONLY for candidate pairs, via a
-    * semi-join-restricted shingle join. End-to-end: no all-pairs
-    * stage, bucket-frequency capped, verification cost bounded by
-    * the candidate count. */
-  /** LSH CANDIDATE pairs from (doc_id, sh_arr) shingle-array rows:
-    * in-row signatures → raw-4-tuple band buckets → frequency cap →
-    * distinct within-bucket pairs. Shared by [[minhashLsh]] (which
-    * verifies them) and [[lshRecallAudit]] (which only needs
-    * membership). NOT pinned — callers checkpoint per their reuse. */
-  /** Band-bucket membership (doc_id, band, bh, bucket_n) BEFORE the
-    * frequency cap — shared by the candidate generator (keeps
-    * bucket_n <= [[BucketCap]]) and the recall audit's dropped-mass
-    * accounting (keeps the rest, so the cap's loss is quantified
-    * rather than silent). */
   /** Raw band-bucket membership (doc_id, band, bh) without counts —
     * the PUBLISHABLE minhash index artifact: persist it as parquet
     * once per corpus snapshot, load it per batch
@@ -590,6 +574,11 @@ object Dedup {
       count(lit(1)).over(org.apache.spark.sql.expressions.Window
         .partitionBy(col("band"), col("bh"))))
 
+  /** Band-bucket membership (doc_id, band, bh, bucket_n) BEFORE the
+    * frequency cap — shared by the candidate generator (keeps
+    * bucket_n <= [[BucketCap]]) and the recall audit's dropped-mass
+    * accounting (keeps the rest, so the cap's loss is quantified
+    * rather than silent). */
   private def bandBuckets(shArr: DataFrame): DataFrame =
     withBucketCounts(rawBandBuckets(shArr))
 
@@ -622,9 +611,20 @@ object Dedup {
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .distinct()
 
+  /** LSH CANDIDATE pairs from (doc_id, sh_arr) shingle-array rows:
+    * in-row signatures → raw-4-tuple band buckets → frequency cap →
+    * distinct within-bucket pairs. Shared by [[minhashLsh]] (which
+    * verifies them) and [[lshRecallAudit]] (which only needs
+    * membership). NOT pinned — callers checkpoint per their reuse. */
   private def minhashCandidates(shArr: DataFrame): DataFrame =
     cappedCandidatesFrom(rawBandBuckets(shArr))
 
+  /** MinHash + LSH banding (`16 bands × 4 rows`): docs agreeing on
+    * any whole band become candidates; candidates are verified with
+    * the exact Jaccard — computed ONLY for candidate pairs, via a
+    * semi-join-restricted shingle join. End-to-end: no all-pairs
+    * stage, bucket-frequency capped, verification cost bounded by
+    * the candidate count. */
   def minhashLsh(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val cands = minhashCandidates(shingleArrays(docs))
@@ -736,23 +736,6 @@ object Dedup {
         .agg(count(lit(1)).as("idx_n")),
       indexDocs, batchDocs)
 
-  /** Screen a batch against a PREBUILT (typically parquet-loaded)
-    * [[minhashIndex]] + [[minhashIndexCounts]] pair — the
-    * steady-state entry point: only the batch tokenizes and signs
-    * fresh; the [[BucketCap]] gate evaluates the COMBINED population
-    * (published index count + the batch's own delta) but touches
-    * ONLY the batch's buckets — the count table joins against the
-    * O(batch·bands) delta aggregate, never the index membership, and
-    * the membership table itself is read exactly once, restricted to
-    * the admissible buckets (a (band, bh)-keyed join — prunable at
-    * the storage layer when the index is written partitioned by
-    * band). A bucket the batch never touches can produce no
-    * candidate, so skipping its count changes nothing — the spec
-    * proves count-table + delta ≡ the combined recompute
-    * bit-for-bit. `indexDocs` supplies candidate partners' text for
-    * the exact-Jaccard verify (an id-keyed sliver read). The parquet
-    * round-trip of both artifacts is spec-proven bit-identical to
-    * the inline path. */
   /** The per-batch cap gate, isolated so its plan is auditable: the
     * batch's per-bucket deltas (O(batch·bands) rows) LEFT-join the
     * PUBLISHED count table (index-unseen buckets count as zero) and
@@ -770,6 +753,23 @@ object Dedup {
       .filter(coalesce(col("idx_n"), lit(0L)) + col("delta_n") <= BucketCap)
       .select("band", "bh")
 
+  /** Screen a batch against a PREBUILT (typically parquet-loaded)
+    * [[minhashIndex]] + [[minhashIndexCounts]] pair — the
+    * steady-state entry point: only the batch tokenizes and signs
+    * fresh; the [[BucketCap]] gate evaluates the COMBINED population
+    * (published index count + the batch's own delta) but touches
+    * ONLY the batch's buckets — the count table joins against the
+    * O(batch·bands) delta aggregate, never the index membership, and
+    * the membership table itself is read exactly once, restricted to
+    * the admissible buckets (a (band, bh)-keyed join — prunable at
+    * the storage layer when the index is written partitioned by
+    * band). A bucket the batch never touches can produce no
+    * candidate, so skipping its count changes nothing — the spec
+    * proves count-table + delta ≡ the combined recompute
+    * bit-for-bit. `indexDocs` supplies candidate partners' text for
+    * the exact-Jaccard verify (an id-keyed sliver read). The parquet
+    * round-trip of both artifacts is spec-proven bit-identical to
+    * the inline path. */
   def dedupIncrementalAgainst(indexBuckets: DataFrame, indexCounts: DataFrame,
       indexDocs: DataFrame, batchDocs: DataFrame): DataFrame = {
     // snapshot-consistency gate: the counts artifact must describe
@@ -1114,24 +1114,6 @@ object Dedup {
     * the generated oracle SQL interpolates the same constant. */
   private[graft] val ChunkTokens = 10
 
-  /** Cross-document duplicated-CHUNK report — the chunk-granularity
-    * approximation of exact substring dedup (the boilerplate/
-    * template-removal pass run before training): every document is
-    * cut into consecutive fixed-width token chunks, and any chunk
-    * appearing in ≥ 2 distinct documents is reported with its spread
-    * (distinct docs, total occurrences, first carrier). Document-
-    * level dedup cannot see these — two different pages sharing a
-    * footer are no document pair at all.
-    *
-    * Shape at scale: chunking is elementwise in the scan stage
-    * (sequence + slice over the token array — bounded by doc length);
-    * the single shuffle groups by the chunk's md5, a uniform 128-bit
-    * key with no skew by construction. The distinct-doc count inside
-    * each hash group is exact (one expand over the already-bucketed
-    * rows); occurrences of ONE degenerate chunk concentrate on one
-    * key, which AQE's skew split absorbs — there is no all-pairs
-    * anywhere. A removal pass would semi-join (doc_id, chunk_hash)
-    * against this report, elementwise again. */
   /** (doc, chunk-index, chunk-hash) rows — shared by the report and
     * the removal pass. */
   private def chunkRows(spark: SparkSession, dir: String): DataFrame = {
@@ -1151,6 +1133,24 @@ object Dedup {
           .as("chunk"))
   }
 
+  /** Cross-document duplicated-CHUNK report — the chunk-granularity
+    * approximation of exact substring dedup (the boilerplate/
+    * template-removal pass run before training): every document is
+    * cut into consecutive fixed-width token chunks, and any chunk
+    * appearing in ≥ 2 distinct documents is reported with its spread
+    * (distinct docs, total occurrences, first carrier). Document-
+    * level dedup cannot see these — two different pages sharing a
+    * footer are no document pair at all.
+    *
+    * Shape at scale: chunking is elementwise in the scan stage
+    * (sequence + slice over the token array — bounded by doc length);
+    * the single shuffle groups by the chunk's md5, a uniform 128-bit
+    * key with no skew by construction. The distinct-doc count inside
+    * each hash group is exact (one expand over the already-bucketed
+    * rows); occurrences of ONE degenerate chunk concentrate on one
+    * key, which AQE's skew split absorbs — there is no all-pairs
+    * anywhere. A removal pass would semi-join (doc_id, chunk_hash)
+    * against this report, elementwise again. */
   def dedupChunks(spark: SparkSession, dir: String): DataFrame =
     chunkRows(spark, dir)
       .select(col("doc_id"), md5(col("chunk")).as("chunk_hash"))

@@ -86,7 +86,7 @@ object Pipelines {
         col("lon") >= xMin && col("lon") <= xMax)
       .groupBy(date_trunc("DAY", col("ts")).as("time"),
         col("lat"), col("lon"))
-      .agg((floor(sum(floor(col("value") * 100 + 0.5).cast("long"))
+      .agg((floor(sum(TimeSeries.cents(col("value")))
         .cast("double") * 100.0 / count(lit(1)) + 0.5) / 1e4).as("value"))
       .withColumn("var", lit(variable))
       .localCheckpoint() // read twice: the publish and the time index
@@ -249,18 +249,6 @@ object Pipelines {
         col("n_stations"), col("n_rising"), col("n_falling"))
   }
 
-  /** The EMBEDDING-curation product end to end — the semantic half of
-    * corpus curation ([[corpusCuratePublish]] is the lexical half):
-    * candidate edges from the IVF-BLOCKED k-NN graph (the scale path —
-    * the n² exact graph never runs here), high-cosine edges cluster
-    * through connected components, the SemDeDup keep-rule drops
-    * everything but each cluster's minimum id, and the surviving
-    * vectors publish LABEL-partitioned for serving-side pruning. The
-    * keep-list side is O(clustered vectors) — vectors with no
-    * near-duplicate never enter the component pass and flow straight
-    * through the anti-join. Returns the registry row (kept / dropped
-    * / cluster counts) computed from what actually landed on disk,
-    * never by re-running the pipeline. */
   /** CURATION-AUDIT publish — the governance lane run BESIDE every
     * curation release: the three audit tables (text-side LSH recall
     * per similarity decile, embedding-side SemDeDup threshold sweep,
@@ -321,6 +309,18 @@ object Pipelines {
         col("n_sections"), col("n_rows"))
   }
 
+  /** The EMBEDDING-curation product end to end — the semantic half of
+    * corpus curation ([[corpusCuratePublish]] is the lexical half):
+    * candidate edges from the IVF-BLOCKED k-NN graph (the scale path —
+    * the n² exact graph never runs here), high-cosine edges cluster
+    * through connected components, the SemDeDup keep-rule drops
+    * everything but each cluster's minimum id, and the surviving
+    * vectors publish LABEL-partitioned for serving-side pruning. The
+    * keep-list side is O(clustered vectors) — vectors with no
+    * near-duplicate never enter the component pass and flow straight
+    * through the anti-join. Returns the registry row (kept / dropped
+    * / cluster counts) computed from what actually landed on disk,
+    * never by re-running the pipeline. */
   def embeddingCuratePublish(spark: SparkSession, dir: String,
       outDir: String): DataFrame = {
     val edges = Similarity.knnGraphIvf(spark, dir)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import Climate.{byCell, microMean}
+
 /** RASTER POLYGONIZATION + GeoJSON emission — the data-parallel core
   * of `gdal_polygonize` / `gdal_contour -p` that the reference shells
   * out to after contouring (`ingestor_knmi_evapo_fc.py:252-270`
@@ -136,11 +138,8 @@ object Polygonize {
 
   def gridContourLines(spark: SparkSession, dir: String): DataFrame =
     contourSegments(
-      graft.Tables.events(spark, dir)
-        .groupBy((col("user_id") % 8).as("gy"),
-          expr("user_id div 8 % 8").as("gx"))
-        .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
-          .cast("double") / count(lit(1)) + 0.5).cast("long").as("v_us")),
+      byCell(graft.Tables.events(spark, dir))
+        .agg(microMean.as("v_us")),
       Climate.contourLevels)
 
   /** The 8×8 events grid (same lattice as the codec/D8 lanes) banded,
@@ -149,11 +148,8 @@ object Polygonize {
     * and the Feature string. */
   def gridPolygonize(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cells = graft.Tables.events(spark, dir)
-      .groupBy((col("user_id") % 8).as("gy"),
-        expr("user_id div 8 % 8").as("gx"))
-      .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
-        .cast("double") / count(lit(1)) + 0.5).cast("long").as("v_us"))
+    val cells = byCell(graft.Tables.events(spark, dir))
+      .agg(microMean.as("v_us"))
       .withColumn("band",
         floor(col("v_us") / lit(BandMicroUnits)).cast("long"))
     val w = Window.partitionBy(col("gy"), col("band")).orderBy(col("gx"))

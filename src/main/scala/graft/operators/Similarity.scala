@@ -864,22 +864,6 @@ object Similarity {
         (col("doc_id") === col("cluster_id")).as("keep"))
   }
 
-  /** ANN RECALL AUDIT — the index-quality report that closes the
-    * audit family (text: `dedup_lsh_audit`; embeddings:
-    * `dedup_semantic_sweep`; here: the ANN index itself): per probe,
-    * how many of the EXACT top-k ([[annTopkBruteforce]]) did the
-    * hyperplane-LSH index ([[annLshTopk]]) return, and how much
-    * cosine quality the approximation gave up (mean exact-top-k
-    * cosine minus mean returned cosine — the metric that catches an
-    * index returning plausible-but-worse neighbors even at decent
-    * recall). Cosines re-quantize to exact integer 1e-4 units before
-    * the mean, so both engines' sums agree bit-for-bit.
-    *
-    * Shape at scale: both inputs are the existing bounded plans (the
-    * exact side runs on the audit's probe SAMPLE — the brute-force
-    * cost is the price of ground truth and the probe set is the
-    * knob); the audit itself joins two O(probes·k) lists. A probe the
-    * index returned nothing for keeps its row with a NULL regret. */
   /** Shared audit rollup: per-probe recall@k and mean-cosine regret
     * of an approximate top-k arm against the exact brute-force arm
     * (both as (probe_id, neighbor_id, cos_u) with cosines in exact
@@ -904,6 +888,22 @@ object Similarity {
           - col("ap_u").cast("double") / col("n_l")) / 1e4).as("cos_regret"))
   }
 
+  /** ANN RECALL AUDIT — the index-quality report that closes the
+    * audit family (text: `dedup_lsh_audit`; embeddings:
+    * `dedup_semantic_sweep`; here: the ANN index itself): per probe,
+    * how many of the EXACT top-k ([[annTopkBruteforce]]) did the
+    * hyperplane-LSH index ([[annLshTopk]]) return, and how much
+    * cosine quality the approximation gave up (mean exact-top-k
+    * cosine minus mean returned cosine — the metric that catches an
+    * index returning plausible-but-worse neighbors even at decent
+    * recall). Cosines re-quantize to exact integer 1e-4 units before
+    * the mean, so both engines' sums agree bit-for-bit.
+    *
+    * Shape at scale: both inputs are the existing bounded plans (the
+    * exact side runs on the audit's probe SAMPLE — the brute-force
+    * cost is the price of ground truth and the probe set is the
+    * knob); the audit itself joins two O(probes·k) lists. A probe the
+    * index returned nothing for keeps its row with a NULL regret. */
   def annRecallAudit(spark: SparkSession, dir: String): DataFrame = {
     val quant = (c: Column) => floor(c * 1e4 + 0.5).cast("long")
     recallRollup(

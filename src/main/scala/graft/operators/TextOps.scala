@@ -936,15 +936,6 @@ object TextOps {
     merges.toSeq.toDF("step", "left", "right", "n_occ")
   }
 
-  /** Vocabulary COVERAGE / OOV-rate report — the tokenizer-design
-    * primitive: what fraction of the running token stream does a
-    * top-K vocabulary cover, at several K, in one pass. The vocab
-    * ranking is the bounded [[vocabTopk]] plan (TakeOrdered — per-task
-    * k-row heaps, never a global sort); coverage then needs only the
-    * 100-row ranked table and one total-count scalar: cumulative sums
-    * over the RANKED VOCAB (100 rows — window on a bounded table, not
-    * the corpus) evaluated at each K. Counts are exact integers; the
-    * coverage ratio divides two exact longs. */
   /** Equal-width doc-id buckets in [[vocabGrowth]] — FIXED, so the
     * growth curve is O(1) rows at any corpus size. */
   private[graft] val GrowthBuckets = 32L
@@ -1122,6 +1113,15 @@ object TextOps {
         round(lit(1.0) - col("cum_unique") / col("cum_docs").cast("double"), 4))
   }
 
+  /** Vocabulary COVERAGE / OOV-rate report — the tokenizer-design
+    * primitive: what fraction of the running token stream does a
+    * top-K vocabulary cover, at several K, in one pass. The vocab
+    * ranking is the bounded [[vocabTopk]] plan (TakeOrdered — per-task
+    * k-row heaps, never a global sort); coverage then needs only the
+    * 100-row ranked table and one total-count scalar: cumulative sums
+    * over the RANKED VOCAB (100 rows — window on a bounded table, not
+    * the corpus) evaluated at each K. Counts are exact integers; the
+    * coverage ratio divides two exact longs. */
   def vocabCoverage(spark: SparkSession, dir: String): DataFrame = {
     val toks = Tables.spread(Tables.documents(spark, dir), col("doc_id"))
       .select(explode(words(normalized(col("text")))).as("token"))
@@ -1181,32 +1181,6 @@ object TextOps {
   /** Fraction of the corpus' total tokens the mixed dataset targets. */
   val mixBudgetShare: Double = 0.5
 
-  /** Token-budgeted SOURCE MIXING — the step that turns a mixing
-    * recipe (per-source weights × a total token budget) into concrete
-    * per-source admission rates and realized token counts: for each
-    * source, `target = budget · weight`, `rate = min(1, target /
-    * available)`, and a document is admitted iff its md5 selector
-    * bucket falls below `floor(rate · 65536)` — the deterministic,
-    * engine-invariant analogue of per-source Bernoulli sampling. The
-    * budget denominator is the WHOLE corpus' token count: unlisted
-    * sources still contribute tokens to the denominator but are
-    * excluded from admission (weight 0), exactly like dropping a
-    * low-quality source from a recipe.
-    *
-    * Shape at scale: ONE tokenize pass builds a (source × 16-bit
-    * selector bucket) HISTOGRAM — bounded at 65536·|sources| rows no
-    * matter the corpus size — which is `localCheckpoint`ed so the
-    * rate computation and the admitted-mass rollup both read the
-    * materialized sketch instead of re-scanning the corpus (the
-    * dedup-clusters precedent for cutting a reused intermediate's
-    * lineage). Admission is quantized to 2^-16 of each source, so the
-    * realized token mass is within 2^-16 of the target — and because
-    * the cut is a bucket boundary, the admitted set is exactly
-    * reproducible elementwise: the keep-list pass is one broadcast of
-    * the 10-row cut table and zero shuffles.
-    *
-    * Output: one row per weighted source with available/target/kept
-    * docs and tokens and the admission rate. */
   /** Per-doc mixing attributes: one elementwise tokenize pass. */
   private def mixBase(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
@@ -1283,6 +1257,32 @@ object TextOps {
         coalesce(col("kept_tokens"), lit(0L)).as("kept_tokens"))
   }
 
+  /** Token-budgeted SOURCE MIXING — the step that turns a mixing
+    * recipe (per-source weights × a total token budget) into concrete
+    * per-source admission rates and realized token counts: for each
+    * source, `target = budget · weight`, `rate = min(1, target /
+    * available)`, and a document is admitted iff its md5 selector
+    * bucket falls below `floor(rate · 65536)` — the deterministic,
+    * engine-invariant analogue of per-source Bernoulli sampling. The
+    * budget denominator is the WHOLE corpus' token count: unlisted
+    * sources still contribute tokens to the denominator but are
+    * excluded from admission (weight 0), exactly like dropping a
+    * low-quality source from a recipe.
+    *
+    * Shape at scale: ONE tokenize pass builds a (source × 16-bit
+    * selector bucket) HISTOGRAM — bounded at 65536·|sources| rows no
+    * matter the corpus size — which is `localCheckpoint`ed so the
+    * rate computation and the admitted-mass rollup both read the
+    * materialized sketch instead of re-scanning the corpus (the
+    * dedup-clusters precedent for cutting a reused intermediate's
+    * lineage). Admission is quantized to 2^-16 of each source, so the
+    * realized token mass is within 2^-16 of the target — and because
+    * the cut is a bucket boundary, the admitted set is exactly
+    * reproducible elementwise: the keep-list pass is one broadcast of
+    * the 10-row cut table and zero shuffles.
+    *
+    * Output: one row per weighted source with available/target/kept
+    * docs and tokens and the admission rate. */
   def corpusMix(spark: SparkSession, dir: String): DataFrame = {
     val (hist, rates) = mixFit(mixBase(spark, dir))
     val kept = hist.join(broadcast(rates.select("source", "cut")), Seq("source"))
@@ -1629,27 +1629,6 @@ object TextOps {
     * rule at the 8-gram grain this corpus supports). */
   private[graft] val BoilerplateMinDocs = 3
 
-  /** EXACT-SUBSTRING REPEATED-SPAN CENSUS — the "Deduplicating
-    * Training Data Makes Language Models Better" (Lee et al. 2021)
-    * screen re-expressed at the 8-gram grain: a position is REPEATED
-    * when its 8-gram occurs anywhere else in the corpus (a second
-    * position, same doc or not — the suffix-array definition);
-    * consecutive repeated positions merge into MAXIMAL spans
-    * (gaps-and-islands, the relational form of the suffix-array
-    * maximal repeat), and each document reports its span count,
-    * repeated-token coverage, and longest span in tokens — the
-    * numbers that decide how much of a doc the exact-substring
-    * dedup pass would cut.
-    *
-    * Shape at scale: one regex pass emits (position, gram) — pinned,
-    * reused by the global gram frequency and the island pass; the
-    * frequency is a gram-keyed count (uniform hash key, map-side
-    * partials) rejoined on the same key; islands are a per-DOC
-    * window (position − row_number), so the only window partitions
-    * by doc_id — never the corpus. The true suffix-array method
-    * needs a global sort; the n-gram relaxation is the standard
-    * distributed substitute and is exact for repeats ≥ the gram
-    * length. */
   /** Salt fan-out for the position⋈gram-set joins below. A licence
     * blurb's gram present in 10% of a 100 TB corpus would otherwise
     * put 10% of all positions in ONE shuffle partition of the join;
@@ -1701,6 +1680,27 @@ object TextOps {
     hotMatched.unionByName(coldMatched)
   }
 
+  /** EXACT-SUBSTRING REPEATED-SPAN CENSUS — the "Deduplicating
+    * Training Data Makes Language Models Better" (Lee et al. 2021)
+    * screen re-expressed at the 8-gram grain: a position is REPEATED
+    * when its 8-gram occurs anywhere else in the corpus (a second
+    * position, same doc or not — the suffix-array definition);
+    * consecutive repeated positions merge into MAXIMAL spans
+    * (gaps-and-islands, the relational form of the suffix-array
+    * maximal repeat), and each document reports its span count,
+    * repeated-token coverage, and longest span in tokens — the
+    * numbers that decide how much of a doc the exact-substring
+    * dedup pass would cut.
+    *
+    * Shape at scale: one regex pass emits (position, gram) — pinned,
+    * reused by the global gram frequency and the island pass; the
+    * frequency is a gram-keyed count (uniform hash key, map-side
+    * partials) rejoined on the same key; islands are a per-DOC
+    * window (position − row_number), so the only window partitions
+    * by doc_id — never the corpus. The true suffix-array method
+    * needs a global sort; the n-gram relaxation is the standard
+    * distributed substitute and is exact for repeats ≥ the gram
+    * length. */
   def dedupRepeatedSpans(spark: SparkSession, dir: String): DataFrame =
     dedupRepeatedSpansOf(
       Tables.spread(Tables.documents(spark, dir), col("doc_id"))

@@ -1537,24 +1537,6 @@ object TimeSeries {
   /** Lags (days) probed by [[crossCorrRef]]. */
   private[graft] val XcorrLags = Seq(0, 1, 2, 3)
 
-  /** Cross-correlation of each station against the NETWORK-MEAN
-    * reference series at calendar lags 0–3 — the teleconnection /
-    * coherence screen ("does this station follow the basin, and with
-    * how many days' delay?"), the network twin of [[autocorr]]'s
-    * self-persistence. Pearson r over calendar-matched (station-day,
-    * reference-day−k) pairs; same pooled-exact-mean and 1e-8 integer
-    * product-sum conventions as [[autocorr]] (all three sufficient
-    * statistics — num, station dev², ref dev² — accumulate over the
-    * MATCHED pairs, merge-order-free; one sqrt of a product of exact
-    * longs at the end, correctly rounded in both engines). Guarded:
-    * ≥5 pairs and nonzero variances, else null.
-    *
-    * Shape at scale: the reference series is O(days) — it aggregates
-    * out the station dimension — so the lag expansion (×4) stays
-    * O(days) and joins BROADCAST against the O(stations·days) daily
-    * table: station rows never reshuffle for the match, and output is
-    * O(stations·lags). The daily table is pinned: the network agg,
-    * the per-station means and the match all read it. */
   /** DTW band half-width in days (±2 weeks of warp allowed). */
   private[graft] val DtwBand = 14
 
@@ -1613,6 +1595,24 @@ object TimeSeries {
           .as("dtw_per_step"))
   }
 
+  /** Cross-correlation of each station against the NETWORK-MEAN
+    * reference series at calendar lags 0–3 — the teleconnection /
+    * coherence screen ("does this station follow the basin, and with
+    * how many days' delay?"), the network twin of [[autocorr]]'s
+    * self-persistence. Pearson r over calendar-matched (station-day,
+    * reference-day−k) pairs; same pooled-exact-mean and 1e-8 integer
+    * product-sum conventions as [[autocorr]] (all three sufficient
+    * statistics — num, station dev², ref dev² — accumulate over the
+    * MATCHED pairs, merge-order-free; one sqrt of a product of exact
+    * longs at the end, correctly rounded in both engines). Guarded:
+    * ≥5 pairs and nonzero variances, else null.
+    *
+    * Shape at scale: the reference series is O(days) — it aggregates
+    * out the station dimension — so the lag expansion (×4) stays
+    * O(days) and joins BROADCAST against the O(stations·days) daily
+    * table: station rows never reshuffle for the match, and output is
+    * O(stations·lags). The daily table is pinned: the network agg,
+    * the per-station means and the match all read it. */
   def crossCorrRef(spark: SparkSession, dir: String): DataFrame =
     crossCorrRefOf(Tables.events(spark, dir))
 
@@ -1769,22 +1769,6 @@ object TimeSeries {
         ((col("det_u") - col("sea_u")).cast("double") / 1e4).as("residual"))
   }
 
-  /** Per-station BURST flag — "does this key's traffic spike far
-    * above its own norm": the behavioral-anomaly screen of event
-    * hygiene (a gauge replaying its backlog, a scraper hammering an
-    * API, a bot among users). A key is bursty when its single busiest
-    * day carries more than 2× its mean active-day volume (with ≥3
-    * active days so a short history can't self-flag).
-    *
-    * Shape at scale: two hash aggregations, both map-side-partial —
-    * events → (user, day) counts (the shuffle moves O(keys × days)
-    * partial rows, not events), then (user, day) → user. No window,
-    * no join, no sort. The busiest day itself rides along as a
-    * `min(struct(-cnt, day))` — lexicographic struct ordering gives
-    * "highest count, then earliest day" deterministically, where a
-    * bare argmax would tie-break arbitrarily. The flag compares
-    * CROSS-MULTIPLIED integers (peak·n_days > 2·n_events), so
-    * membership can never flip on a float ulp. */
   /** BENFORD first-digit screen per station — the forensic
     * data-quality check (Nigrini's fraud test, applied to gauge
     * feeds: fabricated, clipped or unit-mangled readings break the
@@ -1828,6 +1812,22 @@ object TimeSeries {
         (chi2 > 20.09).as("flagged")): _*)
   }
 
+  /** Per-station BURST flag — "does this key's traffic spike far
+    * above its own norm": the behavioral-anomaly screen of event
+    * hygiene (a gauge replaying its backlog, a scraper hammering an
+    * API, a bot among users). A key is bursty when its single busiest
+    * day carries more than 2× its mean active-day volume (with ≥3
+    * active days so a short history can't self-flag).
+    *
+    * Shape at scale: two hash aggregations, both map-side-partial —
+    * events → (user, day) counts (the shuffle moves O(keys × days)
+    * partial rows, not events), then (user, day) → user. No window,
+    * no join, no sort. The busiest day itself rides along as a
+    * `min(struct(-cnt, day))` — lexicographic struct ordering gives
+    * "highest count, then earliest day" deterministically, where a
+    * bare argmax would tie-break arbitrarily. The flag compares
+    * CROSS-MULTIPLIED integers (peak·n_days > 2·n_events), so
+    * membership can never flip on a float ulp. */
   def burstFlag(spark: SparkSession, dir: String): DataFrame = {
     val perDay = byDay(Tables.events(spark, dir))
       .agg(count(lit(1)).as("cnt"))
@@ -1844,21 +1844,6 @@ object TimeSeries {
           .as("is_bursty"))
   }
 
-  /** M4 display DOWNSAMPLING — the error-free visualization reduction
-    * (Jugel et al., VLDB 2014: per pixel-column time bucket, the
-    * first/last/min/max points reproduce the exact line rendering at
-    * any series length): what an items/serving API should return for
-    * a dashboard instead of raw points (the reference serves station
-    * series to the I-CISK dashboards through pygeoapi the same way).
-    * Per (station, 6h bucket): the endpoints are lexicographic
-    * struct min/max over (ts, event_id, value) — ONE aggregation
-    * with map-side partials (struct aggregates plan as SortAggregate,
-    * so each side sorts by the GROUP KEY only), and crucially only
-    * O(groups) partial rows cross the shuffle. The rank-1-window
-    * formulation this replaces (plan-audited) sorted every raw row
-    * by full (ts, event_id) order twice AND shuffled the entire
-    * event stream. Output O(stations × buckets) regardless of event
-    * rate. */
   /** LTTB output size per station. */
   private[graft] val LttbPoints = 20
 
@@ -1901,6 +1886,21 @@ object TimeSeries {
           .as("value"))
   }
 
+  /** M4 display DOWNSAMPLING — the error-free visualization reduction
+    * (Jugel et al., VLDB 2014: per pixel-column time bucket, the
+    * first/last/min/max points reproduce the exact line rendering at
+    * any series length): what an items/serving API should return for
+    * a dashboard instead of raw points (the reference serves station
+    * series to the I-CISK dashboards through pygeoapi the same way).
+    * Per (station, 6h bucket): the endpoints are lexicographic
+    * struct min/max over (ts, event_id, value) — ONE aggregation
+    * with map-side partials (struct aggregates plan as SortAggregate,
+    * so each side sorts by the GROUP KEY only), and crucially only
+    * O(groups) partial rows cross the shuffle. The rank-1-window
+    * formulation this replaces (plan-audited) sorted every raw row
+    * by full (ts, event_id) order twice AND shuffled the entire
+    * event stream. Output O(stations × buckets) regardless of event
+    * rate. */
   def m4Downsample(spark: SparkSession, dir: String): DataFrame = {
     val bucketUs = 6L * 3600 * 1000000
     val b = Tables.events(spark, dir)
@@ -2080,13 +2080,6 @@ object TimeSeries {
           .as("anom_std"))
   }
 
-  /** Calendar densify + forward fill: per-user daily totals on a
-    * complete global day grid, gaps filled with the last observed
-    * value (0 before the first observation) — the reference re-grids
-    * every ingested series this way before analytics. The day grid is
-    * built once from a global min/max agg (2 values → broadcast) and
-    * cross-joined with the distinct-key table; the fill itself is one
-    * window pass per key. */
   /** Shared scaffold of [[gapFill]] and [[interpLinear]]: per-(station,
     * day) totals crossed with the complete global day span, observed
     * values attached by a left join. The daily table is PINNED via
@@ -2109,6 +2102,13 @@ object TimeSeries {
       .join(daily, Seq("user_id", "d"), "left")
   }
 
+  /** Calendar densify + forward fill: per-user daily totals on a
+    * complete global day grid, gaps filled with the last observed
+    * value (0 before the first observation) — the reference re-grids
+    * every ingested series this way before analytics. The day grid is
+    * built once from a global min/max agg (2 values → broadcast) and
+    * cross-joined with the distinct-key table; the fill itself is one
+    * window pass per key. */
   def gapFill(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("d"))

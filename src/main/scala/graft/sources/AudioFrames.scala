@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Climate.seeds
+
 /** FRAME-INDEX walks for the two dominant compressed-audio stream
   * formats — the container-level half of the declared MP3/AAC seam
   * (the audio analogue of [[Mp4]]'s `video_frame_index`): an audio
@@ -379,11 +381,7 @@ object AudioFrames {
     * bug cannot hash-match. */
   def audioMp3Index(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val seeds = graft.Tables.events(spark, dir)
-      .groupBy((col("user_id") % 8).as("g"))
-      .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
-        .cast("double") / count(lit(1)) + 0.5).cast("long").as("seed"))
-    val streams = seeds.as[(Long, Long)].map { case (g, seed) =>
+    val streams = seeds(spark, dir, 8).as[(Long, Long)].map { case (g, seed) =>
       val a = math.abs(seed)
       val si = (g % 3).toInt              // all three sample rates
       val rate = Mp3Rate(si)
@@ -474,11 +472,7 @@ object AudioFrames {
     * never touched. */
   def audioOggIndex(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val seeds = graft.Tables.events(spark, dir)
-      .groupBy((col("user_id") % 8).as("g"))
-      .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
-        .cast("double") / count(lit(1)) + 0.5).cast("long").as("seed"))
-    val streams = seeds.as[(Long, Long)].map { case (g, seed) =>
+    val streams = seeds(spark, dir, 8).as[(Long, Long)].map { case (g, seed) =>
       val a = math.abs(seed)
       val channels = 1 + (g % 2).toInt
       val preSkip = 312 + (a % 100).toInt
@@ -1169,11 +1163,7 @@ object AudioFrames {
     * the block schedule. */
   def audioFlacDecode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val seeds = graft.Tables.events(spark, dir)
-      .groupBy((col("user_id") % 8).as("g"))
-      .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
-        .cast("double") / count(lit(1)) + 0.5).cast("long").as("seed"))
-    val files = seeds.as[(Long, Long)].map { case (g, seed) =>
+    val files = seeds(spark, dir, 8).as[(Long, Long)].map { case (g, seed) =>
       val a = math.abs(seed)
       val rate = Seq(44100, 48000, 96000, 22050)((g % 4).toInt)
       val channels = 1 + (g % 2).toInt
@@ -1221,11 +1211,7 @@ object AudioFrames {
     * audio corpus runs before any frame decode. */
   def audioFlacMeta(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val seeds = graft.Tables.events(spark, dir)
-      .groupBy((col("user_id") % 8).as("g"))
-      .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
-        .cast("double") / count(lit(1)) + 0.5).cast("long").as("seed"))
-    val files = seeds.as[(Long, Long)].map { case (g, seed) =>
+    val files = seeds(spark, dir, 8).as[(Long, Long)].map { case (g, seed) =>
       val a = math.abs(seed)
       val rate = Seq(44100, 48000, 96000, 22050)((g % 4).toInt)
       val channels = 1 + (g % 2).toInt
@@ -1256,11 +1242,7 @@ object AudioFrames {
     * per-frame index. */
   def audioAdtsIndex(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val seeds = graft.Tables.events(spark, dir)
-      .groupBy((col("user_id") % 8).as("g"))
-      .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
-        .cast("double") / count(lit(1)) + 0.5).cast("long").as("seed"))
-    val streams = seeds.as[(Long, Long)].map { case (g, seed) =>
+    val streams = seeds(spark, dir, 8).as[(Long, Long)].map { case (g, seed) =>
       val a = math.abs(seed)
       val si = 3 + (g % 4).toInt          // 48000/44100/32000/24000
       val profile = 1 + (g % 3).toInt     // stored AOT-1: 1..3

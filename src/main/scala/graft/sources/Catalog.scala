@@ -139,17 +139,6 @@ object Catalog {
         col("prev_rows"), col("cur_rows"), col("prev_end"), col("cur_end"))
   }
 
-  /** [[diffRegistries]] as a self-contained query: the PRIOR snapshot
-    * is reconstructed from the lake itself (a real deployment diffs
-    * two persisted O(collections)-row registry parquets instead): the
-    * timed tables cut mid-history, `documents`/`embeddings` absent
-    * (onboarded since), plus a retired `legacy_grib` entry (removed
-    * since). BOTH snapshots of a table come out of ONE scan — the
-    * prior rows/extent are conditional aggregates (`sum(when(pred))`,
-    * `max(when(pred, ts))`) beside the current ones, so the lake is
-    * read once, not once per snapshot; the O(collections)-row pair
-    * table is `localCheckpoint`ed so the two projections feeding the
-    * diff don't re-run the scans. */
   /** Object-name zero-padding normalizer — the lake-side fix for the
     * reference's `add_leading_zero.sh` (single-digit ensemble-member
     * markers `_rX_` rename to `_r0X_` so LEXICOGRAPHIC listing order
@@ -272,6 +261,17 @@ object Catalog {
         lit("png").as("fmt"))
   }
 
+  /** [[diffRegistries]] as a self-contained query: the PRIOR snapshot
+    * is reconstructed from the lake itself (a real deployment diffs
+    * two persisted O(collections)-row registry parquets instead): the
+    * timed tables cut mid-history, `documents`/`embeddings` absent
+    * (onboarded since), plus a retired `legacy_grib` entry (removed
+    * since). BOTH snapshots of a table come out of ONE scan — the
+    * prior rows/extent are conditional aggregates (`sum(when(pred))`,
+    * `max(when(pred, ts))`) beside the current ones, so the lake is
+    * read once, not once per snapshot; the O(collections)-row pair
+    * table is `localCheckpoint`ed so the two projections feeding the
+    * diff don't re-run the scans. */
   def registryDiff(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     def both(df: DataFrame, name: String,

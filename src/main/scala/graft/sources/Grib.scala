@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Climate.{byCell, cellLattice, microMean, nodata}
 import Grids.{GridCell, RawTile}
 
 /** REAL GRIB edition 1 codec for the binary-drop seam — the other
@@ -222,17 +223,12 @@ object Grib {
     * decode; unpacking is (−2³¹ + (v_us+2³¹))/10⁶ = v_us/1e6, exact
     * in IEEE on both engines. */
   def gridGribDecode(spark: SparkSession, dir: String): DataFrame = {
-    val lattice = spark.range(64)
-      .select((col("id") % 8).as("gy"), expr("id div 8").as("gx"))
-    val cells = lattice.join(
-      graft.Tables.events(spark, dir)
-        .groupBy((col("user_id") % 8).as("gy"),
-          expr("user_id div 8 % 8").as("gx"))
-        .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
-          .cast("double") / count(lit(1)) + 0.5).cast("long").as("v_us")),
+    val cells = cellLattice(spark).join(
+      byCell(graft.Tables.events(spark, dir))
+        .agg(microMean.as("v_us")),
       Seq("gy", "gx"), "left")
       .withColumn("present",
-        !((col("gx") * 8 + col("gy")) % 7 === 3 || col("v_us").isNull ||
+        !(nodata || col("v_us").isNull ||
           col("v_us") === -2147483648L))
       // message cell index: north row first, west→east
       .withColumn("idx", (lit(7) - col("gy")) * 8 + col("gx"))

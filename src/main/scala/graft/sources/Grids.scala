@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Climate.{byCell, cellLattice, microMean, nodata}
+
 /** Gridded-product ingest lane — the NetCDF→zarr path that ~10 of the
   * reference's ~25 processes run (`ingestor_planetary_process.py:130`
   * `read_netcdf` → `:186` zarr out; `ingestor_creaf_tif_*` GeoTIFF;
@@ -298,17 +300,12 @@ object Grids {
     // renders rectangular — absent cells are NODATA like the masked
     // ones (a ragged body would, correctly, be quarantined by the
     // parser)
-    val lattice = spark.range(64)
-      .select((col("id") % 8).as("gy"), expr("id div 8").as("gx"))
-    val cells = lattice.join(
-      graft.Tables.events(spark, dir)
-        .groupBy((col("user_id") % 8).as("gy"),
-          expr("user_id div 8 % 8").as("gx"))
-        .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
-          .cast("double") / count(lit(1)) + 0.5).cast("long").as("v_us")),
+    val cells = cellLattice(spark).join(
+      byCell(graft.Tables.events(spark, dir))
+        .agg(microMean.as("v_us")),
       Seq("gy", "gx"), "left")
       .withColumn("masked",
-        (col("gx") * 8 + col("gy")) % 7 === 3 || col("v_us").isNull)
+        nodata || col("v_us").isNull)
     val header = Seq("ncols 8", "nrows 8", "xllcorner -10.0",
       "yllcorner 42.0", "cellsize 0.25", "NODATA_value -9999")
       .mkString("\n")
@@ -750,17 +747,12 @@ object Grids {
     * malformed quarantine). All arithmetic is exact: micro-unit
     * integers, quarter-degree binary-rational centres. */
   def gridTiffDecode(spark: SparkSession, dir: String): DataFrame = {
-    val lattice = spark.range(64)
-      .select((col("id") % 8).as("gy"), expr("id div 8").as("gx"))
-    val cells = lattice.join(
-      graft.Tables.events(spark, dir)
-        .groupBy((col("user_id") % 8).as("gy"),
-          expr("user_id div 8 % 8").as("gx"))
-        .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
-          .cast("double") / count(lit(1)) + 0.5).cast("long").as("v_us")),
+    val cells = cellLattice(spark).join(
+      byCell(graft.Tables.events(spark, dir))
+        .agg(microMean.as("v_us")),
       Seq("gy", "gx"), "left")
       .withColumn("s32",
-        when((col("gx") * 8 + col("gy")) % 7 === 3 || col("v_us").isNull,
+        when(nodata || col("v_us").isNull,
           lit(Int.MinValue.toLong)).otherwise(col("v_us")))
     // row hex per gy (west→east samples), then strip rows north-first
     val rows = cells
@@ -828,13 +820,10 @@ object Grids {
     // pin the O(cells × days) daily table: both the file list (its
     // distinct months) and the percentile groups read it, and
     // unpinned each branch re-scans the whole fact table
-    val daily = graft.Tables.events(spark, dir)
-      .groupBy((col("user_id") % 8).as("gy"),
-        expr("user_id div 8 % 8").as("gx"),
+    val daily = byCell(graft.Tables.events(spark, dir),
         date_format(date_trunc("MONTH", col("ts")), "yyyyMM").as("ym"),
         date_format(date_trunc("DAY", col("ts")), "yyyy-MM-dd").as("day"))
-      .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
-        .cast("double") / count(lit(1)) + 0.5).cast("long").as("v_us"))
+      .agg(microMean.as("v_us"))
       .localCheckpoint()
     val files = daily.select(col("ym")).distinct()
       .crossJoin(Seq("pc_50", "pc_90", "yield").toDF("varname"))

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Climate.{byCell, cellLattice, microMean}
+
 /** REAL HDF5 codec — closing the NetCDF-4 half of the CDS-download
   * seam (`ingestor_cds_process.py` requests can arrive as NetCDF-4,
   * which IS HDF5 with naming conventions; the classic-format half is
@@ -371,31 +373,6 @@ object Hdf5 {
     Right(out.result())
   }
 
-  /** DENSE group storage (the 1.8+ form past 8 links): the link
-    * messages live as MANAGED OBJECTS in a fractal heap ('FRHP'
-    * header → root 'FHDB' direct block) and are found through the
-    * name-index version-2 B-tree ('BTHD' → 'BTLF' leaf of type-5
-    * records, each 4-byte Jenkins-lookup3 name hash + heap ID).
-    * Decodes dense groups from the single-root-direct form through
-    * root-indirect (r15), NESTED-indirect and FILTERED (r16) fractal
-    * heaps, the name index at any B-tree depth; huge/tiny heap
-    * objects quarantine by name. Every record's
-    * name hash is re-derived from the decoded name with the same
-    * spec-pinned lookup3 — a heap/B-tree disagreement cannot decode
-    * silently. */
-  /** Extensible Array chunk index (layout v4 indexing type 4 — the
-    * 1-unlimited-dim case, e.g. a NetCDF-4 unlimited time axis):
-    * EAHD header → EAIB index block, whose element space is the
-    * spec's doubling geometry — `idxBlkElmts` elements stored
-    * directly in the index block, then data blocks addressed from
-    * the index block (super-block class u holds 2^⌊u/2⌋ data blocks
-    * of 2^⌈u/2⌉·minElmts elements; the first 2·(sblkMinPtrs−1) data
-    * blocks are index-block-direct), each an 'EADB' block. Elements
-    * past the direct data blocks live in super blocks — quarantined
-    * by name, as are paged data blocks. Every block's signature is
-    * checked, so a mis-derived geometry refuses loudly rather than
-    * misreading. Returns per-chunk (address, nbytes, filterMask) in
-    * linear order; 0/undef addresses mean unallocated chunks. */
   /** Element counts of the index-block-DIRECT data blocks of an
     * extensible array: super-block class u holds 2^⌊u/2⌋ data blocks
     * of 2^⌈u/2⌉·dblkMin elements; the first 2·(sblkMinPtrs−1) data
@@ -419,6 +396,19 @@ object Hdf5 {
     out.result()
   }
 
+  /** Extensible Array chunk index (layout v4 indexing type 4 — the
+    * 1-unlimited-dim case, e.g. a NetCDF-4 unlimited time axis):
+    * EAHD header → EAIB index block, whose element space is the
+    * spec's doubling geometry — `idxBlkElmts` elements stored
+    * directly in the index block, then data blocks addressed from
+    * the index block (super-block class u holds 2^⌊u/2⌋ data blocks
+    * of 2^⌈u/2⌉·minElmts elements; the first 2·(sblkMinPtrs−1) data
+    * blocks are index-block-direct), each an 'EADB' block. Elements
+    * past the direct data blocks live in super blocks — quarantined
+    * by name, as are paged data blocks. Every block's signature is
+    * checked, so a mis-derived geometry refuses loudly rather than
+    * misreading. Returns per-chunk (address, nbytes, filterMask) in
+    * linear order; 0/undef addresses mean unallocated chunks. */
   private def decodeExtensibleArray(r: Rd, eaAddr: Long,
       plainBytes: Long, filtered: Boolean, want: Long):
       Either[String, IndexedSeq[(Long, Long, Long)]] = {
@@ -701,6 +691,18 @@ object Hdf5 {
     }
   }
 
+  /** DENSE group storage (the 1.8+ form past 8 links): the link
+    * messages live as MANAGED OBJECTS in a fractal heap ('FRHP'
+    * header → root 'FHDB' direct block) and are found through the
+    * name-index version-2 B-tree ('BTHD' → 'BTLF' leaf of type-5
+    * records, each 4-byte Jenkins-lookup3 name hash + heap ID).
+    * Decodes dense groups from the single-root-direct form through
+    * root-indirect (r15), NESTED-indirect and FILTERED (r16) fractal
+    * heaps, the name index at any B-tree depth; huge/tiny heap
+    * objects quarantine by name. Every record's
+    * name hash is re-derived from the decoded name with the same
+    * spec-pinned lookup3 — a heap/B-tree disagreement cannot decode
+    * silently. */
   private def denseLinks(r: Rd, fhAddr: Long, btAddr: Long):
       Either[String, Seq[(String, Long)]] = {
     // --- fractal heap header ---
@@ -1677,8 +1679,9 @@ object Hdf5 {
   /** `v4Index` (encodeH5V2 only) selects a LAYOUT-v4 chunk index for
     * a chunked dataset — 1 = single chunk, 2 = implicit, 3 = fixed
     * array (`faPageBits` sizes its data-block pages; ≤2^bits chunks
-    * stay unpaged). None keeps the v3 chunk-B-tree layout. */
-  /** `svalues` (string datasets) replaces `values`: kind `sN`/`SN`
+    * stay unpaged). None keeps the v3 chunk-B-tree layout.
+    *
+    * `svalues` (string datasets) replaces `values`: kind `sN`/`SN`
     * writes fixed-width elements, kind `vs` writes a GCOL global
     * heap + 16-byte descriptors (encodeH5V2, contiguous only —
     * libver=latest's shape for string variables). */
@@ -2984,15 +2987,10 @@ object Hdf5 {
     * events. */
   def gridH5Decode(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val cells = graft.Tables.events(spark, dir)
-      .groupBy((col("user_id") % 8).as("gy"),
-        expr("user_id div 8 % 8").as("gx"))
-      .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
-        .cast("double") / count(lit(1)) + 0.5).cast("long").as("v_us"),
+    val cells = byCell(graft.Tables.events(spark, dir))
+      .agg(microMean.as("v_us"),
         count(lit(1)).as("n_obs"))
-    val lattice = spark.range(64)
-      .select(expr("id div 8").as("gy"), (col("id") % 8).as("gx"))
-    val doc = lattice.join(cells, Seq("gy", "gx"), "left")
+    val doc = cellLattice(spark).join(cells, Seq("gy", "gx"), "left")
       .select(col("gy"), col("gx"),
         coalesce(col("v_us"), lit(0L)).as("v_us"),
         coalesce(col("n_obs"), lit(0L)).as("n_obs"))
@@ -3088,13 +3086,9 @@ object Hdf5 {
     * recomputes every label from events. */
   def gridH5Text(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val cells = graft.Tables.events(spark, dir)
-      .groupBy((col("user_id") % 8).as("gy"),
-        expr("user_id div 8 % 8").as("gx"))
+    val cells = byCell(graft.Tables.events(spark, dir))
       .agg(count(lit(1)).as("n_obs"))
-    val lattice = spark.range(64)
-      .select(expr("id div 8").as("gy"), (col("id") % 8).as("gx"))
-    val doc = lattice.join(cells, Seq("gy", "gx"), "left")
+    val doc = cellLattice(spark).join(cells, Seq("gy", "gx"), "left")
       .select((col("gy") * 8 + col("gx")).as("i"),
         coalesce(col("n_obs"), lit(0L)).as("n_obs"))
       .groupBy()

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Climate.seeds
+
 /** REAL JPEG decoder — the largest piece of the declared
   * entropy-coded-media seam, implemented from the public standard
   * (ITU-T T.81 / ISO 10918-1): marker walk, DQT/DHT table parsing,
@@ -677,10 +679,7 @@ object Jpeg {
   private[graft] def renderedJpegs(spark: SparkSession,
       dir: String): DataFrame = {
     import spark.implicits._
-    graft.Tables.events(spark, dir)
-      .groupBy((col("user_id") % 4).as("g"))
-      .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
-        .cast("double") / count(lit(1)) + 0.5).cast("long").as("seed"))
+    seeds(spark, dir, 4)
       .as[(Long, Long)]
       .map { case (g, seed) =>
         val gray = g % 2 == 0

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Climate.seeds
+
 /** REAL MP4 / ISO-BMFF container walk — the video third of the
   * multimodal container story (PNG/JPEG/WAV headers:
   * `multimodal_container_meta`; PCM/PNG payloads: `audio_wav_stats`
@@ -831,11 +833,7 @@ object Mp4 {
     * expansion, prefix-sum, sync or offset bug cannot hash-match. */
   def videoFrameIndex(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val seeds = graft.Tables.events(spark, dir)
-      .groupBy((col("user_id") % 6).as("g"))
-      .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
-        .cast("double") / count(lit(1)) + 0.5).cast("long").as("seed"))
-    val movies = seeds.as[(Long, Long)].map { case (g, seed) =>
+    val movies = seeds(spark, dir, 6).as[(Long, Long)].map { case (g, seed) =>
       val a = math.abs(seed)
       val nFrames = 24 + (g % 3).toInt * 12
       val half = nFrames / 2
@@ -901,11 +899,7 @@ object Mp4 {
     * hint). Everything is closed-form, so the oracle replays it. */
   def videoCodecMeta(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val seeds = graft.Tables.events(spark, dir)
-      .groupBy((col("user_id") % 6).as("g"))
-      .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
-        .cast("double") / count(lit(1)) + 0.5).cast("long").as("seed"))
-    val movies = seeds.as[(Long, Long)].map { case (g, seed) =>
+    val movies = seeds(spark, dir, 6).as[(Long, Long)].map { case (g, seed) =>
       val a = math.abs(seed)
       val w = 320 + (g % 3).toInt * 320
       val h = if (g % 3 == 0) 192 else 180 + (g % 3).toInt * 180
@@ -990,11 +984,7 @@ object Mp4 {
     * movie. */
   def videoContainerMeta(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val seeds = graft.Tables.events(spark, dir)
-      .groupBy((col("user_id") % 6).as("g"))
-      .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
-        .cast("double") / count(lit(1)) + 0.5).cast("long").as("seed"))
-    val movies = seeds.as[(Long, Long)].map { case (g, seed) =>
+    val movies = seeds(spark, dir, 6).as[(Long, Long)].map { case (g, seed) =>
       val duration = math.abs(seed) % 600000L + 1000L // 1 s .. 10 min
       val a = math.abs(seed)
       val w = 320 + (g % 3).toInt * 320               // 320/640/960

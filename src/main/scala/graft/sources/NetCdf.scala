@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Climate.{byCell, cellLattice, microMean, nodata}
 import Grids.{GridCell, RawTile}
 
 /** REAL NetCDF classic codec for the binary-drop seam — the format
@@ -316,17 +317,12 @@ object NetCdf {
     val lons = Array.tabulate(8)(j => -9.875 + 0.25 * j)
     val prefixHex = encodeGridNcPrefix("precip", epochDay, lats, lons)
       .map(b => f"$b%02X").mkString
-    val lattice = spark.range(64)
-      .select((col("id") % 8).as("gy"), expr("id div 8").as("gx"))
-    val cells = lattice.join(
-      graft.Tables.events(spark, dir)
-        .groupBy((col("user_id") % 8).as("gy"),
-          expr("user_id div 8 % 8").as("gx"))
-        .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
-          .cast("double") / count(lit(1)) + 0.5).cast("long").as("v_us")),
+    val cells = cellLattice(spark).join(
+      byCell(graft.Tables.events(spark, dir))
+        .agg(microMean.as("v_us")),
       Seq("gy", "gx"), "left")
       .withColumn("s32",
-        when((col("gx") * 8 + col("gy")) % 7 === 3 || col("v_us").isNull,
+        when(nodata || col("v_us").isNull,
           lit(Int.MinValue.toLong)).otherwise(col("v_us")))
       // big-endian hex needs no byte swap: lpad(hex(two's complement))
       .withColumn("hx", lpad(hex(col("s32")

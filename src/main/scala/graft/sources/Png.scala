@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Climate.{byCell, microMean}
+
 /** REAL PNG codec — the "image decode" half of the multimodal seam
   * made real: PNG is DEFLATE plus arithmetic (chunk CRCs, five
   * scanline filters), all of which `java.util.zip` covers, so unlike
@@ -427,11 +429,9 @@ object Png {
   private[graft] def renderedImages(spark: SparkSession,
       dir: String): DataFrame = {
     import spark.implicits._
-    val grid = graft.Tables.events(spark, dir)
-      .groupBy((col("user_id") % 8).as("y"),
-        expr("user_id div 8 % 8").as("x"))
-      .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
-        .cast("double") / count(lit(1)) + 0.5).cast("long").as("v_us"))
+    val grid = byCell(graft.Tables.events(spark, dir))
+      .agg(microMean.as("v_us"))
+      .withColumnsRenamed(Map("gy" -> "y", "gx" -> "x"))
     val lattice = spark.range(256)
       .select(expr("id div 64").as("g"),
         expr("id % 64 div 8").as("y"), (col("id") % 8).as("x"))

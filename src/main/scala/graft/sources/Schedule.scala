@@ -146,15 +146,6 @@ object Schedule {
       .write.mode("overwrite").parquet(s"$outDir/_watermarks/$pipeline")
   }
 
-  /** Run everything due: for each due tick (collected — orchestration-
-    * sized, see scaladoc above) call the pipeline's slice runner and
-    * publish its output incrementally, then advance the watermark.
-    * Returns one report row per tick run: (pipeline, tick_start,
-    * tick_end, n_rows). Re-invoking at the same `now` after success is
-    * a no-op (watermarks moved past every tick); re-invoking after a
-    * partial failure re-runs only the unfinished ticks. Ticks run in
-    * time order per pipeline so a mid-sequence failure leaves the
-    * watermark exactly at the failure point. */
   /** THE REFERENCE'S WHOLE CRON LOOP, composed end-to-end: what
     * `scheduler.sh` + `invoke_<key>_ingestor.py` +
     * `ingestor_cds_process.py` (fetch GRIB/NetCDF → decode →
@@ -210,6 +201,15 @@ object Schedule {
     (reports, registry, Catalog.healthOf(registry))
   }
 
+  /** Run everything due: for each due tick (collected — orchestration-
+    * sized, see scaladoc above) call the pipeline's slice runner and
+    * publish its output incrementally, then advance the watermark.
+    * Returns one report row per tick run: (pipeline, tick_start,
+    * tick_end, n_rows). Re-invoking at the same `now` after success is
+    * a no-op (watermarks moved past every tick); re-invoking after a
+    * partial failure re-runs only the unfinished ticks. Ticks run in
+    * time order per pipeline so a mid-sequence failure leaves the
+    * watermark exactly at the failure point. */
   def runDue(spark: SparkSession, entries: Seq[Entry], nowIso: String, outDir: String)(
       runners: Map[String, (java.sql.Timestamp, java.sql.Timestamp) => DataFrame]): Seq[(String, String, String, Long)] = {
     val sched = registry(spark, entries)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.Climate.microMean
+
 /** STAC (SpatioTemporal Asset Catalog) search-result processing — the
   * data semantics of `ingestor_planetary_process.py:195-230`: a STAC
   * API search (collections + closed datetime interval + query-
@@ -120,8 +122,7 @@ object Stac {
     val items = graft.Tables.events(spark, dir)
       .groupBy((col("user_id") % 12).as("gid"))
       .agg(count(lit(1)).as("cnt"),
-        floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
-          .cast("double") / count(lit(1)) + 0.5).cast("long").as("v_us"))
+        microMean.as("v_us"))
       .withColumn("id", concat(lit("item_"), lpad(col("gid"), 3, "0")))
       .withColumn("collection", element_at(
         array(lit("era5"), lit("cmip6"), lit("obs")),

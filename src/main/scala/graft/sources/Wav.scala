@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Climate.seeds
+
 /** REAL WAV payload codec — the first multimodal lane where the
   * PAYLOAD decodes for real, not behind the codec-lib seam:
   * linear PCM (8/16-bit), G.711 µ-law/A-law (formats 7/6), IMA
@@ -320,27 +322,14 @@ object Wav {
       decoded.filter(!col("ok")).select(col("name"), col("reason")))
   }
 
-  /** END-TO-END oracle-checked lane: 8 PCM clips render in-plan —
-    * each clip's samples are a Weyl-sequence series SEEDED by the
-    * events grid (`s_k = ((seed_g + (k+1)·2654435761) mod 65536) −
-    * 32768`, seed_g the exact micro-unit mean of the clip's grid
-    * cell), the 44-byte header is arithmetic over the data-derived
-    * length — then decode back through the REAL RIFF walk and
-    * reduce to exact-integer waveform features: Σs² (the RMS
-    * numerator), peak |s|, sign flips (zero crossings over a lag
-    * window), near-silence count. A header, sign-extension,
-    * alignment or ordering bug cannot hash-match. */
   /** The eight-clip render shared by [[audioWavStats]] and
     * [[audioResamplePcm]]. */
   private[graft] def renderedClips(spark: SparkSession,
       dir: String): DataFrame = {
     import spark.implicits._
-    val seeds = graft.Tables.events(spark, dir)
-      .groupBy((col("user_id") % 8).as("g"))
-      .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
-        .cast("double") / count(lit(1)) + 0.5).cast("long").as("seed"))
+    val clips = seeds(spark, dir, 8)
       .select(col("g"), col("seed"), (lit(160) + col("g") * 16).as("n"))
-    seeds.as[(Long, Long, Long)].map { case (g, seed, n) =>
+    clips.as[(Long, Long, Long)].map { case (g, seed, n) =>
       val samples = Array.tabulate(n.toInt)(k =>
         (((seed + (k + 1) * 2654435761L) % 65536L).toInt - 32768))
       val body = java.nio.ByteBuffer
@@ -351,6 +340,16 @@ object Wav {
     }.toDF("name", "content")
   }
 
+  /** END-TO-END oracle-checked lane: 8 PCM clips render in-plan —
+    * each clip's samples are a Weyl-sequence series SEEDED by the
+    * events grid (`s_k = ((seed_g + (k+1)·2654435761) mod 65536) −
+    * 32768`, seed_g the exact micro-unit mean of the clip's grid
+    * cell), the 44-byte header is arithmetic over the data-derived
+    * length — then decode back through the REAL RIFF walk and
+    * reduce to exact-integer waveform features: Σs² (the RMS
+    * numerator), peak |s|, sign flips (zero crossings over a lag
+    * window), near-silence count. A header, sign-extension,
+    * alignment or ordering bug cannot hash-match. */
   def audioWavStats(spark: SparkSession, dir: String): DataFrame = {
     val (samples, _) = decodeWavDrop(renderedClips(spark, dir))
     // lag per (clip, channel): multi-channel clips never mix channels

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.Climate.{byCell, microMean, nodata}
+
 /** REAL zarr v2 codec — the reference's PRIMARY PUBLISH format:
   * every ingestor ends in `ds.to_zarr(store, consolidated=True)`
   * (`ingestor_cds_process.py`, `data_prep_knmi_evapo_forecast.py:
@@ -386,11 +388,8 @@ object Zarr {
       (".zgroup", """{"zarr_format":2}""".getBytes("UTF-8")),
       ("lat/0", hexToBytes(f8Hex(lats))),
       ("lon/0", hexToBytes(f8Hex(lons))))
-    val cellVals = graft.Tables.events(spark, dir)
-      .groupBy((col("user_id") % 8).as("gy"),
-        expr("user_id div 8 % 8").as("gx"))
-      .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
-        .cast("double") / count(lit(1)) + 0.5).cast("long").as("v_us"))
+    val cellVals = byCell(graft.Tables.events(spark, dir))
+      .agg(microMean.as("v_us"))
     // chunk lattice: 9 chunks × 9 in-chunk slots; slots beyond the
     // 8×8 shape are zarr edge padding and render as fill
     val slots = spark.range(81)
@@ -402,7 +401,7 @@ object Zarr {
     val packed = slots
       .join(cellVals
         .select((lit(7) - col("gy")).as("i"), col("gx").as("j"),
-          col("v_us"), ((col("gx") * 8 + col("gy")) % 7 === 3).as("masked")),
+          col("v_us"), nodata.as("masked")),
         Seq("i", "j"), "left")
       .withColumn("v", when(col("i") >= 8 || col("j") >= 8 ||
         col("masked") || col("v_us").isNull, lit(Fill))
@@ -473,8 +472,7 @@ object Zarr {
         ((col("user_id") * 3 + dayofmonth(col("ts"))) % 8).as("j"),
         col("value"))
       .groupBy(col("t"), col("i"), col("j"))
-      .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
-        .cast("double") / count(lit(1)) + 0.5).cast("long").as("v_us"))
+      .agg(microMean.as("v_us"))
       .select(
         date_format(date_add(to_date(lit("2024-01-15")),
           col("t").cast("int")), "yyyy-MM-dd").as("day"),
@@ -687,8 +685,7 @@ object Zarr {
         ((col("user_id") * 3 + dayofmonth(col("ts"))) % 8).as("j"),
         col("value"))
       .groupBy(col("t"), col("i"), col("j"))
-      .agg(floor((sum(floor(col("value") * 100 + 0.5).cast("long")) * 10000L)
-        .cast("double") / count(lit(1)) + 0.5).cast("long").as("v_us"))
+      .agg(microMean.as("v_us"))
     // 12 chunks (t, ci, cj) × 16 slots; 8 % 4 == 0 → no edge padding
     val slots = spark.range(192)
       .select(expr("id div 16").as("ck"), (col("id") % 16).as("slot"))

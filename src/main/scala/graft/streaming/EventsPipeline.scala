@@ -287,7 +287,7 @@ object EventsPipeline {
     e.groupBy(window(col("ts"), "1 hour").as("w"),
         col("z").cast("long").as("z"), col("x"), col("y"))
       .agg(count(lit(1)).as("n"),
-        sum(floor(col("value") * 100 + 0.5).cast("long")).as("sum_cents"))
+        sum(graft.operators.TimeSeries.cents(col("value"))).as("sum_cents"))
       .select(col("w.start").as("window_start"), col("z"), col("x"),
         col("y"), col("n"), col("sum_cents"))
   }

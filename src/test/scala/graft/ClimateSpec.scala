@@ -2412,4 +2412,43 @@ class ClimateSpec extends SparkSpec {
     assert(perStation.collect().map(r => (r.getString(1), r.getLong(2))).toMap ===
       Map("2024-01-01" -> 16667L, "2024-01-08" -> 150L))
   }
+
+  test("events grid: byCell keys gy = user_id % 8, gx = user_id div 8 % 8, extra keys last") {
+    import spark.implicits._
+    val ev = Seq((0L, 1L), (7L, 1L), (8L, 1L), (63L, 1L), (64L, 2L))
+      .toDF("user_id", "member").withColumn("value", lit(1.0))
+    val cells = Climate.byCell(ev).agg(count(lit(1)).as("n"))
+    assert(cells.columns.toSeq === Seq("gy", "gx", "n"))
+    // 64 wraps onto 0's cell
+    assert(cells.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap ===
+      Map((0L, 0L) -> 2L, (7L, 0L) -> 1L, (0L, 1L) -> 1L, (7L, 7L) -> 1L))
+    val perMember = Climate.byCell(ev, col("member")).agg(count(lit(1)).as("n"))
+    assert(perMember.columns.toSeq === Seq("gy", "gx", "member", "n"))
+    assert(perMember.filter(col("gy") === 0 && col("gx") === 0).count() === 2)
+  }
+
+  test("events grid: microMean rounds an exact half micro-unit up, for either sign") {
+    import spark.implicits._
+    // 1 cent over 32 readings is 312.5 micro-units exactly (10⁴/32 is a
+    // binary fraction): half up gives 313, and −312.5 floors up to −312
+    val ev = (Seq((1, 0.01), (2, -0.01), (3, 1.23)) ++
+      (1 to 31).flatMap(_ => Seq((1, 0.0), (2, 0.0))))
+      .toDF("g", "value")
+    val m = ev.groupBy(col("g")).agg(Climate.microMean.as("m"))
+    assert(m.schema("m").dataType === org.apache.spark.sql.types.LongType)
+    assert(m.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap ===
+      Map(1 -> 313L, 2 -> -312L, 3 -> 1230000L))
+  }
+
+  test("events grid: the lattice holds 64 distinct cells, the nodata mask 9 of them") {
+    val lattice = Climate.cellLattice(spark)
+    val cells = lattice.collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(lattice.columns.toSeq === Seq("gy", "gx"))
+    assert(cells.length === 64)
+    assert(cells.toSet === (for (y <- 0L to 7L; x <- 0L to 7L) yield (y, x)).toSet)
+    val masked = lattice.filter(Climate.nodata).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(masked === cells.filter { case (y, x) => (x * 8 + y) % 7 == 3 }.toSet)
+    assert(masked.size === 9)
+  }
 }
