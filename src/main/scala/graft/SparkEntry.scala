@@ -314,6 +314,555 @@ object SparkEntry {
     "multimodal_resample" -> Multimodal.payloadResample _,
   )
 
+  // --- oracle normalize fragments ---------------------------------
+  // One DuckDB spelling per normalize step (SURVEY §1.2), shared by
+  // every oracle that takes it. They stay plain SQL, never rendered
+  // from the Spark helpers, so the oracles remain an independent
+  // reference. Kept above all oracle bodies: an object's vals
+  // initialize in textual order.
+
+  /** A reading in integer cents, rounded half up. */
+  private val centsSql = "CAST(floor(value * 100 + 0.5) AS BIGINT)"
+
+  /** A group's exact cent sum. */
+  private val centSumSql = s"CAST(sum($centsSql) AS BIGINT)"
+
+  /** A group's mean reading: its exact cent sum over the count. */
+  private val centMeanSql = s"CAST(sum($centsSql) AS DOUBLE) / (count(*) * 100.0)"
+
+  /** A group's mean reading to 4 dp, rounded half up once. */
+  private val avg4Sql =
+    s"floor(CAST(sum($centsSql) AS DOUBLE) * 100.0 / count(*) + 0.5) / 1e4"
+
+  /** A group's mean reading in exact integer micro-units: the integer
+    * cent sum ×10⁴ over the count, rounded half up once. */
+  private val microMeanSql =
+    s"CAST(floor(CAST(sum($centsSql) * 10000 AS DOUBLE) / count(*) + 0.5) AS BIGINT)"
+
+  /** The `yyyy-MM-dd` label of a reading's day and of its ISO week's
+    * Monday. */
+  private val dayLabelSql = "strftime(date_trunc('day', ts), '%Y-%m-%d')"
+  private val weekLabelSql = "strftime(date_trunc('week', ts), '%Y-%m-%d')"
+
+  /** A reading's day as an integer index from 2024-01-01. */
+  private val dayIndexSql = "date_diff('day', DATE '2024-01-01', date_trunc('day', ts))"
+
+  /** One station series as a parenthesized subquery: per `user_id`
+    * and `key`, the aggregates `cols` over every reading. */
+  private def seriesSql(key: String, cols: String): String =
+    s"( SELECT user_id, $key, $cols FROM events GROUP BY 1, 2)"
+
+  /** The daily series on the day index `x`: cent sum `sc` and reading
+    * count `cnt`, and the mean reading `y`. */
+  private val dailySumsSql =
+    seriesSql(s"$dayIndexSql AS x", s"sum($centsSql) AS sc, count(*) AS cnt")
+  private val dailyMeanSql = seriesSql(s"$dayIndexSql AS x", s"$centMeanSql AS y")
+
+  /** A station's lat/lon on the 5° lattice, its zone keys on the 30°
+    * blocks of that lattice. */
+  private val latSql = "(user_id % 36) * 5.0 - 87.5"
+  private val lonSql = "(user_id % 72) * 5.0 - 177.5"
+  private val latLonSql = s"$latSql AS lat, $lonSql AS lon"
+  private val zoneKeysSql = s"CAST(floor(($latSql) / 30) AS INT) AS zone_y," +
+    s" CAST(floor(($lonSql) / 30) AS INT) AS zone_x"
+
+  /** The linearly interpolated `q`-quantile of `col` over rows ranked
+    * `rn` (1-based) in groups of `n`: the (n−1)·q rank rule, both
+    * neighbours picked by conditional min. */
+  private def rankInterpSql(col: String, q: String): String = {
+    val lo = s"CAST(floor((n - 1) * $q) AS BIGINT)"
+    s"(min(CASE WHEN rn = $lo + 1 THEN $col END)" +
+      s" + ((min(n) - 1) * $q - floor((min(n) - 1) * $q))" +
+      s" * (min(CASE WHEN rn = least($lo + 2, n) THEN $col END)" +
+      s" - min(CASE WHEN rn = $lo + 1 THEN $col END)))"
+  }
+
+  /** The weekly drought-class frame `g(zone_y, zone_x, week, zscore)`
+    * over the per-(station, variable) z-scores `z`. */
+  private def zonalWeekCtes: String =
+    s"""z AS (
+       |  ${zCteSql("user_id, ts")}),
+       |g AS (
+       |  SELECT $zoneKeysSql, $weekLabelSql AS week, zscore
+       |  FROM z)""".stripMargin
+
+  /** The events grid's cell keys: `gy`, `gx` of station `user_id` on
+    * the 8×8 lattice (`//` floors; user ids are ≥ 0). */
+  private val cellKeysSql = "user_id % 8 AS gy, (user_id // 8) % 8 AS gx"
+
+  /** The events grid: each cell's micro-unit mean `v_us`, as CTE `c`. */
+  private val cellCte =
+    s"""c AS (
+       |  SELECT $cellKeysSql, $microMeanSql AS v_us
+       |  FROM events GROUP BY 1, 2)""".stripMargin
+
+  /** The per-clip seeds over `n` station groups `g` as a
+    * parenthesized subquery: the twin of
+    * [[graft.operators.Climate.seeds]]. */
+  private def seedsSql(n: Int): String =
+    s"( SELECT user_id % $n AS g, $microMeanSql AS seed FROM events GROUP BY 1)"
+
+  /** A station's weekly mean reading in exact integer 1e-4 units: the
+    * twin of [[graft.operators.Climate.weeklyU]]. */
+  private val weeklyUSql =
+    s"CAST(floor(CAST(sum($centsSql) AS DOUBLE) / count(*) * 100.0 + 0.5) AS BIGINT)"
+
+  /** The weekly observations `obs(user_id, week, y_u)` (`view`
+    * readings) and ensemble-member forecasts `mem(user_id, member,
+    * week, u)` (`click` readings). */
+  private val weeklyObsCte =
+    s"""obs AS (
+       |  SELECT user_id, $weekLabelSql AS week, $weeklyUSql AS y_u
+       |  FROM events WHERE event_type = 'view' GROUP BY 1, 2)""".stripMargin
+  private val weeklyMembersCte =
+    s"""mem AS (
+       |  SELECT user_id, event_id % 5 AS member, $weekLabelSql AS week,
+       |    $weeklyUSql AS u
+       |  FROM events WHERE event_type = 'click' GROUP BY 1, 2, 3)""".stripMargin
+
+  /** A document's text lower-cased, trimmed, whitespace runs folded,
+    * and split on the single spaces into its tokens. */
+  private val normTextSql = raw"regexp_replace(lower(trim(text)), '\s+', ' ', 'g')"
+  private val tokensSql = s"string_split($normTextSql, ' ')"
+
+  /** Every vector as a DOUBLE list, `v(vec_id, e)`. */
+  private val vectorsCte = "v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)"
+
+  /** The fixed probe set: the first five vector ids in md5 order. */
+  private val probeIdsSql = "(SELECT vec_id FROM embeddings" +
+    " ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 5)"
+
+  /** The fixed probes over `v`, as `p(probe_id, pe)`. */
+  private val fixedProbesCte =
+    s"p AS (SELECT vec_id AS probe_id, e AS pe FROM v WHERE vec_id IN $probeIdsSql)"
+
+  /** Every vector as a probe, `p(probe_id, pe)`; each probe's cosine
+    * to every other vector, `c(probe_id, nb_id, cos)`; and those
+    * ranked per probe by the 6-dp cosine (id tie-break) beside the
+    * 4-dp cosine, `r(probe_id, nb_id, rk, cosine)`. */
+  private val allProbesCte =
+    "p AS (SELECT vec_id AS probe_id, embedding::DOUBLE[] AS pe FROM embeddings)"
+  private val probeCosCte =
+    """c AS (SELECT probe_id, vec_id AS nb_id,
+      |        list_cosine_similarity(pe, embedding::DOUBLE[]) AS cos
+      |      FROM p, embeddings WHERE vec_id != probe_id)""".stripMargin
+  private val rankedCosCte =
+    """r AS (SELECT probe_id, nb_id,
+      |        row_number() OVER (PARTITION BY probe_id
+      |          ORDER BY floor(cos * 1e6 + 0.5) / 1e6 DESC, nb_id ASC) AS rk,
+      |        floor(cos * 1e4 + 0.5) / 1e4 AS cosine
+      |      FROM c)""".stripMargin
+
+  /** The exact top-10 of each probe `p` passing `probeWhere`, by
+    * brute-force cosine over `v`: `bc` ranked into `br`, kept as
+    * `bfr(probe_id, nb_id, cos_u)` in 1e-4 units. */
+  private def bruteTop10Ctes(probeWhere: String): String =
+    s"""bc AS (SELECT p.vec_id AS probe_id, c.vec_id AS nb_id,
+       |    list_cosine_similarity(p.e, c.e) AS cos
+       |  FROM v p, v c WHERE $probeWhere AND c.vec_id != p.vec_id),
+       |br AS (SELECT probe_id, nb_id,
+       |    row_number() OVER (PARTITION BY probe_id
+       |      ORDER BY floor(cos * 1e6 + 0.5) / 1e6 DESC, nb_id ASC) AS rk,
+       |    floor(cos * 1e4 + 0.5) / 1e4 AS cosine
+       |  FROM bc),
+       |bfr AS (SELECT probe_id, nb_id,
+       |    CAST(floor(cosine * 1e4 + 0.5) AS BIGINT) AS cos_u
+       |  FROM br WHERE rk <= 10)""".stripMargin
+
+  /** A vector's rank over the centroids `(b, ss, c)` by the 6-dp
+    * rounded squared distance less |e|² (id tie-break): rn = 1 is its
+    * home cell. */
+  private val centroidRankSql = "row_number() OVER (PARTITION BY vec_id" +
+    " ORDER BY floor((ss - 2 * list_inner_product(e, c)) * 1e6 + 0.5) / 1e6 ASC," +
+    " b ASC) AS rn"
+
+  /** A probe's rank over the centroids by the 6-dp rounded centroid
+    * cosine (id tie-break): the probe routing order. */
+  private val probeRouteRankSql = "row_number() OVER (PARTITION BY probe_id" +
+    " ORDER BY floor(list_cosine_similarity(pe, c) * 1e6 + 0.5) / 1e6 DESC," +
+    " b ASC) AS rn"
+
+  /** The language-ID marker words per language, their per-document
+    * counts over `toks` (`score_<lang>`, optionally cast to BIGINT),
+    * and the prediction: the top score, ties to the earlier of en,
+    * de, fr, es. */
+  private val langMarkers = Seq(
+    "en" -> Seq("the", "a", "data", "fast", "small"),
+    "de" -> Seq("window", "batch", "stream", "slow"),
+    "fr" -> Seq("merge", "sort", "join", "line"),
+    "es" -> Seq("spark", "query", "vector", "row"))
+  private def langScoresSql(asBigint: Boolean): String =
+    langMarkers.map { case (lang, words) =>
+      val n = words.map(w => s"len(list_filter(toks, x -> x = '$w'))").mkString(" + ")
+      (if (asBigint) s"CAST($n AS BIGINT)" else n) + s" AS score_$lang"
+    }.mkString(",\n    ")
+  private val langPredSql =
+    """CASE WHEN score_en >= score_de AND score_en >= score_fr AND score_en >= score_es THEN 'en'
+      |       WHEN score_de >= score_fr AND score_de >= score_es THEN 'de'
+      |       WHEN score_fr >= score_es THEN 'fr'
+      |       ELSE 'es' END AS lang_pred""".stripMargin
+
+  /** The word-3-shingle CTE body shared by the dedup oracles —
+    * identical to the regex-pass shingling at Dedup.shingleArrays. */
+  private val shingleCteSql: String =
+    """  SELECT doc_id, unnest(list_distinct([array_to_string(toks[i:i+2], ' ')
+      |          for i in range(1, len(toks) - 1)])) AS shingle
+      |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
+      |  WHERE len(toks) >= 3""".stripMargin
+
+  /** Each document's distinct shingles `sh(doc_id, shingle)` and
+    * their count `cnt(doc_id, n_sh)`. */
+  private val shingleCountCtes =
+    s"""sh AS (
+       |$shingleCteSql
+       |), cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1)""".stripMargin
+
+  /** The shared-shingle count of every document pair with
+    * `doc_a < doc_b`: the self-join body over `sh`. */
+  private val sharedShinglesSql =
+    """SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
+      |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      |  GROUP BY 1, 2""".stripMargin
+
+  /** A pair's shingle Jaccard to 4 dp, over `shared` and the two
+    * `cnt` rows `ca`, `cb`. */
+  private val jaccardSql = "round(shared * 1.0 / (ca.n_sh + cb.n_sh - shared), 4)"
+
+  /** The near-duplicate pairs (Jaccard ≥ 0.5) as `pairs(doc_a,
+    * doc_b)`, after `sh`, `cnt` and the shared counts `p0`. */
+  private val jaccardPairsCtes =
+    s"""$shingleCountCtes,
+       |p0 AS (
+       |  $sharedShinglesSql),
+       |pairs AS (
+       |  SELECT doc_a, doc_b FROM p0
+       |  JOIN cnt ca ON doc_a = ca.doc_id JOIN cnt cb ON doc_b = cb.doc_id
+       |  WHERE $jaccardSql >= 0.5)""".stripMargin
+
+  /** The near-duplicate graph's components: `pairs` as symmetric
+    * `edges` and their transitive `reach` (a recursive CTE). */
+  private val reachCtes =
+    s"""$jaccardPairsCtes,
+       |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
+       |          UNION ALL SELECT doc_b, doc_a FROM pairs),
+       |reach AS (
+       |  SELECT src, dst FROM edges
+       |  UNION
+       |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)""".stripMargin
+
+  /** Each clustered document's label: the least id it reaches. */
+  private val clusterLabelSql =
+    "SELECT src AS doc_id, least(src, min(dst)) AS cluster_id FROM reach GROUP BY src"
+
+  /** The quality score `q(doc_id, qs)`: length credit times the
+    * stopword-free share, each rounded to 4 dp. */
+  private val qualityScoreCte =
+    s"""q AS (
+       |  SELECT doc_id,
+       |    round(least(1.0, len(toks) / 100.0)
+       |      * (1.0 - round((len(list_filter(toks, x -> x = 'the'))
+       |                      + len(list_filter(toks, x -> x = 'a')))
+       |                     / CAST(len(toks) AS DOUBLE), 4)), 4) AS qs
+       |  FROM (SELECT doc_id, $tokensSql AS toks FROM documents))""".stripMargin
+
+  /** The survivorship chain up to the cluster members: `reach`, the
+    * cluster labels `clus` and the quality scores `q`. */
+  private val survivorshipCtes =
+    s"""$reachCtes,
+       |clus AS (
+       |  $clusterLabelSql),
+       |$qualityScoreCte""".stripMargin
+
+  /** Each cell of `c` joined to its 8 neighbours `n<dy><dx>` (dy, dx
+    * in 0..2 around 1, 1) and to its 4 axis neighbours `xp`, `xm`,
+    * `yp`, `ym`; edge cells drop out. */
+  private val ring8JoinsSql = (for { dy <- 0 to 2; dx <- 0 to 2 if dy != 1 || dx != 1 } yield {
+    def off(d: Int) = if (d == 0) " - 1" else if (d == 2) " + 1" else ""
+    s"JOIN c n$dy$dx ON n$dy$dx.gy = c.gy${off(dy)} AND n$dy$dx.gx = c.gx${off(dx)}"
+  }).mkString("\n")
+  private val cross4JoinsSql =
+    """JOIN c xp ON xp.gy = c.gy AND xp.gx = c.gx + 1
+      |JOIN c xm ON xm.gy = c.gy AND xm.gx = c.gx - 1
+      |JOIN c yp ON yp.gy = c.gy + 1 AND yp.gx = c.gx
+      |JOIN c ym ON ym.gy = c.gy - 1 AND ym.gx = c.gx""".stripMargin
+
+  // --- CTE chains shared by two or more oracles -------------------
+
+  /** The empirical quantile map: `click` forecasts `f`, ranked `view`
+    * references `r` and their count `n`, each forecast's percent rank
+    * `p` and its interpolation position `q(fpos, idx_lo, idx_hi)`. */
+  private val qmapCtes =
+    """f AS (SELECT event_id, user_id, value FROM events WHERE event_type = 'click'),
+      |r AS (SELECT user_id, value AS ref_value,
+      |        row_number() OVER (PARTITION BY user_id ORDER BY value) - 1 AS idx
+      |      FROM events WHERE event_type = 'view'),
+      |n AS (SELECT user_id, count(*) AS n_ref FROM r GROUP BY 1),
+      |p AS (SELECT event_id, user_id, value,
+      |        CASE WHEN count(*) OVER (PARTITION BY user_id) = 1 THEN 0.0
+      |             ELSE percent_rank() OVER (PARTITION BY user_id ORDER BY value)
+      |        END AS pr
+      |      FROM f),
+      |q AS (SELECT p.*, p.pr * (n.n_ref - 1) AS fpos,
+      |        CAST(floor(p.pr * (n.n_ref - 1)) AS INT) AS idx_lo,
+      |        CAST(ceil(p.pr * (n.n_ref - 1)) AS INT) AS idx_hi
+      |      FROM p JOIN n ON p.user_id = n.user_id)""".stripMargin
+
+  /** The keyed quantile map's inputs per (group, member): the fit-window
+    * forecasts `fct` and references `reft`, the applied forecasts `app`,
+    * both ranked samples `fk`/`rk` and their ranges `fagg`/`ragg`. */
+  private val qmapKeyCtes =
+    """ev AS (
+      |  SELECT event_id, user_id % 20 AS grp, event_id % 3 AS member,
+      |         event_type, value, ts
+      |  FROM events),
+      |fct AS (SELECT event_id, grp, member, value FROM ev
+      |        WHERE event_type = 'click' AND ts < TIMESTAMP '2024-01-16 00:00:00'),
+      |reft AS (SELECT event_id, grp, member, value FROM ev
+      |        WHERE event_type = 'view' AND ts < TIMESTAMP '2024-01-16 00:00:00'),
+      |app AS (SELECT event_id, grp, member, value FROM ev
+      |        WHERE event_type = 'click' AND ts >= TIMESTAMP '2024-01-16 00:00:00'),
+      |fk AS (SELECT grp, member, value AS fv, event_id AS tie,
+      |         row_number() OVER (PARTITION BY grp, member ORDER BY value, event_id) - 1 AS fidx
+      |       FROM fct),
+      |rk AS (SELECT grp, member, value AS rv, event_id AS tie,
+      |         row_number() OVER (PARTITION BY grp, member ORDER BY value, event_id) - 1 AS ridx
+      |       FROM reft),
+      |fagg AS (SELECT grp, member, count(*) AS nf, min(fv) AS fmin, max(fv) AS fmax
+      |         FROM fk GROUP BY 1, 2),
+      |ragg AS (SELECT grp, member, count(*) AS nr, min(rv) AS rmin, max(rv) AS rmax
+      |         FROM rk GROUP BY 1, 2)""".stripMargin
+
+  /** The keep-last upsert input: history `ev` plus the re-delivered
+    * batch (every 7th event, level + 0.5) as the union `u(…, src, prio)`. */
+  private val upsertCtes =
+    """ev AS (
+      |  SELECT user_id AS station, ts, event_id,
+      |    round(value, 4) AS level FROM events),
+      |u AS (
+      |  SELECT station, ts, event_id, level, 'hist' AS src, 0 AS prio FROM ev
+      |  UNION ALL
+      |  SELECT station, ts, event_id, round(level + 0.5, 4) AS level,
+      |    'batch' AS src, 1 AS prio
+      |  FROM ev WHERE event_id % 7 = 0)""".stripMargin
+
+  /** Each click `c` with its latest earlier purchase `p` (the last
+    * event id among purchases sharing a timestamp): the ASOF join. */
+  private val asofPurchaseSql =
+    """FROM (SELECT * FROM events WHERE event_type = 'click') c
+      |ASOF LEFT JOIN (
+      |  SELECT user_id, ts, max_by(value, event_id) AS value
+      |  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts) p
+      |  ON c.user_id = p.user_id AND c.ts > p.ts""".stripMargin
+
+  /** Daily value sums `daily(user_id, d, v)` and the full station × day
+    * grid `grid(user_id, d)` over their date range. */
+  private val dayGridCtes =
+    """daily AS (
+      |  SELECT user_id, date_trunc('day', ts) AS d, round(sum(value), 2) AS v
+      |  FROM events GROUP BY 1, 2
+      |), bounds AS (SELECT min(d) AS lo, max(d) AS hi FROM daily),
+      |days AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS d FROM bounds),
+      |grid AS (SELECT u.user_id, days.d
+      |         FROM (SELECT DISTINCT user_id FROM events) u CROSS JOIN days)""".stripMargin
+
+  /** Per-document rule inputs `u`: chars, digits, tokens, distinct
+    * tokens and stopwords. */
+  private val ruleFeaturesCtes =
+    s"""t AS (
+       |  SELECT doc_id, n_chars,
+       |    $tokensSql AS toks,
+       |    CAST(len(regexp_replace(text, '[^0-9]', '', 'g')) AS BIGINT) AS n_digits
+       |  FROM documents),
+       |u AS (
+       |  SELECT doc_id, n_chars, n_digits,
+       |    CAST(len(toks) AS BIGINT) AS n_tokens,
+       |    CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct,
+       |    CAST(len(list_filter(toks, x -> x = 'the'))
+       |       + len(list_filter(toks, x -> x = 'a')) AS BIGINT) AS n_stop
+       |  FROM t)""".stripMargin
+
+  /** Token 8-grams by position `g(doc_id, gram, pos)` and each
+    * repeated gram's positions grouped into islands `isl(doc_id, pos,
+    * island)`. */
+  private val repeatedGramsCtes =
+    s"""d AS (
+       |  SELECT doc_id, string_split(
+       |    $normTextSql, ' ') AS toks
+       |  FROM documents),
+       |g AS (
+       |  SELECT doc_id,
+       |    unnest([array_to_string(toks[i:i+7], ' ')
+       |            for i in range(1, len(toks) - 6)]) AS gram,
+       |    unnest(range(1, len(toks) - 6)) AS pos
+       |  FROM d WHERE len(toks) >= 8),
+       |rep AS (
+       |  SELECT gram FROM (SELECT gram, count(*) AS n FROM g GROUP BY 1)
+       |  WHERE n >= 2),
+       |isl AS (
+       |  SELECT doc_id, pos,
+       |    pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos)
+       |      AS island
+       |  FROM g JOIN rep USING (gram))""".stripMargin
+
+  /** Each document's distinct token 7-shingles `sh` and the benchmark
+    * set's shingles `bench` (documents with id % 10 = 0). */
+  private val benchShinglesCtes =
+    s"""base AS (
+       |  SELECT doc_id,
+       |    $tokensSql AS toks
+       |  FROM documents
+       |), sh AS (
+       |  SELECT DISTINCT doc_id, shingle FROM (
+       |    SELECT doc_id,
+       |      unnest(list_transform(range(1, len(toks) - 6),
+       |             i -> list_aggregate(toks[i:i+7], 'string_agg', ' '))) AS shingle
+       |    FROM base)
+       |), bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 10 = 0)""".stripMargin
+
+  /** The four synthetic images: base pixels `px(g, y, x, p)` from the
+    * events grid and the per-image color type / channel map `cmap`. */
+  private val imagePixelsCtes =
+    s"""grid AS (
+       |  SELECT user_id % 8 AS y, (user_id // 8) % 8 AS x,
+       |    $microMeanSql AS v_us
+       |  FROM events GROUP BY 1, 2),
+       |lattice AS (
+       |  SELECT g.n AS g, yy.n AS y, xx.n AS x
+       |  FROM range(0, 4) g(n), range(0, 8) yy(n), range(0, 8) xx(n)),
+       |px AS (
+       |  SELECT l.g, l.y, l.x,
+       |    ((coalesce(gr.v_us, 0) + l.g * 7) % 256 + 256) % 256 AS p
+       |  FROM lattice l LEFT JOIN grid gr ON l.y = gr.y AND l.x = gr.x),
+       |cmap AS (SELECT * FROM (VALUES (0, 0, 1), (1, 2, 3), (2, 4, 2),
+       |  (3, 6, 4)) AS t(g, ct, nch))""".stripMargin
+
+  /** The synthetic PCM clips: a Weyl sequence per seed,
+    * `ser(g, k, smp)`. */
+  private val pcmSamplesCtes =
+    s"""seeds AS ${seedsSql(8)},
+       |ser AS (
+       |  SELECT s.g, r.k,
+       |    (s.seed + (r.k + 1) * 2654435761) % 65536 - 32768 AS smp
+       |  FROM seeds s JOIN range(0, 320) r(k)
+       |    ON r.k < 160 + s.g * 16)""".stripMargin
+
+  /** The events cube: micro-unit means per (t, i, j) cell. */
+  private val cubeCellsCte =
+    s"""g AS (
+       |  SELECT (day(ts) - 1) % 3 AS t,
+       |    (user_id + day(ts)) % 8 AS i,
+       |    (user_id * 3 + day(ts)) % 8 AS j,
+       |    $microMeanSql AS v_us
+       |  FROM events GROUP BY 1, 2, 3)""".stripMargin
+
+  /** The OGC items query: clicks in the time window and bbox, newest
+    * first. */
+  private val itemsQuerySql =
+    s"""SELECT event_id, epoch_us(ts) AS ts_us,
+       |  $latLonSql,
+       |  value
+       |FROM events
+       |WHERE event_type = 'click'
+       |  AND ts >= TIMESTAMP '2024-01-10 00:00:00' AND ts < TIMESTAMP '2024-01-20 00:00:00'
+       |  AND $latSql BETWEEN -45 AND 45
+       |  AND $lonSql BETWEEN -180 AND -60""".stripMargin
+
+  /** Per-document tokens and md5 bucket `base`, their per-bucket
+    * histogram `hist` and per-source availability `avail`. */
+  private val mixBaseCtes =
+    s"""base AS (
+       |  SELECT doc_id, source,
+       |    CAST(len(string_split(
+       |      $normTextSql, ' ')) AS BIGINT) AS n_tok,
+       |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT AS bucket
+       |  FROM documents),
+       |hist AS (
+       |  SELECT source, bucket, CAST(count(*) AS BIGINT) AS n_docs,
+       |         CAST(sum(n_tok) AS BIGINT) AS n_tok
+       |  FROM base GROUP BY 1, 2),
+       |avail AS (
+       |  SELECT source, CAST(sum(n_docs) AS BIGINT) AS n_docs,
+       |         CAST(sum(n_tok) AS BIGINT) AS avail_tokens
+       |  FROM hist GROUP BY 1)""".stripMargin
+
+  /** The events grid's cell means in value units, as `g(gy, gx, v)`. */
+  private val cellMeansCte =
+    s"""g AS (
+       |  SELECT $cellKeysSql,
+       |    floor(CAST(sum($centsSql) * 10000
+       |      AS DOUBLE) / count(*) + 0.5) / 1e6 AS v
+       |  FROM events GROUP BY 1, 2)""".stripMargin
+
+  /** The static catalog collections' row counts (no time extent). */
+  private val staticCollectionsSql =
+    """SELECT 'region' AS collection_id, count(*) AS n_rows,
+      |         CAST(NULL AS VARCHAR) AS time_end FROM region
+      |  UNION ALL SELECT 'nation', count(*), NULL FROM nation
+      |  UNION ALL SELECT 'customer', count(*), NULL FROM customer
+      |  UNION ALL SELECT 'supplier', count(*), NULL FROM supplier
+      |  UNION ALL SELECT 'part', count(*), NULL FROM part""".stripMargin
+
+  /** Each station's daily deviation from its pooled mean reading,
+    * `dev(user_id, x, dev)`, over the daily sums `daily`. */
+  private val devCtes =
+    """stats AS (
+       |  SELECT user_id,
+       |    CAST(sum(sc) AS DOUBLE) / (sum(cnt) * 100.0) AS ybar
+       |  FROM daily GROUP BY 1),
+       |dev AS (
+       |  SELECT d.user_id, d.x,
+       |    (CAST(d.sc AS DOUBLE) / (d.cnt * 100.0)) - s.ybar AS dev
+       |  FROM daily d JOIN stats s ON d.user_id = s.user_id)""".stripMargin
+
+  /** The lag-1..3 autocorrelation sums over `dev`, each term quantized
+    * to 1e-8: `den(user_id, den_u, n_days)` and `num(user_id, lag,
+    * num_u, n_pairs)`. */
+  private val acfSumsCtes =
+    """den AS (
+       |  SELECT user_id,
+       |    CAST(sum(CAST(floor(dev * dev * 1e8 + 0.5) AS BIGINT)) AS BIGINT)
+       |      AS den_u,
+       |    count(*) AS n_days
+       |  FROM dev GROUP BY 1),
+       |num AS (
+       |  SELECT a.user_id, k.lag,
+       |    CAST(sum(CAST(floor(a.dev * b.dev * 1e8 + 0.5) AS BIGINT)) AS BIGINT)
+       |      AS num_u,
+       |    count(*) AS n_pairs
+       |  FROM dev a
+       |  JOIN (VALUES (1), (2), (3)) AS k(lag) ON true
+       |  JOIN dev b ON b.user_id = a.user_id AND b.x = a.x + k.lag
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** The admitted mass per source: buckets under the source's cut. */
+  private val mixKeptCte =
+    """kept AS (
+       |  SELECT hist.source, CAST(sum(hist.n_docs) AS BIGINT) AS kept_docs,
+       |         CAST(sum(hist.n_tok) AS BIGINT) AS kept_tokens
+       |  FROM hist JOIN r3 USING (source)
+       |  WHERE hist.bucket < r3.cut
+       |  GROUP BY 1)""".stripMargin
+
+  /** Each document's tokens `base(doc_id, toks)` and, for documents of
+    * two or more tokens, every token with its 1-based position
+    * `tok(doc_id, cur, pos)`. */
+  private val docTokensCtes =
+    s"""base AS (
+       |  SELECT doc_id,
+       |    $tokensSql AS toks
+       |  FROM documents),
+       |tok AS (
+       |  SELECT doc_id, unnest(toks) AS cur, generate_subscripts(toks, 1) AS pos
+       |  FROM base WHERE len(toks) >= 2)""".stripMargin
+
+  /** The Mann–Kendall z and trend verdict columns over `z_raw`. */
+  private val mkVerdictSql =
+    """floor(z_raw * 1e4 + 0.5) / 1e4 AS z_stat,
+       |  CASE WHEN z_raw IS NULL THEN 'undefined'
+       |       WHEN z_raw > 1.96 THEN 'increasing'
+       |       WHEN z_raw < -1.96 THEN 'decreasing'
+       |       ELSE 'no_trend' END AS trend""".stripMargin
+
   /** VALUES rows for the periodogram's literal trig-weight table —
     * the SAME Scala-rendered doubles the Spark plan embeds, so both
     * engines parse identical bits (the polyCondSql literal pattern). */
@@ -375,9 +924,9 @@ object SparkEntry {
     * curriculum-order query consumes the quality score (composition
     * mirrored on both sides). */
   private val textQualitySql: String =
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT doc_id, n_chars, text,
-      |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
+      |    $tokensSql AS toks
       |  FROM documents
       |), u AS (SELECT doc_id, n_chars, text, toks, len(toks) AS n_tokens FROM t)
       |SELECT doc_id,
@@ -395,10 +944,10 @@ object SparkEntry {
     * the rijnland weekly product consumes the q50 band as its input
     * (composition mirrored on both sides). */
   private val deficitBandsSql: String =
-    """WITH md AS (
+    s"""WITH md AS (
       |  SELECT user_id, event_id % 5 AS member,
-      |    strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-      |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
+      |    $dayLabelSql AS day,
+      |    CAST(sum($centsSql) AS DOUBLE)
       |      / (100.0 * count(*)) - 50.0 AS delta
       |  FROM events GROUP BY 1, 2, 3),
       |g AS (
@@ -431,19 +980,8 @@ object SparkEntry {
     * spectral-entropy query consumes the power table (composition
     * mirrored on both sides). */
   private def pgramSql: String =
-    s"""WITH daily AS (
-        |  SELECT user_id,
-        |    date_diff('day', DATE '2024-01-01', date_trunc('day', ts)) AS x,
-        |    sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS sc,
-        |    count(*) AS cnt
-        |  FROM events GROUP BY 1, 2),
-        |stats AS (
-        |  SELECT user_id, CAST(sum(sc) AS DOUBLE) / (sum(cnt) * 100.0) AS ybar
-        |  FROM daily GROUP BY 1),
-        |dev AS (
-        |  SELECT d.user_id, d.x,
-        |    (CAST(d.sc AS DOUBLE) / (d.cnt * 100.0)) - s.ybar AS dev
-        |  FROM daily d JOIN stats s ON d.user_id = s.user_id),
+    s"""WITH daily AS $dailySumsSql,
+        |$devCtes,
         |wt(period, r, cw, sw) AS (VALUES $pgramWeightRows),
         |agg AS (
         |  SELECT v.user_id, w.period,
@@ -465,35 +1003,9 @@ object SparkEntry {
     * effective-sample-size query consumes the acf table (composition
     * mirrored on both sides). */
   private val acfSql: String =
-    """WITH daily AS (
-        |  SELECT user_id,
-        |    date_diff('day', DATE '2024-01-01', date_trunc('day', ts)) AS x,
-        |    sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS sc,
-        |    count(*) AS cnt
-        |  FROM events GROUP BY 1, 2),
-        |stats AS (
-        |  SELECT user_id,
-        |    CAST(sum(sc) AS DOUBLE) / (sum(cnt) * 100.0) AS ybar
-        |  FROM daily GROUP BY 1),
-        |dev AS (
-        |  SELECT d.user_id, d.x,
-        |    (CAST(d.sc AS DOUBLE) / (d.cnt * 100.0)) - s.ybar AS dev
-        |  FROM daily d JOIN stats s ON d.user_id = s.user_id),
-        |den AS (
-        |  SELECT user_id,
-        |    CAST(sum(CAST(floor(dev * dev * 1e8 + 0.5) AS BIGINT)) AS BIGINT)
-        |      AS den_u,
-        |    count(*) AS n_days
-        |  FROM dev GROUP BY 1),
-        |num AS (
-        |  SELECT a.user_id, k.lag,
-        |    CAST(sum(CAST(floor(a.dev * b.dev * 1e8 + 0.5) AS BIGINT)) AS BIGINT)
-        |      AS num_u,
-        |    count(*) AS n_pairs
-        |  FROM dev a
-        |  JOIN (VALUES (1), (2), (3)) AS k(lag) ON true
-        |  JOIN dev b ON b.user_id = a.user_id AND b.x = a.x + k.lag
-        |  GROUP BY 1, 2)
+    s"""WITH daily AS $dailySumsSql,
+        |$devCtes,
+        |$acfSumsCtes
         |SELECT n.user_id, n.lag, d.n_days, n.n_pairs,
         |  CASE WHEN n.n_pairs >= 5 AND d.den_u > 0
         |    THEN floor(CAST(n.num_u AS DOUBLE) / d.den_u * 1e4 + 0.5) / 1e4
@@ -505,39 +1017,7 @@ object SparkEntry {
     * report share one oracle body. Ends with the `m` CTE: cluster
     * members ranked by quality (rn = 1 is the keeper). */
   private val survivorshipMembersSql: String =
-    """WITH RECURSIVE sh AS (
-        |  SELECT doc_id, unnest(list_distinct([array_to_string(toks[i:i+2], ' ')
-        |          for i in range(1, len(toks) - 1)])) AS shingle
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-        |  WHERE len(toks) >= 3
-        |), cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-        |p0 AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT doc_a, doc_b FROM p0
-        |  JOIN cnt ca ON doc_a = ca.doc_id JOIN cnt cb ON doc_b = cb.doc_id
-        |  WHERE round(shared * 1.0 / (ca.n_sh + cb.n_sh - shared), 4) >= 0.5),
-        |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |          UNION ALL SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-        |clus AS (
-        |  SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
-        |  FROM reach GROUP BY src),
-        |q AS (
-        |  SELECT doc_id,
-        |    round(least(1.0, len(toks) / 100.0)
-        |      * (1.0 - round((len(list_filter(toks, x -> x = 'the'))
-        |                      + len(list_filter(toks, x -> x = 'a')))
-        |                     / CAST(len(toks) AS DOUBLE), 4)), 4) AS qs
-        |  FROM (SELECT doc_id,
-        |          string_split(regexp_replace(lower(trim(text)), '\s+', ' ',
-        |            'g'), ' ') AS toks
-        |        FROM documents)),
+    s"""WITH RECURSIVE $survivorshipCtes,
         |m AS (
         |  SELECT c.cluster_id, c.doc_id, q.qs,
         |    row_number() OVER (PARTITION BY c.cluster_id
@@ -549,16 +1029,9 @@ object SparkEntry {
     * mutuality audit consumes the edge set (composition mirrored on
     * both sides). */
   private val knnGraphSql: String =
-    """WITH p AS (SELECT vec_id AS probe_id, embedding::DOUBLE[] AS pe
-      |           FROM embeddings),
-      |c AS (SELECT probe_id, vec_id AS nb_id,
-      |        list_cosine_similarity(pe, embedding::DOUBLE[]) AS cos
-      |      FROM p, embeddings WHERE vec_id != probe_id),
-      |r AS (SELECT probe_id, nb_id,
-      |        row_number() OVER (PARTITION BY probe_id
-      |                           ORDER BY floor(cos * 1e6 + 0.5) / 1e6 DESC, nb_id ASC) AS rk,
-      |        floor(cos * 1e4 + 0.5) / 1e4 AS cosine
-      |      FROM c)
+    s"""WITH $allProbesCte,
+      |$probeCosCte,
+      |$rankedCosCte
       |SELECT probe_id AS vec_id, nb_id AS neighbor_id, rk, cosine
       |FROM r WHERE rk <= 5""".stripMargin
 
@@ -588,12 +1061,7 @@ object SparkEntry {
     * the strength query consumes the components (composition
     * mirrored on both sides). */
   private val decomposeSql: String =
-    """WITH daily AS (
-        |  SELECT user_id,
-        |    date_diff('day', DATE '2024-01-01', date_trunc('day', ts)) AS x,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-        |      AS cents
-        |  FROM events GROUP BY 1, 2),
+    s"""WITH daily AS ${seriesSql(s"$dayIndexSql AS x", s"$centSumSql AS cents")},
         |tr AS (
         |  SELECT user_id, x, cents,
         |    CAST(floor(CAST(sum(cents) OVER (PARTITION BY user_id ORDER BY x
@@ -621,23 +1089,11 @@ object SparkEntry {
         |  CAST(det_u - sea_u AS DOUBLE) / 1e4 AS residual
         |FROM sea""".stripMargin
 
-  /** The events grid's cell keys, oracle side: `gy`, `gx` of station
-    * `user_id` on the 8×8 lattice (`//` floors; user ids are ≥ 0). */
-  private val cellKeysSql = "user_id % 8 AS gy, (user_id // 8) % 8 AS gx"
-
-  /** A group's mean reading in exact integer micro-units, oracle side:
-    * the integer cent sum ×10⁴ over the count, rounded half up once. */
-  private val microMeanSql = "CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5)" +
-    " AS BIGINT)) * 10000 AS DOUBLE) / count(*) + 0.5) AS BIGINT)"
-
   /** The grid_gradient oracle body — factored out because the aspect
     * rose consumes the per-cell aspect (composition mirrored on both
     * sides). */
   private val gradientSql: String =
-    s"""WITH c AS (
-        |  SELECT $cellKeysSql,
-        |    $microMeanSql AS v_us
-        |  FROM events GROUP BY 1, 2)
+    s"""WITH $cellCte
         |SELECT c.gy, c.gx,
         |  floor((xp.v_us - xm.v_us) / 2.0 + 0.5) / 1e6 AS dzdx,
         |  floor((yp.v_us - ym.v_us) / 2.0 + 0.5) / 1e6 AS dzdy,
@@ -655,44 +1111,75 @@ object SparkEntry {
         |    ELSE CASE WHEN yp.v_us - ym.v_us > 0 THEN 'NW' ELSE 'SW' END
         |  END AS aspect
         |FROM c
-        |JOIN c xp ON xp.gy = c.gy AND xp.gx = c.gx + 1
-        |JOIN c xm ON xm.gy = c.gy AND xm.gx = c.gx - 1
-        |JOIN c yp ON yp.gy = c.gy + 1 AND yp.gx = c.gx
-        |JOIN c ym ON ym.gy = c.gy - 1 AND ym.gx = c.gx""".stripMargin
+        |$cross4JoinsSql""".stripMargin
 
   /** The lang_id oracle body — factored out because the per-source
     * mismatch census consumes the predictions (composition mirrored
     * on both sides). */
   private val langIdSql: String =
-    """WITH t AS (
+    s"""WITH t AS (
         |  SELECT doc_id,
-        |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
+        |    $tokensSql AS toks
         |  FROM documents
         |), s AS (
         |  SELECT doc_id,
-        |    CAST(len(list_filter(toks, x -> x = 'the')) + len(list_filter(toks, x -> x = 'a'))
-        |       + len(list_filter(toks, x -> x = 'data')) + len(list_filter(toks, x -> x = 'fast'))
-        |       + len(list_filter(toks, x -> x = 'small')) AS BIGINT) AS score_en,
-        |    CAST(len(list_filter(toks, x -> x = 'window')) + len(list_filter(toks, x -> x = 'batch'))
-        |       + len(list_filter(toks, x -> x = 'stream')) + len(list_filter(toks, x -> x = 'slow')) AS BIGINT) AS score_de,
-        |    CAST(len(list_filter(toks, x -> x = 'merge')) + len(list_filter(toks, x -> x = 'sort'))
-        |       + len(list_filter(toks, x -> x = 'join')) + len(list_filter(toks, x -> x = 'line')) AS BIGINT) AS score_fr,
-        |    CAST(len(list_filter(toks, x -> x = 'spark')) + len(list_filter(toks, x -> x = 'query'))
-        |       + len(list_filter(toks, x -> x = 'vector')) + len(list_filter(toks, x -> x = 'row')) AS BIGINT) AS score_es
+        |    ${langScoresSql(asBigint = true)}
         |  FROM t)
         |SELECT doc_id, score_en, score_de, score_fr, score_es,
-        |  CASE WHEN score_en >= score_de AND score_en >= score_fr AND score_en >= score_es THEN 'en'
-        |       WHEN score_de >= score_fr AND score_de >= score_es THEN 'de'
-        |       WHEN score_fr >= score_es THEN 'fr'
-        |       ELSE 'es' END AS lang_pred
+        |  $langPredSql
         |FROM s""".stripMargin
 
+  /** The regularized lower incomplete gamma P(α, xs) of every `rows0`
+    * row passing `rowFilter` (rid, x, xs = x/β, alpha, lng = lnΓ(α)),
+    * as `gv(rid, g)`: the SAME power series (`ser` → `serf`) and
+    * Lentz continued fraction (`cf` → `cff`) as
+    * [[graft.functions.StatKernels.gammaP]], stepped as recursive CTEs
+    * with its constants and convergence tests (1e-14, 500 iterations,
+    * 1e-300 floor). Rows with x ≤ 0 must fail `rowFilter`. */
+  private def incGammaCtes(rowFilter: String): String =
+    s"""ser AS (
+       |  SELECT rid, alpha AS a, xs AS z, alpha AS ap,
+       |    1.0 / alpha AS s, 1.0 / alpha AS del, 0 AS it
+       |  FROM rows0 WHERE $rowFilter AND xs < alpha + 1.0
+       |  UNION ALL
+       |  SELECT rid, a, z, ap + 1.0,
+       |    s + del * (z / (ap + 1.0)), del * (z / (ap + 1.0)), it + 1
+       |  FROM ser WHERE it < 500 AND abs(del) >= abs(s) * 1e-14
+       |), serf AS (
+       |  SELECT rid, s FROM ser
+       |  WHERE NOT (it < 500 AND abs(del) >= abs(s) * 1e-14)
+       |), cf AS (
+       |  SELECT rid, alpha AS a, xs AS z, xs + 1.0 - alpha AS b, 1e300 AS c,
+       |    1.0 / (xs + 1.0 - alpha) AS d, 1.0 / (xs + 1.0 - alpha) AS h,
+       |    1 AS it, FALSE AS done
+       |  FROM rows0 WHERE $rowFilter AND xs >= alpha + 1.0
+       |  UNION ALL
+       |  SELECT rid, a, z, b2, c2, 1.0 / d2, h * ((1.0 / d2) * c2), it + 1,
+       |    abs(((1.0 / d2) * c2) - 1.0) < 1e-14
+       |  FROM (
+       |    SELECT rid, a, z, h, it, b + 2.0 AS b2,
+       |      CASE WHEN abs((-CAST(it AS DOUBLE)) * (CAST(it AS DOUBLE) - a) * d + (b + 2.0)) < 1e-300
+       |           THEN 1e-300
+       |           ELSE (-CAST(it AS DOUBLE)) * (CAST(it AS DOUBLE) - a) * d + (b + 2.0) END AS d2,
+       |      CASE WHEN abs((b + 2.0) + ((-CAST(it AS DOUBLE)) * (CAST(it AS DOUBLE) - a)) / c) < 1e-300
+       |           THEN 1e-300
+       |           ELSE (b + 2.0) + ((-CAST(it AS DOUBLE)) * (CAST(it AS DOUBLE) - a)) / c END AS c2
+       |    FROM cf WHERE it < 500 AND NOT done) t
+       |), cff AS (
+       |  SELECT rid, h FROM cf WHERE NOT (it < 500 AND NOT done)
+       |), gv AS (
+       |  SELECT r.rid,
+       |    CASE WHEN r.x <= 0 THEN 0.0
+       |         WHEN sf.rid IS NOT NULL THEN
+       |           sf.s * exp(- r.xs + r.alpha * ln(r.xs) - r.lng)
+       |         WHEN cq.rid IS NOT NULL THEN
+       |           1.0 - exp(- r.xs + r.alpha * ln(r.xs) - r.lng) * cq.h
+       |         ELSE NULL END AS g
+       |  FROM rows0 r LEFT JOIN serf sf USING (rid) LEFT JOIN cff cq USING (rid)""".stripMargin
+
   /** Full gamma-SPI oracle: Thom fit (SQL aggregates) → regularized
-    * lower incomplete gamma P(a, x/β) via the SAME power series and
-    * Lentz continued fraction as [[graft.functions.StatKernels
-    * .gammaP]], expressed as recursive CTEs stepping the identical
-    * recurrences with the identical constants and convergence tests
-    * (1e-14, 500 iterations, 1e-300 floor) → zero-correction
+    * lower incomplete gamma P(a, x/β) via [[incGammaCtes]] (the
+    * [[graft.functions.StatKernels.gammaP]] recurrences) → zero-correction
     * H = q0 + (1−q0)·G → clamp → A&S 26.2.23 normal quantile. Every
     * operation SEQUENCE matches the Scala kernels, so the two
     * engines' doubles agree to the last few ulps and the final
@@ -737,45 +1224,7 @@ object SparkEntry {
       |    par.alpha, par.beta, par.q0, par.a_stat, par.lng,
       |    acc.x / par.beta AS xs
       |  FROM acc LEFT JOIN par USING ($k) $rowsWhere
-      |), ser AS (
-      |  SELECT rid, alpha AS a, xs AS z, alpha AS ap,
-      |    1.0 / alpha AS s, 1.0 / alpha AS del, 0 AS it
-      |  FROM rows0 WHERE x > 0 AND xs < alpha + 1.0
-      |  UNION ALL
-      |  SELECT rid, a, z, ap + 1.0,
-      |    s + del * (z / (ap + 1.0)), del * (z / (ap + 1.0)), it + 1
-      |  FROM ser WHERE it < 500 AND abs(del) >= abs(s) * 1e-14
-      |), serf AS (
-      |  SELECT rid, s FROM ser
-      |  WHERE NOT (it < 500 AND abs(del) >= abs(s) * 1e-14)
-      |), cf AS (
-      |  SELECT rid, alpha AS a, xs AS z, xs + 1.0 - alpha AS b, 1e300 AS c,
-      |    1.0 / (xs + 1.0 - alpha) AS d, 1.0 / (xs + 1.0 - alpha) AS h,
-      |    1 AS it, FALSE AS done
-      |  FROM rows0 WHERE x > 0 AND xs >= alpha + 1.0
-      |  UNION ALL
-      |  SELECT rid, a, z, b2, c2, 1.0 / d2, h * ((1.0 / d2) * c2), it + 1,
-      |    abs(((1.0 / d2) * c2) - 1.0) < 1e-14
-      |  FROM (
-      |    SELECT rid, a, z, h, it, b + 2.0 AS b2,
-      |      CASE WHEN abs((-CAST(it AS DOUBLE)) * (CAST(it AS DOUBLE) - a) * d + (b + 2.0)) < 1e-300
-      |           THEN 1e-300
-      |           ELSE (-CAST(it AS DOUBLE)) * (CAST(it AS DOUBLE) - a) * d + (b + 2.0) END AS d2,
-      |      CASE WHEN abs((b + 2.0) + ((-CAST(it AS DOUBLE)) * (CAST(it AS DOUBLE) - a)) / c) < 1e-300
-      |           THEN 1e-300
-      |           ELSE (b + 2.0) + ((-CAST(it AS DOUBLE)) * (CAST(it AS DOUBLE) - a)) / c END AS c2
-      |    FROM cf WHERE it < 500 AND NOT done) t
-      |), cff AS (
-      |  SELECT rid, h FROM cf WHERE NOT (it < 500 AND NOT done)
-      |), gv AS (
-      |  SELECT r.rid,
-      |    CASE WHEN r.x <= 0 THEN 0.0
-      |         WHEN sf.rid IS NOT NULL THEN
-      |           sf.s * exp(- r.xs + r.alpha * ln(r.xs) - r.lng)
-      |         WHEN cq.rid IS NOT NULL THEN
-      |           1.0 - exp(- r.xs + r.alpha * ln(r.xs) - r.lng) * cq.h
-      |         ELSE NULL END AS g
-      |  FROM rows0 r LEFT JOIN serf sf USING (rid) LEFT JOIN cff cq USING (rid)
+      |), ${incGammaCtes("x > 0")}
       |), hval AS (
       |  SELECT r.rid, r.event_id, $rk, $rcarry r.x, r.a_stat,
       |    least(greatest(r.q0 + (1.0 - r.q0) * gv.g, 1e-6), 1.0 - 1e-6) AS h
@@ -797,9 +1246,9 @@ object SparkEntry {
   }
 
   /** The [[graft.operators.Climate.biasParametricApply]] oracle:
-    * literal pretrained params + the SAME gamma series/continued-
-    * fraction recurrences as [[spiGammaSql]] (with per-group literal
-    * α, β and the Lanczos lnΓ inline), then the literal obs-quantile
+    * literal pretrained params + the [[incGammaCtes]] recurrences
+    * [[spiGammaSql]] also runs (with per-group literal α, β and the
+    * Lanczos lnΓ inline), then the literal obs-quantile
     * anchor segments interpolated linearly; the normal branch is the
     * closed form. */
   private def biasParametricSql: String = {
@@ -829,45 +1278,7 @@ object SparkEntry {
       |    p.a_f AS alpha, ${lnGammaSql("p.a_f")} AS lng,
       |    ev.x / p.b_f AS xs
       |  FROM ev JOIN par p ON p.grp = ev.grp),
-      |ser AS (
-      |  SELECT rid, alpha AS a, xs AS z, alpha AS ap,
-      |    1.0 / alpha AS s, 1.0 / alpha AS del, 0 AS it
-      |  FROM rows0 WHERE var = 'click' AND x > 0 AND xs < alpha + 1.0
-      |  UNION ALL
-      |  SELECT rid, a, z, ap + 1.0,
-      |    s + del * (z / (ap + 1.0)), del * (z / (ap + 1.0)), it + 1
-      |  FROM ser WHERE it < 500 AND abs(del) >= abs(s) * 1e-14
-      |), serf AS (
-      |  SELECT rid, s FROM ser
-      |  WHERE NOT (it < 500 AND abs(del) >= abs(s) * 1e-14)
-      |), cf AS (
-      |  SELECT rid, alpha AS a, xs AS z, xs + 1.0 - alpha AS b, 1e300 AS c,
-      |    1.0 / (xs + 1.0 - alpha) AS d, 1.0 / (xs + 1.0 - alpha) AS h,
-      |    1 AS it, FALSE AS done
-      |  FROM rows0 WHERE var = 'click' AND x > 0 AND xs >= alpha + 1.0
-      |  UNION ALL
-      |  SELECT rid, a, z, b2, c2, 1.0 / d2, h * ((1.0 / d2) * c2), it + 1,
-      |    abs(((1.0 / d2) * c2) - 1.0) < 1e-14
-      |  FROM (
-      |    SELECT rid, a, z, h, it, b + 2.0 AS b2,
-      |      CASE WHEN abs((-CAST(it AS DOUBLE)) * (CAST(it AS DOUBLE) - a) * d + (b + 2.0)) < 1e-300
-      |           THEN 1e-300
-      |           ELSE (-CAST(it AS DOUBLE)) * (CAST(it AS DOUBLE) - a) * d + (b + 2.0) END AS d2,
-      |      CASE WHEN abs((b + 2.0) + ((-CAST(it AS DOUBLE)) * (CAST(it AS DOUBLE) - a)) / c) < 1e-300
-      |           THEN 1e-300
-      |           ELSE (b + 2.0) + ((-CAST(it AS DOUBLE)) * (CAST(it AS DOUBLE) - a)) / c END AS c2
-      |    FROM cf WHERE it < 500 AND NOT done) t
-      |), cff AS (
-      |  SELECT rid, h FROM cf WHERE NOT (it < 500 AND NOT done)
-      |), gv AS (
-      |  SELECT r.rid,
-      |    CASE WHEN r.x <= 0 THEN 0.0
-      |         WHEN sf.rid IS NOT NULL THEN
-      |           sf.s * exp(- r.xs + r.alpha * ln(r.xs) - r.lng)
-      |         WHEN cq.rid IS NOT NULL THEN
-      |           1.0 - exp(- r.xs + r.alpha * ln(r.xs) - r.lng) * cq.h
-      |         ELSE NULL END AS g
-      |  FROM rows0 r LEFT JOIN serf sf USING (rid) LEFT JOIN cff cq USING (rid)
+      |${incGammaCtes("var = 'click' AND x > 0")}
       |), pv AS (
       |  SELECT r.*, CASE WHEN r.var = 'click'
       |    THEN least(greatest(gv.g, $p0), $p1) END AS p
@@ -910,20 +1321,7 @@ object SparkEntry {
     * emits the admitted rows. */
   private def mixFitSql: String =
     s"""WITH w(source, weight) AS (VALUES $mixWeightsSql),
-      |base AS (
-      |  SELECT doc_id, source,
-      |    CAST(len(string_split(
-      |      regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ')) AS BIGINT) AS n_tok,
-      |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT AS bucket
-      |  FROM documents),
-      |hist AS (
-      |  SELECT source, bucket, CAST(count(*) AS BIGINT) AS n_docs,
-      |         CAST(sum(n_tok) AS BIGINT) AS n_tok
-      |  FROM base GROUP BY 1, 2),
-      |avail AS (
-      |  SELECT source, CAST(sum(n_docs) AS BIGINT) AS n_docs,
-      |         CAST(sum(n_tok) AS BIGINT) AS avail_tokens
-      |  FROM hist GROUP BY 1),
+      |$mixBaseCtes,
       |tot AS (SELECT CAST(sum(avail_tokens) AS BIGINT) AS total_tokens FROM avail),
       |rates AS (
       |  SELECT avail.source, avail.n_docs, avail.avail_tokens,
@@ -995,9 +1393,51 @@ object SparkEntry {
     val tables = (0 until graft.operators.Similarity.NumTables).map { t =>
       s"SELECT vec_id, e, $t AS t, ${lshSigSql(t)} AS sig FROM v"
     }.mkString("\n  UNION ALL ")
-    s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+    s"""WITH $vectorsCte,
        |b AS (
        |  $tables)""".stripMargin
+  }
+
+  /** The LSH-vs-exact recall audit over the probes `p` passing
+    * `probeWhere`: LSH bucket-mates re-ranked by exact cosine (`lr`,
+    * top-10 `lshr`) against the brute-force top-10, then per-probe
+    * recall and cosine regret (with a `sample_rate` column when the
+    * probes are sampled). */
+  private def annRecallAuditSql(probeWhere: String,
+      sampleRate: Option[Double]): String = {
+    val rateCol = sampleRate.fold("")(r => s",\n  CAST($r AS DOUBLE) AS sample_rate")
+    s"""$lshBucketsSql,
+      |cand AS (
+      |  SELECT DISTINCT p.vec_id AS probe_id, c.vec_id AS nb_id
+      |  FROM b p JOIN b c ON p.t = c.t AND p.sig = c.sig
+      |  WHERE $probeWhere AND c.vec_id != p.vec_id),
+      |lr AS (
+      |  SELECT probe_id, nb_id,
+      |    row_number() OVER (PARTITION BY probe_id
+      |      ORDER BY floor(list_cosine_similarity(vp.e, vc.e) * 1e6 + 0.5) / 1e6 DESC,
+      |               nb_id ASC) AS rk,
+      |    floor(list_cosine_similarity(vp.e, vc.e) * 1e4 + 0.5) / 1e4 AS cosine
+      |  FROM cand JOIN v vp ON vp.vec_id = probe_id
+      |    JOIN v vc ON vc.vec_id = nb_id),
+      |lshr AS (SELECT probe_id, nb_id,
+      |    CAST(floor(cosine * 1e4 + 0.5) AS BIGINT) AS cos_u
+      |  FROM lr WHERE rk <= 10),
+      |${bruteTop10Ctes(probeWhere)},
+      |per AS (
+      |  SELECT bf.probe_id, CAST(count(*) AS BIGINT) AS k,
+      |    CAST(sum(CASE WHEN l.nb_id IS NOT NULL THEN 1 ELSE 0 END)
+      |      AS BIGINT) AS n_hit,
+      |    sum(bf.cos_u) AS bf_u
+      |  FROM bfr bf LEFT JOIN lshr l
+      |    ON bf.probe_id = l.probe_id AND bf.nb_id = l.nb_id
+      |  GROUP BY 1),
+      |ls AS (SELECT probe_id, sum(cos_u) AS lsh_u,
+      |    CAST(count(*) AS BIGINT) AS n_l
+      |  FROM lshr GROUP BY 1)
+      |SELECT per.probe_id, n_hit, floor(n_hit * 1.0 / k * 1e4 + 0.5) / 1e4 AS recall,
+      |  floor((CAST(bf_u AS DOUBLE) / k - CAST(lsh_u AS DOUBLE) / n_l)
+      |    / 1e4 * 1e4 + 0.5) / 1e4 AS cos_regret$rateCol
+      |FROM per LEFT JOIN ls ON per.probe_id = ls.probe_id""".stripMargin
   }
 
   /** Portable 48-bit base hash — the SQL twin of
@@ -1008,14 +1448,6 @@ object SparkEntry {
   private def h48Sql(e: String): String =
     s"('0x' || substr(md5($e), 1, 12))::BIGINT"
 
-  /** The word-3-shingle CTE body shared by the dedup oracles —
-    * identical to the regex-pass shingling at Dedup.shingleArrays. */
-  private val shingleCteSql: String =
-    """  SELECT doc_id, unnest(list_distinct([array_to_string(toks[i:i+2], ' ')
-      |          for i in range(1, len(toks) - 1)])) AS shingle
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-      |  WHERE len(toks) >= 3""".stripMargin
-
   /** CTE chain for the D8 flow lane: aggregated grid cells → offset
     * table (rendered from the SAME [[graft.operators.Climate.D8]]
     * literals) → strictly-downhill candidates with the exact integer
@@ -1025,10 +1457,7 @@ object SparkEntry {
     val offs = graft.operators.Climate.D8
       .map { case (dy, dx, prio, name, mult) =>
         s"($dy, $dx, $prio, '$name', $mult)" }.mkString(", ")
-    s"""c AS (
-       |  SELECT $cellKeysSql,
-       |    $microMeanSql AS v_us
-       |  FROM events GROUP BY 1, 2),
+    s"""$cellCte,
        |offs(dy, dx, prio, dir, mult) AS (VALUES $offs),
        |cand AS (
        |  SELECT c.gy, c.gx, o.dir, o.prio, n.gy AS ny, n.gx AS nx,
@@ -1053,10 +1482,7 @@ object SparkEntry {
     * `fidx(name, sample, dts, size, sync, "offset")` — shared by the
     * index oracle and the keyframe-sampling oracle. */
   private def frameIndexCtes: String =
-    s"""s AS (
-      |  SELECT user_id % 6 AS g,
-      |    $microMeanSql AS seed
-      |  FROM events GROUP BY 1),
+    s"""s AS ${seedsSql(6)},
       |p AS (
       |  SELECT g, abs(seed) AS a, 24 + (g % 3) * 12 AS nf,
       |    12 + (g % 3) * 6 AS half, 1000 + abs(seed) % 500 AS d1
@@ -1114,10 +1540,10 @@ object SparkEntry {
        |  GROUP BY 1, 2),
        |lshp AS (
        |  SELECT doc_a, doc_b,
-       |    round(shared * 1.0 / (ca.n_sh + cb.n_sh - shared), 4) AS jaccard
+       |    $jaccardSql AS jaccard
        |  FROM shared JOIN cnt ca ON doc_a = ca.doc_id
        |    JOIN cnt cb ON doc_b = cb.doc_id
-       |  WHERE round(shared * 1.0 / (ca.n_sh + cb.n_sh - shared), 4) >= 0.5)"""
+       |  WHERE $jaccardSql >= 0.5)"""
       .stripMargin
   }
 
@@ -1126,22 +1552,13 @@ object SparkEntry {
     * above the station's mean observed weekly value, o = observed
     * exceedance. */
   private def exceedanceCtes: String =
-    """obs AS (
-      |  SELECT user_id, strftime(date_trunc('week', ts), '%Y-%m-%d') AS week,
-      |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-      |      AS DOUBLE) / count(*) * 100.0 + 0.5) AS BIGINT) AS y_u
-      |  FROM events WHERE event_type = 'view' GROUP BY 1, 2),
+    s"""$weeklyObsCte,
       |thr AS (
       |  SELECT user_id,
       |    CAST(floor(CAST(sum(y_u) AS DOUBLE) / count(*) + 0.5) AS BIGINT)
       |      AS thr_u
       |  FROM obs GROUP BY 1),
-      |mem AS (
-      |  SELECT user_id, event_id % 5 AS member,
-      |    strftime(date_trunc('week', ts), '%Y-%m-%d') AS week,
-      |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-      |      AS DOUBLE) / count(*) * 100.0 + 0.5) AS BIGINT) AS u
-      |  FROM events WHERE event_type = 'click' GROUP BY 1, 2, 3),
+      |$weeklyMembersCte,
       |ko AS (
       |  SELECT m.user_id, m.week, CAST(count(*) AS BIGINT) AS m,
       |    CAST(sum(CASE WHEN m.u > t.thr_u THEN 1 ELSE 0 END) AS BIGINT) AS k,
@@ -1159,6 +1576,22 @@ object SparkEntry {
   private def minhashLshSql: String =
     s"""WITH $minhashPairsCtes
        |SELECT doc_a, doc_b, jaccard FROM lshp""".stripMargin
+
+  /** The MinHash buckets the cap dropped (`bucketed` rows over
+    * [[graft.operators.Dedup.BucketCap]]) and their one-row ledger
+    * `drop_s`: buckets, memberships, docs and the pairs they hid. */
+  private def droppedBucketsCtes: String =
+    s"""dropped AS (
+       |  SELECT * FROM bucketed WHERE bucket_n > ${graft.operators.Dedup.BucketCap}),
+       |drop_s AS (
+       |  SELECT
+       |    CAST(count(DISTINCT struct_pack(band := band, k0 := k0,
+       |      k1 := k1, k2 := k2, k3 := k3)) AS BIGINT) AS dropped_buckets,
+       |    CAST(count(*) AS BIGINT) AS dropped_memberships,
+       |    CAST(count(DISTINCT doc_id) AS BIGINT) AS dropped_docs,
+       |    CAST(coalesce(sum(bucket_n - 1), 0) // 2 AS BIGINT)
+       |      AS est_dropped_pairs
+       |  FROM dropped)""".stripMargin
 
   /** Incremental-screen oracle: the full-corpus verified LSH pairs
     * (`lshp`), restricted to pairs touching a batch doc, re-oriented
@@ -1188,29 +1621,18 @@ object SparkEntry {
     * (reusing `sh`/`cnt`) one-sided-joined against the `lshp` CTE,
     * bucketed by Jaccard decile, cross-joined with the 1-row
     * dropped-mass summary of the BucketCap filter. */
-  private def lshAuditSql: String =
+  private def lshAuditSql: String = {
+    import graft.operators.Dedup
     s"""WITH $minhashPairsCtes,
        |truth AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-       |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
+       |  $sharedShinglesSql),
        |truep AS (
        |  SELECT doc_a, doc_b,
-       |    round(shared * 1.0 / (ca.n_sh + cb.n_sh - shared), 4) AS jaccard
+       |    $jaccardSql AS jaccard
        |  FROM truth JOIN cnt ca ON doc_a = ca.doc_id
        |    JOIN cnt cb ON doc_b = cb.doc_id
-       |  WHERE round(shared * 1.0 / (ca.n_sh + cb.n_sh - shared), 4) >= 0.5),
-       |dropped AS (
-       |  SELECT * FROM bucketed WHERE bucket_n > ${graft.operators.Dedup.BucketCap}),
-       |drop_s AS (
-       |  SELECT
-       |    CAST(count(DISTINCT struct_pack(band := band, k0 := k0,
-       |      k1 := k1, k2 := k2, k3 := k3)) AS BIGINT) AS dropped_buckets,
-       |    CAST(count(*) AS BIGINT) AS dropped_memberships,
-       |    CAST(count(DISTINCT doc_id) AS BIGINT) AS dropped_docs,
-       |    CAST(coalesce(sum(bucket_n - 1), 0) // 2 AS BIGINT)
-       |      AS est_dropped_pairs
-       |  FROM dropped)
+       |  WHERE $jaccardSql >= 0.5),
+       |$droppedBucketsCtes
        |SELECT r.*, d.dropped_buckets, d.dropped_memberships,
        |  d.dropped_docs, d.est_dropped_pairs
        |FROM (
@@ -1222,6 +1644,7 @@ object SparkEntry {
        |      / count(*), 4) AS recall
        |  FROM truep t LEFT JOIN lshp l ON t.doc_a = l.doc_a AND t.doc_b = l.doc_b
        |  GROUP BY 1) r CROSS JOIN drop_s d""".stripMargin
+  }
 
   /** Sampled recall-audit oracle — the md5-prefix probe selector
     * rendered verbatim: probe-oriented truth (sampled docs against
@@ -1243,26 +1666,16 @@ object SparkEntry {
        |  GROUP BY 1, 2),
        |truep AS (
        |  SELECT probe_id, doc_b,
-       |    round(shared * 1.0 / (ca.n_sh + cb.n_sh - shared), 4) AS jaccard
+       |    $jaccardSql AS jaccard
        |  FROM truthp JOIN cnt ca ON probe_id = ca.doc_id
        |    JOIN cnt cb ON doc_b = cb.doc_id
-       |  WHERE round(shared * 1.0 / (ca.n_sh + cb.n_sh - shared), 4) >= 0.5),
+       |  WHERE $jaccardSql >= 0.5),
        |candp AS (
        |  SELECT DISTINCT a.doc_id AS probe_id, c.doc_id AS doc_b
        |  FROM capped a JOIN probe p ON a.doc_id = p.doc_id
        |  JOIN capped c ON a.band = c.band AND $kEq
        |  WHERE c.doc_id != a.doc_id),
-       |dropped AS (
-       |  SELECT * FROM bucketed WHERE bucket_n > ${Dedup.BucketCap}),
-       |drop_s AS (
-       |  SELECT
-       |    CAST(count(DISTINCT struct_pack(band := band, k0 := k0,
-       |      k1 := k1, k2 := k2, k3 := k3)) AS BIGINT) AS dropped_buckets,
-       |    CAST(count(*) AS BIGINT) AS dropped_memberships,
-       |    CAST(count(DISTINCT doc_id) AS BIGINT) AS dropped_docs,
-       |    CAST(coalesce(sum(bucket_n - 1), 0) // 2 AS BIGINT)
-       |      AS est_dropped_pairs
-       |  FROM dropped),
+       |$droppedBucketsCtes,
        |np AS (SELECT CAST(count(*) AS BIGINT) AS n_probes FROM probe)
        |SELECT r.*, CAST(0.0625 AS DOUBLE) AS sample_rate, np.n_probes,
        |  d.dropped_buckets, d.dropped_memberships, d.dropped_docs,
@@ -1323,7 +1736,7 @@ object SparkEntry {
     val cap = graft.operators.TextOps.BpeVocabCap
     val head = s"""WITH tokc AS (
       |  SELECT unnest(string_split(
-      |    regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ')) AS tok
+      |    $normTextSql, ' ')) AS tok
       |  FROM documents),
       |v0 AS MATERIALIZED (
       |  SELECT tok, n_occ, [tok[i:i] for i in range(1, len(tok) + 1)] AS syms
@@ -1426,6 +1839,22 @@ object SparkEntry {
       |FROM ss""".stripMargin
   }
 
+  /** The expected decode of an in-plan raster of the events grid:
+    * variable `variable` on 2024-01-15, cell centres on the 0.25°
+    * lattice from (42.125, -9.875), every cell outside the nodata
+    * mask, `value` unpacking `v_us`; with `sentinel`, a cell whose
+    * mean equals the int32 nodata value is skipped as the decoder
+    * skips it. */
+  private def gridDecodeSql(variable: String, value: String,
+      sentinel: Boolean): String = {
+    val guard = if (sentinel) " AND v_us != -2147483648" else ""
+    s"""WITH $cellCte
+      |SELECT '$variable' AS var, '2024-01-15' AS day,
+      |  42.125 + gy * 0.25 AS lat, -9.875 + gx * 0.25 AS lon,
+      |  $value AS value
+      |FROM c WHERE (gx * 8 + gy) % 7 != 3$guard""".stripMargin
+  }
+
   /** Oracle-render context: the (session, data dir) the queries ran
     * against, set by [[Verify]] AFTER the query pass and BEFORE the
     * oracle dump. The IVF/PQ quantizers are FIT on the data (bounded
@@ -1456,42 +1885,76 @@ object SparkEntry {
       s"($b, ${dLit(c.map(x => x * x).sum)}, [${c.map(dLit).mkString(", ")}])"
     }.mkString(",\n  ")
 
-  /** The `ann_ivf_topk` oracle: literal fitted centroids; assignment
-    * argmin, probe routing (top-2 cells by 6-dp rounded centroid
-    * cosine), candidate equi-join on the cell, exact-cosine top-10 —
-    * operation-for-operation the Spark plan's discipline. */
-  private def ivfTopkSql(cents: Array[Array[Double]]): String =
-    s"""WITH cents(b, ss, c) AS (VALUES
+  /** The literal centroid table `cents(b, ss, c)` and the vectors `v`. */
+  private def centroidsCtes(cents: Array[Array[Double]]): String =
+    s"""cents(b, ss, c) AS (VALUES
       |  ${centroidRowsSql(cents)}),
-      |v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-      |asgn AS (
-      |  SELECT vec_id, e, b,
-      |    row_number() OVER (PARTITION BY vec_id
-      |      ORDER BY floor((ss - 2 * list_inner_product(e, c)) * 1e6 + 0.5) / 1e6 ASC,
-      |               b ASC) AS rn
-      |  FROM v, cents),
-      |hm AS (SELECT vec_id, e, b AS bucket FROM asgn WHERE rn = 1),
-      |p AS (SELECT vec_id AS probe_id, e AS pe FROM v
-      |       WHERE vec_id IN (SELECT vec_id FROM embeddings
-      |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 5)),
-      |rt AS (
-      |  SELECT probe_id, pe, b,
-      |    row_number() OVER (PARTITION BY probe_id
-      |      ORDER BY floor(list_cosine_similarity(pe, c) * 1e6 + 0.5) / 1e6 DESC,
-      |               b ASC) AS rn
-      |  FROM p, cents),
-      |pb AS (SELECT probe_id, pe, b AS bucket FROM rt WHERE rn <= 2),
-      |cand AS (
-      |  SELECT DISTINCT pb.probe_id, hm.vec_id
-      |  FROM pb JOIN hm USING (bucket) WHERE hm.vec_id != pb.probe_id),
-      |r AS (
+      |$vectorsCte""".stripMargin
+
+  /** Candidate pairs `cd(probe_id, vec_id)` from `from`, re-ranked per
+    * probe by exact cosine over `v`: `r(probe_id, neighbor_id, rk,
+    * cosine)`. */
+  private def exactRerankCte(from: String): String =
+    s"""r AS (
       |  SELECT cd.probe_id, cd.vec_id AS neighbor_id,
       |    row_number() OVER (PARTITION BY cd.probe_id
       |      ORDER BY floor(list_cosine_similarity(vp.e, vc.e) * 1e6 + 0.5) / 1e6 DESC,
       |               cd.vec_id ASC) AS rk,
       |    floor(list_cosine_similarity(vp.e, vc.e) * 1e4 + 0.5) / 1e4 AS cosine
-      |  FROM cand cd JOIN v vp ON vp.vec_id = cd.probe_id
-      |    JOIN v vc ON vc.vec_id = cd.vec_id)
+      |  FROM $from JOIN v vp ON vp.vec_id = cd.probe_id
+      |    JOIN v vc ON vc.vec_id = cd.vec_id)""".stripMargin
+
+  /** The two-level routing shared by the census and the top-k
+    * oracles: literal super and sub centroids, each vector's top
+    * supers `pr`, their product cells ranked in `cand`, and the home
+    * assignment `asgn(vec_id, pid)`. */
+  private def twoLevelAssignCtes(sup: Array[Array[Double]],
+      subs: Array[Array[Array[Double]]]): String = {
+    val subK = subs(0).length
+    val subRows = subs.flatten.zipWithIndex.map { case (c, pid) =>
+      s"($pid, ${dLit(c.map(x => x * x).sum)}, [${c.map(dLit).mkString(", ")}])"
+    }.mkString(",\n  ")
+    s"""WITH sup(b, ss, c) AS (VALUES
+      |  ${centroidRowsSql(sup)}),
+      |subs(pid, ss, c) AS (VALUES
+      |  $subRows),
+      |$vectorsCte,
+      |sr AS (
+      |  SELECT vec_id, e, b,
+      |    $centroidRankSql
+      |  FROM v, sup),
+      |pr AS (SELECT vec_id, e, b FROM sr
+      |       WHERE rn <= ${graft.operators.Similarity.TwoLevelNprobeSuper}),
+      |cand AS (
+      |  SELECT pr.vec_id, s.pid,
+      |    row_number() OVER (PARTITION BY pr.vec_id
+      |      ORDER BY floor((s.ss - 2 * list_inner_product(pr.e, s.c)) * 1e6 + 0.5) / 1e6 ASC,
+      |               s.pid ASC) AS rn
+      |  FROM pr JOIN subs s ON s.pid // $subK = pr.b),
+      |asgn AS (SELECT vec_id, pid FROM cand WHERE rn = 1)""".stripMargin
+  }
+
+  /** The `ann_ivf_topk` oracle: literal fitted centroids; assignment
+    * argmin, probe routing (top-2 cells by 6-dp rounded centroid
+    * cosine), candidate equi-join on the cell, exact-cosine top-10 —
+    * operation-for-operation the Spark plan's discipline. */
+  private def ivfTopkSql(cents: Array[Array[Double]]): String =
+    s"""WITH ${centroidsCtes(cents)},
+      |asgn AS (
+      |  SELECT vec_id, e, b,
+      |    $centroidRankSql
+      |  FROM v, cents),
+      |hm AS (SELECT vec_id, e, b AS bucket FROM asgn WHERE rn = 1),
+      |$fixedProbesCte,
+      |rt AS (
+      |  SELECT probe_id, pe, b,
+      |    $probeRouteRankSql
+      |  FROM p, cents),
+      |pb AS (SELECT probe_id, pe, b AS bucket FROM rt WHERE rn <= 2),
+      |cand AS (
+      |  SELECT DISTINCT pb.probe_id, hm.vec_id
+      |  FROM pb JOIN hm USING (bucket) WHERE hm.vec_id != pb.probe_id),
+      |${exactRerankCte("cand cd")}
       |SELECT probe_id, neighbor_id, rk, cosine FROM r WHERE rk <= 10"""
       .stripMargin
 
@@ -1500,14 +1963,10 @@ object SparkEntry {
     * = rank ≤ 4), candidates via the cell equi-join, exact-cosine
     * top-5 per vector. */
   private def knnGraphIvfSql(cents: Array[Array[Double]]): String =
-    s"""WITH cents(b, ss, c) AS (VALUES
-      |  ${centroidRowsSql(cents)}),
-      |v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+    s"""WITH ${centroidsCtes(cents)},
       |rk0 AS (
       |  SELECT vec_id, e, b,
-      |    row_number() OVER (PARTITION BY vec_id
-      |      ORDER BY floor((ss - 2 * list_inner_product(e, c)) * 1e6 + 0.5) / 1e6 ASC,
-      |               b ASC) AS rn
+      |    $centroidRankSql
       |  FROM v, cents),
       |hm AS (SELECT vec_id, e, b AS cell FROM rk0 WHERE rn = 1),
       |pr AS (SELECT vec_id AS probe_id, e AS pe, b AS cell
@@ -1535,29 +1994,7 @@ object SparkEntry {
   private def twoLevelSql(sup: Array[Array[Double]],
       subs: Array[Array[Array[Double]]]): String = {
     val subK = subs(0).length
-    val subRows = subs.flatten.zipWithIndex.map { case (c, pid) =>
-      s"($pid, ${dLit(c.map(x => x * x).sum)}, [${c.map(dLit).mkString(", ")}])"
-    }.mkString(",\n  ")
-    s"""WITH sup(b, ss, c) AS (VALUES
-      |  ${centroidRowsSql(sup)}),
-      |subs(pid, ss, c) AS (VALUES
-      |  $subRows),
-      |v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-      |sr AS (
-      |  SELECT vec_id, e, b,
-      |    row_number() OVER (PARTITION BY vec_id
-      |      ORDER BY floor((ss - 2 * list_inner_product(e, c)) * 1e6 + 0.5) / 1e6 ASC,
-      |               b ASC) AS rn
-      |  FROM v, sup),
-      |pr AS (SELECT vec_id, e, b FROM sr
-      |       WHERE rn <= ${graft.operators.Similarity.TwoLevelNprobeSuper}),
-      |cand AS (
-      |  SELECT pr.vec_id, s.pid,
-      |    row_number() OVER (PARTITION BY pr.vec_id
-      |      ORDER BY floor((s.ss - 2 * list_inner_product(pr.e, s.c)) * 1e6 + 0.5) / 1e6 ASC,
-      |               s.pid ASC) AS rn
-      |  FROM pr JOIN subs s ON s.pid // $subK = pr.b),
-      |asgn AS (SELECT vec_id, pid FROM cand WHERE rn = 1)
+    s"""${twoLevelAssignCtes(sup, subs)}
       |SELECT CAST(pid // $subK AS INTEGER) AS super_cell,
       |  CAST(pid % $subK AS INTEGER) AS sub_cell,
       |  count(*) AS n_vectors, min(vec_id) AS min_vec_id
@@ -1582,48 +2019,16 @@ object SparkEntry {
     * home assignment → probe routing → candidate cosines ranked in
     * `r`. */
   private def twoLevelTopkCtes(sup: Array[Array[Double]],
-      subs: Array[Array[Array[Double]]]): String = {
-    val subK = subs(0).length
-    val subRows = subs.flatten.zipWithIndex.map { case (c, pid) =>
-      s"($pid, ${dLit(c.map(x => x * x).sum)}, [${c.map(dLit).mkString(", ")}])"
-    }.mkString(",\n  ")
-    s"""WITH sup(b, ss, c) AS (VALUES
-      |  ${centroidRowsSql(sup)}),
-      |subs(pid, ss, c) AS (VALUES
-      |  $subRows),
-      |v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-      |sr AS (
-      |  SELECT vec_id, e, b,
-      |    row_number() OVER (PARTITION BY vec_id
-      |      ORDER BY floor((ss - 2 * list_inner_product(e, c)) * 1e6 + 0.5) / 1e6 ASC,
-      |               b ASC) AS rn
-      |  FROM v, sup),
-      |pr AS (SELECT vec_id, e, b FROM sr
-      |       WHERE rn <= ${graft.operators.Similarity.TwoLevelNprobeSuper}),
-      |cand AS (
-      |  SELECT pr.vec_id, s.pid,
-      |    row_number() OVER (PARTITION BY pr.vec_id
-      |      ORDER BY floor((s.ss - 2 * list_inner_product(pr.e, s.c)) * 1e6 + 0.5) / 1e6 ASC,
-      |               s.pid ASC) AS rn
-      |  FROM pr JOIN subs s ON s.pid // $subK = pr.b),
-      |asgn AS (SELECT vec_id, pid FROM cand WHERE rn = 1),
+      subs: Array[Array[Array[Double]]]): String =
+    s"""${twoLevelAssignCtes(sup, subs)},
       |pcand AS (SELECT vec_id AS probe_id, pid FROM cand
-      |          WHERE vec_id IN (SELECT vec_id FROM embeddings
-      |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 5)
+      |          WHERE vec_id IN $probeIdsSql
       |            AND rn <= ${graft.operators.Similarity.TwoLevelProbeCells}),
       |cd AS (
       |  SELECT DISTINCT pc.probe_id, a.vec_id
       |  FROM pcand pc JOIN asgn a USING (pid)
       |  WHERE a.vec_id != pc.probe_id),
-      |r AS (
-      |  SELECT cd.probe_id, cd.vec_id AS neighbor_id,
-      |    row_number() OVER (PARTITION BY cd.probe_id
-      |      ORDER BY floor(list_cosine_similarity(vp.e, vc.e) * 1e6 + 0.5) / 1e6 DESC,
-      |               cd.vec_id ASC) AS rk,
-      |    floor(list_cosine_similarity(vp.e, vc.e) * 1e4 + 0.5) / 1e4 AS cosine
-      |  FROM cd JOIN v vp ON vp.vec_id = cd.probe_id
-      |    JOIN v vc ON vc.vec_id = cd.vec_id)""".stripMargin
-  }
+      |${exactRerankCte("cd")}""".stripMargin
 
   /** The `ann_two_level_recall_audit` oracle: the two-level topk CTE
     * chain as the approximate arm, exact brute force over the same
@@ -1635,19 +2040,7 @@ object SparkEntry {
       |tlr AS (SELECT probe_id, neighbor_id AS nb_id,
       |    CAST(floor(cosine * 1e4 + 0.5) AS BIGINT) AS cos_u
       |  FROM r WHERE rk <= 10),
-      |bc AS (SELECT p.vec_id AS probe_id, c.vec_id AS nb_id,
-      |    list_cosine_similarity(p.e, c.e) AS cos
-      |  FROM v p, v c WHERE p.vec_id IN (SELECT vec_id FROM embeddings
-      |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 5)
-      |    AND c.vec_id != p.vec_id),
-      |br AS (SELECT probe_id, nb_id,
-      |    row_number() OVER (PARTITION BY probe_id
-      |      ORDER BY floor(cos * 1e6 + 0.5) / 1e6 DESC, nb_id ASC) AS rk,
-      |    floor(cos * 1e4 + 0.5) / 1e4 AS cosine
-      |  FROM bc),
-      |bfr AS (SELECT probe_id, nb_id,
-      |    CAST(floor(cosine * 1e4 + 0.5) AS BIGINT) AS cos_u
-      |  FROM br WHERE rk <= 10),
+      |${bruteTop10Ctes(s"p.vec_id IN $probeIdsSql")},
       |per AS (
       |  SELECT bf.probe_id, CAST(count(*) AS BIGINT) AS k,
       |    CAST(sum(CASE WHEN l.nb_id IS NOT NULL THEN 1 ELSE 0 END)
@@ -1679,7 +2072,7 @@ object SparkEntry {
     }.mkString(",\n  ")
     s"""WITH books(m, k, ss, c) AS (VALUES
       |  $rows),
-      |v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+      |$vectorsCte,
       |sub AS (
       |  SELECT vec_id, m, e[m * $sd + 1 : m * $sd + $sd] AS sv
       |  FROM v, range(0, ${books.length}) r(m)),
@@ -1690,9 +2083,7 @@ object SparkEntry {
       |               k ASC) AS rn
       |  FROM sub JOIN books USING (m)),
       |codes AS (SELECT vec_id, m, k AS code FROM enc WHERE rn = 1),
-      |p AS (SELECT vec_id AS probe_id, e AS pe FROM v
-      |       WHERE vec_id IN (SELECT vec_id FROM embeddings
-      |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 5)),
+      |$fixedProbesCte,
       |lut AS (
       |  SELECT probe_id, m, k,
       |    ss - 2 * list_inner_product(pe[m * $sd + 1 : m * $sd + $sd], c) AS ld
@@ -1744,7 +2135,7 @@ object SparkEntry {
     * cents-quantized events table. */
   private def zCteSql(cols: String): String =
     s"""SELECT $cols, $zScore4Sql AS zscore
-      |  FROM (SELECT *, CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
+      |  FROM (SELECT *, $centsSql AS c
       |        FROM events)
       |  WINDOW w AS (PARTITION BY user_id, event_type)""".stripMargin
 
@@ -1759,7 +2150,7 @@ object SparkEntry {
     val tables = (0 until graft.operators.Similarity.NumTables).map { t =>
       s"SELECT vec_id, e, $t AS t, ${lshSigSql(t, bits)} AS sig FROM v"
     }.mkString("\n  UNION ALL ")
-    s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+    s"""WITH $vectorsCte,
        |b0 AS (
        |  $tables),
        |b AS (SELECT *, count(*) OVER (PARTITION BY t, sig) AS bucket_n
@@ -1772,6 +2163,15 @@ object SparkEntry {
        |  WHERE a.vec_id < c.vec_id)""".stripMargin
   }
 
+  /** The capped-out embedding buckets' one-row ledger `drops`. */
+  private def embDropsCte: String =
+    s"""drops AS (
+       |  SELECT CAST(count(DISTINCT (t, sig)) AS BIGINT) AS dropped_buckets,
+       |    CAST(count(*) AS BIGINT) AS dropped_memberships,
+       |    CAST(coalesce(sum(bucket_n - 1), 0) // 2 AS BIGINT)
+       |      AS est_dropped_pairs
+       |  FROM b WHERE bucket_n > ${graft.operators.Similarity.EmbBucketCap})""".stripMargin
+
   private def lshPairsSql(bits: Int): String =
     s"""${lshPairsCtes(bits)}
       |SELECT id_a, id_b,
@@ -1782,12 +2182,7 @@ object SparkEntry {
   private def lshPairsAuditSql(bits: Int): String =
     s"""${lshPairsCtes(bits)},
       |cand AS (SELECT id_a, id_b, 1 AS found FROM pairs),
-      |drops AS (
-      |  SELECT CAST(count(DISTINCT (t, sig)) AS BIGINT) AS dropped_buckets,
-      |    CAST(count(*) AS BIGINT) AS dropped_memberships,
-      |    CAST(coalesce(sum(bucket_n - 1), 0) // 2 AS BIGINT)
-      |      AS est_dropped_pairs
-      |  FROM b WHERE bucket_n > ${graft.operators.Similarity.EmbBucketCap}),
+      |$embDropsCte,
       |truth AS (
       |  SELECT a.vec_id AS id_a, c.vec_id AS id_b,
       |    floor(list_cosine_similarity(a.e, c.e) * 1e4 + 0.5) / 1e4 AS cos4
@@ -1808,7 +2203,7 @@ object SparkEntry {
     * probe selector as the text side, probe-oriented truth and
     * candidates, sample-rate/probe-count columns, exact ledger. */
   private def lshPairsAuditSampledSql(bits: Int): String = {
-    import graft.operators.{Dedup, Similarity}
+    import graft.operators.Dedup
     s"""${lshPairsCtes(bits)},
       |probe AS (SELECT vec_id FROM v
       |  WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1,
@@ -1818,12 +2213,7 @@ object SparkEntry {
       |  FROM bc a JOIN probe p ON a.vec_id = p.vec_id
       |  JOIN bc c ON a.t = c.t AND a.sig = c.sig
       |  WHERE c.vec_id != a.vec_id),
-      |drops AS (
-      |  SELECT CAST(count(DISTINCT (t, sig)) AS BIGINT) AS dropped_buckets,
-      |    CAST(count(*) AS BIGINT) AS dropped_memberships,
-      |    CAST(coalesce(sum(bucket_n - 1), 0) // 2 AS BIGINT)
-      |      AS est_dropped_pairs
-      |  FROM b WHERE bucket_n > ${Similarity.EmbBucketCap}),
+      |$embDropsCte,
       |np AS (SELECT CAST(count(*) AS BIGINT) AS n_probes FROM probe),
       |truth AS (
       |  SELECT a.vec_id AS probe_id, c.vec_id AS id_b,
@@ -1849,24 +2239,16 @@ object SparkEntry {
     * the same `first_rn`, ranks by the same 6-dp quantized cosine,
     * and the recall/regret reductions run on exact integer cos_u. */
   private def nprobeSweepSql(cents: Array[Array[Double]]): String =
-    s"""WITH cents(b, ss, c) AS (VALUES
-      |  ${centroidRowsSql(cents)}),
-      |v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+    s"""WITH ${centroidsCtes(cents)},
       |rk0 AS (
       |  SELECT vec_id, e, b,
-      |    row_number() OVER (PARTITION BY vec_id
-      |      ORDER BY floor((ss - 2 * list_inner_product(e, c)) * 1e6 + 0.5) / 1e6 ASC,
-      |               b ASC) AS rn
+      |    $centroidRankSql
       |  FROM v, cents),
       |hm AS (SELECT vec_id, e, b AS bucket FROM rk0 WHERE rn = 1),
-      |p AS (SELECT vec_id AS probe_id, e AS pe FROM v
-      |       WHERE vec_id IN (SELECT vec_id FROM embeddings
-      |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 5)),
+      |$fixedProbesCte,
       |rt AS (
       |  SELECT probe_id, b AS bucket,
-      |    row_number() OVER (PARTITION BY probe_id
-      |      ORDER BY floor(list_cosine_similarity(pe, c) * 1e6 + 0.5) / 1e6 DESC,
-      |               b ASC) AS rn
+      |    $probeRouteRankSql
       |  FROM p, cents),
       |sc AS (
       |  SELECT fr.probe_id, fr.vec_id, fr.first_rn,
@@ -1925,15 +2307,11 @@ object SparkEntry {
          |  ${centroidRowsSql(cents)}),
          |hm$nl AS (
          |  SELECT vec_id, b AS cell FROM (
-         |    SELECT vec_id, b, row_number() OVER (PARTITION BY vec_id
-         |      ORDER BY floor((ss - 2 * list_inner_product(e, c)) * 1e6 + 0.5) / 1e6 ASC,
-         |               b ASC) AS rn
+         |    SELECT vec_id, b, $centroidRankSql
          |    FROM v, c$nl) WHERE rn = 1),
          |rt$nl AS (
          |  SELECT probe_id, b AS cell FROM (
-         |    SELECT probe_id, b, row_number() OVER (PARTITION BY probe_id
-         |      ORDER BY floor(list_cosine_similarity(pe, c) * 1e6 + 0.5) / 1e6 DESC,
-         |               b ASC) AS rn
+         |    SELECT probe_id, b, $probeRouteRankSql
          |    FROM p, c$nl) WHERE rn <= $np),
          |sc$nl AS (
          |  SELECT sa.probe_id, sa.vec_id, sa.cos, sa.cos_u
@@ -1957,10 +2335,8 @@ object SparkEntry {
     }.mkString(",\n")
     val unioned = rungs.map { case (nl, _, _) =>
       s"SELECT * FROM row$nl" }.mkString("\n  UNION ALL ")
-    s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-       |p AS (SELECT vec_id AS probe_id, e AS pe FROM v
-      |       WHERE vec_id IN (SELECT vec_id FROM embeddings
-      |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 5)),
+    s"""WITH $vectorsCte,
+       |$fixedProbesCte,
        |sa AS (
        |  SELECT p.probe_id, v.vec_id,
        |    list_cosine_similarity(p.pe, v.e) AS cos,
@@ -2182,12 +2558,12 @@ object SparkEntry {
     // all boundary math in exact integer cents so bucket edges are
     // engine-invariant
     "events_value_histogram" ->
-      """WITH c AS (
+      s"""WITH c AS (
         |  SELECT event_type,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS c,
-        |    min(CAST(floor(value * 100 + 0.5) AS BIGINT))
+        |    $centsSql AS c,
+        |    min($centsSql)
         |      OVER (PARTITION BY event_type) AS cmin,
-        |    max(CAST(floor(value * 100 + 0.5) AS BIGINT))
+        |    max($centsSql)
         |      OVER (PARTITION BY event_type) AS cmax
         |  FROM events),
         |b AS (
@@ -2231,7 +2607,7 @@ object SparkEntry {
     // integer lag days; exact mean + rank-interpolated percentiles on
     // one window sort per priority
     "order_ship_lag" ->
-      """WITH lag AS (
+      s"""WITH lag AS (
         |  SELECT o.o_orderpriority AS priority,
         |    date_diff('day', o.o_orderdate, l.l_shipdate) AS lag_days
         |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
@@ -2243,27 +2619,9 @@ object SparkEntry {
         |SELECT priority, count(*) AS n_lines,
         |  floor(CAST(sum(lag_days) AS DOUBLE) / count(*) * 1e4 + 0.5) / 1e4
         |    AS mean_lag,
-        |  floor((min(CASE WHEN rn = CAST(floor((n - 1) * 0.5) AS BIGINT) + 1
-        |      THEN lag_days END)
-        |    + ((min(n) - 1) * 0.5 - floor((min(n) - 1) * 0.5))
-        |      * (min(CASE WHEN rn = least(CAST(floor((n - 1) * 0.5) AS BIGINT)
-        |          + 2, n) THEN lag_days END)
-        |        - min(CASE WHEN rn = CAST(floor((n - 1) * 0.5) AS BIGINT) + 1
-        |          THEN lag_days END))) * 1e4 + 0.5) / 1e4 AS p50,
-        |  floor((min(CASE WHEN rn = CAST(floor((n - 1) * 0.9) AS BIGINT) + 1
-        |      THEN lag_days END)
-        |    + ((min(n) - 1) * 0.9 - floor((min(n) - 1) * 0.9))
-        |      * (min(CASE WHEN rn = least(CAST(floor((n - 1) * 0.9) AS BIGINT)
-        |          + 2, n) THEN lag_days END)
-        |        - min(CASE WHEN rn = CAST(floor((n - 1) * 0.9) AS BIGINT) + 1
-        |          THEN lag_days END))) * 1e4 + 0.5) / 1e4 AS p90,
-        |  floor((min(CASE WHEN rn = CAST(floor((n - 1) * 0.99) AS BIGINT) + 1
-        |      THEN lag_days END)
-        |    + ((min(n) - 1) * 0.99 - floor((min(n) - 1) * 0.99))
-        |      * (min(CASE WHEN rn = least(CAST(floor((n - 1) * 0.99) AS BIGINT)
-        |          + 2, n) THEN lag_days END)
-        |        - min(CASE WHEN rn = CAST(floor((n - 1) * 0.99) AS BIGINT) + 1
-        |          THEN lag_days END))) * 1e4 + 0.5) / 1e4 AS p99
+        |  floor(${rankInterpSql("lag_days", "0.5")} * 1e4 + 0.5) / 1e4 AS p50,
+        |  floor(${rankInterpSql("lag_days", "0.9")} * 1e4 + 0.5) / 1e4 AS p90,
+        |  floor(${rankInterpSql("lag_days", "0.99")} * 1e4 + 0.5) / 1e4 AS p99
         |FROM r GROUP BY 1""".stripMargin,
 
     "q10_returned_items" ->
@@ -2324,30 +2682,28 @@ object SparkEntry {
         |  CAST(count(*) AS BIGINT) AS n_events
         |FROM events GROUP BY 1, 2""".stripMargin,
     "ts_resample_daily" ->
-      """SELECT event_type,
-        |  strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
+      s"""SELECT event_type,
+        |  $dayLabelSql AS day,
         |  count(*) AS n,
-        |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
+        |  CAST(sum($centsSql) AS DOUBLE)
         |    / 100.0 AS sum_value,
-        |  floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-        |    * 100.0 / count(*) + 0.5) / 1e4 AS avg_value
+        |  $avg4Sql AS avg_value
         |FROM events
         |GROUP BY 1, 2""".stripMargin,
 
     "ts_resample_weekly_max" ->
-      """SELECT user_id,
-        |  strftime(date_trunc('week', ts), '%Y-%m-%d') AS week,
+      s"""SELECT user_id,
+        |  $weekLabelSql AS week,
         |  round(max(value), 2) AS max_value
         |FROM events
         |GROUP BY 1, 2""".stripMargin,
 
     "ts_resample_monthly" ->
-      """SELECT user_id,
+      s"""SELECT user_id,
         |  strftime(date_trunc('month', ts), '%Y-%m-%d') AS month,
         |  count(*) AS n,
-        |  floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-        |    * 100.0 / count(*) + 0.5) / 1e4 AS avg_rate,
-        |  floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 100
+        |  $avg4Sql AS avg_rate,
+        |  floor(CAST(sum($centsSql) * 100
         |      * day(last_day(date_trunc('month', ts))) AS DOUBLE)
         |    / count(*) + 0.5) / 1e4 AS month_total
         |FROM events
@@ -2362,9 +2718,9 @@ object SparkEntry {
     // integer-cent window sum: float window sums associate differently
     // across engines (segment tree vs sequential)
     "ts_rolling_sum_range" ->
-      """SELECT event_id, user_id,
-        |  strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) OVER (
+      s"""SELECT event_id, user_id,
+        |  $dayLabelSql AS day,
+        |  CAST(sum($centsSql) OVER (
         |    PARTITION BY user_id
         |    ORDER BY datediff('day', DATE '1970-01-01', CAST(ts AS DATE))
         |    RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS BIGINT) / 100.0
@@ -2416,9 +2772,9 @@ object SparkEntry {
     // CUSUM on integer micro-unit deltas: the clamp identity again,
     // with the station mean from exact integer cents
     "ts_cusum_drift" ->
-      """WITH c AS (
+      s"""WITH c AS (
         |  SELECT event_id, user_id, ts, value,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
+        |    $centsSql AS cents
         |  FROM events),
         |m AS (
         |  SELECT event_id, user_id, ts,
@@ -2442,19 +2798,15 @@ object SparkEntry {
         |FROM u""".stripMargin,
 
     "ts_asof_join" ->
-      """SELECT c.event_id, c.user_id,
+      s"""SELECT c.event_id, c.user_id,
         |  round(c.value, 2) AS click_value,
         |  round(p.value, 2) AS last_purchase_value
-        |FROM (SELECT * FROM events WHERE event_type = 'click') c
-        |ASOF LEFT JOIN (
-        |  SELECT user_id, ts, max_by(value, event_id) AS value
-        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts) p
-        |  ON c.user_id = p.user_id AND c.ts > p.ts""".stripMargin,
+        |$asofPurchaseSql""".stripMargin,
 
     // the tolerance test is one integer-microsecond comparison on the
     // ASOF match — exact both sides
     "ts_asof_tolerance" ->
-      """SELECT c.event_id, c.user_id,
+      s"""SELECT c.event_id, c.user_id,
         |  round(c.value, 2) AS click_value,
         |  CASE WHEN p.ts IS NOT NULL
         |      AND epoch_us(c.ts) - epoch_us(p.ts) <= 86400000000
@@ -2463,20 +2815,10 @@ object SparkEntry {
         |      AND epoch_us(c.ts) - epoch_us(p.ts) <= 86400000000
         |    THEN (epoch_us(c.ts) - epoch_us(p.ts)) // 1000000 END
         |    AS staleness_s
-        |FROM (SELECT * FROM events WHERE event_type = 'click') c
-        |ASOF LEFT JOIN (
-        |  SELECT user_id, ts, max_by(value, event_id) AS value
-        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts) p
-        |  ON c.user_id = p.user_id AND c.ts > p.ts""".stripMargin,
+        |$asofPurchaseSql""".stripMargin,
 
     "ts_gapfill" ->
-      """WITH daily AS (
-        |  SELECT user_id, date_trunc('day', ts) AS d, round(sum(value), 2) AS v
-        |  FROM events GROUP BY 1, 2
-        |), bounds AS (SELECT min(d) AS lo, max(d) AS hi FROM daily),
-        |days AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS d FROM bounds),
-        |grid AS (SELECT u.user_id, days.d
-        |         FROM (SELECT DISTINCT user_id FROM events) u CROSS JOIN days)
+      s"""WITH $dayGridCtes
         |SELECT g.user_id, strftime(g.d, '%Y-%m-%d') AS day,
         |  coalesce(last_value(dl.v IGNORE NULLS) OVER (
         |    PARTITION BY g.user_id ORDER BY g.d
@@ -2484,13 +2826,7 @@ object SparkEntry {
         |FROM grid g LEFT JOIN daily dl ON g.user_id = dl.user_id AND g.d = dl.d""".stripMargin,
 
     "ts_interp_linear" ->
-      """WITH daily AS (
-        |  SELECT user_id, date_trunc('day', ts) AS d, round(sum(value), 2) AS v
-        |  FROM events GROUP BY 1, 2
-        |), bounds AS (SELECT min(d) AS lo, max(d) AS hi FROM daily),
-        |days AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS d FROM bounds),
-        |grid AS (SELECT u.user_id, days.d
-        |         FROM (SELECT DISTINCT user_id FROM events) u CROSS JOIN days),
+      s"""WITH $dayGridCtes,
         |j AS (
         |  SELECT g.user_id, g.d, dl.v,
         |    last_value(dl.v IGNORE NULLS) OVER wp AS pv,
@@ -2533,13 +2869,7 @@ object SparkEntry {
         |GROUP BY 1""".stripMargin,
 
     "zonal_class_area" ->
-      s"""WITH z AS (
-        |  ${zCteSql("user_id, ts")}),
-        |g AS (
-        |  SELECT CAST(floor(((user_id % 36) * 5.0 - 87.5) / 30) AS INT) AS zone_y,
-        |    CAST(floor(((user_id % 72) * 5.0 - 177.5) / 30) AS INT) AS zone_x,
-        |    strftime(date_trunc('week', ts), '%Y-%m-%d') AS week, zscore
-        |  FROM z)
+      s"""WITH $zonalWeekCtes
         |SELECT zone_y, zone_x, week, count(*) AS n_obs,
         |  CAST(sum(CASE WHEN zscore <= -0.5 THEN 1 ELSE 0 END) AS BIGINT) AS d0_n,
         |  CAST(sum(CASE WHEN zscore <= -0.8 THEN 1 ELSE 0 END) AS BIGINT) AS d1_n,
@@ -2559,13 +2889,7 @@ object SparkEntry {
         |FROM g GROUP BY 1, 2, 3""".stripMargin,
 
     "zonal_drought_extent" ->
-      s"""WITH z AS (
-        |  ${zCteSql("user_id, ts")}),
-        |g AS (
-        |  SELECT CAST(floor(((user_id % 36) * 5.0 - 87.5) / 30) AS INT) AS zone_y,
-        |    CAST(floor(((user_id % 72) * 5.0 - 177.5) / 30) AS INT) AS zone_x,
-        |    strftime(date_trunc('week', ts), '%Y-%m-%d') AS week, zscore
-        |  FROM z)
+      s"""WITH $zonalWeekCtes
         |SELECT zone_y, zone_x, week, count(*) AS n_obs,
         |  CAST(sum(CASE WHEN zscore <= -1.0 THEN 1 ELSE 0 END) AS BIGINT) AS drought_n,
         |  floor(CAST(sum(CASE WHEN zscore <= -1.0 THEN 1 ELSE 0 END) AS DOUBLE)
@@ -2575,13 +2899,7 @@ object SparkEntry {
     // the zonal_drought_extent chain verbatim, then the week-over-week
     // state machine on the O(zones × weeks) sliver — all integers
     "zonal_transitions" ->
-      s"""WITH z AS (
-        |  ${zCteSql("user_id, ts")}),
-        |g AS (
-        |  SELECT CAST(floor(((user_id % 36) * 5.0 - 87.5) / 30) AS INT) AS zone_y,
-        |    CAST(floor(((user_id % 72) * 5.0 - 177.5) / 30) AS INT) AS zone_x,
-        |    strftime(date_trunc('week', ts), '%Y-%m-%d') AS week, zscore
-        |  FROM z),
+      s"""WITH $zonalWeekCtes,
         |e AS (
         |  SELECT zone_y, zone_x, week,
         |    floor(CAST(sum(CASE WHEN zscore <= -1.0 THEN 1 ELSE 0 END) AS DOUBLE)
@@ -2626,7 +2944,7 @@ object SparkEntry {
     // all sufficient statistics are exact integer sums (x in days,
     // y in cents), divided back to doubles once — merge-order-free
     "ts_trend" ->
-      """WITH s AS (
+      s"""WITH s AS (
         |  SELECT user_id, CAST(count(*) AS DOUBLE) AS n,
         |    CAST(sum(x) AS DOUBLE) AS sx,
         |    CAST(sum(yc) AS DOUBLE) / 100.0 AS sy,
@@ -2634,8 +2952,8 @@ object SparkEntry {
         |    CAST(sum(x * x) AS DOUBLE) AS sx2,
         |    CAST(sum(yc * yc) AS DOUBLE) / 10000.0 AS sy2
         |  FROM (SELECT user_id,
-        |          date_diff('day', DATE '2024-01-01', date_trunc('day', ts)) AS x,
-        |          CAST(floor(value * 100 + 0.5) AS BIGINT) AS yc
+        |          $dayIndexSql AS x,
+        |          $centsSql AS yc
         |        FROM events)
         |  GROUP BY 1)
         |SELECT user_id, CAST(n AS BIGINT) AS n_obs,
@@ -2657,10 +2975,7 @@ object SparkEntry {
     // collapses to (ln rs16 - ln rs4) / (2 ln 2)
     "ts_hurst" -> {
       val twoLn2 = 2.0 * math.log(2.0)
-      s"""WITH d AS (
-        |  SELECT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |    sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS c
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH d AS ${seriesSql(s"$dayLabelSql AS day", s"sum($centsSql) AS c")},
         |ix AS (
         |  SELECT user_id, c,
         |    row_number() OVER (PARTITION BY user_id ORDER BY day) AS i
@@ -2716,12 +3031,7 @@ object SparkEntry {
 
     // partition order can't reach it the way it reaches a sum
     "ts_theil_sen" ->
-      """WITH daily AS (
-        |  SELECT user_id,
-        |    date_diff('day', DATE '2024-01-01', date_trunc('day', ts)) AS x,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-        |      / (count(*) * 100.0) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH daily AS $dailyMeanSql,
         |nd AS (SELECT user_id, count(*) AS n_days FROM daily GROUP BY 1),
         |p AS (
         |  SELECT a.user_id, (b.y - a.y) / (b.x - a.x) AS s
@@ -2742,11 +3052,7 @@ object SparkEntry {
     // anti-join argmax on the EXACT integer triangle score (average
     // multiplied through by the bucket count), ties to the earlier day
     "ts_lttb_downsample" ->
-      """WITH RECURSIVE daily AS (
-        |  SELECT user_id,
-        |    date_diff('day', DATE '2024-01-01', date_trunc('day', ts)) AS x,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH RECURSIVE daily AS ${seriesSql(s"$dayIndexSql AS x", s"$centSumSql AS y")},
         |idx AS (
         |  SELECT user_id, x, y,
         |    row_number() OVER (PARTITION BY user_id ORDER BY x) - 1 AS i,
@@ -2803,10 +3109,7 @@ object SparkEntry {
     // division (m^2/v = S1^2/(k*S2 - S1^2)); every figure one fixed
     // expression over (k, S1, S2, u, n)
     "ts_pot_gpd" ->
-      """WITH daily AS (
-        |  SELECT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH daily AS ${seriesSql(s"$dayLabelSql AS day", s"$centSumSql AS c")},
         |rk AS (
         |  SELECT user_id, c,
         |    CAST(count(*) OVER (PARTITION BY user_id) AS BIGINT) AS n_days,
@@ -2837,9 +3140,9 @@ object SparkEntry {
         |FROM s""".stripMargin,
 
     "ts_benford" ->
-      """WITH c AS (
+      s"""WITH c AS (
         |  SELECT user_id,
-        |    substr(CAST(CAST(floor(value * 100 + 0.5) AS BIGINT) AS VARCHAR), 1, 1) AS d1
+        |    substr(CAST($centsSql AS VARCHAR), 1, 1) AS d1
         |  FROM events WHERE floor(value * 100 + 0.5) > 0),
         |g AS (
         |  SELECT user_id, CAST(count(*) AS BIGINT) AS n_obs,
@@ -2859,12 +3162,7 @@ object SparkEntry {
         |FROM g""".stripMargin,
 
     "ts_mann_kendall" ->
-      """WITH daily AS (
-        |  SELECT user_id,
-        |    date_diff('day', DATE '2024-01-01', date_trunc('day', ts)) AS x,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-        |      / (count(*) * 100.0) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH daily AS $dailyMeanSql,
         |nd AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n
         |       FROM daily GROUP BY 1 HAVING count(*) >= 3),
         |s AS (
@@ -2891,22 +3189,13 @@ object SparkEntry {
         |           ELSE 0.0 END END AS z_raw
         |  FROM c)
         |SELECT user_id, n AS n_days, s_stat, var_s,
-        |  floor(z_raw * 1e4 + 0.5) / 1e4 AS z_stat,
-        |  CASE WHEN z_raw IS NULL THEN 'undefined'
-        |       WHEN z_raw > 1.96 THEN 'increasing'
-        |       WHEN z_raw < -1.96 THEN 'decreasing'
-        |       ELSE 'no_trend' END AS trend
+        |  $mkVerdictSql
         |FROM z""".stripMargin,
 
     // per-season S and tie terms are exact integers; they SUM before
     // the single /18 division, so the combine is merge-order-free
     "ts_seasonal_mk" ->
-      """WITH daily AS (
-        |  SELECT user_id,
-        |    date_diff('day', DATE '2024-01-01', date_trunc('day', ts)) AS x,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-        |      / (count(*) * 100.0) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH daily AS $dailyMeanSql,
         |ds AS (SELECT user_id, (x % 7 + 7) % 7 AS season, x, y FROM daily),
         |nd AS (SELECT user_id, season, CAST(count(*) AS BIGINT) AS n
         |       FROM ds GROUP BY 1, 2 HAVING count(*) >= 3),
@@ -2942,21 +3231,13 @@ object SparkEntry {
         |           ELSE 0.0 END END AS z_raw
         |  FROM c)
         |SELECT user_id, n_seasons, n_total, s_stat, var_s,
-        |  floor(z_raw * 1e4 + 0.5) / 1e4 AS z_stat,
-        |  CASE WHEN z_raw IS NULL THEN 'undefined'
-        |       WHEN z_raw > 1.96 THEN 'increasing'
-        |       WHEN z_raw < -1.96 THEN 'decreasing'
-        |       ELSE 'no_trend' END AS trend
+        |  $mkVerdictSql
         |FROM z""".stripMargin,
 
     // running max is an ORDER STATISTIC over exact rationals; the
     // subtraction is one exact-double op — merge order can't reach it
     "ts_drawdown" ->
-      """WITH daily AS (
-        |  SELECT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-        |      / (count(*) * 100.0) AS level
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH daily AS ${seriesSql(s"$dayLabelSql AS day", s"$centMeanSql AS level")},
         |w AS (
         |  SELECT user_id, day, level,
         |    max(level) OVER (PARTITION BY user_id ORDER BY day
@@ -2972,12 +3253,7 @@ object SparkEntry {
     // order statistic); E/Var/z are fixed double expressions, verdict
     // compares the UNQUANTIZED z both sides
     "ts_runs_test" ->
-      """WITH daily AS (
-        |  SELECT user_id,
-        |    date_diff('day', DATE '2024-01-01', date_trunc('day', ts)) AS x,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-        |      / (count(*) * 100.0) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH daily AS $dailyMeanSql,
         |nd AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n
         |       FROM daily GROUP BY 1 HAVING count(*) >= 2),
         |r AS (SELECT user_id, y,
@@ -3038,11 +3314,7 @@ object SparkEntry {
     // threshold = the ⌈0.9n⌉-th smallest daily value (integer rank,
     // tie-order-invariant); comparisons and counts exact
     "ts_extreme_day_freq" ->
-      """WITH daily AS (
-        |  SELECT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-        |      / (count(*) * 100.0) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH daily AS ${seriesSql(s"$dayLabelSql AS day", s"$centMeanSql AS y")},
         |r AS (SELECT user_id, y,
         |        row_number() OVER (PARTITION BY user_id ORDER BY y) AS rn,
         |        count(*) OVER (PARTITION BY user_id) AS n
@@ -3064,8 +3336,8 @@ object SparkEntry {
     // epoch seconds are integers end to end; islands from a running
     // max over the same ordered frame in both engines
     "ts_coverage_uptime" ->
-      """WITH ev AS (
-        |  SELECT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
+      s"""WITH ev AS (
+        |  SELECT user_id, $dayLabelSql AS day,
         |    epoch_us(ts) // 1000000 AS s, event_id
         |  FROM events),
         |isl AS (
@@ -3099,12 +3371,7 @@ object SparkEntry {
     // 2·midrank = 2·rank + t − 1 is integral, so rank sums and the
     // tie term stay exact longs; E/Var/z are fixed double expressions
     "ts_mann_whitney" ->
-      """WITH daily AS (
-        |  SELECT user_id,
-        |    date_diff('day', DATE '2024-01-01', date_trunc('day', ts)) AS x,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-        |      / (count(*) * 100.0) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH daily AS $dailyMeanSql,
         |s AS (SELECT user_id, y,
         |        CASE WHEN x < 15 THEN 1 ELSE 0 END AS a
         |      FROM daily),
@@ -3144,11 +3411,7 @@ object SparkEntry {
     // cume_dist is the SQL-standard ≤-tie empirical CDF in both
     // engines: two exact integers divided once, quantized once
     "ts_pctl_of_record" ->
-      """WITH daily AS (
-        |  SELECT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-        |      / (count(*) * 100.0) AS level
-        |  FROM events GROUP BY 1, 2)
+      s"""WITH daily AS ${seriesSql(s"$dayLabelSql AS day", s"$centMeanSql AS level")}
         |SELECT user_id, day,
         |  floor(level * 1e4 + 0.5) / 1e4 AS level,
         |  floor(cume_dist() OVER (PARTITION BY user_id ORDER BY level)
@@ -3250,35 +3513,9 @@ object SparkEntry {
     // the ts_autocorr chain verbatim, then the Q pivot: both engines
     // fold the same 4dp-quantized acf bits in the same textual order
     "ts_ljung_box" ->
-      """WITH daily AS (
-        |  SELECT user_id,
-        |    date_diff('day', DATE '2024-01-01', date_trunc('day', ts)) AS x,
-        |    sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS sc,
-        |    count(*) AS cnt
-        |  FROM events GROUP BY 1, 2),
-        |stats AS (
-        |  SELECT user_id,
-        |    CAST(sum(sc) AS DOUBLE) / (sum(cnt) * 100.0) AS ybar
-        |  FROM daily GROUP BY 1),
-        |dev AS (
-        |  SELECT d.user_id, d.x,
-        |    (CAST(d.sc AS DOUBLE) / (d.cnt * 100.0)) - s.ybar AS dev
-        |  FROM daily d JOIN stats s ON d.user_id = s.user_id),
-        |den AS (
-        |  SELECT user_id,
-        |    CAST(sum(CAST(floor(dev * dev * 1e8 + 0.5) AS BIGINT)) AS BIGINT)
-        |      AS den_u,
-        |    count(*) AS n_days
-        |  FROM dev GROUP BY 1),
-        |num AS (
-        |  SELECT a.user_id, k.lag,
-        |    CAST(sum(CAST(floor(a.dev * b.dev * 1e8 + 0.5) AS BIGINT)) AS BIGINT)
-        |      AS num_u,
-        |    count(*) AS n_pairs
-        |  FROM dev a
-        |  JOIN (VALUES (1), (2), (3)) AS k(lag) ON true
-        |  JOIN dev b ON b.user_id = a.user_id AND b.x = a.x + k.lag
-        |  GROUP BY 1, 2),
+      s"""WITH daily AS $dailySumsSql,
+        |$devCtes,
+        |$acfSumsCtes,
         |acf_t AS (
         |  SELECT n.user_id, n.lag, d.n_days,
         |    CASE WHEN n.n_pairs >= 5 AND d.den_u > 0
@@ -3351,12 +3588,7 @@ object SparkEntry {
     // kernel's row-major DP (each cell is a fixed op chain, no
     // reassociation freedom)
     "ts_dtw_ref" ->
-      s"""WITH RECURSIVE daily AS (
-        |  SELECT user_id,
-        |    date_diff('day', DATE '2024-01-01', date_trunc('day', ts)) AS x,
-        |    sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS sc,
-        |    count(*) AS cnt
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH RECURSIVE daily AS $dailySumsSql,
         |s AS MATERIALIZED (
         |  SELECT user_id,
         |    row_number() OVER (PARTITION BY user_id ORDER BY x) AS i,
@@ -3416,12 +3648,7 @@ object SparkEntry {
         |GROUP BY 1, 2, 3""".stripMargin,
 
     "ts_cross_corr_ref" ->
-      """WITH daily AS (
-        |  SELECT user_id,
-        |    date_diff('day', DATE '2024-01-01', date_trunc('day', ts)) AS x,
-        |    sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS sc,
-        |    count(*) AS cnt
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH daily AS $dailySumsSql,
         |refall AS (
         |  SELECT CAST(sum(sc) AS BIGINT) AS tsc, CAST(sum(cnt) AS BIGINT)
         |    AS tcnt FROM daily),
@@ -3432,13 +3659,7 @@ object SparkEntry {
         |  FROM daily d CROSS JOIN refall a
         |  JOIN (VALUES (0), (1), (2), (3)) AS k(lag) ON true
         |  GROUP BY d.x, k.lag),
-        |stats AS (
-        |  SELECT user_id, CAST(sum(sc) AS DOUBLE) / (sum(cnt) * 100.0) AS ybar
-        |  FROM daily GROUP BY 1),
-        |dev AS (
-        |  SELECT d.user_id, d.x,
-        |    (CAST(d.sc AS DOUBLE) / (d.cnt * 100.0)) - s.ybar AS dev
-        |  FROM daily d JOIN stats s ON d.user_id = s.user_id),
+        |$devCtes,
         |agg AS (
         |  SELECT v.user_id, r.lag,
         |    count(*) AS n_pairs,
@@ -3463,12 +3684,7 @@ object SparkEntry {
     // recomputes l_t inside b_t with the identical expression the
     // Spark fold uses, so the doubles are bit-identical
     "ts_holt_forecast" ->
-      """WITH RECURSIVE daily AS (
-        |  SELECT user_id,
-        |    date_diff('day', DATE '2024-01-01', date_trunc('day', ts)) AS x,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-        |      / (count(*) * 100.0) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH RECURSIVE daily AS $dailyMeanSql,
         |ord AS (
         |  SELECT user_id, y,
         |    CAST(row_number() OVER (PARTITION BY user_id ORDER BY x)
@@ -3537,10 +3753,10 @@ object SparkEntry {
     // first-occurrence = min(bucket) per fingerprint (integer order
     // statistic); the rate divides two exact longs once
     "dup_growth" ->
-      """WITH mx AS (SELECT max(doc_id) AS mx FROM documents),
+      s"""WITH mx AS (SELECT max(doc_id) AS mx FROM documents),
         |fp AS (
         |  SELECT CAST(doc_id * 32 // (mx + 1) AS BIGINT) AS bucket,
-        |    md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
+        |    md5($normTextSql) AS fp
         |  FROM documents, mx),
         |pb AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_docs
         |       FROM fp GROUP BY 1),
@@ -3561,11 +3777,11 @@ object SparkEntry {
         |FROM c""".stripMargin,
 
     "vocab_growth" ->
-      """WITH mx AS (SELECT max(doc_id) AS mx FROM documents),
+      s"""WITH mx AS (SELECT max(doc_id) AS mx FROM documents),
         |tok AS (
         |  SELECT CAST(doc_id * 32 // (mx + 1) AS BIGINT) AS bucket,
         |    unnest(string_split(
-        |      regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS tok
+        |      $normTextSql, ' ')) AS tok
         |  FROM documents, mx),
         |bt AS (SELECT bucket, tok, count(*) AS n_occ FROM tok GROUP BY 1, 2),
         |pb AS (SELECT bucket, CAST(sum(n_occ) AS BIGINT) AS n_tok
@@ -3587,11 +3803,7 @@ object SparkEntry {
     // G(t)·1e4 = a²/(n·t·(n−t)) exactly; every operand non-negative,
     // so DuckDB `//` and Spark `div` (both truncating) agree
     "ts_changepoint" ->
-      """WITH daily AS (
-        |  SELECT user_id,
-        |    date_diff('day', DATE '2024-01-01', date_trunc('day', ts)) AS x,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sc
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH daily AS ${seriesSql(s"$dayIndexSql AS x", s"$centSumSql AS sc")},
         |pre AS (
         |  SELECT user_id, x,
         |    CAST(row_number() OVER (PARTITION BY user_id ORDER BY x)
@@ -3673,10 +3885,7 @@ object SparkEntry {
         |FROM v""".stripMargin,
 
     "events_burst_flag" ->
-      """WITH d AS (
-        |  SELECT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |    count(*) AS cnt
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH d AS ${seriesSql(s"$dayLabelSql AS day", "count(*) AS cnt")},
         |p AS (
         |  SELECT user_id, CAST(sum(cnt) AS BIGINT) AS n_events,
         |    count(*) AS n_active_days, max(cnt) AS peak_day_events
@@ -3692,12 +3901,7 @@ object SparkEntry {
 
     // integer calendar arithmetic; gaps from one lag on the daily sort
     "ts_missing_report" ->
-      """WITH d AS (
-        |  SELECT user_id,
-        |    date_diff('day', DATE '2024-01-01',
-        |      date_trunc('day', ts)) AS dn,
-        |    count(*) AS n_obs
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH d AS ${seriesSql(s"$dayIndexSql AS dn", "count(*) AS n_obs")},
         |g AS (
         |  SELECT user_id, dn,
         |    dn - lag(dn) OVER (PARTITION BY user_id ORDER BY dn) - 1 AS gap
@@ -3713,11 +3917,11 @@ object SparkEntry {
 
     // ISO dow on both engines; bounded 7x24 output, one reduce
     "events_dow_hour_heatmap" ->
-      """WITH c AS (
+      s"""WITH c AS (
         |  SELECT CAST(isodow(ts) AS INT) AS dow,
         |    CAST(hour(ts) AS INT) AS hour,
         |    count(*) AS n,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sc
+        |    $centSumSql AS sc
         |  FROM events GROUP BY 1, 2),
         |tot AS (SELECT CAST(sum(n) AS BIGINT) AS nn FROM c)
         |SELECT dow, hour, n,
@@ -3762,8 +3966,8 @@ object SparkEntry {
     // Spark truncates — identical on integral doubles) and the
     // Hampel comparison is pure integer arithmetic
     "ts_outlier_mad" ->
-      """WITH c AS (
-        |  SELECT user_id, CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
+      s"""WITH c AS (
+        |  SELECT user_id, $centsSql AS c
         |  FROM events),
         |w1 AS (
         |  SELECT user_id, c,
@@ -3783,7 +3987,7 @@ object SparkEntry {
     // exact integer-cent sufficient statistics behind mu/sd: no
     // merge-order noise, no engine-specific streaming moments
     "ts_climatology_anomaly" ->
-      """WITH clim AS (
+      s"""WITH clim AS (
         |  SELECT user_id, hod, count(*) AS n_obs,
         |    floor(CAST(sum(c) AS DOUBLE) / count(*) / 100.0 * 1e6 + 0.5) / 1e6 AS mu,
         |    CASE WHEN count(*) > 1 THEN
@@ -3792,7 +3996,7 @@ object SparkEntry {
         |        / (CAST(count(*) AS DOUBLE) * (CAST(count(*) AS DOUBLE) - 1.0)))
         |        / 100.0 * 1e6 + 0.5) / 1e6 END AS sd
         |  FROM (SELECT user_id, CAST(hour(ts) AS INT) AS hod,
-        |          CAST(floor(value * 100 + 0.5) AS BIGINT) AS c FROM events)
+        |          $centsSql AS c FROM events)
         |  GROUP BY 1, 2)
         |SELECT e.event_id, e.user_id, c.hod,
         |  round(e.value, 2) AS value,
@@ -3882,7 +4086,7 @@ object SparkEntry {
         |  SELECT event_id, user_id, value,
         |    count(c) OVER w AS n_hist,
         |    $zScore4Sql AS z
-        |  FROM (SELECT *, CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
+        |  FROM (SELECT *, $centsSql AS c
         |        FROM events)
         |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
         |               ROWS BETWEEN 30 PRECEDING AND 1 PRECEDING))
@@ -3891,7 +4095,7 @@ object SparkEntry {
         |FROM h WHERE n_hist >= 10 AND z IS NOT NULL""".stripMargin,
     "spi_zscore" ->
       s"""SELECT event_id, user_id, event_type, $zScore4Sql AS zscore
-        |FROM (SELECT *, CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
+        |FROM (SELECT *, $centsSql AS c
         |      FROM events)
         |WINDOW w AS (PARTITION BY user_id, event_type)""".stripMargin,
     "drought_episodes" ->
@@ -3951,7 +4155,7 @@ object SparkEntry {
 
     "spi_ensemble_gamma" ->
       s"""SELECT user_id,
-        |  strftime(date_trunc('week', ts), '%Y-%m-%d') AS week,
+        |  $weekLabelSql AS week,
         |  count(spi) AS n,
         |  floor(quantile_cont(spi, 0.5) * 1e4 + 0.5) / 1e4 AS spi_med
         |FROM (${spiGammaSql(
@@ -3964,13 +4168,11 @@ object SparkEntry {
         |GROUP BY 1, 2""".stripMargin,
 
     "bias_delta" ->
-      """WITH ref AS (SELECT user_id,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-        |      / (count(*) * 100.0) AS ref_mean FROM events
+      s"""WITH ref AS (SELECT user_id,
+        |    $centMeanSql AS ref_mean FROM events
         |             WHERE event_type = 'view' GROUP BY 1),
         |fm AS (SELECT user_id,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-        |      / (count(*) * 100.0) AS fcst_mean FROM events
+        |    $centMeanSql AS fcst_mean FROM events
         |       WHERE event_type = 'click' GROUP BY 1)
         |SELECT e.event_id, e.user_id, round(e.value, 2) AS fcst_value,
         |  floor((e.value + coalesce(r.ref_mean - f.fcst_mean, 0.0)) * 1e4 + 0.5) / 1e4 AS corrected
@@ -4017,20 +4219,7 @@ object SparkEntry {
         |      FROM adj)""".stripMargin,
 
     "bias_qmap" ->
-      """WITH f AS (SELECT event_id, user_id, value FROM events WHERE event_type = 'click'),
-        |r AS (SELECT user_id, value AS ref_value,
-        |        row_number() OVER (PARTITION BY user_id ORDER BY value) - 1 AS idx
-        |      FROM events WHERE event_type = 'view'),
-        |n AS (SELECT user_id, count(*) AS n_ref FROM r GROUP BY 1),
-        |p AS (SELECT event_id, user_id, value,
-        |        CASE WHEN count(*) OVER (PARTITION BY user_id) = 1 THEN 0.0
-        |             ELSE percent_rank() OVER (PARTITION BY user_id ORDER BY value)
-        |        END AS pr
-        |      FROM f),
-        |q AS (SELECT p.*, p.pr * (n.n_ref - 1) AS fpos,
-        |        CAST(floor(p.pr * (n.n_ref - 1)) AS INT) AS idx_lo,
-        |        CAST(ceil(p.pr * (n.n_ref - 1)) AS INT) AS idx_hi
-        |      FROM p JOIN n ON p.user_id = n.user_id)
+      s"""WITH $qmapCtes
         |SELECT q.event_id, q.user_id, round(q.value, 2) AS fcst_value,
         |  floor((lo.ref_value + (q.fpos - q.idx_lo) * (hi.ref_value - lo.ref_value))
         |        * 1e4 + 0.5) / 1e4 AS mapped
@@ -4040,17 +4229,8 @@ object SparkEntry {
     // strict-inequality ranks on exact 1e-4 weekly means, complete
     // ensembles only; O(m+1) histogram with a windowed share
     "forecast_rank_hist" ->
-      """WITH obs AS (
-        |  SELECT user_id, strftime(date_trunc('week', ts), '%Y-%m-%d') AS week,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |      AS DOUBLE) / count(*) * 100.0 + 0.5) AS BIGINT) AS y_u
-        |  FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-        |mem AS (
-        |  SELECT user_id, event_id % 5 AS member,
-        |    strftime(date_trunc('week', ts), '%Y-%m-%d') AS week,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |      AS DOUBLE) / count(*) * 100.0 + 0.5) AS BIGINT) AS u
-        |  FROM events WHERE event_type = 'click' GROUP BY 1, 2, 3),
+      s"""WITH $weeklyObsCte,
+        |$weeklyMembersCte,
         |ranked AS (
         |  SELECT m.user_id, m.week, count(*) AS m,
         |    CAST(sum(CASE WHEN m.u < o.y_u THEN 1 ELSE 0 END) + 1 AS BIGINT)
@@ -4097,17 +4277,8 @@ object SparkEntry {
          |FROM kb GROUP BY 1""".stripMargin,
 
     "forecast_crps" ->
-      """WITH obs AS (
-        |  SELECT user_id, strftime(date_trunc('week', ts), '%Y-%m-%d') AS week,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |      AS DOUBLE) / count(*) * 100.0 + 0.5) AS BIGINT) AS y_u
-        |  FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-        |mem AS (
-        |  SELECT user_id, event_id % 5 AS member,
-        |    strftime(date_trunc('week', ts), '%Y-%m-%d') AS week,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |      AS DOUBLE) / count(*) * 100.0 + 0.5) AS BIGINT) AS u
-        |  FROM events WHERE event_type = 'click' GROUP BY 1, 2, 3),
+      s"""WITH $weeklyObsCte,
+        |$weeklyMembersCte,
         |s1 AS (
         |  SELECT m.user_id, m.week, CAST(count(*) AS BIGINT) AS m,
         |    sum(abs(m.u - o.y_u)) AS sae
@@ -4126,20 +4297,7 @@ object SparkEntry {
     // decile grid quantized once to exact 1e-4 longs; 9-term squared
     // sums exact; RMSE/ratio one fixed double expression each
     "bias_skill" ->
-      """WITH f AS (SELECT event_id, user_id, value FROM events WHERE event_type = 'click'),
-        |r AS (SELECT user_id, value AS ref_value,
-        |        row_number() OVER (PARTITION BY user_id ORDER BY value) - 1 AS idx
-        |      FROM events WHERE event_type = 'view'),
-        |n AS (SELECT user_id, count(*) AS n_ref FROM r GROUP BY 1),
-        |p AS (SELECT event_id, user_id, value,
-        |        CASE WHEN count(*) OVER (PARTITION BY user_id) = 1 THEN 0.0
-        |             ELSE percent_rank() OVER (PARTITION BY user_id ORDER BY value)
-        |        END AS pr
-        |      FROM f),
-        |q AS (SELECT p.*, p.pr * (n.n_ref - 1) AS fpos,
-        |        CAST(floor(p.pr * (n.n_ref - 1)) AS INT) AS idx_lo,
-        |        CAST(ceil(p.pr * (n.n_ref - 1)) AS INT) AS idx_hi
-        |      FROM p JOIN n ON p.user_id = n.user_id),
+      s"""WITH $qmapCtes,
         |mapped AS (
         |  SELECT q.user_id,
         |    floor((lo.ref_value + (q.fpos - q.idx_lo) * (hi.ref_value - lo.ref_value))
@@ -4222,26 +4380,7 @@ object SparkEntry {
         |FROM i""".stripMargin,
 
     "bias_qmap_key" ->
-      """WITH ev AS (
-        |  SELECT event_id, user_id % 20 AS grp, event_id % 3 AS member,
-        |         event_type, value, ts
-        |  FROM events),
-        |fct AS (SELECT event_id, grp, member, value FROM ev
-        |        WHERE event_type = 'click' AND ts < TIMESTAMP '2024-01-16 00:00:00'),
-        |reft AS (SELECT event_id, grp, member, value FROM ev
-        |        WHERE event_type = 'view' AND ts < TIMESTAMP '2024-01-16 00:00:00'),
-        |app AS (SELECT event_id, grp, member, value FROM ev
-        |        WHERE event_type = 'click' AND ts >= TIMESTAMP '2024-01-16 00:00:00'),
-        |fk AS (SELECT grp, member, value AS fv, event_id AS tie,
-        |         row_number() OVER (PARTITION BY grp, member ORDER BY value, event_id) - 1 AS fidx
-        |       FROM fct),
-        |rk AS (SELECT grp, member, value AS rv, event_id AS tie,
-        |         row_number() OVER (PARTITION BY grp, member ORDER BY value, event_id) - 1 AS ridx
-        |       FROM reft),
-        |fagg AS (SELECT grp, member, count(*) AS nf, min(fv) AS fmin, max(fv) AS fmax
-        |         FROM fk GROUP BY 1, 2),
-        |ragg AS (SELECT grp, member, count(*) AS nr, min(rv) AS rmin, max(rv) AS rmax
-        |         FROM rk GROUP BY 1, 2),
+      s"""WITH $qmapKeyCtes,
         |u AS (
         |  SELECT grp, member, fv AS sortv, 0 AS kind, tie,
         |         fidx AS k_idx, fv AS k_fv,
@@ -4296,26 +4435,7 @@ object SparkEntry {
     // segment (the same one-struct trick as the Spark plan, so a
     // trailing knot's null lead fields can't mix with an older knot's)
     "bias_qmap_spline" ->
-      """WITH ev AS (
-        |  SELECT event_id, user_id % 20 AS grp, event_id % 3 AS member,
-        |         event_type, value, ts
-        |  FROM events),
-        |fct AS (SELECT event_id, grp, member, value FROM ev
-        |        WHERE event_type = 'click' AND ts < TIMESTAMP '2024-01-16 00:00:00'),
-        |reft AS (SELECT event_id, grp, member, value FROM ev
-        |        WHERE event_type = 'view' AND ts < TIMESTAMP '2024-01-16 00:00:00'),
-        |app AS (SELECT event_id, grp, member, value FROM ev
-        |        WHERE event_type = 'click' AND ts >= TIMESTAMP '2024-01-16 00:00:00'),
-        |fk AS (SELECT grp, member, value AS fv, event_id AS tie,
-        |         row_number() OVER (PARTITION BY grp, member ORDER BY value, event_id) - 1 AS fidx
-        |       FROM fct),
-        |rk AS (SELECT grp, member, value AS rv, event_id AS tie,
-        |         row_number() OVER (PARTITION BY grp, member ORDER BY value, event_id) - 1 AS ridx
-        |       FROM reft),
-        |fagg AS (SELECT grp, member, count(*) AS nf, min(fv) AS fmin, max(fv) AS fmax
-        |         FROM fk GROUP BY 1, 2),
-        |ragg AS (SELECT grp, member, count(*) AS nr, min(rv) AS rmin, max(rv) AS rmax
-        |         FROM rk GROUP BY 1, 2),
+      s"""WITH $qmapKeyCtes,
         |fkn AS (SELECT grp, member, fv, max(fidx) AS fidx FROM fk GROUP BY 1, 2, 3),
         |pos AS (
         |  SELECT fkn.grp, fkn.member, fkn.fv,
@@ -4388,7 +4508,7 @@ object SparkEntry {
     // ranking by the 4-dp rounded cosine (+ id tie-break) is the
     // engine-portable total order; raw-ulp argmax would not be
     "dedup_embedding_incremental" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+      s"""WITH $vectorsCte,
         |batch AS (SELECT vec_id, e FROM v WHERE vec_id % 10 >= 8),
         |cand AS (
         |  SELECT b.vec_id AS bid, p.vec_id AS p,
@@ -4420,10 +4540,7 @@ object SparkEntry {
         |  ON ev.stage >= s.h AND (ev.stage < s.h_hi OR s.h_hi = 300.0)""".stripMargin,
 
     "danger_levels" ->
-      """WITH wk AS (
-        |  SELECT user_id, strftime(date_trunc('week', ts), '%Y-%m-%d') AS week,
-        |    round(max(value), 2) AS max_value
-        |  FROM events GROUP BY 1, 2)
+      s"""WITH wk AS ${seriesSql(s"$weekLabelSql AS week", "round(max(value), 2) AS max_value")}
         |SELECT user_id, week, max_value,
         |  CASE WHEN max_value < 80 THEN 'low' WHEN max_value < 140 THEN 'medium'
         |       WHEN max_value < 180 THEN 'high' ELSE 'extreme' END AS level
@@ -4433,7 +4550,7 @@ object SparkEntry {
       s"""WITH daily AS (
         |  SELECT user_id,
         |    date_diff('day', DATE '2024-01-01', CAST(date_trunc('day', ts) AS DATE)) AS x,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS cents
+        |    $centSumSql AS cents
         |  FROM events GROUP BY 1, 2),
         |wk AS (
         |  SELECT user_id, x // 7 AS w, max(cents) AS bm FROM daily GROUP BY 1, 2),
@@ -4459,8 +4576,7 @@ object SparkEntry {
       s"""WITH daily AS (
         |  SELECT user_id,
         |    date_diff('day', DATE '2024-01-01', CAST(date_trunc('day', ts) AS DATE)) AS x,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-        |      / (count(*) * 100.0) AS y
+        |    $centMeanSql AS y
         |  FROM events GROUP BY 1, 2),
         |nd AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n FROM daily GROUP BY 1),
         |r AS (
@@ -4481,8 +4597,7 @@ object SparkEntry {
       s"""WITH RECURSIVE daily AS (
         |  SELECT user_id,
         |    date_diff('day', DATE '2024-01-01', CAST(date_trunc('day', ts) AS DATE)) AS x,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-        |      / (count(*) * 100.0) AS y
+        |    $centMeanSql AS y
         |  FROM events GROUP BY 1, 2),
         |ord AS (
         |  SELECT user_id, x, y,
@@ -4509,9 +4624,9 @@ object SparkEntry {
     "pet_hargreaves" ->
       s"""WITH ra(doy, ra) AS (VALUES $raTableSql),
         |daily AS (
-        |  SELECT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
+        |  SELECT user_id, $dayLabelSql AS day,
         |    max(value)/10.0 AS tmax, min(value)/10.0 AS tmin,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
+        |    CAST(sum($centsSql) AS DOUBLE)
         |      / (count(*) * 1000.0) AS tmean
         |  FROM events GROUP BY 1, 2),
         |p AS (
@@ -4529,10 +4644,10 @@ object SparkEntry {
     "pet_oudin" ->
       s"""WITH ra(doy, ra) AS (VALUES $raTableSql),
         |daily AS (
-        |  SELECT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
+        |  SELECT user_id, $dayLabelSql AS day,
+        |    CAST(sum($centsSql) AS DOUBLE)
         |      / (count(*) * 1000.0) AS ta,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
+        |    CAST(sum($centsSql) AS DOUBLE)
         |      / (count(*) * 5000.0) AS p
         |  FROM events GROUP BY 1, 2),
         |x AS (
@@ -4549,8 +4664,8 @@ object SparkEntry {
     // daily GDD quantizes once to integer 1e-4 units; the seasonal
     // accumulation is an exact long window sum
     "growing_degree_days" ->
-      """WITH daily AS (
-        |  SELECT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
+      s"""WITH daily AS (
+        |  SELECT user_id, $dayLabelSql AS day,
         |    max(value)/10.0 AS tmax, min(value)/10.0 AS tmin
         |  FROM events GROUP BY 1, 2),
         |g AS (
@@ -4569,10 +4684,7 @@ object SparkEntry {
     // long sums; the z >= 1 comparison is one double expression on
     // exact integers — no rounding gate needed
     "heat_wave_episodes" ->
-      """WITH daily AS (
-        |  SELECT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |    max(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS tmax_u
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH daily AS ${seriesSql(s"$dayLabelSql AS day", s"max($centsSql) AS tmax_u")},
         |m AS (
         |  SELECT user_id, day, tmax_u,
         |    count(*) OVER (PARTITION BY user_id) AS n,
@@ -4608,11 +4720,7 @@ object SparkEntry {
     // falling-day ratios quantized once; median interpolates exact
     // integers; >= 3 recession days per station
     "ts_recession_k" ->
-      """WITH daily AS (
-        |  SELECT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-        |      / (count(*) * 100.0) AS q
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH daily AS ${seriesSql(s"$dayLabelSql AS day", s"$centMeanSql AS q")},
         |l AS (
         |  SELECT user_id, day, q,
         |    lag(q) OVER (PARTITION BY user_id ORDER BY day) AS q_prev
@@ -4645,9 +4753,9 @@ object SparkEntry {
 
     // exact daily tmean verdicts + one lag on the resample sort
     "ts_freeze_thaw" ->
-      """WITH daily AS (
-        |  SELECT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
+      s"""WITH daily AS (
+        |  SELECT user_id, $dayLabelSql AS day,
+        |    CAST(sum($centsSql) AS DOUBLE)
         |      / (count(*) * 1000.0) AS tmean
         |  FROM events GROUP BY 1, 2),
         |f AS (
@@ -4670,12 +4778,11 @@ object SparkEntry {
     // daily water balance quantizes once to integer 1e-4 units; the
     // clamped-at-zero pack is the two-window closed form, exact longs
     "snow_pack_ddm" ->
-      """WITH daily AS (
-        |  SELECT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
+      s"""WITH daily AS (
+        |  SELECT user_id, $dayLabelSql AS day,
+        |    CAST(sum($centsSql) AS DOUBLE)
         |      / (count(*) * 1000.0) AS tmean,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-        |      / (count(*) * 100.0) AS prcp
+        |    $centMeanSql AS prcp
         |  FROM events GROUP BY 1, 2),
         |b AS (
         |  SELECT user_id, day,
@@ -4700,12 +4807,11 @@ object SparkEntry {
     "spei_zscore" ->
       s"""WITH ra(doy, ra) AS (VALUES $raTableSql),
         |daily AS (
-        |  SELECT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
+        |  SELECT user_id, $dayLabelSql AS day,
         |    max(value)/10.0 AS tmax, min(value)/10.0 AS tmin,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
+        |    CAST(sum($centsSql) AS DOUBLE)
         |      / (count(*) * 1000.0) AS tmean,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-        |      / (count(*) * 100.0) AS prcp
+        |    $centMeanSql AS prcp
         |  FROM events GROUP BY 1, 2),
         |b AS (
         |  SELECT user_id, day,
@@ -4733,11 +4839,9 @@ object SparkEntry {
         |FROM z""".stripMargin,
 
     "zonal_stats" ->
-      """SELECT CAST(floor(((user_id % 36) * 5.0 - 87.5) / 30) AS INT) AS zone_y,
-        |       CAST(floor(((user_id % 72) * 5.0 - 177.5) / 30) AS INT) AS zone_x,
+      s"""SELECT $zoneKeysSql,
         |  count(*) AS n,
-        |  floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-        |    * 100.0 / count(*) + 0.5) / 1e4 AS avg_value,
+        |  $avg4Sql AS avg_value,
         |  round(min(value), 2) AS min_value, round(max(value), 2) AS max_value
         |FROM events GROUP BY 1, 2""".stripMargin,
 
@@ -4745,8 +4849,7 @@ object SparkEntry {
       s"""WITH z AS (
         |  ${zCteSql("event_id, user_id, event_type")}),
         |u AS (SELECT *, CAST(floor(zscore * 1e4 + 0.5) AS BIGINT) AS zu FROM z)
-        |SELECT CAST(floor(((user_id % 36) * 5.0 - 87.5) / 30) AS INT) AS zone_y,
-        |       CAST(floor(((user_id % 72) * 5.0 - 177.5) / 30) AS INT) AS zone_x,
+        |SELECT $zoneKeysSql,
         |  count(*) AS n,
         |  floor(CAST(sum(zu) AS DOUBLE) / count(zu) + 0.5) / 1e4 AS avg_z,
         |  round(min(zscore), 4) AS min_z,
@@ -4757,9 +4860,9 @@ object SparkEntry {
     // each trapezoid quantizes once to integer 1e-4 units; the daily
     // rollup sums exact BIGINTs
     "rating_volume_daily" ->
-      """WITH d AS (
+      s"""WITH d AS (
         |  SELECT user_id, event_id, ts, value,
-        |    strftime(date_trunc('day', ts), '%Y-%m-%d') AS day
+        |    $dayLabelSql AS day
         |  FROM events),
         |t AS (
         |  SELECT user_id, day, value, ts,
@@ -4797,10 +4900,10 @@ object SparkEntry {
         |  AND ev.stage >= s.h AND ev.stage < s.h_hi""".stripMargin,
 
     "spi_ensemble_median" ->
-      """WITH cell AS (
+      s"""WITH cell AS (
         |  SELECT user_id, event_id % 5 AS member,
-        |    strftime(date_trunc('week', ts), '%Y-%m-%d') AS week,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
+        |    $weekLabelSql AS week,
+        |    CAST(floor(CAST(sum($centsSql)
         |      AS DOUBLE) * 1e4 / count(*) + 0.5) AS BIGINT) AS c
         |  FROM events GROUP BY 1, 2, 3),
         |z AS (
@@ -4855,8 +4958,7 @@ object SparkEntry {
       s"""WITH z AS (
         |  ${zCteSql("event_id, user_id")}),
         |u AS (SELECT *, CAST(floor(zscore * 1e4 + 0.5) AS BIGINT) AS zu FROM z)
-        |SELECT CAST(floor(((user_id % 36) * 5.0 - 87.5) / 30) AS INT) AS zone_y,
-        |       CAST(floor(((user_id % 72) * 5.0 - 177.5) / 30) AS INT) AS zone_x,
+        |SELECT $zoneKeysSql,
         |  count(*) AS n,
         |  floor(CAST(sum(zu) AS DOUBLE) / count(zu) + 0.5) / 1e4 AS avg_z,
         |  floor(quantile_cont(zscore, 0.1) * 1e4 + 0.5) / 1e4 AS p10_z,
@@ -4866,9 +4968,7 @@ object SparkEntry {
 
     "zonal_poly_spi" ->
       s"""WITH z AS (
-        |  ${zCteSql("event_id, user_id, " +
-            "(user_id % 36) * 5.0 - 87.5 AS lat, " +
-            "(user_id % 72) * 5.0 - 177.5 AS lon")}),
+        |  ${zCteSql(s"event_id, user_id, $latLonSql")}),
         |b AS (SELECT *, $basinCaseSql AS basin FROM z)
         |SELECT basin, count(*) AS n,
         |  floor(quantile_cont(zscore, 0.5) * 1e4 + 0.5) / 1e4 AS med_z,
@@ -4878,11 +4978,7 @@ object SparkEntry {
         |FROM b WHERE basin IS NOT NULL GROUP BY 1""".stripMargin,
 
     "grid_regrid" ->
-      s"""WITH g AS (
-        |  SELECT $cellKeysSql,
-        |    floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10000
-        |      AS DOUBLE) / count(*) + 0.5) / 1e6 AS v
-        |  FROM events GROUP BY 1, 2)
+      s"""WITH $cellMeansCte
         |SELECT g00.gy AS cell_y, g00.gx AS cell_x,
         |  round(g00.gy + 0.25, 2) AS target_y,
         |  round(g00.gx + 0.75, 2) AS target_x,
@@ -4899,11 +4995,7 @@ object SparkEntry {
     "grid_sample_poi" -> {
       val vals = graft.operators.Climate.SamplePois
         .map { case (id, py, px) => s"($id, $py, $px)" }.mkString(", ")
-      s"""WITH g AS (
-         |  SELECT $cellKeysSql,
-         |    floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) * 10000
-         |      AS DOUBLE) / count(*) + 0.5) / 1e6 AS v
-         |  FROM events GROUP BY 1, 2),
+      s"""WITH $cellMeansCte,
          |q AS (
          |  SELECT poi_id, py, px,
          |    CAST(floor(py) AS BIGINT) AS y0, CAST(floor(px) AS BIGINT) AS x0,
@@ -4925,10 +5017,10 @@ object SparkEntry {
     // one division at the end
     "grid_idw" ->
       s"""WITH st AS (
-         |  SELECT CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
+         |  SELECT CAST(floor(CAST(sum($centsSql)
          |      AS DOUBLE) * 100.0 / count(*) + 0.5) AS BIGINT) AS v_u,
-         |    (user_id % 36) * 5.0 - 87.5 AS slat,
-         |    (user_id % 72) * 5.0 - 177.5 AS slon
+         |    $latSql AS slat,
+         |    $lonSql AS slon
          |  FROM events GROUP BY user_id),
          |cells AS (
          |  SELECT (i // 36) * 10.0 - 85.0 AS lat, (i % 36) * 10.0 - 175.0 AS lon
@@ -4949,17 +5041,8 @@ object SparkEntry {
     // six exact-long sufficient statistics per station; NSE/r/alpha/
     // beta/KGE are each ONE fixed double expression over them
     "forecast_skill" ->
-      """WITH obs AS (
-        |  SELECT user_id, strftime(date_trunc('week', ts), '%Y-%m-%d') AS week,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |      AS DOUBLE) / count(*) * 100.0 + 0.5) AS BIGINT) AS y_u
-        |  FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-        |mem AS (
-        |  SELECT user_id, event_id % 5 AS member,
-        |    strftime(date_trunc('week', ts), '%Y-%m-%d') AS week,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |      AS DOUBLE) / count(*) * 100.0 + 0.5) AS BIGINT) AS u
-        |  FROM events WHERE event_type = 'click' GROUP BY 1, 2, 3),
+      s"""WITH $weeklyObsCte,
+        |$weeklyMembersCte,
         |fc AS (
         |  SELECT user_id, week,
         |    CAST(floor(CAST(sum(u) AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS f_u
@@ -4995,9 +5078,9 @@ object SparkEntry {
 
     // exact integer token/byte sums, two single-division ratios
     "tokenizer_fertility" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT lang,
-        |    CAST(len(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS BIGINT) AS nw,
+        |    CAST(len($tokensSql) AS BIGINT) AS nw,
         |    CAST(len(regexp_extract_all(text, '[a-z0-9]+')) AS BIGINT) AS nt,
         |    CAST(strlen(text) AS BIGINT) AS nb
         |  FROM documents)
@@ -5038,10 +5121,10 @@ object SparkEntry {
     // daily min/max are order statistics on exact cents; the TX90p
     // threshold rank-interpolates on one station window
     "climate_etccdi_temp" ->
-      """WITH d AS (
-        |  SELECT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |    min(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS tn,
-        |    max(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS tx
+      s"""WITH d AS (
+        |  SELECT user_id, $dayLabelSql AS day,
+        |    min($centsSql) AS tn,
+        |    max($centsSql) AS tx
         |  FROM events GROUP BY 1, 2),
         |flat AS (
         |  SELECT user_id, count(*) AS n_days,
@@ -5057,13 +5140,7 @@ object SparkEntry {
         |  FROM d),
         |p90 AS (
         |  SELECT user_id,
-        |    (min(CASE WHEN rn = CAST(floor((n - 1) * 0.9) AS BIGINT) + 1
-        |        THEN tx END)
-        |     + ((min(n) - 1) * 0.9 - floor((min(n) - 1) * 0.9))
-        |       * (min(CASE WHEN rn = least(CAST(floor((n - 1) * 0.9)
-        |            AS BIGINT) + 2, n) THEN tx END)
-        |          - min(CASE WHEN rn = CAST(floor((n - 1) * 0.9) AS BIGINT)
-        |            + 1 THEN tx END))) / 100.0 AS tx90_thresh
+        |    ${rankInterpSql("tx", "0.9")} / 100.0 AS tx90_thresh
         |  FROM r GROUP BY 1),
         |ex AS (
         |  SELECT d.user_id,
@@ -5080,10 +5157,7 @@ object SparkEntry {
     // gaps-and-islands on the calendar day number (a missing day
     // breaks a spell); R95p rank-interpolated over the wet-day subset
     "climate_etccdi" ->
-      """WITH d AS (
-        |  SELECT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |    sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS c
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH d AS ${seriesSql(s"$dayLabelSql AS day", s"sum($centsSql) AS c")},
         |dd AS (
         |  SELECT user_id, c,
         |    date_diff('day', DATE '2024-01-01', CAST(day AS DATE)) AS dn,
@@ -5115,13 +5189,7 @@ object SparkEntry {
         |  FROM dd WHERE wet),
         |p95 AS (
         |  SELECT user_id,
-        |    (min(CASE WHEN rn = CAST(floor((n - 1) * 0.95) AS BIGINT) + 1
-        |        THEN c END)
-        |     + ((min(n) - 1) * 0.95 - floor((min(n) - 1) * 0.95))
-        |       * (min(CASE WHEN rn = least(CAST(floor((n - 1) * 0.95)
-        |            AS BIGINT) + 2, n) THEN c END)
-        |          - min(CASE WHEN rn = CAST(floor((n - 1) * 0.95) AS BIGINT)
-        |            + 1 THEN c END))) / 100.0 AS r95p
+        |    ${rankInterpSql("c", "0.95")} / 100.0 AS r95p
         |  FROM wr GROUP BY 1),
         |rt AS (
         |  SELECT dd.user_id,
@@ -5135,10 +5203,7 @@ object SparkEntry {
 
     // integer-rank threshold, runs declustering on day-number gaps
     "ts_extremal_index" ->
-      """WITH d AS (
-        |  SELECT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |    sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS c
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH d AS ${seriesSql(s"$dayLabelSql AS day", s"sum($centsSql) AS c")},
         |dd AS (
         |  SELECT user_id, c,
         |    date_diff('day', DATE '2024-01-01', CAST(day AS DATE)) AS dn
@@ -5166,10 +5231,7 @@ object SparkEntry {
 
     // Σ|v−nᵢ| exact in micro-units; classes are integer thresholds
     "grid_ruggedness" ->
-      s"""WITH c AS (
-        |  SELECT $cellKeysSql,
-        |    $microMeanSql AS v_us
-        |  FROM events GROUP BY 1, 2)
+      s"""WITH $cellCte
         |SELECT c.gy, c.gx,
         |  CAST(abs(c.v_us - n00.v_us) + abs(c.v_us - n01.v_us)
         |    + abs(c.v_us - n02.v_us) + abs(c.v_us - n10.v_us)
@@ -5188,22 +5250,12 @@ object SparkEntry {
         |      <= 8 * 5000000 THEN 'intermediate'
         |    ELSE 'rugged' END AS ruggedness
         |FROM c
-        |JOIN c n00 ON n00.gy = c.gy - 1 AND n00.gx = c.gx - 1
-        |JOIN c n01 ON n01.gy = c.gy - 1 AND n01.gx = c.gx
-        |JOIN c n02 ON n02.gy = c.gy - 1 AND n02.gx = c.gx + 1
-        |JOIN c n10 ON n10.gy = c.gy AND n10.gx = c.gx - 1
-        |JOIN c n12 ON n12.gy = c.gy AND n12.gx = c.gx + 1
-        |JOIN c n20 ON n20.gy = c.gy + 1 AND n20.gx = c.gx - 1
-        |JOIN c n21 ON n21.gy = c.gy + 1 AND n21.gx = c.gx
-        |JOIN c n22 ON n22.gy = c.gy + 1 AND n22.gx = c.gx + 1""".stripMargin,
+        |$ring8JoinsSql""".stripMargin,
 
     // v·8 − Σ neighbors stays integer; the dead band is an integer
     // micro-unit threshold, /8 is exact (power of two)
     "grid_tpi" ->
-      s"""WITH c AS (
-        |  SELECT $cellKeysSql,
-        |    $microMeanSql AS v_us
-        |  FROM events GROUP BY 1, 2)
+      s"""WITH $cellCte
         |SELECT c.gy, c.gx,
         |  CAST(c.v_us * 8 - (n00.v_us + n01.v_us + n02.v_us + n10.v_us
         |    + n12.v_us + n20.v_us + n21.v_us + n22.v_us) AS DOUBLE)
@@ -5216,22 +5268,12 @@ object SparkEntry {
         |    THEN 'valley'
         |    ELSE 'plane' END AS landform
         |FROM c
-        |JOIN c n00 ON n00.gy = c.gy - 1 AND n00.gx = c.gx - 1
-        |JOIN c n01 ON n01.gy = c.gy - 1 AND n01.gx = c.gx
-        |JOIN c n02 ON n02.gy = c.gy - 1 AND n02.gx = c.gx + 1
-        |JOIN c n10 ON n10.gy = c.gy AND n10.gx = c.gx - 1
-        |JOIN c n12 ON n12.gy = c.gy AND n12.gx = c.gx + 1
-        |JOIN c n20 ON n20.gy = c.gy + 1 AND n20.gx = c.gx - 1
-        |JOIN c n21 ON n21.gy = c.gy + 1 AND n21.gx = c.gx
-        |JOIN c n22 ON n22.gy = c.gy + 1 AND n22.gx = c.gx + 1""".stripMargin,
+        |$ring8JoinsSql""".stripMargin,
 
     // central second differences on exact micro-units; 'flat' is a
     // bit-exact zero class, not a tolerance
     "grid_curvature" ->
-      s"""WITH c AS (
-        |  SELECT $cellKeysSql,
-        |    $microMeanSql AS v_us
-        |  FROM events GROUP BY 1, 2)
+      s"""WITH $cellCte
         |SELECT c.gy, c.gx,
         |  CAST(xp.v_us - c.v_us * 2 + xm.v_us AS DOUBLE) / 1e6 AS d2zdx2,
         |  CAST(yp.v_us - c.v_us * 2 + ym.v_us AS DOUBLE) / 1e6 AS d2zdy2,
@@ -5243,10 +5285,7 @@ object SparkEntry {
         |           + (yp.v_us - c.v_us * 2 + ym.v_us) < 0 THEN 'convex'
         |       ELSE 'flat' END AS landform
         |FROM c
-        |JOIN c xp ON xp.gy = c.gy AND xp.gx = c.gx + 1
-        |JOIN c xm ON xm.gy = c.gy AND xm.gx = c.gx - 1
-        |JOIN c yp ON yp.gy = c.gy + 1 AND yp.gx = c.gx
-        |JOIN c ym ON ym.gy = c.gy - 1 AND ym.gx = c.gx""".stripMargin,
+        |$cross4JoinsSql""".stripMargin,
 
     "grid_flow_dir" ->
       s"""WITH $flowDirCtes
@@ -5286,19 +5325,13 @@ object SparkEntry {
     // trig-free normal-dot-sun shading on the exact gradient
     // components; identical literal multiply/divide/sqrt chain
     "grid_hillshade" ->
-      s"""WITH c AS (
-        |  SELECT $cellKeysSql,
-        |    $microMeanSql AS v_us
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $cellCte,
         |g AS (
         |  SELECT c.gy, c.gx,
         |    floor((xp.v_us - xm.v_us) / 2.0 + 0.5) / 1e6 AS dzdx,
         |    floor((yp.v_us - ym.v_us) / 2.0 + 0.5) / 1e6 AS dzdy
         |  FROM c
-        |  JOIN c xp ON xp.gy = c.gy AND xp.gx = c.gx + 1
-        |  JOIN c xm ON xm.gy = c.gy AND xm.gx = c.gx - 1
-        |  JOIN c yp ON yp.gy = c.gy + 1 AND yp.gx = c.gx
-        |  JOIN c ym ON ym.gy = c.gy - 1 AND ym.gx = c.gx),
+        |  $cross4JoinsSql),
         |h AS (
         |  SELECT gy, gx,
         |    greatest(0.0, (dzdx * 0.5 + dzdy * -0.5 + ${graft.operators.Climate.HsCz})
@@ -5311,10 +5344,7 @@ object SparkEntry {
     // neighbor mean is integer micro-units summed (order-free) with
     // ONE final division; the mask is integer modular arithmetic
     "grid_fill_nodata" ->
-      s"""WITH c AS (
-        |  SELECT $cellKeysSql,
-        |    $microMeanSql AS v_us
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $cellCte,
         |m AS (SELECT *, (gx * 8 + gy) % 7 = 3 AS masked FROM c),
         |f AS (
         |  SELECT t.gy, t.gx, CAST(sum(v.v_us) AS BIGINT) AS nb_sum,
@@ -5354,22 +5384,20 @@ object SparkEntry {
         |FROM p""".stripMargin,
 
     "bbox_filter" ->
-      """SELECT event_type, count(*) AS n,
-        |  floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-        |    * 100.0 / count(*) + 0.5) / 1e4 AS avg_value
+      s"""SELECT event_type, count(*) AS n,
+        |  $avg4Sql AS avg_value
         |FROM (SELECT event_type, value,
-        |        (user_id % 36) * 5.0 - 87.5 AS lat,
-        |        (user_id % 72) * 5.0 - 177.5 AS lon
+        |        $latLonSql
         |      FROM events)
         |WHERE lat BETWEEN -45 AND 45 AND lon BETWEEN -60 AND 60
         |GROUP BY 1""".stripMargin,
 
     "extent_summary" ->
-      """SELECT event_type, count(*) AS n,
-        |  round(min((user_id % 72) * 5.0 - 177.5), 2) AS min_lon,
-        |  round(max((user_id % 72) * 5.0 - 177.5), 2) AS max_lon,
-        |  round(min((user_id % 36) * 5.0 - 87.5), 2) AS min_lat,
-        |  round(max((user_id % 36) * 5.0 - 87.5), 2) AS max_lat,
+      s"""SELECT event_type, count(*) AS n,
+        |  round(min($lonSql), 2) AS min_lon,
+        |  round(max($lonSql), 2) AS max_lon,
+        |  round(min($latSql), 2) AS min_lat,
+        |  round(max($latSql), 2) AS max_lat,
         |  strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS time_start,
         |  strftime(max(ts), '%Y-%m-%d %H:%M:%S') AS time_end
         |FROM events GROUP BY 1""".stripMargin,
@@ -5418,13 +5446,8 @@ object SparkEntry {
         |FROM h""".stripMargin,
 
     "catalog_diff" ->
-      """WITH cur AS (
-        |  SELECT 'region' AS collection_id, count(*) AS n_rows,
-        |         CAST(NULL AS VARCHAR) AS time_end FROM region
-        |  UNION ALL SELECT 'nation', count(*), NULL FROM nation
-        |  UNION ALL SELECT 'customer', count(*), NULL FROM customer
-        |  UNION ALL SELECT 'supplier', count(*), NULL FROM supplier
-        |  UNION ALL SELECT 'part', count(*), NULL FROM part
+      s"""WITH cur AS (
+        |  $staticCollectionsSql
         |  UNION ALL SELECT 'orders', count(*),
         |    strftime(CAST(max(o_orderdate) AS TIMESTAMP), '%Y-%m-%d %H:%M:%S') FROM orders
         |  UNION ALL SELECT 'lineitem', count(*),
@@ -5434,12 +5457,7 @@ object SparkEntry {
         |  UNION ALL SELECT 'documents', count(*), NULL FROM documents
         |  UNION ALL SELECT 'embeddings', count(*), NULL FROM embeddings),
         |prev AS (
-        |  SELECT 'region' AS collection_id, count(*) AS n_rows,
-        |         CAST(NULL AS VARCHAR) AS time_end FROM region
-        |  UNION ALL SELECT 'nation', count(*), NULL FROM nation
-        |  UNION ALL SELECT 'customer', count(*), NULL FROM customer
-        |  UNION ALL SELECT 'supplier', count(*), NULL FROM supplier
-        |  UNION ALL SELECT 'part', count(*), NULL FROM part
+        |  $staticCollectionsSql
         |  UNION ALL SELECT 'orders', count(*),
         |    strftime(CAST(max(o_orderdate) AS TIMESTAMP), '%Y-%m-%d %H:%M:%S')
         |    FROM orders WHERE o_orderdate < DATE '1995-06-01'
@@ -5563,8 +5581,8 @@ object SparkEntry {
       s"""WITH daily AS (
         |  SELECT user_id AS station, event_type AS var,
         |    CASE WHEN event_id % 2 = 0 THEN 'ec' ELSE 'mf' END AS model,
-        |    strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
+        |    $dayLabelSql AS day,
+        |    CAST(floor(CAST(sum($centsSql)
         |      AS DOUBLE) / count(*) + 0.5) AS BIGINT) AS c
         |  FROM events WHERE event_type IN ('view', 'click')
         |  GROUP BY 1, 2, 3, 4)
@@ -5579,15 +5597,7 @@ object SparkEntry {
     // keep-last upsert: batch side wins on (station, ts) collision,
     // larger event_id breaks ties within a side
     "obs_upsert_merge" ->
-      """WITH ev AS (
-        |  SELECT user_id AS station, ts, event_id,
-        |    round(value, 4) AS level FROM events),
-        |u AS (
-        |  SELECT station, ts, event_id, level, 'hist' AS src, 0 AS prio FROM ev
-        |  UNION ALL
-        |  SELECT station, ts, event_id, round(level + 0.5, 4) AS level,
-        |    'batch' AS src, 1 AS prio
-        |  FROM ev WHERE event_id % 7 = 0),
+      s"""WITH $upsertCtes,
         |m AS (
         |  SELECT station, ts, event_id, level, src,
         |    row_number() OVER (PARTITION BY station, ts
@@ -5597,15 +5607,7 @@ object SparkEntry {
         |FROM m WHERE rn = 1""".stripMargin,
 
     "obs_collection_extents" ->
-      """WITH ev AS (
-        |  SELECT user_id AS station, ts, event_id,
-        |    round(value, 4) AS level FROM events),
-        |u AS (
-        |  SELECT station, ts, event_id, level, 'hist' AS src, 0 AS prio FROM ev
-        |  UNION ALL
-        |  SELECT station, ts, event_id, round(level + 0.5, 4) AS level,
-        |    'batch' AS src, 1 AS prio
-        |  FROM ev WHERE event_id % 7 = 0),
+      s"""WITH $upsertCtes,
         |m AS (
         |  SELECT station, ts, level, src,
         |    row_number() OVER (PARTITION BY station, ts
@@ -5673,87 +5675,36 @@ object SparkEntry {
     // .asc render + the Scala parser invert each other exactly (cell
     // centres are exact binary rationals — corner + half-cell)
     "grid_asc_decode" ->
-      s"""WITH c AS (
-        |  SELECT $cellKeysSql,
-        |    $microMeanSql AS v_us
-        |  FROM events GROUP BY 1, 2)
-        |SELECT 'precip' AS var, '2024-01-15' AS day,
-        |  42.125 + gy * 0.25 AS lat, -9.875 + gx * 0.25 AS lon,
-        |  CAST(v_us AS DOUBLE) / 1e6 AS value
-        |FROM c WHERE (gx * 8 + gy) % 7 != 3""".stripMargin,
+      gridDecodeSql("precip", "CAST(v_us AS DOUBLE) / 1e6", sentinel = false),
 
     // the binary twin: the expected decode of the in-plan GeoTIFF is
     // the same grid (int32 micro-unit samples; the nodata guard on
     // v_us mirrors the decoder's GDAL_NODATA skip exactly, so even a
     // real value colliding with the sentinel stays consistent)
     "grid_tiff_decode" ->
-      s"""WITH c AS (
-        |  SELECT $cellKeysSql,
-        |    $microMeanSql AS v_us
-        |  FROM events GROUP BY 1, 2)
-        |SELECT 'precip' AS var, '2024-01-15' AS day,
-        |  42.125 + gy * 0.25 AS lat, -9.875 + gx * 0.25 AS lon,
-        |  CAST(v_us AS DOUBLE) / 1e6 AS value
-        |FROM c
-        |WHERE (gx * 8 + gy) % 7 != 3 AND v_us != -2147483648""".stripMargin,
+      gridDecodeSql("precip", "CAST(v_us AS DOUBLE) / 1e6", sentinel = true),
 
     // the NetCDF twin: packed int32 × the stored scale_factor — the
     // oracle MULTIPLIES by 1e-6 (not divides by 1e6) because that is
     // the unpacking arithmetic the codec runs, bit-identical IEEE
     "grid_nc_decode" ->
-      s"""WITH c AS (
-        |  SELECT $cellKeysSql,
-        |    $microMeanSql AS v_us
-        |  FROM events GROUP BY 1, 2)
-        |SELECT 'precip' AS var, '2024-01-15' AS day,
-        |  42.125 + gy * 0.25 AS lat, -9.875 + gx * 0.25 AS lon,
-        |  CAST(v_us AS DOUBLE) * 1e-6 AS value
-        |FROM c
-        |WHERE (gx * 8 + gy) % 7 != 3 AND v_us != -2147483648""".stripMargin,
+      gridDecodeSql("precip", "CAST(v_us AS DOUBLE) * 1e-6", sentinel = true),
 
     // the GRIB-1 twin: N = v_us + 2^31 against IBM-float R = -2^31,
     // E = 0, D = 6 unpacks to exactly v_us / 1e6 on both engines
     "grid_grib_decode" ->
-      s"""WITH c AS (
-        |  SELECT $cellKeysSql,
-        |    $microMeanSql AS v_us
-        |  FROM events GROUP BY 1, 2)
-        |SELECT 'p61' AS var, '2024-01-15' AS day,
-        |  42.125 + gy * 0.25 AS lat, -9.875 + gx * 0.25 AS lon,
-        |  CAST(v_us AS DOUBLE) / 1e6 AS value
-        |FROM c
-        |WHERE (gx * 8 + gy) % 7 != 3 AND v_us != -2147483648""".stripMargin,
+      gridDecodeSql("p61", "CAST(v_us AS DOUBLE) / 1e6", sentinel = true),
 
     // the zarr twin of the GRIB/TIFF lanes: i4 chunk packing, edge
     // padding, zlib, fill mask and the parsed scale_factor * raw —
     // v_us * 1e-6 is the identical IEEE multiply on both engines
     "grid_zarr_decode" ->
-      s"""WITH c AS (
-        |  SELECT $cellKeysSql,
-        |    $microMeanSql AS v_us
-        |  FROM events GROUP BY 1, 2)
-        |SELECT 'precip' AS var, '2024-01-15' AS day,
-        |  42.125 + gy * 0.25 AS lat, -9.875 + gx * 0.25 AS lon,
-        |  CAST(v_us AS DOUBLE) * 1e-6 AS value
-        |FROM c
-        |WHERE (gx * 8 + gy) % 7 != 3 AND v_us != -2147483648""".stripMargin,
+      gridDecodeSql("precip", "CAST(v_us AS DOUBLE) * 1e-6", sentinel = true),
 
     // the box-mean pyramid replays level by level; the POSITIONAL
     // checksum makes pixel placement load-bearing, not just masses
     "image_resize_pyramid" ->
-      s"""WITH grid AS (
-        |  SELECT user_id % 8 AS y, (user_id // 8) % 8 AS x,
-        |    $microMeanSql AS v_us
-        |  FROM events GROUP BY 1, 2),
-        |lattice AS (
-        |  SELECT g.n AS g, yy.n AS y, xx.n AS x
-        |  FROM range(0, 4) g(n), range(0, 8) yy(n), range(0, 8) xx(n)),
-        |px AS (
-        |  SELECT l.g, l.y, l.x,
-        |    ((coalesce(gr.v_us, 0) + l.g * 7) % 256 + 256) % 256 AS p
-        |  FROM lattice l LEFT JOIN grid gr ON l.y = gr.y AND l.x = gr.x),
-        |cmap AS (SELECT * FROM (VALUES (0, 0, 1), (1, 2, 3), (2, 4, 2),
-        |  (3, 6, 4)) AS t(g, ct, nch)),
+      s"""WITH $imagePixelsCtes,
         |l0 AS (
         |  SELECT p.g, c.n AS c, p.y, p.x,
         |    CAST((p.p * (2 * c.n + 1) + c.n + p.g) % 256 AS BIGINT) AS v
@@ -5781,15 +5732,7 @@ object SparkEntry {
     // pair means floor on an exactly-halved double — identical on
     // both engines even for negative odd sums
     "audio_resample_pcm" ->
-      s"""WITH seeds AS (
-        |  SELECT user_id % 8 AS g,
-        |    $microMeanSql AS seed
-        |  FROM events GROUP BY 1),
-        |ser AS (
-        |  SELECT s.g, r.k,
-        |    (s.seed + (r.k + 1) * 2654435761) % 65536 - 32768 AS smp
-        |  FROM seeds s JOIN range(0, 320) r(k)
-        |    ON r.k < 160 + s.g * 16),
+      s"""WITH $pcmSamplesCtes,
         |p AS (
         |  SELECT g, k // 2 AS j,
         |    CAST(floor(CAST(sum(smp) AS DOUBLE) / 2.0) AS BIGINT) AS r
@@ -5809,10 +5752,7 @@ object SparkEntry {
     // both mvhd versions and the optional audio trak are g-arithmetic;
     // 16.16 dims come back as exact integral doubles on both engines
     "video_container_meta" ->
-      s"""WITH seeds AS (
-        |  SELECT user_id % 6 AS g,
-        |    $microMeanSql AS seed
-        |  FROM events GROUP BY 1),
+      s"""WITH seeds AS ${seedsSql(6)},
         |m AS (
         |  SELECT g, abs(seed) % 600000 + 1000 AS duration,
         |    320 + CAST(g % 3 AS INT) * 320 AS w,
@@ -5839,19 +5779,7 @@ object SparkEntry {
     // the events grid (all terms nonnegative, so % agrees across
     // engines); channels expand per the g→(color_type, nch) map
     "image_png_stats" ->
-      s"""WITH grid AS (
-        |  SELECT user_id % 8 AS y, (user_id // 8) % 8 AS x,
-        |    $microMeanSql AS v_us
-        |  FROM events GROUP BY 1, 2),
-        |lattice AS (
-        |  SELECT g.n AS g, yy.n AS y, xx.n AS x
-        |  FROM range(0, 4) g(n), range(0, 8) yy(n), range(0, 8) xx(n)),
-        |px AS (
-        |  SELECT l.g, l.y, l.x,
-        |    ((coalesce(gr.v_us, 0) + l.g * 7) % 256 + 256) % 256 AS p
-        |  FROM lattice l LEFT JOIN grid gr ON l.y = gr.y AND l.x = gr.x),
-        |cmap AS (SELECT * FROM (VALUES (0, 0, 1), (1, 2, 3), (2, 4, 2),
-        |  (3, 6, 4)) AS t(g, ct, nch)),
+      s"""WITH $imagePixelsCtes,
         |s AS (
         |  SELECT p.g, m.ct, c.n AS c,
         |    (p.p * (2 * c.n + 1) + c.n + p.g) % 256 AS v
@@ -5868,15 +5796,7 @@ object SparkEntry {
     // (seed + (k+1)*2654435761) stays positive, so truncated-division
     // mod agrees across engines; all features exact-integer
     "audio_wav_stats" ->
-      s"""WITH seeds AS (
-        |  SELECT user_id % 8 AS g,
-        |    $microMeanSql AS seed
-        |  FROM events GROUP BY 1),
-        |ser AS (
-        |  SELECT s.g, r.k,
-        |    (s.seed + (r.k + 1) * 2654435761) % 65536 - 32768 AS smp
-        |  FROM seeds s JOIN range(0, 320) r(k)
-        |    ON r.k < 160 + s.g * 16),
+      s"""WITH $pcmSamplesCtes,
         |l AS (
         |  SELECT g, k, smp,
         |    lag(smp) OVER (PARTITION BY g ORDER BY k) AS prev
@@ -5896,12 +5816,7 @@ object SparkEntry {
     // the cube carries comes back at v_us * 1e-6 (identical IEEE
     // multiply both engines); fill/padding cells never surface
     "zarr_publish_roundtrip" ->
-      s"""WITH g AS (
-        |  SELECT (day(ts) - 1) % 3 AS t,
-        |    (user_id + day(ts)) % 8 AS i,
-        |    (user_id * 3 + day(ts)) % 8 AS j,
-        |    $microMeanSql AS v_us
-        |  FROM events GROUP BY 1, 2, 3)
+      s"""WITH $cubeCellsCte
         |SELECT 'precip' AS var,
         |  strftime(DATE '2024-01-15' + CAST(t AS INT), '%Y-%m-%d') AS day,
         |  40.125 + CAST(i AS DOUBLE) * 0.25 AS lat,
@@ -5913,12 +5828,7 @@ object SparkEntry {
     // closed-form ranges the coordinate arrays induce, missing cells
     // zero-filled exactly like the rendered raster
     "phenology_slices" ->
-      s"""WITH g AS (
-        |  SELECT (day(ts) - 1) % 3 AS t,
-        |    (user_id + day(ts)) % 8 AS i,
-        |    (user_id * 3 + day(ts)) % 8 AS j,
-        |    $microMeanSql AS v_us
-        |  FROM events GROUP BY 1, 2, 3),
+      s"""WITH $cubeCellsCte,
         |lattice AS (
         |  SELECT t.n AS t, yi.n AS i, xj.n AS j
         |  FROM range(0, 3) t(n), range(2, 6) yi(n), range(4, 8) xj(n)),
@@ -5978,7 +5888,7 @@ object SparkEntry {
       s"""WITH d AS (
         |  SELECT $cellKeysSql,
         |    strftime(date_trunc('month', ts), '%Y%m') AS ym,
-        |    strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
+        |    $dayLabelSql AS day,
         |    $microMeanSql AS v_us
         |  FROM events GROUP BY 1, 2, 3, 4),
         |files AS (
@@ -6032,8 +5942,8 @@ object SparkEntry {
           |    SELECT d.user_id, m.member, l.lead, d.day, l.day_l,
           |      CAST(d.c AS DOUBLE) / 100.0 AS x
           |    FROM (SELECT user_id,
-          |            strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-          |            sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS c
+          |            $dayLabelSql AS day,
+          |            sum($centsSql) AS c
           |          FROM events GROUP BY 1, 2) d
           |    CROSS JOIN (VALUES (0), (1), (2), (3), (4)) m(member)
           |    CROSS JOIN (VALUES $leadRows) l(lead, day_l)
@@ -6045,8 +5955,8 @@ object SparkEntry {
           |      SELECT d.user_id, m.member, d.day,
           |        (d.c * (100 + m.member * 3)) // 100 AS c
           |      FROM (SELECT user_id,
-          |              strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-          |              sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS c
+          |              $dayLabelSql AS day,
+          |              sum($centsSql) AS c
           |            FROM events GROUP BY 1, 2) d
           |      CROSS JOIN (VALUES (0), (1), (2), (3), (4)) m(member)
           |      WHERE d.day > '$refEnd') f
@@ -6077,16 +5987,16 @@ object SparkEntry {
         |FROM g WHERE geom_ok""".stripMargin,
 
     "dedup_exact" ->
-      """SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint,
+      s"""SELECT md5($normTextSql) AS fingerprint,
         |  min(doc_id) AS keeper,
         |  count(*) AS dup_count
         |FROM documents
         |GROUP BY 1""".stripMargin,
 
     "dedup_report" ->
-      """WITH g AS (
+      s"""WITH g AS (
         |  SELECT source,
-        |    md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp,
+        |    md5($normTextSql) AS fp,
         |    count(*) AS cnt
         |  FROM documents GROUP BY 1, 2)
         |SELECT source, CAST(sum(cnt) AS BIGINT) AS n_docs,
@@ -6156,28 +6066,17 @@ object SparkEntry {
         |GROUP BY 1""".stripMargin,
 
     "lang_id_confusion" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, lang,
-        |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
+        |    $tokensSql AS toks
         |  FROM documents
         |), s AS (
         |  SELECT doc_id, lang,
-        |    CAST(len(list_filter(toks, x -> x = 'the')) + len(list_filter(toks, x -> x = 'a'))
-        |       + len(list_filter(toks, x -> x = 'data')) + len(list_filter(toks, x -> x = 'fast'))
-        |       + len(list_filter(toks, x -> x = 'small')) AS BIGINT) AS score_en,
-        |    CAST(len(list_filter(toks, x -> x = 'window')) + len(list_filter(toks, x -> x = 'batch'))
-        |       + len(list_filter(toks, x -> x = 'stream')) + len(list_filter(toks, x -> x = 'slow')) AS BIGINT) AS score_de,
-        |    CAST(len(list_filter(toks, x -> x = 'merge')) + len(list_filter(toks, x -> x = 'sort'))
-        |       + len(list_filter(toks, x -> x = 'join')) + len(list_filter(toks, x -> x = 'line')) AS BIGINT) AS score_fr,
-        |    CAST(len(list_filter(toks, x -> x = 'spark')) + len(list_filter(toks, x -> x = 'query'))
-        |       + len(list_filter(toks, x -> x = 'vector')) + len(list_filter(toks, x -> x = 'row')) AS BIGINT) AS score_es
+        |    ${langScoresSql(asBigint = true)}
         |  FROM t),
         |pred AS (
         |  SELECT doc_id, lang,
-        |    CASE WHEN score_en >= score_de AND score_en >= score_fr AND score_en >= score_es THEN 'en'
-        |         WHEN score_de >= score_fr AND score_de >= score_es THEN 'de'
-        |         WHEN score_fr >= score_es THEN 'fr'
-        |         ELSE 'es' END AS lang_pred
+        |    $langPredSql
         |  FROM s),
         |cm AS (SELECT lang, lang_pred, CAST(count(*) AS BIGINT) AS n
         |       FROM pred GROUP BY 1, 2)
@@ -6197,7 +6096,7 @@ object SparkEntry {
         |c AS (
         |  SELECT source, token, count(*) AS n FROM (
         |    SELECT source, unnest(string_split(
-        |      regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '))
+        |      $normTextSql, ' '))
         |      AS token
         |    FROM documents)
         |  GROUP BY 1, 2),
@@ -6271,18 +6170,7 @@ object SparkEntry {
     // integer cross-multiplied thresholds — no ratio ever computed in
     // floats before a comparison
     "quality_rules" ->
-      """WITH t AS (
-        |  SELECT doc_id, n_chars,
-        |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks,
-        |    CAST(len(regexp_replace(text, '[^0-9]', '', 'g')) AS BIGINT) AS n_digits
-        |  FROM documents),
-        |u AS (
-        |  SELECT doc_id, n_chars, n_digits,
-        |    CAST(len(toks) AS BIGINT) AS n_tokens,
-        |    CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct,
-        |    CAST(len(list_filter(toks, x -> x = 'the'))
-        |       + len(list_filter(toks, x -> x = 'a')) AS BIGINT) AS n_stop
-        |  FROM t),
+      s"""WITH $ruleFeaturesCtes,
         |r AS (
         |  SELECT doc_id, n_tokens < 5 AS too_few_tokens,
         |    (n_chars - (n_tokens - 1)) < 3 * n_tokens
@@ -6314,18 +6202,7 @@ object SparkEntry {
     // ordered first-failure CASE; the n_in ladder is rendered into
     // the VALUES rows — same exact-integer thresholds as quality_rules
     "quality_funnel" ->
-      """WITH t AS (
-        |  SELECT doc_id, n_chars,
-        |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks,
-        |    CAST(len(regexp_replace(text, '[^0-9]', '', 'g')) AS BIGINT) AS n_digits
-        |  FROM documents),
-        |u AS (
-        |  SELECT doc_id, n_chars, n_digits,
-        |    CAST(len(toks) AS BIGINT) AS n_tokens,
-        |    CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct,
-        |    CAST(len(list_filter(toks, x -> x = 'the'))
-        |       + len(list_filter(toks, x -> x = 'a')) AS BIGINT) AS n_stop
-        |  FROM t),
+      s"""WITH $ruleFeaturesCtes,
         |r AS (
         |  SELECT CASE
         |    WHEN n_tokens < 5 THEN 1
@@ -6358,9 +6235,9 @@ object SparkEntry {
         |  AS v(stage, rule, n_in, n_dropped)""".stripMargin,
 
     "token_count" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, n_chars, text,
-        |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
+        |    $tokensSql AS toks
         |  FROM documents)
         |SELECT doc_id,
         |  CAST(len(toks) AS BIGINT) AS n_ws_tokens,
@@ -6370,8 +6247,8 @@ object SparkEntry {
         |FROM t""".stripMargin,
 
     "doc_fingerprint" ->
-      """WITH t AS (
-        |  SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm
+      s"""WITH t AS (
+        |  SELECT doc_id, $normTextSql AS norm
         |  FROM documents)
         |SELECT doc_id,
         |  md5(norm) AS content_fp,
@@ -6379,28 +6256,17 @@ object SparkEntry {
         |FROM t""".stripMargin,
 
     "corpus_sample" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id,
-        |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
+        |    $tokensSql AS toks
         |  FROM documents
         |), s AS (
         |  SELECT doc_id,
-        |    len(list_filter(toks, x -> x = 'the')) + len(list_filter(toks, x -> x = 'a'))
-        |       + len(list_filter(toks, x -> x = 'data')) + len(list_filter(toks, x -> x = 'fast'))
-        |       + len(list_filter(toks, x -> x = 'small')) AS score_en,
-        |    len(list_filter(toks, x -> x = 'window')) + len(list_filter(toks, x -> x = 'batch'))
-        |       + len(list_filter(toks, x -> x = 'stream')) + len(list_filter(toks, x -> x = 'slow')) AS score_de,
-        |    len(list_filter(toks, x -> x = 'merge')) + len(list_filter(toks, x -> x = 'sort'))
-        |       + len(list_filter(toks, x -> x = 'join')) + len(list_filter(toks, x -> x = 'line')) AS score_fr,
-        |    len(list_filter(toks, x -> x = 'spark')) + len(list_filter(toks, x -> x = 'query'))
-        |       + len(list_filter(toks, x -> x = 'vector')) + len(list_filter(toks, x -> x = 'row')) AS score_es
+        |    ${langScoresSql(asBigint = false)}
         |  FROM t
         |), lang AS (
         |  SELECT doc_id,
-        |    CASE WHEN score_en >= score_de AND score_en >= score_fr AND score_en >= score_es THEN 'en'
-        |         WHEN score_de >= score_fr AND score_de >= score_es THEN 'de'
-        |         WHEN score_fr >= score_es THEN 'fr'
-        |         ELSE 'es' END AS lang_pred
+        |    $langPredSql
         |  FROM s)
         |SELECT doc_id, lang_pred, substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS sel
         |FROM lang
@@ -6408,9 +6274,9 @@ object SparkEntry {
         |  CASE lang_pred WHEN 'en' THEN '19' WHEN 'de' THEN '4c'
         |                 WHEN 'fr' THEN '7f' ELSE 'ff' END""".stripMargin,
     "text_repetition" ->
-      """WITH base AS (
+      s"""WITH base AS (
         |  SELECT doc_id,
-        |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
+        |    $tokensSql AS toks
         |  FROM documents
         |), tokc AS (
         |  SELECT doc_id, tok, count(*) AS c
@@ -6434,32 +6300,21 @@ object SparkEntry {
         |       b.n_bigrams, b.dup_bigram_ratio, b.top_bigram_ratio
         |FROM toka t LEFT JOIN bia b USING (doc_id)""".stripMargin,
     "corpus_clean" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id,
-        |    regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm,
-        |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
+        |    $normTextSql AS norm,
+        |    $tokensSql AS toks
         |  FROM documents
         |), s AS (
         |  SELECT doc_id, norm, CAST(len(toks) AS BIGINT) AS n_tokens,
-        |    len(list_filter(toks, x -> x = 'the')) + len(list_filter(toks, x -> x = 'a'))
-        |       + len(list_filter(toks, x -> x = 'data')) + len(list_filter(toks, x -> x = 'fast'))
-        |       + len(list_filter(toks, x -> x = 'small')) AS score_en,
-        |    len(list_filter(toks, x -> x = 'window')) + len(list_filter(toks, x -> x = 'batch'))
-        |       + len(list_filter(toks, x -> x = 'stream')) + len(list_filter(toks, x -> x = 'slow')) AS score_de,
-        |    len(list_filter(toks, x -> x = 'merge')) + len(list_filter(toks, x -> x = 'sort'))
-        |       + len(list_filter(toks, x -> x = 'join')) + len(list_filter(toks, x -> x = 'line')) AS score_fr,
-        |    len(list_filter(toks, x -> x = 'spark')) + len(list_filter(toks, x -> x = 'query'))
-        |       + len(list_filter(toks, x -> x = 'vector')) + len(list_filter(toks, x -> x = 'row')) AS score_es,
+        |    ${langScoresSql(asBigint = false)},
         |    floor(least(1.0, len(toks) / 100.0)
         |      * (1.0 - (len(list_filter(toks, x -> x = 'the')) + len(list_filter(toks, x -> x = 'a')))
         |               / CAST(len(toks) AS DOUBLE)) * 1e4 + 0.5) / 1e4 AS quality_score
         |  FROM t
         |), lang AS (
         |  SELECT doc_id, n_tokens, quality_score,
-        |    CASE WHEN score_en >= score_de AND score_en >= score_fr AND score_en >= score_es THEN 'en'
-        |         WHEN score_de >= score_fr AND score_de >= score_es THEN 'de'
-        |         WHEN score_fr >= score_es THEN 'fr'
-        |         ELSE 'es' END AS lang_pred,
+        |    $langPredSql,
         |    min(doc_id) OVER (PARTITION BY md5(norm)) AS keeper
         |  FROM s)
         |SELECT doc_id, lang_pred, n_tokens, quality_score
@@ -6594,9 +6449,9 @@ object SparkEntry {
         |FROM m GROUP BY 1""".stripMargin,
 
     "doc_keywords" ->
-      """WITH base AS (
+      s"""WITH base AS (
         |  SELECT doc_id, unnest(string_split(
-        |    regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS term
+        |    $normTextSql, ' ')) AS term
         |  FROM documents
         |), tf AS (
         |  SELECT doc_id, term, count(*) AS tf FROM base GROUP BY 1, 2
@@ -6616,23 +6471,18 @@ object SparkEntry {
         |SELECT doc_id, CAST(rk AS INT) AS rk, term, score
         |FROM ranked WHERE rk <= 3""".stripMargin,
     "corpus_stats" ->
-      """SELECT coalesce(lang, 'ALL') AS lang,
+      s"""SELECT coalesce(lang, 'ALL') AS lang,
         |       coalesce(source, 'ALL') AS source,
         |  CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(sum(len(string_split(
-        |        regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' '))) AS BIGINT)
+        |        $normTextSql, ' '))) AS BIGINT)
         |    AS n_tokens,
         |  CAST(max(n_chars) AS BIGINT) AS max_chars
         |FROM documents
         |GROUP BY CUBE(lang, source)""".stripMargin,
     "corpus_mix" ->
       s"""$mixFitSql,
-        |kept AS (
-        |  SELECT hist.source, CAST(sum(hist.n_docs) AS BIGINT) AS kept_docs,
-        |         CAST(sum(hist.n_tok) AS BIGINT) AS kept_tokens
-        |  FROM hist JOIN r3 USING (source)
-        |  WHERE hist.bucket < r3.cut
-        |  GROUP BY 1)
+        |$mixKeptCte
         |SELECT source, n_docs, avail_tokens, target_tokens, rate,
         |  coalesce(kept_docs, 0) AS kept_docs,
         |  coalesce(kept_tokens, 0) AS kept_tokens
@@ -6642,20 +6492,7 @@ object SparkEntry {
     // 1e-6 units before the cross-source sum, then the identical
     // bucket-admission machinery as corpus_mix
     "corpus_mix_temperature" ->
-      s"""WITH base AS (
-        |  SELECT doc_id, source,
-        |    CAST(len(string_split(
-        |      regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ')) AS BIGINT) AS n_tok,
-        |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT AS bucket
-        |  FROM documents),
-        |hist AS (
-        |  SELECT source, bucket, CAST(count(*) AS BIGINT) AS n_docs,
-        |         CAST(sum(n_tok) AS BIGINT) AS n_tok
-        |  FROM base GROUP BY 1, 2),
-        |avail AS (
-        |  SELECT source, CAST(sum(n_docs) AS BIGINT) AS n_docs,
-        |         CAST(sum(n_tok) AS BIGINT) AS avail_tokens
-        |  FROM hist GROUP BY 1),
+      s"""WITH $mixBaseCtes,
         |su AS (
         |  SELECT *, CAST(floor(sqrt(CAST(avail_tokens AS DOUBLE)) * 1e6 + 0.5)
         |    AS BIGINT) AS su
@@ -6673,12 +6510,7 @@ object SparkEntry {
         |  SELECT *, least(1.0, CAST(target_tokens AS DOUBLE) / avail_tokens) AS rate
         |  FROM rates),
         |r3 AS (SELECT *, CAST(floor(rate * 65536.0) AS BIGINT) AS cut FROM r2),
-        |kept AS (
-        |  SELECT hist.source, CAST(sum(hist.n_docs) AS BIGINT) AS kept_docs,
-        |         CAST(sum(hist.n_tok) AS BIGINT) AS kept_tokens
-        |  FROM hist JOIN r3 USING (source)
-        |  WHERE hist.bucket < r3.cut
-        |  GROUP BY 1)
+        |$mixKeptCte
         |SELECT source, n_docs, avail_tokens, weight, target_tokens, rate,
         |  coalesce(kept_docs, 0) AS kept_docs,
         |  coalesce(kept_tokens, 0) AS kept_tokens
@@ -6691,13 +6523,7 @@ object SparkEntry {
         |WHERE base.bucket < r3.cut""".stripMargin,
 
     "doc_lm_score" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
-        |  FROM documents),
-        |tok AS (
-        |  SELECT doc_id, unnest(toks) AS cur, generate_subscripts(toks, 1) AS pos
-        |  FROM base WHERE len(toks) >= 2),
+      s"""WITH $docTokensCtes,
         |big AS (
         |  SELECT doc_id, lag(cur) OVER (PARTITION BY doc_id ORDER BY pos) AS prev, cur
         |  FROM tok),
@@ -6719,13 +6545,7 @@ object SparkEntry {
         |GROUP BY 1""".stripMargin,
 
     "bigram_pmi" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
-        |  FROM documents),
-        |tok AS (
-        |  SELECT doc_id, unnest(toks) AS cur, generate_subscripts(toks, 1) AS pos
-        |  FROM base WHERE len(toks) >= 2),
+      s"""WITH $docTokensCtes,
         |big AS (
         |  SELECT lag(cur) OVER (PARTITION BY doc_id ORDER BY pos) AS a, cur AS b
         |  FROM tok),
@@ -6775,29 +6595,9 @@ object SparkEntry {
         |FROM g GROUP BY 1""".stripMargin,
 
     "corpus_split_leakage_safe" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT doc_id, unnest(list_distinct([array_to_string(toks[i:i+2], ' ')
-        |          for i in range(1, len(toks) - 1)])) AS shingle
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-        |  WHERE len(toks) >= 3
-        |), cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-        |p0 AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT doc_a, doc_b FROM p0
-        |  JOIN cnt ca ON doc_a = ca.doc_id JOIN cnt cb ON doc_b = cb.doc_id
-        |  WHERE round(shared * 1.0 / (ca.n_sh + cb.n_sh - shared), 4) >= 0.5),
-        |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |          UNION ALL SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
+      s"""WITH RECURSIVE $reachCtes,
         |clus AS (
-        |  SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
-        |  FROM reach GROUP BY src),
+        |  $clusterLabelSql),
         |a AS (
         |  SELECT d.source, d.n_chars,
         |    CASE WHEN substring(md5(CAST(coalesce(c.cluster_id, d.doc_id) AS VARCHAR)), 1, 2) < 'e6' THEN 'train'
@@ -6818,16 +6618,15 @@ object SparkEntry {
       val maxCase = lvls.map(l =>
         s"WHEN sum_c < $l * 100 * n_obs THEN $l").mkString("\n         ")
       s"""WITH cell AS (
-        |  SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day, user_id,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_c,
+        |  SELECT $dayLabelSql AS day, user_id,
+        |    $centSumSql AS sum_c,
         |    count(*) AS n_obs
         |  FROM events GROUP BY 1, 2),
         |b AS (
         |  SELECT day, sum_c, n_obs,
         |    CASE $minCase END AS lvl_min,
         |    CASE $maxCase END AS lvl_max,
-        |    (user_id % 36) * 5.0 - 87.5 AS lat,
-        |    (user_id % 72) * 5.0 - 177.5 AS lon
+        |    $latLonSql
         |  FROM cell)
         |SELECT day, lvl_min, lvl_max, count(*) AS n_cells,
         |  min(lon) AS min_lon, max(lon) AS max_lon,
@@ -6843,10 +6642,7 @@ object SparkEntry {
     // GeoJSON string assembled from the same integers in the same
     // (row, x0) order — byte-identical across engines
     "grid_polygonize" ->
-      s"""WITH RECURSIVE c AS (
-        |  SELECT $cellKeysSql,
-        |    $microMeanSql AS v_us
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH RECURSIVE $cellCte,
         |bd AS (
         |  SELECT gy, gx, CAST(floor(v_us / ${graft.operators.Polygonize.BandMicroUnits}) AS BIGINT) AS band
         |  FROM c),
@@ -6917,10 +6713,7 @@ object SparkEntry {
     // by parity, profile cycles the three public AVC profiles, level
     // derives from the clip seed
     "video_codec_meta" ->
-      s"""WITH s AS (
-        |  SELECT user_id % 6 AS g,
-        |    $microMeanSql AS seed
-        |  FROM events GROUP BY 1),
+      s"""WITH s AS ${seedsSql(6)},
         |p AS (
         |  SELECT g, abs(seed) AS a,
         |    320 + (g % 3) * 320 AS w,
@@ -6962,10 +6755,7 @@ object SparkEntry {
     // period-3 padding prefix-summed as (f+2)//3, ID3v2 tag skip as
     // a constant offset, 1152 samples per frame
     "audio_mp3_index" ->
-      s"""WITH s AS (
-        |  SELECT user_id % 8 AS g,
-        |    $microMeanSql AS seed
-        |  FROM events GROUP BY 1),
+      s"""WITH s AS ${seedsSql(8)},
         |p AS (
         |  SELECT g, abs(seed) AS a,
         |    CASE g % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000
@@ -7007,10 +6797,7 @@ object SparkEntry {
     // header, offsets prefix-sum the data-derived frame sizes, 1024
     // samples per raw data block
     "audio_adts_index" ->
-      s"""WITH s AS (
-        |  SELECT user_id % 8 AS g,
-        |    $microMeanSql AS seed
-        |  FROM events GROUP BY 1),
+      s"""WITH s AS ${seedsSql(8)},
         |p AS (
         |  SELECT g, abs(seed) AS a,
         |    CASE g % 4 WHEN 0 THEN 48000 WHEN 1 THEN 44100
@@ -7037,10 +6824,7 @@ object SparkEntry {
     // lacing sum) prefix-summed per stream, the OpusHead fields
     // joined onto every row, 960-sample granule cadence
     "audio_ogg_index" ->
-      s"""WITH s AS (
-        |  SELECT user_id % 8 AS g,
-        |    $microMeanSql AS seed
-        |  FROM events GROUP BY 1),
+      s"""WITH s AS ${seedsSql(8)},
         |p AS (
         |  SELECT g, abs(seed) AS a, 1 + g % 2 AS channels,
         |    312 + abs(seed) % 100 AS pre_skip,
@@ -7079,10 +6863,7 @@ object SparkEntry {
     // block-type schedule (64-sample blocks: b%8==7 CONSTANT, b%4==1
     // LPC, b%8==3 FIXED, rest VERBATIM — per channel)
     "audio_flac_decode" ->
-      s"""WITH s AS (
-        |  SELECT user_id % 8 AS g,
-        |    $microMeanSql AS seed
-        |  FROM events GROUP BY 1),
+      s"""WITH s AS ${seedsSql(8)},
         |p AS (
         |  SELECT g, abs(seed) AS a,
         |    CASE g % 4 WHEN 0 THEN 44100 WHEN 1 THEN 48000
@@ -7124,10 +6905,7 @@ object SparkEntry {
         |FROM agg JOIN sched ON agg.g = sched.g""".stripMargin,
 
     "audio_flac_meta" ->
-      s"""WITH s AS (
-        |  SELECT user_id % 8 AS g,
-        |    $microMeanSql AS seed
-        |  FROM events GROUP BY 1),
+      s"""WITH s AS ${seedsSql(8)},
         |p AS (
         |  SELECT g, abs(seed) AS a,
         |    CASE g % 4 WHEN 0 THEN 44100 WHEN 1 THEN 48000
@@ -7227,10 +7005,7 @@ object SparkEntry {
     "grid_contour_lines" -> {
       val lvls = graft.operators.Climate.contourLevels
         .map(l => s"($l)").mkString(", ")
-      s"""WITH c AS (
-        |  SELECT $cellKeysSql,
-        |    $microMeanSql AS v_us
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $cellCte,
         |win AS (
         |  SELECT tl.gy, tl.gx, tl.v_us AS tl, tr.v_us AS tr,
         |    bl.v_us AS bl, br.v_us AS br, CAST(l.lv AS BIGINT) AS lv,
@@ -7304,7 +7079,7 @@ object SparkEntry {
     "corpus_rag_chunks" ->
       s"""WITH t AS (
          |  SELECT doc_id,
-         |    string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS toks
+         |    $tokensSql AS toks
          |  FROM documents),
          |n AS (SELECT doc_id, toks, len(toks) AS n_toks FROM t WHERE len(toks) > 0),
          |c AS (SELECT doc_id, toks, n_toks,
@@ -7339,9 +7114,9 @@ object SparkEntry {
         |FROM s""".stripMargin,
 
     "vocab_coverage" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
         |  SELECT unnest(string_split(
-        |    regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS token
+        |    $normTextSql, ' ')) AS token
         |  FROM documents),
         |total AS (SELECT count(*) AS total_tokens FROM toks),
         |ranked AS (
@@ -7383,11 +7158,11 @@ object SparkEntry {
     // first-occurrence is min(doc_id) per trigram — an integer order
     // statistic; novelty is one integer ratio rounded once
     "ngram_novelty" ->
-      """WITH sh AS (
+      s"""WITH sh AS (
         |  SELECT doc_id, unnest(list_distinct([array_to_string(toks[i:i+2], ' ')
         |          for i in range(1, len(toks) - 1)])) AS tg
         |  FROM (SELECT doc_id, string_split(
-        |    regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
+        |    $normTextSql, ' ') AS toks
         |    FROM documents)
         |  WHERE len(toks) >= 3),
         |nn AS (
@@ -7407,7 +7182,7 @@ object SparkEntry {
     "corpus_contamination" ->
       s"""WITH d AS (
         |  SELECT doc_id, string_split(
-        |    regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS toks
+        |    $normTextSql, ' ') AS toks
         |  FROM documents),
         |ev AS (
         |  SELECT doc_id AS eval_id, array_to_string(toks[11:18], ' ') AS gram
@@ -7433,7 +7208,7 @@ object SparkEntry {
     "boilerplate_ngrams" ->
       s"""WITH d AS (
         |  SELECT doc_id, string_split(
-        |    regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS toks
+        |    $normTextSql, ' ') AS toks
         |  FROM documents),
         |g AS (
         |  SELECT doc_id, unnest([array_to_string(toks[i:i+7], ' ')
@@ -7463,24 +7238,7 @@ object SparkEntry {
     // position origins cancel inside the per-doc group key); span
     // token length = max - min + 8
     "dedup_repeated_spans" ->
-      """WITH d AS (
-        |  SELECT doc_id, string_split(
-        |    regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id,
-        |    unnest([array_to_string(toks[i:i+7], ' ')
-        |            for i in range(1, len(toks) - 6)]) AS gram,
-        |    unnest(range(1, len(toks) - 6)) AS pos
-        |  FROM d WHERE len(toks) >= 8),
-        |rep AS (
-        |  SELECT gram FROM (SELECT gram, count(*) AS n FROM g GROUP BY 1)
-        |  WHERE n >= 2),
-        |isl AS (
-        |  SELECT doc_id, pos,
-        |    pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos)
-        |      AS island
-        |  FROM g JOIN rep USING (gram)),
+      s"""WITH $repeatedGramsCtes,
         |sp AS (
         |  SELECT doc_id, island, max(pos) - min(pos) + 8 AS span_tokens
         |  FROM isl GROUP BY 1, 2),
@@ -7499,24 +7257,7 @@ object SparkEntry {
     // union (running-max window) before the per-doc rollup; both
     // engines' position origins cancel inside start/end arithmetic
     "dedup_spans_apply" ->
-      """WITH d AS (
-        |  SELECT doc_id, string_split(
-        |    regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id,
-        |    unnest([array_to_string(toks[i:i+7], ' ')
-        |            for i in range(1, len(toks) - 6)]) AS gram,
-        |    unnest(range(1, len(toks) - 6)) AS pos
-        |  FROM d WHERE len(toks) >= 8),
-        |rep AS (
-        |  SELECT gram FROM (SELECT gram, count(*) AS n FROM g GROUP BY 1)
-        |  WHERE n >= 2),
-        |isl AS (
-        |  SELECT doc_id, pos,
-        |    pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos)
-        |      AS island
-        |  FROM g JOIN rep USING (gram)),
+      s"""WITH $repeatedGramsCtes,
         |sp AS (
         |  SELECT doc_id, min(pos) AS s, max(pos) + 7 AS e
         |  FROM isl GROUP BY doc_id, island
@@ -7554,9 +7295,9 @@ object SparkEntry {
     // vocab collapse first (exact integer weights), pair fan-out over
     // vocab rows; top-50 ordered (n desc, pair asc) in both engines
     "bpe_pair_counts" ->
-      """WITH tok AS (
+      s"""WITH tok AS (
         |  SELECT unnest(string_split(
-        |    regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS tok
+        |    $normTextSql, ' ')) AS tok
         |  FROM documents),
         |vocab AS (
         |  SELECT tok, CAST(count(*) AS BIGINT) AS n_occ FROM tok
@@ -7570,9 +7311,9 @@ object SparkEntry {
         |ORDER BY n DESC, pair ASC LIMIT 50""".stripMargin,
 
     "vocab_topk" ->
-      """SELECT tok AS token, CAST(count(*) AS BIGINT) AS n
+      s"""SELECT tok AS token, CAST(count(*) AS BIGINT) AS n
         |FROM (SELECT unnest(string_split(
-        |        regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS tok
+        |        $normTextSql, ' ')) AS tok
         |      FROM documents)
         |GROUP BY 1
         |ORDER BY n DESC, token ASC LIMIT 100""".stripMargin,
@@ -7701,7 +7442,7 @@ object SparkEntry {
       val c = Dedup.ChunkTokens
       s"""WITH base AS (
         |  SELECT doc_id,
-        |    string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS toks
+        |    $tokensSql AS toks
         |  FROM documents),
         |ch AS (
         |  SELECT doc_id,
@@ -7720,7 +7461,7 @@ object SparkEntry {
       val c = Dedup.ChunkTokens
       s"""WITH base AS (
         |  SELECT doc_id,
-        |    string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS toks
+        |    $tokensSql AS toks
         |  FROM documents),
         |ch AS (
         |  SELECT doc_id, ci,
@@ -7739,33 +7480,13 @@ object SparkEntry {
     },
 
     "decontaminate" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
-        |  FROM documents
-        |), sh AS (
-        |  SELECT DISTINCT doc_id, shingle FROM (
-        |    SELECT doc_id,
-        |      unnest(list_transform(range(1, len(toks) - 6),
-        |             i -> list_aggregate(toks[i:i+7], 'string_agg', ' '))) AS shingle
-        |    FROM base)
-        |), bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 10 = 0)
+      s"""WITH $benchShinglesCtes
         |SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_hit_shingles
         |FROM sh s JOIN bench b USING (shingle)
         |WHERE s.doc_id % 10 != 0
         |GROUP BY 1""".stripMargin,
     "contamination_by_source" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
-        |  FROM documents
-        |), sh AS (
-        |  SELECT DISTINCT doc_id, shingle FROM (
-        |    SELECT doc_id,
-        |      unnest(list_transform(range(1, len(toks) - 6),
-        |             i -> list_aggregate(toks[i:i+7], 'string_agg', ' '))) AS shingle
-        |    FROM base)
-        |), bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 10 = 0),
+      s"""WITH $benchShinglesCtes,
         |hits AS (
         |  SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_hit_shingles
         |  FROM sh s JOIN bench b USING (shingle)
@@ -7784,15 +7505,14 @@ object SparkEntry {
     // exact-quantum coords -> deterministic argmin; raw-sum Pearson
     // on exact 1e-4 longs, double cast only inside the sqrt
     "station_neighbor_corr" ->
-      """WITH daily AS (
-        |  SELECT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |    CAST(floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
+      s"""WITH daily AS (
+        |  SELECT user_id, $dayLabelSql AS day,
+        |    CAST(floor(CAST(sum($centsSql)
         |      AS DOUBLE) * 100.0 / count(*) + 0.5) AS BIGINT) AS m_u
         |  FROM events GROUP BY 1, 2),
         |st AS (
         |  SELECT DISTINCT user_id,
-        |    (user_id % 36) * 5.0 - 87.5 AS lat,
-        |    (user_id % 72) * 5.0 - 177.5 AS lon
+        |    $latLonSql
         |  FROM daily),
         |nb AS (
         |  SELECT * FROM (
@@ -7831,10 +7551,7 @@ object SparkEntry {
     // daily cents exact; reference day-mean quantized once; both
     // cumulatives exact long window sums, ratio divided once
     "ts_double_mass" ->
-      """WITH daily AS (
-        |  SELECT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-        |    sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS day_c
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH daily AS ${seriesSql(s"$dayLabelSql AS day", s"sum($centsSql) AS day_c")},
         |ref AS (
         |  SELECT day, CAST(floor(CAST(sum(day_c) AS DOUBLE) / count(*)
         |    * 100.0 + 0.5) AS BIGINT) AS ref_u
@@ -7855,9 +7572,8 @@ object SparkEntry {
 
     // integer/floor tile math on the derived coordinates; exact mean
     "items_tiles" ->
-      """WITH e AS (
-        |  SELECT (user_id % 36) * 5.0 - 87.5 AS lat,
-        |    (user_id % 72) * 5.0 - 177.5 AS lon, value, t.z AS z
+      s"""WITH e AS (
+        |  SELECT $latLonSql, value, t.z AS z
         |  FROM events, (SELECT unnest([0, 1, 2, 3]) AS z) t)
         |SELECT CAST(z AS BIGINT) AS z,
         |  CAST(least(floor((lon + 180.0) / 360.0 * (2.0 ** z)),
@@ -7865,34 +7581,17 @@ object SparkEntry {
         |  CAST(least(floor((90.0 - lat) / 180.0 * (2.0 ** z)),
         |    (2.0 ** z) - 1) AS BIGINT) AS y,
         |  CAST(count(*) AS BIGINT) AS n,
-        |  floor(CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE)
-        |    * 100.0 / count(*) + 0.5) / 1e4 AS mean_value
+        |  $avg4Sql AS mean_value
         |FROM e GROUP BY 1, 2, 3""".stripMargin,
 
     "items_page_cursor" ->
-      """SELECT event_id, epoch_us(ts) AS ts_us,
-        |  (user_id % 36) * 5.0 - 87.5 AS lat,
-        |  (user_id % 72) * 5.0 - 177.5 AS lon,
-        |  value
-        |FROM events
-        |WHERE event_type = 'click'
-        |  AND ts >= TIMESTAMP '2024-01-10 00:00:00' AND ts < TIMESTAMP '2024-01-20 00:00:00'
-        |  AND (user_id % 36) * 5.0 - 87.5 BETWEEN -45 AND 45
-        |  AND (user_id % 72) * 5.0 - 177.5 BETWEEN -180 AND -60
+      s"""$itemsQuerySql
         |  AND (epoch_us(ts) < 1705622400000000
         |       OR (epoch_us(ts) = 1705622400000000 AND event_id < 99999))
         |ORDER BY ts DESC, event_id DESC LIMIT 100""".stripMargin,
 
     "items_query" ->
-      """SELECT event_id, epoch_us(ts) AS ts_us,
-        |  (user_id % 36) * 5.0 - 87.5 AS lat,
-        |  (user_id % 72) * 5.0 - 177.5 AS lon,
-        |  value
-        |FROM events
-        |WHERE event_type = 'click'
-        |  AND ts >= TIMESTAMP '2024-01-10 00:00:00' AND ts < TIMESTAMP '2024-01-20 00:00:00'
-        |  AND (user_id % 36) * 5.0 - 87.5 BETWEEN -45 AND 45
-        |  AND (user_id % 72) * 5.0 - 177.5 BETWEEN -180 AND -60
+      s"""$itemsQuerySql
         |ORDER BY ts DESC, event_id DESC LIMIT 100""".stripMargin,
 
     "dedup_minhash_lsh" -> minhashLshSql,
@@ -7905,34 +7604,20 @@ object SparkEntry {
     "dedup_simhash" -> simhashSql,
 
     "dedup_ngram_jaccard" ->
-      """WITH sh AS (
-        |  SELECT doc_id, unnest(list_distinct([array_to_string(toks[i:i+2], ' ')
-        |          for i in range(1, len(toks) - 1)])) AS shingle
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-        |  WHERE len(toks) >= 3
-        |), cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
+      s"""WITH $shingleCountCtes,
         |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
+        |  $sharedShinglesSql)
         |SELECT doc_a, doc_b,
-        |  round(shared * 1.0 / (ca.n_sh + cb.n_sh - shared), 4) AS jaccard
+        |  $jaccardSql AS jaccard
         |FROM pairs JOIN cnt ca ON doc_a = ca.doc_id JOIN cnt cb ON doc_b = cb.doc_id
-        |WHERE round(shared * 1.0 / (ca.n_sh + cb.n_sh - shared), 4) >= 0.5""".stripMargin,
+        |WHERE $jaccardSql >= 0.5""".stripMargin,
 
     // the shared-shingle count IS the intersection; containment is
     // shared / min(|A|,|B|) — one integer ratio rounded once
     "dedup_containment" ->
-      """WITH sh AS (
-        |  SELECT doc_id, unnest(list_distinct([array_to_string(toks[i:i+2], ' ')
-        |          for i in range(1, len(toks) - 1)])) AS shingle
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-        |  WHERE len(toks) >= 3
-        |), cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
+      s"""WITH $shingleCountCtes,
         |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
+        |  $sharedShinglesSql)
         |SELECT doc_a, doc_b,
         |  CAST(ca.n_sh AS BIGINT) AS n_a, CAST(cb.n_sh AS BIGINT) AS n_b,
         |  round(shared * 1.0 / least(ca.n_sh, cb.n_sh), 4) AS containment
@@ -7942,33 +7627,11 @@ object SparkEntry {
         .stripMargin,
 
     "quality_vs_dup" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT doc_id, unnest(list_distinct([array_to_string(toks[i:i+2], ' ')
-        |          for i in range(1, len(toks) - 1)])) AS shingle
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-        |  WHERE len(toks) >= 3
-        |), cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-        |p0 AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT doc_a, doc_b FROM p0
-        |  JOIN cnt ca ON doc_a = ca.doc_id JOIN cnt cb ON doc_b = cb.doc_id
-        |  WHERE round(shared * 1.0 / (ca.n_sh + cb.n_sh - shared), 4) >= 0.5),
+      s"""WITH RECURSIVE $jaccardPairsCtes,
         |members AS (SELECT DISTINCT doc_id FROM (
         |  SELECT doc_a AS doc_id FROM pairs
         |  UNION ALL SELECT doc_b FROM pairs)),
-        |q AS (
-        |  SELECT doc_id,
-        |    round(least(1.0, len(toks) / 100.0)
-        |      * (1.0 - round((len(list_filter(toks, x -> x = 'the'))
-        |                      + len(list_filter(toks, x -> x = 'a')))
-        |                     / CAST(len(toks) AS DOUBLE), 4)), 4) AS qs
-        |  FROM (SELECT doc_id,
-        |          string_split(regexp_replace(lower(trim(text)), '\s+', ' ',
-        |            'g'), ' ') AS toks
-        |        FROM documents)),
+        |$qualityScoreCte,
         |m AS (
         |  SELECT q.doc_id, qs,
         |    CASE WHEN mem.doc_id IS NOT NULL THEN 1 ELSE 0 END AS dup
@@ -7980,39 +7643,7 @@ object SparkEntry {
         |FROM m GROUP BY 1""".stripMargin,
 
     "dedup_survivorship" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT doc_id, unnest(list_distinct([array_to_string(toks[i:i+2], ' ')
-        |          for i in range(1, len(toks) - 1)])) AS shingle
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-        |  WHERE len(toks) >= 3
-        |), cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-        |p0 AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT doc_a, doc_b FROM p0
-        |  JOIN cnt ca ON doc_a = ca.doc_id JOIN cnt cb ON doc_b = cb.doc_id
-        |  WHERE round(shared * 1.0 / (ca.n_sh + cb.n_sh - shared), 4) >= 0.5),
-        |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |          UNION ALL SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-        |clus AS (
-        |  SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
-        |  FROM reach GROUP BY src),
-        |q AS (
-        |  SELECT doc_id,
-        |    round(least(1.0, len(toks) / 100.0)
-        |      * (1.0 - round((len(list_filter(toks, x -> x = 'the'))
-        |                      + len(list_filter(toks, x -> x = 'a')))
-        |                     / CAST(len(toks) AS DOUBLE), 4)), 4) AS qs
-        |  FROM (SELECT doc_id,
-        |          string_split(regexp_replace(lower(trim(text)), '\s+', ' ',
-        |            'g'), ' ') AS toks
-        |        FROM documents)),
+      s"""WITH RECURSIVE $survivorshipCtes,
         |m AS (
         |  SELECT c.cluster_id, c.doc_id, q.qs,
         |    count(*) OVER (PARTITION BY c.cluster_id) AS n_members,
@@ -8052,7 +7683,7 @@ object SparkEntry {
         |FROM tot t LEFT JOIN dropped d USING (source)""".stripMargin),
 
     "source_overlap" ->
-      """WITH ss AS (
+      s"""WITH ss AS (
         |  SELECT DISTINCT source, shingle FROM (
         |    SELECT source,
         |      unnest(list_distinct([array_to_string(toks[i:i+2], ' ')
@@ -8069,41 +7700,20 @@ object SparkEntry {
         |  GROUP BY 1, 2)
         |SELECT source_a, source_b, shared, ca.n_sh AS n_a, cb.n_sh AS n_b,
         |  round(shared * 1.0 / least(ca.n_sh, cb.n_sh), 4) AS containment,
-        |  round(shared * 1.0 / (ca.n_sh + cb.n_sh - shared), 4) AS jaccard
+        |  $jaccardSql AS jaccard
         |FROM pairs JOIN cnt ca ON source_a = ca.source
         |  JOIN cnt cb ON source_b = cb.source""".stripMargin,
 
     "dedup_clusters" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT doc_id, unnest(list_distinct([array_to_string(toks[i:i+2], ' ')
-        |          for i in range(1, len(toks) - 1)])) AS shingle
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-        |  WHERE len(toks) >= 3
-        |), cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-        |p0 AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT doc_a, doc_b FROM p0
-        |  JOIN cnt ca ON doc_a = ca.doc_id JOIN cnt cb ON doc_b = cb.doc_id
-        |  WHERE round(shared * 1.0 / (ca.n_sh + cb.n_sh - shared), 4) >= 0.5),
-        |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |          UNION ALL SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-        |SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
-        |FROM reach GROUP BY src""".stripMargin,
+      s"""WITH RECURSIVE $reachCtes
+        |$clusterLabelSql""".stripMargin,
 
     // same cosine/rank discipline as the bruteforce oracle; prefix
     // cosines on 1-based inclusive list slices; means as exact 1e-4
     // integer sums divided once
     "ann_matryoshka_audit" ->
-      """WITH p AS (SELECT vec_id AS probe_id, embedding::DOUBLE[] AS pe
-        |           FROM embeddings WHERE vec_id IN (SELECT vec_id FROM embeddings
-        |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 5)),
+      s"""WITH p AS (SELECT vec_id AS probe_id, embedding::DOUBLE[] AS pe
+        |           FROM embeddings WHERE vec_id IN $probeIdsSql),
         |c AS (SELECT probe_id, vec_id, pe, embedding::DOUBLE[] AS e,
         |        list_cosine_similarity(pe, embedding::DOUBLE[]) AS cos_full
         |      FROM p, embeddings WHERE vec_id != probe_id),
@@ -8137,9 +7747,8 @@ object SparkEntry {
         |FROM agg JOIN fu ON agg.probe_id = fu.probe_id""".stripMargin,
 
     "ann_topk_bruteforce" ->
-      """WITH p AS (SELECT vec_id AS probe_id, embedding::DOUBLE[] AS pe
-        |           FROM embeddings WHERE vec_id IN (SELECT vec_id FROM embeddings
-        |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 5)),
+      s"""WITH p AS (SELECT vec_id AS probe_id, embedding::DOUBLE[] AS pe
+        |           FROM embeddings WHERE vec_id IN $probeIdsSql),
         |c AS (SELECT probe_id, vec_id,
         |        list_cosine_similarity(pe, embedding::DOUBLE[]) AS cos
         |      FROM p, embeddings WHERE vec_id != probe_id),
@@ -8192,8 +7801,7 @@ object SparkEntry {
         |cand AS (
         |  SELECT DISTINCT p.vec_id AS probe_id, c.vec_id AS nb_id
         |  FROM b p JOIN b c ON p.t = c.t AND p.sig = c.sig
-        |  WHERE p.vec_id IN (SELECT vec_id FROM embeddings
-        |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 5)
+        |  WHERE p.vec_id IN $probeIdsSql
         |    AND c.vec_id != p.vec_id),
         |r AS (
         |  SELECT probe_id, nb_id,
@@ -8204,103 +7812,15 @@ object SparkEntry {
         |SELECT probe_id, nb_id AS neighbor_id, rk, cosine FROM r WHERE rk <= 10""".stripMargin,
 
     "ann_recall_audit" ->
-      s"""$lshBucketsSql,
-        |cand AS (
-        |  SELECT DISTINCT p.vec_id AS probe_id, c.vec_id AS nb_id
-        |  FROM b p JOIN b c ON p.t = c.t AND p.sig = c.sig
-        |  WHERE p.vec_id IN (SELECT vec_id FROM embeddings
-        |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 5)
-        |    AND c.vec_id != p.vec_id),
-        |lr AS (
-        |  SELECT probe_id, nb_id,
-        |    row_number() OVER (PARTITION BY probe_id
-        |      ORDER BY floor(list_cosine_similarity(vp.e, vc.e) * 1e6 + 0.5) / 1e6 DESC,
-        |               nb_id ASC) AS rk,
-        |    floor(list_cosine_similarity(vp.e, vc.e) * 1e4 + 0.5) / 1e4 AS cosine
-        |  FROM cand JOIN v vp ON vp.vec_id = probe_id
-        |    JOIN v vc ON vc.vec_id = nb_id),
-        |lshr AS (SELECT probe_id, nb_id,
-        |    CAST(floor(cosine * 1e4 + 0.5) AS BIGINT) AS cos_u
-        |  FROM lr WHERE rk <= 10),
-        |bc AS (SELECT p.vec_id AS probe_id, c.vec_id AS nb_id,
-        |    list_cosine_similarity(p.e, c.e) AS cos
-        |  FROM v p, v c WHERE p.vec_id IN (SELECT vec_id FROM embeddings
-        |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 5)
-        |    AND c.vec_id != p.vec_id),
-        |br AS (SELECT probe_id, nb_id,
-        |    row_number() OVER (PARTITION BY probe_id
-        |      ORDER BY floor(cos * 1e6 + 0.5) / 1e6 DESC, nb_id ASC) AS rk,
-        |    floor(cos * 1e4 + 0.5) / 1e4 AS cosine
-        |  FROM bc),
-        |bfr AS (SELECT probe_id, nb_id,
-        |    CAST(floor(cosine * 1e4 + 0.5) AS BIGINT) AS cos_u
-        |  FROM br WHERE rk <= 10),
-        |per AS (
-        |  SELECT bf.probe_id, CAST(count(*) AS BIGINT) AS k,
-        |    CAST(sum(CASE WHEN l.nb_id IS NOT NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_hit,
-        |    sum(bf.cos_u) AS bf_u
-        |  FROM bfr bf LEFT JOIN lshr l
-        |    ON bf.probe_id = l.probe_id AND bf.nb_id = l.nb_id
-        |  GROUP BY 1),
-        |ls AS (SELECT probe_id, sum(cos_u) AS lsh_u,
-        |    CAST(count(*) AS BIGINT) AS n_l
-        |  FROM lshr GROUP BY 1)
-        |SELECT per.probe_id, n_hit, floor(n_hit * 1.0 / k * 1e4 + 0.5) / 1e4 AS recall,
-        |  floor((CAST(bf_u AS DOUBLE) / k - CAST(lsh_u AS DOUBLE) / n_l)
-        |    / 1e4 * 1e4 + 0.5) / 1e4 AS cos_regret
-        |FROM per LEFT JOIN ls ON per.probe_id = ls.probe_id""".stripMargin,
+      annRecallAuditSql(s"p.vec_id IN $probeIdsSql", None),
 
     // the sampled twin: identical audit, probes drawn by the md5
     // prefix selector (rate 1/256) instead of the fixed fixture ids
-    "ann_recall_audit_sampled" -> {
-      val sel = s"substr(md5(CAST(%s.vec_id AS VARCHAR)), 1, " +
+    "ann_recall_audit_sampled" -> annRecallAuditSql(
+      s"substr(md5(CAST(p.vec_id AS VARCHAR)), 1, " +
         s"${graft.operators.Similarity.AnnAuditSampleHex.length}) = " +
-        s"'${graft.operators.Similarity.AnnAuditSampleHex}'"
-      s"""$lshBucketsSql,
-        |cand AS (
-        |  SELECT DISTINCT p.vec_id AS probe_id, c.vec_id AS nb_id
-        |  FROM b p JOIN b c ON p.t = c.t AND p.sig = c.sig
-        |  WHERE ${sel.format("p")} AND c.vec_id != p.vec_id),
-        |lr AS (
-        |  SELECT probe_id, nb_id,
-        |    row_number() OVER (PARTITION BY probe_id
-        |      ORDER BY floor(list_cosine_similarity(vp.e, vc.e) * 1e6 + 0.5) / 1e6 DESC,
-        |               nb_id ASC) AS rk,
-        |    floor(list_cosine_similarity(vp.e, vc.e) * 1e4 + 0.5) / 1e4 AS cosine
-        |  FROM cand JOIN v vp ON vp.vec_id = probe_id
-        |    JOIN v vc ON vc.vec_id = nb_id),
-        |lshr AS (SELECT probe_id, nb_id,
-        |    CAST(floor(cosine * 1e4 + 0.5) AS BIGINT) AS cos_u
-        |  FROM lr WHERE rk <= 10),
-        |bc AS (SELECT p.vec_id AS probe_id, c.vec_id AS nb_id,
-        |    list_cosine_similarity(p.e, c.e) AS cos
-        |  FROM v p, v c WHERE ${sel.format("p")} AND c.vec_id != p.vec_id),
-        |br AS (SELECT probe_id, nb_id,
-        |    row_number() OVER (PARTITION BY probe_id
-        |      ORDER BY floor(cos * 1e6 + 0.5) / 1e6 DESC, nb_id ASC) AS rk,
-        |    floor(cos * 1e4 + 0.5) / 1e4 AS cosine
-        |  FROM bc),
-        |bfr AS (SELECT probe_id, nb_id,
-        |    CAST(floor(cosine * 1e4 + 0.5) AS BIGINT) AS cos_u
-        |  FROM br WHERE rk <= 10),
-        |per AS (
-        |  SELECT bf.probe_id, CAST(count(*) AS BIGINT) AS k,
-        |    CAST(sum(CASE WHEN l.nb_id IS NOT NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_hit,
-        |    sum(bf.cos_u) AS bf_u
-        |  FROM bfr bf LEFT JOIN lshr l
-        |    ON bf.probe_id = l.probe_id AND bf.nb_id = l.nb_id
-        |  GROUP BY 1),
-        |ls AS (SELECT probe_id, sum(cos_u) AS lsh_u,
-        |    CAST(count(*) AS BIGINT) AS n_l
-        |  FROM lshr GROUP BY 1)
-        |SELECT per.probe_id, n_hit, floor(n_hit * 1.0 / k * 1e4 + 0.5) / 1e4 AS recall,
-        |  floor((CAST(bf_u AS DOUBLE) / k - CAST(lsh_u AS DOUBLE) / n_l)
-        |    / 1e4 * 1e4 + 0.5) / 1e4 AS cos_regret,
-        |  CAST(0.00390625 AS DOUBLE) AS sample_rate
-        |FROM per LEFT JOIN ls ON per.probe_id = ls.probe_id""".stripMargin
-    },
+        s"'${graft.operators.Similarity.AnnAuditSampleHex}'",
+      Some(0.00390625)),
 
     "knn_graph" -> knnGraphSql,
 
@@ -8344,16 +7864,9 @@ object SparkEntry {
         |FROM t GROUP BY 1""".stripMargin,
 
     "dedup_semantic_sweep" ->
-      s"""WITH p AS (SELECT vec_id AS probe_id, embedding::DOUBLE[] AS pe
-        |           FROM embeddings),
-        |c AS (SELECT probe_id, vec_id AS nb_id,
-        |        list_cosine_similarity(pe, embedding::DOUBLE[]) AS cos
-        |      FROM p, embeddings WHERE vec_id != probe_id),
-        |r AS (SELECT probe_id, nb_id,
-        |        row_number() OVER (PARTITION BY probe_id
-        |                           ORDER BY floor(cos * 1e6 + 0.5) / 1e6 DESC, nb_id ASC) AS rk,
-        |        floor(cos * 1e4 + 0.5) / 1e4 AS cosine
-        |      FROM c),
+      s"""WITH $allProbesCte,
+        |$probeCosCte,
+        |$rankedCosCte,
         |pr AS (SELECT least(probe_id, nb_id) AS doc_a,
         |         greatest(probe_id, nb_id) AS doc_b, max(cosine) AS cosine
         |       FROM r WHERE rk <= 5 GROUP BY 1, 2),
@@ -8372,11 +7885,8 @@ object SparkEntry {
         |FROM np JOIN nd USING (tau), tot""".stripMargin,
 
     "embedding_label_purity" ->
-      """WITH p AS (SELECT vec_id AS probe_id, embedding::DOUBLE[] AS pe
-        |           FROM embeddings),
-        |c AS (SELECT probe_id, vec_id AS nb_id,
-        |        list_cosine_similarity(pe, embedding::DOUBLE[]) AS cos
-        |      FROM p, embeddings WHERE vec_id != probe_id),
+      s"""WITH $allProbesCte,
+        |$probeCosCte,
         |r AS (SELECT probe_id, nb_id,
         |        row_number() OVER (PARTITION BY probe_id
         |                           ORDER BY floor(cos * 1e6 + 0.5) / 1e6 DESC, nb_id ASC) AS rk
@@ -8395,16 +7905,10 @@ object SparkEntry {
         |FROM j GROUP BY label""".stripMargin,
 
     "dedup_semantic" ->
-      """WITH RECURSIVE p AS (
+      s"""WITH RECURSIVE p AS (
         |  SELECT vec_id AS probe_id, embedding::DOUBLE[] AS pe FROM embeddings),
-        |c AS (SELECT probe_id, vec_id AS nb_id,
-        |        list_cosine_similarity(pe, embedding::DOUBLE[]) AS cos
-        |      FROM p, embeddings WHERE vec_id != probe_id),
-        |r AS (SELECT probe_id, nb_id,
-        |        row_number() OVER (PARTITION BY probe_id
-        |                           ORDER BY floor(cos * 1e6 + 0.5) / 1e6 DESC, nb_id ASC) AS rk,
-        |        floor(cos * 1e4 + 0.5) / 1e4 AS cosine
-        |      FROM c),
+        |$probeCosCte,
+        |$rankedCosCte,
         |pairs AS (
         |  SELECT DISTINCT least(probe_id, nb_id) AS doc_a,
         |         greatest(probe_id, nb_id) AS doc_b

@@ -78,29 +78,37 @@ object Dedup {
     * At corpus scale a hot-shingle long tail would make this
     * candidate join quadratic; minhashLsh below is the scale path
     * (band buckets + frequency cap). */
-  def ngramJaccard(spark: SparkSession, dir: String): DataFrame = {
-    // each exploded row CARRIES its doc's set size, so the pair join
-    // itself delivers n_a/n_b (constant per doc — min() just picks
-    // it deterministically): no per-side counts join, and only the
-    // two intrinsic self-join tokenizations remain (plan-audited:
-    // 4 corpus tokenizations → 2, two joins fewer)
-    val sh = shingleArrays(Tables.documents(spark, dir))
-      .select(col("doc_id"), size(col("sh_arr")).as("n_sh"),
-        explode(col("sh_arr")).as("shingle"))
-    val shared = sh.select(col("doc_id").as("doc_a"), col("n_sh").as("n_a"),
-        col("shingle"))
+  def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
+    jaccardPairs(shingleArrays(Tables.documents(spark, dir)))
+      .select("doc_a", "doc_b", "jaccard")
+
+  /** Every document pair `doc_a < doc_b` sharing a shingle of the
+    * [[shingleArrays]] rows `shArr`: the `shared` count (the
+    * intersection size) and both set sizes `n_a`, `n_b`. Each
+    * exploded row CARRIES its doc's set size, so the pair join itself
+    * delivers n_a/n_b (constant per doc — min() just picks it
+    * deterministically): no per-side counts join, and only the two
+    * intrinsic self-join tokenizations remain (plan-audited: 4 corpus
+    * tokenizations → 2, two joins fewer). The Spark twin of the
+    * oracles' `sh`/`cnt`/`p0` fragment. */
+  private def sharedShinglePairs(shArr: DataFrame): DataFrame = {
+    val sh = shArr.select(col("doc_id"), size(col("sh_arr")).as("n_sh"),
+      explode(col("sh_arr")).as("shingle"))
+    sh.select(col("doc_id").as("doc_a"), col("n_sh").as("n_a"), col("shingle"))
       .join(sh.select(col("doc_id").as("doc_b"), col("n_sh").as("n_b"),
         col("shingle")), Seq("shingle"))
       .filter(col("doc_a") < col("doc_b"))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("shared"),
         min(col("n_a")).as("n_a"), min(col("n_b")).as("n_b"))
-    shared
+  }
+
+  /** The [[sharedShinglePairs]] scored by Jaccard, kept at ≥ 0.5. */
+  private def jaccardPairs(shArr: DataFrame): DataFrame =
+    sharedShinglePairs(shArr)
       .withColumn("jaccard",
         round(col("shared") / (col("n_a") + col("n_b") - col("shared")), 4))
       .filter(col("jaccard") >= JaccardT)
-      .select("doc_a", "doc_b", "jaccard")
-  }
 
   /** Containment threshold for [[ngramContainment]]. */
   private val ContainT = 0.8
@@ -119,24 +127,14 @@ object Dedup {
     * shared count IS the intersection — no second pass, no extra
     * joins); minhash-LSH banding is the hot-tail-capped scale path
     * for candidate generation, identical to the Jaccard family. */
-  def ngramContainment(spark: SparkSession, dir: String): DataFrame = {
-    val sh = shingleArrays(Tables.documents(spark, dir))
-      .select(col("doc_id"), size(col("sh_arr")).as("n_sh"),
-        explode(col("sh_arr")).as("shingle"))
-    sh.select(col("doc_id").as("doc_a"), col("n_sh").as("n_a"), col("shingle"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("n_sh").as("n_b"),
-        col("shingle")), Seq("shingle"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("shared"),
-        min(col("n_a")).as("n_a"), min(col("n_b")).as("n_b"))
+  def ngramContainment(spark: SparkSession, dir: String): DataFrame =
+    sharedShinglePairs(shingleArrays(Tables.documents(spark, dir)))
       .withColumn("containment",
         round(col("shared") / least(col("n_a"), col("n_b")).cast("double"), 4))
       .filter(col("containment") >= ContainT)
       .select(col("doc_a"), col("doc_b"),
         col("n_a").cast("long").as("n_a"), col("n_b").cast("long").as("n_b"),
         col("containment"))
-  }
 
   /** Near-dup CLUSTERS from the pairwise matches: connected
     * components of the ngram-Jaccard graph by iterative min-label
@@ -974,19 +972,7 @@ object Dedup {
     // the pinned arrays (cheap — the regex already ran), the LSH side
     // computes in-row signatures from the same arrays.
     val shArr = shingleArrays(docs).localCheckpoint()
-    val sh = shArr.select(col("doc_id"), size(col("sh_arr")).as("n_sh"),
-      explode(col("sh_arr")).as("shingle"))
-    val truth = sh.select(col("doc_id").as("doc_a"), col("n_sh").as("n_a"),
-        col("shingle"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("n_sh").as("n_b"),
-        col("shingle")), Seq("shingle"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("shared"),
-        min(col("n_a")).as("n_a"), min(col("n_b")).as("n_b"))
-      .withColumn("jaccard",
-        round(col("shared") / (col("n_a") + col("n_b") - col("shared")), 4))
-      .filter(col("jaccard") >= JaccardT)
+    val truth = jaccardPairs(shArr)
     // pinned: the cap filter (candidates) and the dropped-mass agg
     // both read the bucket table; unpinned each re-runs the
     // signature pass

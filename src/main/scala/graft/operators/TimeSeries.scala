@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -225,27 +225,23 @@ object TimeSeries {
         (col("cusum_u") > lit(50000000L)).as("drift"))
   }
 
-  /** As-of join: each `click` event aligned to the latest strictly
-    * earlier `purchase` by the same user (the reference aligns
-    * observation series to the latest prior forecast issue the same
-    * way). Spark-first plan: instead of a range join (which explodes
-    * into a cartesian per key), union the two streams, sort within
-    * each `user_id` partition by (ts, kind), and carry the last
-    * non-null purchase forward with `last(..., ignoreNulls)` — one
-    * shuffle, linear within-partition work, no candidate blow-up.
-    * Clicks sort BEFORE equal-ts purchases so the join is strict. */
-  def asofJoin(spark: SparkSession, dir: String): DataFrame = {
+  /** The union scan both as-of joins run: `click` rows (kind 0) and
+    * the purchases (kind 1) in one stream, and the per-user running
+    * window `w` that carries the latest purchase forward. Clicks sort
+    * BEFORE equal-ts purchases, so the match is strict. Purchases are
+    * pre-aggregated to ONE row per (user_id, ts), keeping the
+    * max-event_id row's value: equal-timestamp duplicates would
+    * otherwise make the as-of pick engine-dependent (DuckDB's ASOF
+    * leaves the choice among equal-key candidates unspecified), so
+    * both this plan and the oracle resolve the tie identically BEFORE
+    * the alignment. Map-side partial agg; same shuffle key. */
+  private def asofScan(spark: SparkSession,
+      dir: String): (DataFrame, WindowSpec) = {
     val ev = Tables.events(spark, dir)
     val clicks = ev.filter(col("event_type") === "click")
       .select(col("event_id"), col("ts"), col("user_id"), col("value"),
         lit(0).as("kind"), lit(null).cast("double").as("p_value"),
         col("event_id").as("sort_id"))
-    // Purchases are pre-aggregated to ONE row per (user_id, ts) —
-    // keep the max-event_id row's value. Equal-timestamp duplicates
-    // would otherwise make the as-of pick engine-dependent (DuckDB's
-    // ASOF leaves the choice among equal-key candidates unspecified),
-    // so both this plan and the oracle resolve the tie identically
-    // BEFORE the alignment. Map-side partial agg; same shuffle key.
     val purchases = ev.filter(col("event_type") === "purchase")
       .groupBy(col("user_id"), col("ts"))
       .agg(max_by(col("value"), col("event_id")).as("p_value"),
@@ -256,7 +252,21 @@ object TimeSeries {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("kind"), col("sort_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    clicks.unionByName(purchases)
+    (clicks.unionByName(purchases), w)
+  }
+
+  /** As-of join: each `click` event aligned to the latest strictly
+    * earlier `purchase` by the same user (the reference aligns
+    * observation series to the latest prior forecast issue the same
+    * way). Spark-first plan: instead of a range join (which explodes
+    * into a cartesian per key), union the two streams, sort within
+    * each `user_id` partition by (ts, kind), and carry the last
+    * non-null purchase forward with `last(..., ignoreNulls)` — one
+    * shuffle, linear within-partition work, no candidate blow-up.
+    * Clicks sort BEFORE equal-ts purchases so the join is strict. */
+  def asofJoin(spark: SparkSession, dir: String): DataFrame = {
+    val (stream, w) = asofScan(spark, dir)
+    stream
       .withColumn("last_purchase_value",
         round(last(col("p_value"), ignoreNulls = true).over(w), 2))
       .filter(col("kind") === 0)
@@ -283,22 +293,8 @@ object TimeSeries {
     * elementwise integer-microsecond comparison — exact in both
     * engines, no second pass. */
   def asofJoinTolerance(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("event_id"), col("ts"), col("user_id"), col("value"),
-        lit(0).as("kind"), lit(null).cast("double").as("p_value"),
-        col("event_id").as("sort_id"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .groupBy(col("user_id"), col("ts"))
-      .agg(max_by(col("value"), col("event_id")).as("p_value"),
-        max(col("event_id")).as("sort_id"))
-      .select(lit(null).cast("long").as("event_id"), col("ts"), col("user_id"),
-        lit(null).cast("double").as("value"),
-        lit(1).as("kind"), col("p_value"), col("sort_id"))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("kind"), col("sort_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    clicks.unionByName(purchases)
+    val (stream, w) = asofScan(spark, dir)
+    stream
       .withColumn("lp_value", last(col("p_value"), ignoreNulls = true).over(w))
       .withColumn("lp_ts",
         last(when(col("kind") === 1, col("ts")), ignoreNulls = true).over(w))

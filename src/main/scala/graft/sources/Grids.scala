@@ -261,6 +261,22 @@ object Grids {
     } yield GridCell(varName, ts, y0 + (ny - r - 1) * cs, x0 + c * cs, v)
   }
 
+  /** A dropped grid file's `<var>_<yyyy-MM-dd><suffix>` name (any
+    * directory prefix; `suffixes` stripped in order) as (var, epoch
+    * day); None when the name has no `_` before the date or the date
+    * does not parse. */
+  private def parseDropName(name: String,
+      suffixes: String*): Option[(String, Int)] = {
+    val base = suffixes.foldLeft(name.substring(name.lastIndexOf('/') + 1))(
+      _.stripSuffix(_))
+    val cut = base.lastIndexOf('_')
+    for {
+      _ <- Option.when(cut > 0)(())
+      day <- scala.util.Try(java.time.LocalDate
+        .parse(base.substring(cut + 1))).toOption
+    } yield (base.substring(0, cut), day.toEpochDay.toInt)
+  }
+
   /** ASCII-grid drop → decoded long rows, the text twin of
     * [[decodeDrop]]: one row per dropped `.asc` file
     * (`<var>_<yyyy-MM-dd>.asc` naming), one typed flatMap per file.
@@ -271,15 +287,8 @@ object Grids {
     import spark.implicits._
     files.select(col("name"), col("text")).as[(String, String)]
       .flatMap { case (name, text) =>
-        val base = name.substring(name.lastIndexOf('/') + 1)
-          .stripSuffix(".asc")
-        val cut = base.lastIndexOf('_')
-        val parsed = for {
-          _ <- Option.when(cut > 0)(())
-          day <- scala.util.Try(java.time.LocalDate
-            .parse(base.substring(cut + 1))).toOption
-        } yield (base.substring(0, cut), day.toEpochDay.toInt)
-        parsed.iterator.flatMap { case (v, d) => decodeAsc(v, d, text) }
+        parseDropName(name, ".asc").iterator
+          .flatMap { case (v, d) => decodeAsc(v, d, text) }
       }
       .toDF("var", "time", "lat", "lon", "value")
   }
@@ -681,15 +690,8 @@ object Grids {
     import spark.implicits._
     files.select(col("name"), col("content")).as[RawTile]
       .flatMap { f =>
-        val base = f.name.substring(f.name.lastIndexOf('/') + 1)
-          .stripSuffix(".tiff").stripSuffix(".tif")
-        val cut = base.lastIndexOf('_')
-        val parsed = for {
-          _ <- Option.when(cut > 0)(())
-          day <- scala.util.Try(java.time.LocalDate
-            .parse(base.substring(cut + 1))).toOption
-        } yield (base.substring(0, cut), day.toEpochDay.toInt)
-        parsed.iterator.flatMap { case (v, d) => decodeTiff(v, d, f.content) }
+        parseDropName(f.name, ".tiff", ".tif").iterator
+          .flatMap { case (v, d) => decodeTiff(v, d, f.content) }
       }
       .toDF("var", "time", "lat", "lon", "value")
   }

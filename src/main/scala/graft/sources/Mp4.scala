@@ -27,26 +27,22 @@ object Mp4 {
   private[graft] case class Mp4Meta(majorBrand: String, timescale: Long,
       duration: Long, tracks: Seq[Mp4Track])
 
-  /** Box walk. Left(reason) quarantines: no ftyp leader, truncated
-    * or undersized boxes, missing moov/mvhd, undersized mvhd/tkhd/
-    * hdlr payloads. Any residual malformed-byte arithmetic is caught
-    * by the Try wrapper — a poison file can never kill the job. */
-  private[graft] def decodeMp4(bytes: Array[Byte]):
-      Either[String, Mp4Meta] =
-    scala.util.Try(decodeMp4Walk(bytes)).toEither
-      .left.map {
-        case WalkFail(r) => r
-        case _ => "malformed_box_payload"
-      }.flatten
+  /** A walk's quarantine reason, thrown from deep inside it. */
+  private case class WalkFail(reason: String)
+    extends RuntimeException(reason)
 
-  private def decodeMp4Walk(bytes: Array[Byte]):
-      Either[String, Mp4Meta] = {
+  /** Big-endian reads and the ISO-BMFF box walk over one file's
+    * bytes, shared by the metadata, frame-index and codec walks.
+    * `box` returns (type, payloadStart, boxEnd), or None when the box
+    * is truncated or undersized; `children` lists a payload's boxes,
+    * empty when any of them is malformed. */
+  private class BoxReader(bytes: Array[Byte]) {
     def u32(p: Int): Long =
       ((bytes(p) & 0xFFL) << 24) | ((bytes(p + 1) & 0xFFL) << 16) |
         ((bytes(p + 2) & 0xFFL) << 8) | (bytes(p + 3) & 0xFFL)
     def u64(p: Int): Long = (u32(p) << 32) | u32(p + 4)
+    def u16(p: Int): Int = ((bytes(p) & 0xFF) << 8) | (bytes(p + 1) & 0xFF)
     def tag(p: Int): String = new String(bytes, p, 4, "US-ASCII")
-    // returns (payloadStart, payloadEnd, boxEnd) or None on malformed
     def box(p: Int, limit: Int): Option[(String, Int, Int)] = {
       if (p + 8 > limit) return None
       val size32 = u32(p)
@@ -69,6 +65,37 @@ object Mp4 {
       }
       if (bad) Seq.empty else out.result()
     }
+  }
+
+  /** Runs a walk whose failures quarantine the file: a [[WalkFail]]'s
+    * reason, a failed `require`'s message, or `malformed_box_payload`
+    * for any residual malformed-byte arithmetic — a poison file can
+    * never kill the job. */
+  private def quarantined[A](walk: => Either[String, A]): Either[String, A] =
+    scala.util.Try(walk).toEither
+      .left.map {
+        case WalkFail(r) => r
+        case e: IllegalArgumentException if e.getMessage != null =>
+          e.getMessage.stripPrefix("requirement failed: ")
+        case _ => "malformed_box_payload"
+      }.flatten
+
+  /** Box walk. Left(reason) quarantines: no ftyp leader, truncated
+    * or undersized boxes, missing moov/mvhd, undersized mvhd/tkhd/
+    * hdlr payloads. Any residual malformed-byte arithmetic is caught
+    * by the Try wrapper — a poison file can never kill the job. */
+  private[graft] def decodeMp4(bytes: Array[Byte]):
+      Either[String, Mp4Meta] =
+    scala.util.Try(decodeMp4Walk(bytes)).toEither
+      .left.map {
+        case WalkFail(r) => r
+        case _ => "malformed_box_payload"
+      }.flatten
+
+  private def decodeMp4Walk(bytes: Array[Byte]):
+      Either[String, Mp4Meta] = {
+    val boxes = new BoxReader(bytes)
+    import boxes._
     val top = children(0, bytes.length)
     if (top.isEmpty) return Left("malformed_boxes")
     if (top.head._1 != "ftyp") return Left("missing_ftyp")
@@ -159,48 +186,14 @@ object Mp4 {
     * absolute offsets from the stsc chunk runs + stco chunk offsets
     * + intra-chunk size prefix sums. Left(reason) quarantines;
     * bounds-checked like [[decodeMp4]]. */
-  private case class WalkFail(reason: String)
-    extends RuntimeException(reason)
-
   private[graft] def decodeMp4Frames(bytes: Array[Byte]):
       Either[String, Seq[Mp4Frame]] =
-    scala.util.Try(decodeFramesWalk(bytes)).toEither
-      .left.map {
-        case WalkFail(r) => r
-        case e: IllegalArgumentException if e.getMessage != null =>
-          e.getMessage.stripPrefix("requirement failed: ")
-        case _ => "malformed_box_payload"
-      }.flatten
+    quarantined(decodeFramesWalk(bytes))
 
   private def decodeFramesWalk(bytes: Array[Byte]):
       Either[String, Seq[Mp4Frame]] = {
-    def u32(p: Int): Long =
-      ((bytes(p) & 0xFFL) << 24) | ((bytes(p + 1) & 0xFFL) << 16) |
-        ((bytes(p + 2) & 0xFFL) << 8) | (bytes(p + 3) & 0xFFL)
-    def u64(p: Int): Long = (u32(p) << 32) | u32(p + 4)
-    def tag(p: Int): String = new String(bytes, p, 4, "US-ASCII")
-    def box(p: Int, limit: Int): Option[(String, Int, Int)] = {
-      if (p + 8 > limit) return None
-      val size32 = u32(p)
-      val t = tag(p + 4)
-      val (start, size) =
-        if (size32 == 1) {
-          if (p + 16 > limit) return None
-          (p + 16, u64(p + 8))
-        } else (p + 8, size32)
-      if (size < (start - p) || p + size > limit) None
-      else Some((t, start, p + size.toInt))
-    }
-    def children(from: Int, limit: Int): Seq[(String, Int, Int)] = {
-      val out = Seq.newBuilder[(String, Int, Int)]
-      var p = from
-      var bad = false
-      while (p < limit && !bad) box(p, limit) match {
-        case Some((t, s, e)) => out += ((t, s, e)); p = e
-        case None => bad = true
-      }
-      if (bad) Seq.empty else out.result()
-    }
+    val boxes = new BoxReader(bytes)
+    import boxes._
     val top = children(0, bytes.length)
     val (_, ms, me) = top.find(_._1 == "moov")
       .getOrElse(return Left("missing_moov"))
@@ -315,44 +308,12 @@ object Mp4 {
     * structures. */
   private[graft] def decodeMp4Codec(bytes: Array[Byte]):
       Either[String, (Double, Double, Seq[Mp4CodecEntry])] =
-    scala.util.Try(decodeCodecWalk(bytes)).toEither
-      .left.map {
-        case WalkFail(r) => r
-        case e: IllegalArgumentException if e.getMessage != null =>
-          e.getMessage.stripPrefix("requirement failed: ")
-        case _ => "malformed_box_payload"
-      }.flatten
+    quarantined(decodeCodecWalk(bytes))
 
   private def decodeCodecWalk(bytes: Array[Byte]):
       Either[String, (Double, Double, Seq[Mp4CodecEntry])] = {
-    def u32(p: Int): Long =
-      ((bytes(p) & 0xFFL) << 24) | ((bytes(p + 1) & 0xFFL) << 16) |
-        ((bytes(p + 2) & 0xFFL) << 8) | (bytes(p + 3) & 0xFFL)
-    def u64(p: Int): Long = (u32(p) << 32) | u32(p + 4)
-    def u16(p: Int): Int = ((bytes(p) & 0xFF) << 8) | (bytes(p + 1) & 0xFF)
-    def tag(p: Int): String = new String(bytes, p, 4, "US-ASCII")
-    def box(p: Int, limit: Int): Option[(String, Int, Int)] = {
-      if (p + 8 > limit) return None
-      val size32 = u32(p)
-      val t = tag(p + 4)
-      val (start, size) =
-        if (size32 == 1) {
-          if (p + 16 > limit) return None
-          (p + 16, u64(p + 8))
-        } else (p + 8, size32)
-      if (size < (start - p) || p + size > limit) None
-      else Some((t, start, p + size.toInt))
-    }
-    def children(from: Int, limit: Int): Seq[(String, Int, Int)] = {
-      val out = Seq.newBuilder[(String, Int, Int)]
-      var p = from
-      var bad = false
-      while (p < limit && !bad) box(p, limit) match {
-        case Some((t, s, e)) => out += ((t, s, e)); p = e
-        case None => bad = true
-      }
-      if (bad) Seq.empty else out.result()
-    }
+    val boxes = new BoxReader(bytes)
+    import boxes._
     val top = children(0, bytes.length)
     val (_, ms, me) = top.find(_._1 == "moov")
       .getOrElse(return Left("missing_moov"))

@@ -101,6 +101,26 @@ class RelationalSpec extends SparkSpec {
     }
   }
 
+  test("oracle registry: every oracle names a query, only the declared rows-only queries lack one, no rendered SQL keeps an interpolation") {
+    SparkEntry.setOracleContext(spark, sf)
+    val oracles = SparkEntry.oracleSql
+    val queries = SparkEntry.queries.keySet
+    assert(oracles.keySet.subsetOf(queries), oracles.keySet -- queries)
+    // sketches, an approximate quantile, a float whitening and a JPEG
+    // decode have no exact DuckDB twin: rows-only by declaration, so
+    // any other query losing its oracle fails here
+    assert(queries -- oracles.keySet === Set("distinct_users_daily_approx",
+      "embedding_whiten", "image_jpeg_stats", "vocab_heavy_hitters",
+      "zonal_spi_quantiles_approx"))
+    // a `${` or `$nameSql` left in the text is a literal that lost its
+    // interpolator; `null` is a shared fragment read before its val
+    // was initialized
+    val leftover = """\$\{|\$[a-z]\w*Sql\b|\bnull\b""".r
+    oracles.foreach { case (q, sql) =>
+      assert(leftover.findFirstIn(sql).isEmpty, s"$q: ${leftover.findFirstIn(sql)}")
+    }
+  }
+
   test("entry: flagship returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
