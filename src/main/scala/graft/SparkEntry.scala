@@ -324,6 +324,17 @@ object SparkEntry {
   /** A reading in integer cents, rounded half up. */
   private val centsSql = "CAST(floor(value * 100 + 0.5) AS BIGINT)"
 
+  /** The output rounding rule: `x` to `digits` decimals, half up
+    * through the IEEE chain floor(x·10ⁿ + 0.5)/10ⁿ, never `round`.
+    * `x` is spliced as is, so it must bind at least as tightly as `*`
+    * (parenthesize a sum). */
+  private def quantSql(x: String, digits: Int): String =
+    s"floor($x * 1e$digits + 0.5) / 1e$digits"
+
+  /** [[quantSql]]'s grid as exact integer units. */
+  private def unitsSql(x: String, digits: Int): String =
+    s"CAST(floor($x * 1e$digits + 0.5) AS BIGINT)"
+
   /** A group's exact cent sum. */
   private val centSumSql = s"CAST(sum($centsSql) AS BIGINT)"
 
@@ -447,10 +458,10 @@ object SparkEntry {
       |        list_cosine_similarity(pe, embedding::DOUBLE[]) AS cos
       |      FROM p, embeddings WHERE vec_id != probe_id)""".stripMargin
   private val rankedCosCte =
-    """r AS (SELECT probe_id, nb_id,
+    s"""r AS (SELECT probe_id, nb_id,
       |        row_number() OVER (PARTITION BY probe_id
-      |          ORDER BY floor(cos * 1e6 + 0.5) / 1e6 DESC, nb_id ASC) AS rk,
-      |        floor(cos * 1e4 + 0.5) / 1e4 AS cosine
+      |          ORDER BY ${quantSql("cos", 6)} DESC, nb_id ASC) AS rk,
+      |        ${quantSql("cos", 4)} AS cosine
       |      FROM c)""".stripMargin
 
   /** The exact top-10 of each probe `p` passing `probeWhere`, by
@@ -462,24 +473,24 @@ object SparkEntry {
        |  FROM v p, v c WHERE $probeWhere AND c.vec_id != p.vec_id),
        |br AS (SELECT probe_id, nb_id,
        |    row_number() OVER (PARTITION BY probe_id
-       |      ORDER BY floor(cos * 1e6 + 0.5) / 1e6 DESC, nb_id ASC) AS rk,
-       |    floor(cos * 1e4 + 0.5) / 1e4 AS cosine
+       |      ORDER BY ${quantSql("cos", 6)} DESC, nb_id ASC) AS rk,
+       |    ${quantSql("cos", 4)} AS cosine
        |  FROM bc),
        |bfr AS (SELECT probe_id, nb_id,
-       |    CAST(floor(cosine * 1e4 + 0.5) AS BIGINT) AS cos_u
+       |    ${unitsSql("cosine", 4)} AS cos_u
        |  FROM br WHERE rk <= 10)""".stripMargin
 
   /** A vector's rank over the centroids `(b, ss, c)` by the 6-dp
     * rounded squared distance less |e|² (id tie-break): rn = 1 is its
     * home cell. */
   private val centroidRankSql = "row_number() OVER (PARTITION BY vec_id" +
-    " ORDER BY floor((ss - 2 * list_inner_product(e, c)) * 1e6 + 0.5) / 1e6 ASC," +
+    s" ORDER BY ${quantSql("(ss - 2 * list_inner_product(e, c))", 6)} ASC," +
     " b ASC) AS rn"
 
   /** A probe's rank over the centroids by the 6-dp rounded centroid
     * cosine (id tie-break): the probe routing order. */
   private val probeRouteRankSql = "row_number() OVER (PARTITION BY probe_id" +
-    " ORDER BY floor(list_cosine_similarity(pe, c) * 1e6 + 0.5) / 1e6 DESC," +
+    s" ORDER BY ${quantSql("list_cosine_similarity(pe, c)", 6)} DESC," +
     " b ASC) AS rn"
 
   /** The language-ID marker words per language, their per-document
@@ -818,15 +829,15 @@ object SparkEntry {
     * to 1e-8: `den(user_id, den_u, n_days)` and `num(user_id, lag,
     * num_u, n_pairs)`. */
   private val acfSumsCtes =
-    """den AS (
+    s"""den AS (
        |  SELECT user_id,
-       |    CAST(sum(CAST(floor(dev * dev * 1e8 + 0.5) AS BIGINT)) AS BIGINT)
+       |    CAST(sum(${unitsSql("dev * dev", 8)}) AS BIGINT)
        |      AS den_u,
        |    count(*) AS n_days
        |  FROM dev GROUP BY 1),
        |num AS (
        |  SELECT a.user_id, k.lag,
-       |    CAST(sum(CAST(floor(a.dev * b.dev * 1e8 + 0.5) AS BIGINT)) AS BIGINT)
+       |    CAST(sum(${unitsSql("a.dev * b.dev", 8)}) AS BIGINT)
        |      AS num_u,
        |    count(*) AS n_pairs
        |  FROM dev a
@@ -857,7 +868,7 @@ object SparkEntry {
 
   /** The Mann–Kendall z and trend verdict columns over `z_raw`. */
   private val mkVerdictSql =
-    """floor(z_raw * 1e4 + 0.5) / 1e4 AS z_stat,
+    s"""${quantSql("z_raw", 4)} AS z_stat,
        |  CASE WHEN z_raw IS NULL THEN 'undefined'
        |       WHEN z_raw > 1.96 THEN 'increasing'
        |       WHEN z_raw < -1.96 THEN 'decreasing'
@@ -965,7 +976,7 @@ object SparkEntry {
       |    (CAST(0.9 AS DOUBLE))) AS qs(q)),
       |s AS (
       |  SELECT user_id, day, q,
-      |    CAST(sum(CAST(floor(band * 1e6 + 0.5) AS BIGINT))
+      |    CAST(sum(${unitsSql("band", 6)})
       |      OVER (PARTITION BY user_id, q ORDER BY day
       |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cs
       |  FROM b)
@@ -986,9 +997,9 @@ object SparkEntry {
         |agg AS (
         |  SELECT v.user_id, w.period,
         |    count(*) AS n_days,
-        |    CAST(sum(CAST(floor(v.dev * w.cw * 1e6 + 0.5) AS BIGINT))
+        |    CAST(sum(${unitsSql("v.dev * w.cw", 6)})
         |      AS BIGINT) AS c_u,
-        |    CAST(sum(CAST(floor(v.dev * w.sw * 1e6 + 0.5) AS BIGINT))
+        |    CAST(sum(${unitsSql("v.dev * w.sw", 6)})
         |      AS BIGINT) AS s_u
         |  FROM dev v JOIN wt w ON v.x % w.period = w.r
         |  GROUP BY 1, 2)
@@ -1008,7 +1019,7 @@ object SparkEntry {
         |$acfSumsCtes
         |SELECT n.user_id, n.lag, d.n_days, n.n_pairs,
         |  CASE WHEN n.n_pairs >= 5 AND d.den_u > 0
-        |    THEN floor(CAST(n.num_u AS DOUBLE) / d.den_u * 1e4 + 0.5) / 1e4
+        |    THEN ${quantSql("CAST(n.num_u AS DOUBLE) / d.den_u", 4)}
         |  END AS acf
         |FROM num n JOIN den d ON n.user_id = d.user_id""".stripMargin
 
@@ -1040,7 +1051,7 @@ object SparkEntry {
     * entropy-rate query consumes the transition matrix (composition
     * mirrored on both sides). */
   private val markovSql: String =
-    """WITH s AS (
+    s"""WITH s AS (
       |  SELECT event_type,
       |    lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
       |      AS from_type
@@ -1053,7 +1064,7 @@ object SparkEntry {
       |    CAST(sum(n_trans) OVER (PARTITION BY from_type) AS BIGINT) AS n_from
       |  FROM t)
       |SELECT from_type, to_type, n_trans, n_from,
-      |  floor(CAST(n_trans AS DOUBLE) / n_from * 1e4 + 0.5) / 1e4 AS p
+      |  ${quantSql("CAST(n_trans AS DOUBLE) / n_from", 4)} AS p
       |FROM w""".stripMargin
 
 
@@ -1240,7 +1251,7 @@ object SparkEntry {
       |)
       |SELECT event_id, $k, $ocarry round(x, 2) AS accum,
       |  CASE WHEN a_stat > 1e-10 THEN
-      |    floor((CASE WHEN h < 0.5 THEN -xq ELSE xq END) * 1e4 + 0.5) / 1e4
+      |    ${quantSql("(CASE WHEN h < 0.5 THEN -xq ELSE xq END)", 4)}
       |  ELSE NULL END AS spi
       |FROM n3""".stripMargin
   }
@@ -1293,7 +1304,7 @@ object SparkEntry {
       |    AND r.p >= s.p_lo AND (r.p < s.p_hi OR s.p_hi = $p1))
       |SELECT event_id, CAST(grp AS BIGINT) AS grp, var,
       |  round(x, 2) AS fcst_value,
-      |  floor(raw * 1e4 + 0.5) / 1e4 AS corrected
+      |  ${quantSql("raw", 4)} AS corrected
       |FROM fin""".stripMargin
   }
 
@@ -1414,13 +1425,13 @@ object SparkEntry {
       |lr AS (
       |  SELECT probe_id, nb_id,
       |    row_number() OVER (PARTITION BY probe_id
-      |      ORDER BY floor(list_cosine_similarity(vp.e, vc.e) * 1e6 + 0.5) / 1e6 DESC,
+      |      ORDER BY ${quantSql("list_cosine_similarity(vp.e, vc.e)", 6)} DESC,
       |               nb_id ASC) AS rk,
-      |    floor(list_cosine_similarity(vp.e, vc.e) * 1e4 + 0.5) / 1e4 AS cosine
+      |    ${quantSql("list_cosine_similarity(vp.e, vc.e)", 4)} AS cosine
       |  FROM cand JOIN v vp ON vp.vec_id = probe_id
       |    JOIN v vc ON vc.vec_id = nb_id),
       |lshr AS (SELECT probe_id, nb_id,
-      |    CAST(floor(cosine * 1e4 + 0.5) AS BIGINT) AS cos_u
+      |    ${unitsSql("cosine", 4)} AS cos_u
       |  FROM lr WHERE rk <= 10),
       |${bruteTop10Ctes(probeWhere)},
       |per AS (
@@ -1434,7 +1445,7 @@ object SparkEntry {
       |ls AS (SELECT probe_id, sum(cos_u) AS lsh_u,
       |    CAST(count(*) AS BIGINT) AS n_l
       |  FROM lshr GROUP BY 1)
-      |SELECT per.probe_id, n_hit, floor(n_hit * 1.0 / k * 1e4 + 0.5) / 1e4 AS recall,
+      |SELECT per.probe_id, n_hit, ${quantSql("n_hit * 1.0 / k", 4)} AS recall,
       |  floor((CAST(bf_u AS DOUBLE) / k - CAST(lsh_u AS DOUBLE) / n_l)
       |    / 1e4 * 1e4 + 0.5) / 1e4 AS cos_regret$rateCol
       |FROM per LEFT JOIN ls ON per.probe_id = ls.probe_id""".stripMargin
@@ -1898,9 +1909,9 @@ object SparkEntry {
     s"""r AS (
       |  SELECT cd.probe_id, cd.vec_id AS neighbor_id,
       |    row_number() OVER (PARTITION BY cd.probe_id
-      |      ORDER BY floor(list_cosine_similarity(vp.e, vc.e) * 1e6 + 0.5) / 1e6 DESC,
+      |      ORDER BY ${quantSql("list_cosine_similarity(vp.e, vc.e)", 6)} DESC,
       |               cd.vec_id ASC) AS rk,
-      |    floor(list_cosine_similarity(vp.e, vc.e) * 1e4 + 0.5) / 1e4 AS cosine
+      |    ${quantSql("list_cosine_similarity(vp.e, vc.e)", 4)} AS cosine
       |  FROM $from JOIN v vp ON vp.vec_id = cd.probe_id
       |    JOIN v vc ON vc.vec_id = cd.vec_id)""".stripMargin
 
@@ -1928,7 +1939,7 @@ object SparkEntry {
       |cand AS (
       |  SELECT pr.vec_id, s.pid,
       |    row_number() OVER (PARTITION BY pr.vec_id
-      |      ORDER BY floor((s.ss - 2 * list_inner_product(pr.e, s.c)) * 1e6 + 0.5) / 1e6 ASC,
+      |      ORDER BY ${quantSql("(s.ss - 2 * list_inner_product(pr.e, s.c))", 6)} ASC,
       |               s.pid ASC) AS rn
       |  FROM pr JOIN subs s ON s.pid // $subK = pr.b),
       |asgn AS (SELECT vec_id, pid FROM cand WHERE rn = 1)""".stripMargin
@@ -1977,9 +1988,9 @@ object SparkEntry {
       |r AS (
       |  SELECT probe_id, vec_id AS neighbor_id,
       |    row_number() OVER (PARTITION BY probe_id
-      |      ORDER BY floor(list_cosine_similarity(pe, e) * 1e6 + 0.5) / 1e6 DESC,
+      |      ORDER BY ${quantSql("list_cosine_similarity(pe, e)", 6)} DESC,
       |               vec_id ASC) AS rk,
-      |    floor(list_cosine_similarity(pe, e) * 1e4 + 0.5) / 1e4 AS cosine
+      |    ${quantSql("list_cosine_similarity(pe, e)", 4)} AS cosine
       |  FROM cand)
       |SELECT probe_id AS vec_id, neighbor_id, rk, cosine
       |FROM r WHERE rk <= 5""".stripMargin
@@ -2038,7 +2049,7 @@ object SparkEntry {
       subs: Array[Array[Array[Double]]]): String =
     s"""${twoLevelTopkCtes(sup, subs)},
       |tlr AS (SELECT probe_id, neighbor_id AS nb_id,
-      |    CAST(floor(cosine * 1e4 + 0.5) AS BIGINT) AS cos_u
+      |    ${unitsSql("cosine", 4)} AS cos_u
       |  FROM r WHERE rk <= 10),
       |${bruteTop10Ctes(s"p.vec_id IN $probeIdsSql")},
       |per AS (
@@ -2053,7 +2064,7 @@ object SparkEntry {
       |    CAST(count(*) AS BIGINT) AS n_l
       |  FROM tlr GROUP BY 1)
       |SELECT per.probe_id, n_hit,
-      |  floor(n_hit * 1.0 / k * 1e4 + 0.5) / 1e4 AS recall,
+      |  ${quantSql("n_hit * 1.0 / k", 4)} AS recall,
       |  floor((CAST(bf_u AS DOUBLE) / k - CAST(ap_u AS DOUBLE) / n_l)
       |    / 1e4 * 1e4 + 0.5) / 1e4 AS cos_regret
       |FROM per LEFT JOIN ls ON per.probe_id = ls.probe_id""".stripMargin
@@ -2079,7 +2090,7 @@ object SparkEntry {
       |enc AS (
       |  SELECT vec_id, m, k,
       |    row_number() OVER (PARTITION BY vec_id, m
-      |      ORDER BY floor((ss - 2 * list_inner_product(sv, c)) * 1e6 + 0.5) / 1e6 ASC,
+      |      ORDER BY ${quantSql("(ss - 2 * list_inner_product(sv, c))", 6)} ASC,
       |               k ASC) AS rn
       |  FROM sub JOIN books USING (m)),
       |codes AS (SELECT vec_id, m, k AS code FROM enc WHERE rn = 1),
@@ -2090,7 +2101,7 @@ object SparkEntry {
       |  FROM p, books),
       |adc AS (
       |  SELECT cs.vec_id, l.probe_id,
-      |    CAST(sum(CAST(floor(l.ld * 1e9 + 0.5) AS BIGINT)) AS BIGINT)
+      |    CAST(sum(${unitsSql("l.ld", 9)}) AS BIGINT)
       |      AS adc_u
       |  FROM codes cs JOIN lut l ON l.m = cs.m AND l.k = cs.code
       |  WHERE cs.vec_id != l.probe_id
@@ -2103,9 +2114,9 @@ object SparkEntry {
       |r AS (
       |  SELECT s.probe_id, s.vec_id AS neighbor_id,
       |    row_number() OVER (PARTITION BY s.probe_id
-      |      ORDER BY floor(list_cosine_similarity(vp.e, vc.e) * 1e6 + 0.5) / 1e6 DESC,
+      |      ORDER BY ${quantSql("list_cosine_similarity(vp.e, vc.e)", 6)} DESC,
       |               s.vec_id ASC) AS rk,
-      |    floor(list_cosine_similarity(vp.e, vc.e) * 1e4 + 0.5) / 1e4 AS cosine
+      |    ${quantSql("list_cosine_similarity(vp.e, vc.e)", 4)} AS cosine
       |  FROM sh s JOIN v vp ON vp.vec_id = s.probe_id
       |    JOIN v vc ON vc.vec_id = s.vec_id
       |  WHERE s.srn <= 50)
@@ -2175,7 +2186,7 @@ object SparkEntry {
   private def lshPairsSql(bits: Int): String =
     s"""${lshPairsCtes(bits)}
       |SELECT id_a, id_b,
-      |  floor(list_cosine_similarity(va.e, vb.e) * 1e4 + 0.5) / 1e4 AS cosine
+      |  ${quantSql("list_cosine_similarity(va.e, vb.e)", 4)} AS cosine
       |FROM pairs JOIN v va ON va.vec_id = id_a JOIN v vb ON vb.vec_id = id_b
       |WHERE list_cosine_similarity(va.e, vb.e) >= 0.35""".stripMargin
 
@@ -2185,7 +2196,7 @@ object SparkEntry {
       |$embDropsCte,
       |truth AS (
       |  SELECT a.vec_id AS id_a, c.vec_id AS id_b,
-      |    floor(list_cosine_similarity(a.e, c.e) * 1e4 + 0.5) / 1e4 AS cos4
+      |    ${quantSql("list_cosine_similarity(a.e, c.e)", 4)} AS cos4
       |  FROM v a JOIN v c ON a.vec_id < c.vec_id),
       |per AS (
       |  SELECT least(floor(cos4 * 10), 9.0) / 10.0 AS bucket,
@@ -2195,7 +2206,7 @@ object SparkEntry {
       |  FROM truth LEFT JOIN cand USING (id_a, id_b)
       |  WHERE cos4 >= 0.35 GROUP BY 1)
       |SELECT bucket, n_true, n_found,
-      |  floor(CAST(n_found AS DOUBLE) / n_true * 1e4 + 0.5) / 1e4 AS recall,
+      |  ${quantSql("CAST(n_found AS DOUBLE) / n_true", 4)} AS recall,
       |  dropped_buckets, dropped_memberships, est_dropped_pairs
       |FROM per CROSS JOIN drops""".stripMargin
 
@@ -2217,7 +2228,7 @@ object SparkEntry {
       |np AS (SELECT CAST(count(*) AS BIGINT) AS n_probes FROM probe),
       |truth AS (
       |  SELECT a.vec_id AS probe_id, c.vec_id AS id_b,
-      |    floor(list_cosine_similarity(a.e, c.e) * 1e4 + 0.5) / 1e4 AS cos4
+      |    ${quantSql("list_cosine_similarity(a.e, c.e)", 4)} AS cos4
       |  FROM v a JOIN probe p ON a.vec_id = p.vec_id
       |  JOIN v c ON c.vec_id != a.vec_id),
       |per AS (
@@ -2228,7 +2239,7 @@ object SparkEntry {
       |  FROM truth LEFT JOIN candp USING (probe_id, id_b)
       |  WHERE cos4 >= 0.35 GROUP BY 1)
       |SELECT bucket, n_true, n_found,
-      |  floor(CAST(n_found AS DOUBLE) / n_true * 1e4 + 0.5) / 1e4 AS recall,
+      |  ${quantSql("CAST(n_found AS DOUBLE) / n_true", 4)} AS recall,
       |  CAST(0.0625 AS DOUBLE) AS sample_rate, n_probes,
       |  dropped_buckets, dropped_memberships, est_dropped_pairs
       |FROM per CROSS JOIN np CROSS JOIN drops""".stripMargin
@@ -2253,8 +2264,7 @@ object SparkEntry {
       |sc AS (
       |  SELECT fr.probe_id, fr.vec_id, fr.first_rn,
       |    list_cosine_similarity(p.pe, hv.e) AS cos,
-      |    CAST(floor(list_cosine_similarity(p.pe, hv.e) * 1e4 + 0.5)
-      |      AS BIGINT) AS cos_u
+      |    ${unitsSql("list_cosine_similarity(p.pe, hv.e)", 4)} AS cos_u
       |  FROM (
       |    SELECT rt.probe_id, hm.vec_id, min(rt.rn) AS first_rn
       |    FROM rt JOIN hm USING (bucket)
@@ -2265,7 +2275,7 @@ object SparkEntry {
       |tw AS (
       |  SELECT probe_id, vec_id, cos_u,
       |    row_number() OVER (PARTITION BY probe_id
-      |      ORDER BY floor(cos * 1e6 + 0.5) / 1e6 DESC, vec_id ASC) AS rk
+      |      ORDER BY ${quantSql("cos", 6)} DESC, vec_id ASC) AS rk
       |  FROM sc),
       |truth AS (SELECT probe_id, vec_id, cos_u FROM tw WHERE rk <= 10),
       |tt AS (SELECT CAST(count(*) AS BIGINT) AS n_truth,
@@ -2279,7 +2289,7 @@ object SparkEntry {
       |it AS (
       |  SELECT nprobe, probe_id, vec_id, cos_u,
       |    row_number() OVER (PARTITION BY nprobe, probe_id
-      |      ORDER BY floor(cos * 1e6 + 0.5) / 1e6 DESC, vec_id ASC) AS rk
+      |      ORDER BY ${quantSql("cos", 6)} DESC, vec_id ASC) AS rk
       |  FROM rung),
       |top AS (
       |  SELECT it.nprobe,
@@ -2292,7 +2302,7 @@ object SparkEntry {
       |nc AS (SELECT nprobe, CAST(count(*) AS BIGINT) AS n_cands
       |       FROM rung GROUP BY 1)
       |SELECT CAST(nc.nprobe AS BIGINT) AS nprobe, n_cands, n_hit, n_truth,
-      |  floor(n_hit * 1.0 / n_truth * 1e4 + 0.5) / 1e4 AS recall_at10,
+      |  ${quantSql("n_hit * 1.0 / n_truth", 4)} AS recall_at10,
       |  floor(CAST(tu - iu AS DOUBLE) / n_truth + 0.5) / 1e4 AS mean_regret
       |FROM nc JOIN top USING (nprobe), tt""".stripMargin
 
@@ -2321,7 +2331,7 @@ object SparkEntry {
          |  SELECT probe_id, vec_id, cos_u FROM (
          |    SELECT probe_id, vec_id, cos_u,
          |      row_number() OVER (PARTITION BY probe_id
-         |        ORDER BY floor(cos * 1e6 + 0.5) / 1e6 DESC, vec_id ASC) AS rk
+         |        ORDER BY ${quantSql("cos", 6)} DESC, vec_id ASC) AS rk
          |    FROM sc$nl) WHERE rk <= 10),
          |row$nl AS (
          |  SELECT CAST($nl AS BIGINT) AS nlist, CAST($np AS BIGINT) AS nprobe,
@@ -2340,14 +2350,13 @@ object SparkEntry {
        |sa AS (
        |  SELECT p.probe_id, v.vec_id,
        |    list_cosine_similarity(p.pe, v.e) AS cos,
-       |    CAST(floor(list_cosine_similarity(p.pe, v.e) * 1e4 + 0.5)
-       |      AS BIGINT) AS cos_u
+       |    ${unitsSql("list_cosine_similarity(p.pe, v.e)", 4)} AS cos_u
        |  FROM v JOIN p ON v.vec_id != p.probe_id),
        |truth AS (
        |  SELECT probe_id, vec_id, cos_u AS t_u FROM (
        |    SELECT probe_id, vec_id, cos_u,
        |      row_number() OVER (PARTITION BY probe_id
-       |        ORDER BY floor(cos * 1e6 + 0.5) / 1e6 DESC, vec_id ASC) AS rk
+       |        ORDER BY ${quantSql("cos", 6)} DESC, vec_id ASC) AS rk
        |    FROM sa) WHERE rk <= 10),
        |tt AS (SELECT CAST(count(*) AS BIGINT) AS n_truth,
        |         CAST(sum(t_u) AS BIGINT) AS tu FROM truth),
@@ -2355,7 +2364,7 @@ object SparkEntry {
        |allrungs AS (
        |  $unioned)
        |SELECT nlist, nprobe, n_cands, n_hit, n_truth,
-       |  floor(n_hit * 1.0 / n_truth * 1e4 + 0.5) / 1e4 AS recall_at10,
+       |  ${quantSql("n_hit * 1.0 / n_truth", 4)} AS recall_at10,
        |  floor(CAST(tu - iu AS DOUBLE) / n_truth + 0.5) / 1e4 AS mean_regret
        |FROM allrungs, tt
        |ORDER BY nlist""".stripMargin
@@ -2423,7 +2432,7 @@ object SparkEntry {
         |  FROM documents WHERE octet_length(encode(text)) > 0)
         |SELECT doc_id, format, CAST(n AS BIGINT) AS n_bytes,
         |  md5($hexTerms) AS resample_fp,
-        |  floor(CAST($valTerms AS DOUBLE) / $n * 1e4 + 0.5) / 1e4
+        |  ${quantSql(s"CAST($valTerms AS DOUBLE) / $n", 4)}
         |    AS mean_sample
         |FROM raw""".stripMargin
     },
@@ -2617,11 +2626,11 @@ object SparkEntry {
         |    count(*) OVER (PARTITION BY priority) AS n
         |  FROM lag)
         |SELECT priority, count(*) AS n_lines,
-        |  floor(CAST(sum(lag_days) AS DOUBLE) / count(*) * 1e4 + 0.5) / 1e4
+        |  ${quantSql("CAST(sum(lag_days) AS DOUBLE) / count(*)", 4)}
         |    AS mean_lag,
-        |  floor(${rankInterpSql("lag_days", "0.5")} * 1e4 + 0.5) / 1e4 AS p50,
-        |  floor(${rankInterpSql("lag_days", "0.9")} * 1e4 + 0.5) / 1e4 AS p90,
-        |  floor(${rankInterpSql("lag_days", "0.99")} * 1e4 + 0.5) / 1e4 AS p99
+        |  ${quantSql(rankInterpSql("lag_days", "0.5"), 4)} AS p50,
+        |  ${quantSql(rankInterpSql("lag_days", "0.9"), 4)} AS p90,
+        |  ${quantSql(rankInterpSql("lag_days", "0.99"), 4)} AS p99
         |FROM r GROUP BY 1""".stripMargin,
 
     "q10_returned_items" ->
@@ -2855,7 +2864,7 @@ object SparkEntry {
         s"$w * (CASE WHEN ${lv(i)} IS NULL THEN 0.0 ELSE 1.0 END)"
       }.mkString(" + ")
       s"""SELECT event_id, user_id, round(value, 2) AS value,
-        |  floor(($num) / ($den) * 1e4 + 0.5) / 1e4 AS ewma
+        |  ${quantSql(s"($num) / ($den)", 4)} AS ewma
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin
     },
@@ -2958,10 +2967,10 @@ object SparkEntry {
         |  GROUP BY 1)
         |SELECT user_id, CAST(n AS BIGINT) AS n_obs,
         |  CASE WHEN n * sx2 - sx * sx > 0
-        |    THEN floor((n * sxy - sx * sy) / (n * sx2 - sx * sx) * 1e6 + 0.5) / 1e6 END
+        |    THEN ${quantSql("(n * sxy - sx * sy) / (n * sx2 - sx * sx)", 6)} END
         |    AS slope_per_day,
         |  CASE WHEN n * sx2 - sx * sx > 0
-        |    THEN floor((sy - (n * sxy - sx * sy) / (n * sx2 - sx * sx) * sx) / n * 1e4 + 0.5) / 1e4 END
+        |    THEN ${quantSql("(sy - (n * sxy - sx * sy) / (n * sx2 - sx * sx) * sx) / n", 4)} END
         |    AS intercept,
         |  CASE WHEN n * sx2 - sx * sx > 0 AND n * sy2 - sy * sy > 0
         |    THEN floor((n * sxy - sx * sy) * (n * sxy - sx * sy)
@@ -3014,11 +3023,11 @@ object SparkEntry {
         |    CAST(sum(rs_u) AS DOUBLE) / count(*) / 1e6 AS mean_rs
         |  FROM b GROUP BY 1, 2)
         |SELECT user_id,
-        |  floor(min(CASE WHEN m = 4 THEN mean_rs END) * 1e4 + 0.5) / 1e4
+        |  ${quantSql("min(CASE WHEN m = 4 THEN mean_rs END)", 4)}
         |    AS rs4,
-        |  floor(min(CASE WHEN m = 8 THEN mean_rs END) * 1e4 + 0.5) / 1e4
+        |  ${quantSql("min(CASE WHEN m = 8 THEN mean_rs END)", 4)}
         |    AS rs8,
-        |  floor(min(CASE WHEN m = 16 THEN mean_rs END) * 1e4 + 0.5) / 1e4
+        |  ${quantSql("min(CASE WHEN m = 16 THEN mean_rs END)", 4)}
         |    AS rs16,
         |  CASE WHEN min(CASE WHEN m = 4 THEN mean_rs END) > 0
         |        AND min(CASE WHEN m = 16 THEN mean_rs END) > 0
@@ -3130,8 +3139,8 @@ object SparkEntry {
         |SELECT user_id, n_days,
         |  CAST(u AS DOUBLE) / 100.0 AS threshold,
         |  k AS n_exceed,
-        |  floor(CAST(k AS DOUBLE) / n_days * 1e4 + 0.5) / 1e4 AS exceed_rate,
-        |  floor(CAST(s1 AS DOUBLE) / k / 100.0 * 1e4 + 0.5) / 1e4 AS mean_excess,
+        |  ${quantSql("CAST(k AS DOUBLE) / n_days", 4)} AS exceed_rate,
+        |  ${quantSql("CAST(s1 AS DOUBLE) / k / 100.0", 4)} AS mean_excess,
         |  floor(0.5 * (1.0 - CAST(s1 * s1 AS DOUBLE)
         |    / CAST(k * s2 - s1 * s1 AS DOUBLE)) * 1e4 + 0.5) / 1e4 AS xi,
         |  floor(0.5 * (CAST(s1 AS DOUBLE) / k / 100.0)
@@ -3157,7 +3166,7 @@ object SparkEntry {
         |    CAST(sum(CASE WHEN d1 = '9' THEN 1 ELSE 0 END) AS BIGINT) AS n9
         |  FROM c GROUP BY 1 HAVING count(*) >= 50)
         |SELECT user_id, n_obs, n1, n2, n3, n4, n5, n6, n7, n8, n9,
-        |  floor(((n1 - n_obs * 0.3010299956639812) * (n1 - n_obs * 0.3010299956639812) / (n_obs * 0.3010299956639812) + (n2 - n_obs * 0.17609125905568124) * (n2 - n_obs * 0.17609125905568124) / (n_obs * 0.17609125905568124) + (n3 - n_obs * 0.12493873660829992) * (n3 - n_obs * 0.12493873660829992) / (n_obs * 0.12493873660829992) + (n4 - n_obs * 0.09691001300805642) * (n4 - n_obs * 0.09691001300805642) / (n_obs * 0.09691001300805642) + (n5 - n_obs * 0.07918124604762482) * (n5 - n_obs * 0.07918124604762482) / (n_obs * 0.07918124604762482) + (n6 - n_obs * 0.06694678963061322) * (n6 - n_obs * 0.06694678963061322) / (n_obs * 0.06694678963061322) + (n7 - n_obs * 0.05799194697768673) * (n7 - n_obs * 0.05799194697768673) / (n_obs * 0.05799194697768673) + (n8 - n_obs * 0.05115252244738129) * (n8 - n_obs * 0.05115252244738129) / (n_obs * 0.05115252244738129) + (n9 - n_obs * 0.04575749056067514) * (n9 - n_obs * 0.04575749056067514) / (n_obs * 0.04575749056067514)) * 1e4 + 0.5) / 1e4 AS chi2,
+        |  ${quantSql("((n1 - n_obs * 0.3010299956639812) * (n1 - n_obs * 0.3010299956639812) / (n_obs * 0.3010299956639812) + (n2 - n_obs * 0.17609125905568124) * (n2 - n_obs * 0.17609125905568124) / (n_obs * 0.17609125905568124) + (n3 - n_obs * 0.12493873660829992) * (n3 - n_obs * 0.12493873660829992) / (n_obs * 0.12493873660829992) + (n4 - n_obs * 0.09691001300805642) * (n4 - n_obs * 0.09691001300805642) / (n_obs * 0.09691001300805642) + (n5 - n_obs * 0.07918124604762482) * (n5 - n_obs * 0.07918124604762482) / (n_obs * 0.07918124604762482) + (n6 - n_obs * 0.06694678963061322) * (n6 - n_obs * 0.06694678963061322) / (n_obs * 0.06694678963061322) + (n7 - n_obs * 0.05799194697768673) * (n7 - n_obs * 0.05799194697768673) / (n_obs * 0.05799194697768673) + (n8 - n_obs * 0.05115252244738129) * (n8 - n_obs * 0.05115252244738129) / (n_obs * 0.05115252244738129) + (n9 - n_obs * 0.04575749056067514) * (n9 - n_obs * 0.04575749056067514) / (n_obs * 0.04575749056067514))", 4)} AS chi2,
         |  ((n1 - n_obs * 0.3010299956639812) * (n1 - n_obs * 0.3010299956639812) / (n_obs * 0.3010299956639812) + (n2 - n_obs * 0.17609125905568124) * (n2 - n_obs * 0.17609125905568124) / (n_obs * 0.17609125905568124) + (n3 - n_obs * 0.12493873660829992) * (n3 - n_obs * 0.12493873660829992) / (n_obs * 0.12493873660829992) + (n4 - n_obs * 0.09691001300805642) * (n4 - n_obs * 0.09691001300805642) / (n_obs * 0.09691001300805642) + (n5 - n_obs * 0.07918124604762482) * (n5 - n_obs * 0.07918124604762482) / (n_obs * 0.07918124604762482) + (n6 - n_obs * 0.06694678963061322) * (n6 - n_obs * 0.06694678963061322) / (n_obs * 0.06694678963061322) + (n7 - n_obs * 0.05799194697768673) * (n7 - n_obs * 0.05799194697768673) / (n_obs * 0.05799194697768673) + (n8 - n_obs * 0.05115252244738129) * (n8 - n_obs * 0.05115252244738129) / (n_obs * 0.05115252244738129) + (n9 - n_obs * 0.04575749056067514) * (n9 - n_obs * 0.04575749056067514) / (n_obs * 0.04575749056067514)) > 20.09 AS flagged
         |FROM g""".stripMargin,
 
@@ -3244,9 +3253,9 @@ object SparkEntry {
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS peak
         |  FROM daily)
         |SELECT user_id, day,
-        |  floor(level * 1e4 + 0.5) / 1e4 AS level,
-        |  floor(peak * 1e4 + 0.5) / 1e4 AS peak,
-        |  floor((peak - level) * 1e4 + 0.5) / 1e4 AS drawdown
+        |  ${quantSql("level", 4)} AS level,
+        |  ${quantSql("peak", 4)} AS peak,
+        |  ${quantSql("(peak - level)", 4)} AS drawdown
         |FROM w""".stripMargin,
 
     // R, n₁, n₂ are integers from exact comparisons (median is an
@@ -3305,7 +3314,7 @@ object SparkEntry {
         |    END AS z_raw
         |  FROM nd LEFT JOIN runs r2 ON nd.user_id = r2.user_id)
         |SELECT user_id, n AS n_days, n_plus, n_minus, n_runs,
-        |  floor(z_raw * 1e4 + 0.5) / 1e4 AS z_stat,
+        |  ${quantSql("z_raw", 4)} AS z_stat,
         |  CASE WHEN z_raw IS NULL THEN 'undefined'
         |       WHEN abs(z_raw) > 1.96 THEN 'non_random'
         |       ELSE 'random' END AS verdict
@@ -3327,7 +3336,7 @@ object SparkEntry {
         |  CAST(count(*) AS BIGINT) AS n_days,
         |  CAST(sum(CASE WHEN d.y > t.thr THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_extreme,
-        |  floor(min(t.thr) * 1e4 + 0.5) / 1e4 AS threshold,
+        |  ${quantSql("min(t.thr)", 4)} AS threshold,
         |  floor(CAST(sum(CASE WHEN d.y > t.thr THEN 1 ELSE 0 END) AS DOUBLE)
         |    / count(*) * 1e4 + 0.5) / 1e4 AS extreme_share
         |FROM daily d JOIN thr t ON d.user_id = t.user_id
@@ -3364,8 +3373,7 @@ object SparkEntry {
         |SELECT user_id, day,
         |  CAST(count(*) AS BIGINT) AS n_islands,
         |  CAST(sum(end_s - start_s) AS BIGINT) AS covered_s,
-        |  floor(CAST(sum(end_s - start_s) AS DOUBLE) / 86400.0 * 1e4 + 0.5)
-        |    / 1e4 AS uptime_share
+        |  ${quantSql("CAST(sum(end_s - start_s) AS DOUBLE) / 86400.0", 4)} AS uptime_share
         |FROM grp GROUP BY 1, 2""".stripMargin,
 
     // 2·midrank = 2·rank + t − 1 is integral, so rank sums and the
@@ -3402,7 +3410,7 @@ object SparkEntry {
         |  FROM g)
         |SELECT user_id, na AS n_pre, nb AS n_post,
         |  CAST(u2 AS DOUBLE) / 2.0 AS u_stat,
-        |  floor(z_raw * 1e4 + 0.5) / 1e4 AS z_stat,
+        |  ${quantSql("z_raw", 4)} AS z_stat,
         |  CASE WHEN z_raw IS NULL THEN 'undefined'
         |       WHEN abs(z_raw) > 1.96 THEN 'shifted'
         |       ELSE 'consistent' END AS verdict
@@ -3413,7 +3421,7 @@ object SparkEntry {
     "ts_pctl_of_record" ->
       s"""WITH daily AS ${seriesSql(s"$dayLabelSql AS day", s"$centMeanSql AS level")}
         |SELECT user_id, day,
-        |  floor(level * 1e4 + 0.5) / 1e4 AS level,
+        |  ${quantSql("level", 4)} AS level,
         |  floor(cume_dist() OVER (PARTITION BY user_id ORDER BY level)
         |    * 1e4 + 0.5) / 1e4 AS pctl,
         |  CAST(count(*) OVER (PARTITION BY user_id) AS BIGINT) AS n_days
@@ -3476,7 +3484,7 @@ object SparkEntry {
         |       FROM (SELECT DISTINCT user_id, session_id FROM s)),
         |agg AS (
         |  SELECT min(n) AS n_converted,
-        |    floor(CAST(min(sl) AS DOUBLE) / min(n) * 1e4 + 0.5) / 1e4
+        |    ${quantSql("CAST(min(sl) AS DOUBLE) / min(n)", 4)}
         |      AS mean_s,
         |    $pctAggSql
         |  FROM cum)
@@ -3519,7 +3527,7 @@ object SparkEntry {
         |acf_t AS (
         |  SELECT n.user_id, n.lag, d.n_days,
         |    CASE WHEN n.n_pairs >= 5 AND d.den_u > 0
-        |      THEN floor(CAST(n.num_u AS DOUBLE) / d.den_u * 1e4 + 0.5) / 1e4
+        |      THEN ${quantSql("CAST(n.num_u AS DOUBLE) / d.den_u", 4)}
         |    END AS acf
         |  FROM num n JOIN den d ON n.user_id = d.user_id),
         |p AS (
@@ -3553,7 +3561,7 @@ object SparkEntry {
       s"""WITH pg AS ($pgramSql),
         |u AS (
         |  SELECT user_id, period,
-        |    CAST(floor(power * 1e4 + 0.5) AS BIGINT) AS pu
+        |    ${unitsSql("power", 4)} AS pu
         |  FROM pg),
         |t AS (
         |  SELECT user_id, count(*) AS n_periods,
@@ -3570,10 +3578,10 @@ object SparkEntry {
         |SELECT t.user_id, t.n_periods,
         |  CAST(e.dom AS BIGINT) AS dominant_period,
         |  CASE WHEN t.tot_u > 0
-        |    THEN floor(CAST(t.max_u AS DOUBLE) / t.tot_u * 1e4 + 0.5) / 1e4
+        |    THEN ${quantSql("CAST(t.max_u AS DOUBLE) / t.tot_u", 4)}
         |  END AS dominant_share,
         |  CASE WHEN t.tot_u > 0
-        |    THEN floor(CAST(e.h_u AS DOUBLE) / 1e6 / $ln3 * 1e4 + 0.5) / 1e4
+        |    THEN ${quantSql(s"CAST(e.h_u AS DOUBLE) / 1e6 / $ln3", 4)}
         |  END AS spectral_entropy
         |FROM t JOIN e USING (user_id)""".stripMargin
     },
@@ -3641,8 +3649,8 @@ object SparkEntry {
         |  )
         |)
         |SELECT w.user_id, wb.n AS n_days, wb.m AS ref_days,
-        |  floor(min(w.v) * 1e4 + 0.5) / 1e4 AS dtw_dist,
-        |  floor(min(w.v) / (wb.n + wb.m) * 1e4 + 0.5) / 1e4 AS dtw_per_step
+        |  ${quantSql("min(w.v)", 4)} AS dtw_dist,
+        |  ${quantSql("min(w.v) / (wb.n + wb.m)", 4)} AS dtw_per_step
         |FROM walk w JOIN wb ON wb.user_id = w.user_id
         |WHERE w.i = wb.n AND w.j = wb.m
         |GROUP BY 1, 2, 3""".stripMargin,
@@ -3663,11 +3671,11 @@ object SparkEntry {
         |agg AS (
         |  SELECT v.user_id, r.lag,
         |    count(*) AS n_pairs,
-        |    CAST(sum(CAST(floor(v.dev * r.rdev * 1e8 + 0.5) AS BIGINT))
+        |    CAST(sum(${unitsSql("v.dev * r.rdev", 8)})
         |      AS BIGINT) AS num_u,
-        |    CAST(sum(CAST(floor(v.dev * v.dev * 1e8 + 0.5) AS BIGINT))
+        |    CAST(sum(${unitsSql("v.dev * v.dev", 8)})
         |      AS BIGINT) AS dx_u,
-        |    CAST(sum(CAST(floor(r.rdev * r.rdev * 1e8 + 0.5) AS BIGINT))
+        |    CAST(sum(${unitsSql("r.rdev * r.rdev", 8)})
         |      AS BIGINT) AS dy_u
         |  FROM dev v JOIN ref r ON v.x = r.xs
         |  GROUP BY 1, 2)
@@ -3703,9 +3711,9 @@ object SparkEntry {
         |  FROM rec r JOIN ord o ON o.user_id = r.user_id AND o.t = r.t + 1),
         |fin AS (SELECT user_id, n, l, b FROM rec WHERE t = n)
         |SELECT f.user_id, f.n AS n_days, CAST(h.h AS BIGINT) AS h,
-        |  floor(l * 1e4 + 0.5) / 1e4 AS level,
-        |  floor(b * 1e4 + 0.5) / 1e4 AS trend,
-        |  floor((l + h.h * b) * 1e4 + 0.5) / 1e4 AS forecast
+        |  ${quantSql("l", 4)} AS level,
+        |  ${quantSql("b", 4)} AS trend,
+        |  ${quantSql("(l + h.h * b)", 4)} AS forecast
         |FROM fin f JOIN (VALUES (1), (2), (3)) AS h(h) ON true""".stripMargin,
 
     // smoothed shares are exact integer ratios; each bin's ln() term
@@ -3743,7 +3751,7 @@ object SparkEntry {
         |  LEFT JOIN ref ON g.bin = ref.bin
         |  CROSS JOIN refn)
         |SELECT bucket, CAST(max(n) AS BIGINT) AS n_docs,
-        |  floor(sum(term) / 1e8 * 1e6 + 0.5) / 1e6 AS psi,
+        |  ${quantSql("sum(term) / 1e8", 6)} AS psi,
         |  CASE WHEN sum(term) / 1e8 > 0.25 THEN 'shifted'
         |       WHEN sum(term) / 1e8 > 0.1 THEN 'drifting'
         |       ELSE 'stable' END AS verdict
@@ -3843,9 +3851,9 @@ object SparkEntry {
       s"""WITH d AS ($decomposeSql),
         |u AS (
         |  SELECT user_id,
-        |    CAST(floor(residual * 1e4 + 0.5) AS BIGINT) AS r_u,
-        |    CAST(floor((value - seasonal) * 1e4 + 0.5) AS BIGINT) AS tr_u,
-        |    CAST(floor((value - trend) * 1e4 + 0.5) AS BIGINT) AS sr_u
+        |    ${unitsSql("residual", 4)} AS r_u,
+        |    ${unitsSql("(value - seasonal)", 4)} AS tr_u,
+        |    ${unitsSql("(value - trend)", 4)} AS sr_u
         |  FROM d),
         |m AS (
         |  SELECT user_id, count(*) AS n,
@@ -3875,12 +3883,12 @@ object SparkEntry {
         |      AS var_sr
         |  FROM m)
         |SELECT user_id, CAST(n AS BIGINT) AS n_days,
-        |  floor(var_r * 1e4 + 0.5) / 1e4 AS var_resid,
+        |  ${quantSql("var_r", 4)} AS var_resid,
         |  CASE WHEN var_tr > 0
-        |    THEN floor(greatest(0.0, 1.0 - var_r / var_tr) * 1e4 + 0.5) / 1e4
+        |    THEN ${quantSql("greatest(0.0, 1.0 - var_r / var_tr)", 4)}
         |  END AS f_trend,
         |  CASE WHEN var_sr > 0
-        |    THEN floor(greatest(0.0, 1.0 - var_r / var_sr) * 1e4 + 0.5) / 1e4
+        |    THEN ${quantSql("greatest(0.0, 1.0 - var_r / var_sr)", 4)}
         |  END AS f_seasonal
         |FROM v""".stripMargin,
 
@@ -3926,7 +3934,7 @@ object SparkEntry {
         |tot AS (SELECT CAST(sum(n) AS BIGINT) AS nn FROM c)
         |SELECT dow, hour, n,
         |  floor(CAST(sc AS DOUBLE) / n + 0.5) / 100.0 AS mean_value,
-        |  floor(CAST(n AS DOUBLE) / nn * 1e6 + 0.5) / 1e6 AS share
+        |  ${quantSql("CAST(n AS DOUBLE) / nn", 6)} AS share
         |FROM c CROSS JOIN tot""".stripMargin,
 
     // per-term n·ln p quantized to 1e-6 units before both sums; the
@@ -3941,12 +3949,10 @@ object SparkEntry {
         |      AS BIGINT) AS tu
         |  FROM m)
         |SELECT from_type, min(t.n_from) AS n_from,
-        |  floor(CAST(min(t.n_from) AS DOUBLE) / min(tot.nn) * 1e4 + 0.5) / 1e4
+        |  ${quantSql("CAST(min(t.n_from) AS DOUBLE) / min(tot.nn)", 4)}
         |    AS pi,
-        |  floor(CAST(sum(t.tu) AS DOUBLE) / 1e6 / min(t.n_from) * 1e4 + 0.5)
-        |    / 1e4 AS h_cond,
-        |  floor(CAST(sum(t.tu) AS DOUBLE) / 1e6 / min(tot.nn) * 1e4 + 0.5)
-        |    / 1e4 AS h_contrib
+        |  ${quantSql("CAST(sum(t.tu) AS DOUBLE) / 1e6 / min(t.n_from)", 4)} AS h_cond,
+        |  ${quantSql("CAST(sum(t.tu) AS DOUBLE) / 1e6 / min(tot.nn)", 4)} AS h_contrib
         |FROM t CROSS JOIN tot GROUP BY 1""".stripMargin,
 
     "ts_rolling_median" ->
@@ -3989,7 +3995,7 @@ object SparkEntry {
     "ts_climatology_anomaly" ->
       s"""WITH clim AS (
         |  SELECT user_id, hod, count(*) AS n_obs,
-        |    floor(CAST(sum(c) AS DOUBLE) / count(*) / 100.0 * 1e6 + 0.5) / 1e6 AS mu,
+        |    ${quantSql("CAST(sum(c) AS DOUBLE) / count(*) / 100.0", 6)} AS mu,
         |    CASE WHEN count(*) > 1 THEN
         |      floor(sqrt(greatest(CAST(count(*) AS DOUBLE) * CAST(sum(c * c) AS DOUBLE)
         |          - CAST(sum(c) AS DOUBLE) * CAST(sum(c) AS DOUBLE), 0.0)
@@ -4000,9 +4006,9 @@ object SparkEntry {
         |  GROUP BY 1, 2)
         |SELECT e.event_id, e.user_id, c.hod,
         |  round(e.value, 2) AS value,
-        |  floor((e.value - c.mu) * 1e4 + 0.5) / 1e4 AS anom,
+        |  ${quantSql("(e.value - c.mu)", 4)} AS anom,
         |  CASE WHEN c.n_obs >= 5 AND c.sd > 0
-        |    THEN floor((e.value - c.mu) / c.sd * 1e4 + 0.5) / 1e4 END AS anom_std
+        |    THEN ${quantSql("(e.value - c.mu) / c.sd", 4)} END AS anom_std
         |FROM events e
         |JOIN clim c ON e.user_id = c.user_id AND CAST(hour(e.ts) AS INT) = c.hod""".stripMargin,
 
@@ -4025,7 +4031,7 @@ object SparkEntry {
         |FROM g""".stripMargin,
 
     "events_funnel" ->
-      """WITH s AS (
+      s"""WITH s AS (
         |  SELECT user_id, event_type, ts,
         |    CAST(sum(CASE WHEN gap_us IS NULL OR gap_us / 1e6 > 1800 THEN 1 ELSE 0 END)
         |      OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -4046,16 +4052,16 @@ object SparkEntry {
         |      FROM t1 JOIN t2 USING (user_id, session_id)
         |           JOIN t3 USING (user_id, session_id))
         |SELECT CAST(1 AS INT) AS stage, 'session' AS name, n_sessions AS n,
-        |  CASE WHEN n_sessions > 0 THEN floor(CAST(n_sessions AS DOUBLE) / n_sessions * 1e4 + 0.5) / 1e4 END AS conversion FROM f
+        |  CASE WHEN n_sessions > 0 THEN ${quantSql("CAST(n_sessions AS DOUBLE) / n_sessions", 4)} END AS conversion FROM f
         |UNION ALL SELECT 2, 'signup', n_signup,
-        |  CASE WHEN n_sessions > 0 THEN floor(CAST(n_signup AS DOUBLE) / n_sessions * 1e4 + 0.5) / 1e4 END FROM f
+        |  CASE WHEN n_sessions > 0 THEN ${quantSql("CAST(n_signup AS DOUBLE) / n_sessions", 4)} END FROM f
         |UNION ALL SELECT 3, 'signup>click', n_signup_click,
-        |  CASE WHEN n_signup > 0 THEN floor(CAST(n_signup_click AS DOUBLE) / n_signup * 1e4 + 0.5) / 1e4 END FROM f
+        |  CASE WHEN n_signup > 0 THEN ${quantSql("CAST(n_signup_click AS DOUBLE) / n_signup", 4)} END FROM f
         |UNION ALL SELECT 4, 'signup>click>purchase', n_full,
-        |  CASE WHEN n_signup_click > 0 THEN floor(CAST(n_full AS DOUBLE) / n_signup_click * 1e4 + 0.5) / 1e4 END FROM f""".stripMargin,
+        |  CASE WHEN n_signup_click > 0 THEN ${quantSql("CAST(n_full AS DOUBLE) / n_signup_click", 4)} END FROM f""".stripMargin,
 
     "events_retention" ->
-      """WITH active AS (
+      s"""WITH active AS (
         |  SELECT DISTINCT user_id, date_trunc('day', ts) AS day FROM events),
         |c AS (
         |  SELECT user_id, day,
@@ -4070,7 +4076,7 @@ object SparkEntry {
         |  SELECT cohort_day, n_active AS cohort_size
         |  FROM cell WHERE offset_days = 0)
         |SELECT cohort_day, offset_days, n_active, cohort_size,
-        |  floor(CAST(n_active AS DOUBLE) / cohort_size * 1e4 + 0.5) / 1e4
+        |  ${quantSql("CAST(n_active AS DOUBLE) / cohort_size", 4)}
         |    AS retention
         |FROM cell JOIN sz USING (cohort_day)""".stripMargin,
 
@@ -4157,7 +4163,7 @@ object SparkEntry {
       s"""SELECT user_id,
         |  $weekLabelSql AS week,
         |  count(spi) AS n,
-        |  floor(quantile_cont(spi, 0.5) * 1e4 + 0.5) / 1e4 AS spi_med
+        |  ${quantSql("quantile_cont(spi, 0.5)", 4)} AS spi_med
         |FROM (${spiGammaSql(
           """  SELECT event_id, user_id, event_id % 5 AS member, ts,
             |    sum(value) OVER (PARTITION BY user_id, event_id % 5
@@ -4175,13 +4181,13 @@ object SparkEntry {
         |    $centMeanSql AS fcst_mean FROM events
         |       WHERE event_type = 'click' GROUP BY 1)
         |SELECT e.event_id, e.user_id, round(e.value, 2) AS fcst_value,
-        |  floor((e.value + coalesce(r.ref_mean - f.fcst_mean, 0.0)) * 1e4 + 0.5) / 1e4 AS corrected
+        |  ${quantSql("(e.value + coalesce(r.ref_mean - f.fcst_mean, 0.0))", 4)} AS corrected
         |FROM events e
         |LEFT JOIN fm f ON e.user_id = f.user_id
         |LEFT JOIN ref r ON e.user_id = r.user_id
         |WHERE e.event_type = 'click'""".stripMargin,
     "bias_reconstruct" ->
-      """WITH fc AS (
+      s"""WITH fc AS (
         |  SELECT user_id, CAST(ts AS DATE) AS day,
         |         min(value) AS vmin, max(value) - min(value) AS vrange
         |  FROM events WHERE event_type = 'click' GROUP BY 1, 2
@@ -4191,8 +4197,8 @@ object SparkEntry {
         |  FROM events WHERE event_type = 'view' GROUP BY 1, 2
         |), d AS (
         |  SELECT f.user_id,
-        |         floor((r.r_min_mean - f.f_min_mean) * 1e6 + 0.5) / 1e6 AS d_min,
-        |         floor((r.r_range_mean - f.f_range_mean) * 1e6 + 0.5) / 1e6 AS d_range
+        |         ${quantSql("(r.r_min_mean - f.f_min_mean)", 6)} AS d_min,
+        |         ${quantSql("(r.r_range_mean - f.f_range_mean)", 6)} AS d_range
         |  FROM (SELECT user_id,
         |          CAST(sum(CAST(floor(vmin * 100 + 0.5) AS BIGINT)) AS DOUBLE)
         |            / (count(*) * 100.0) AS f_min_mean,
@@ -4212,10 +4218,10 @@ object SparkEntry {
         |           + greatest(fc.vrange + d.d_range, 0.0) AS max_adj
         |  FROM fc JOIN d ON fc.user_id = d.user_id)
         |SELECT user_id, day, t_min_adj, t_max_adj,
-        |  floor((t_min_adj + t_max_adj) / 2 * 1e4 + 0.5) / 1e4 AS t_avg_adj
+        |  ${quantSql("(t_min_adj + t_max_adj) / 2", 4)} AS t_avg_adj
         |FROM (SELECT user_id, strftime(day, '%Y-%m-%d') AS day,
-        |        floor(min_adj * 1e4 + 0.5) / 1e4 AS t_min_adj,
-        |        floor(max_adj * 1e4 + 0.5) / 1e4 AS t_max_adj
+        |        ${quantSql("min_adj", 4)} AS t_min_adj,
+        |        ${quantSql("max_adj", 4)} AS t_max_adj
         |      FROM adj)""".stripMargin,
 
     "bias_qmap" ->
@@ -4255,9 +4261,9 @@ object SparkEntry {
          |    CAST(sum(o) AS BIGINT) AS no
          |  FROM ko GROUP BY 1 HAVING count(*) >= 5)
          |SELECT user_id, n_weeks,
-         |  floor(CAST(se AS DOUBLE) / (n_weeks * 1e8) * 1e4 + 0.5) / 1e4
+         |  ${quantSql("CAST(se AS DOUBLE) / (n_weeks * 1e8)", 4)}
          |    AS brier,
-         |  floor(CAST(no AS DOUBLE) / n_weeks * 1e4 + 0.5) / 1e4 AS base_rate,
+         |  ${quantSql("CAST(no AS DOUBLE) / n_weeks", 4)} AS base_rate,
          |  CASE WHEN no > 0 AND no < n_weeks THEN
          |    floor((1.0 - (CAST(se AS DOUBLE) / (n_weeks * 1e8))
          |      / ((CAST(no AS DOUBLE) / n_weeks)
@@ -4272,7 +4278,7 @@ object SparkEntry {
          |SELECT bin, bin / 5.0 AS p_forecast,
          |  CAST(count(*) AS BIGINT) AS n_cases,
          |  CAST(sum(o) AS BIGINT) AS n_events,
-         |  floor(CAST(sum(o) AS DOUBLE) / count(*) * 1e4 + 0.5) / 1e4
+         |  ${quantSql("CAST(sum(o) AS DOUBLE) / count(*)", 4)}
          |    AS obs_freq
          |FROM kb GROUP BY 1""".stripMargin,
 
@@ -4310,7 +4316,7 @@ object SparkEntry {
         |dq AS (SELECT src, user_id,
         |         list_transform(
         |           quantile_cont(value, [0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]),
-        |           x -> CAST(floor(x * 1e4 + 0.5) AS BIGINT)) AS qs
+        |           x -> ${unitsSql("x", 4)}) AS qs
         |       FROM ds GROUP BY 1, 2),
         |w AS (SELECT rq.user_id, rq.qs AS rq, fq.qs AS fq, cq.qs AS cq
         |      FROM (SELECT user_id, qs FROM dq WHERE src = 'ref') rq
@@ -4512,7 +4518,7 @@ object SparkEntry {
         |batch AS (SELECT vec_id, e FROM v WHERE vec_id % 10 >= 8),
         |cand AS (
         |  SELECT b.vec_id AS bid, p.vec_id AS p,
-        |    floor(list_cosine_similarity(b.e, p.e) * 1e4 + 0.5) / 1e4 AS cosine
+        |    ${quantSql("list_cosine_similarity(b.e, p.e)", 4)} AS cosine
         |  FROM batch b JOIN v p ON p.vec_id <> b.vec_id
         |    AND (p.vec_id % 10 < 8 OR p.vec_id < b.vec_id)),
         |best AS (
@@ -4566,7 +4572,7 @@ object SparkEntry {
         |  FROM st)
         |SELECT user_id, n AS n_blocks, CAST(p.t AS BIGINT) AS t,
         |  CASE WHEN beta > 0 THEN
-        |    floor((m - ${Climate.GumbelGamma} * beta + p.y * beta) * 1e4 + 0.5) / 1e4
+        |    ${quantSql(s"(m - ${Climate.GumbelGamma} * beta + p.y * beta)", 4)}
         |  END AS level
         |FROM sb CROSS JOIN (VALUES ${Climate.ReturnPeriods.map { case (t, y) => s"($t, $y)" }.mkString(", ")}) AS p(t, y)""".stripMargin,
 
@@ -4584,7 +4590,7 @@ object SparkEntry {
         |    row_number() OVER (PARTITION BY user_id ORDER BY y DESC) AS rn
         |  FROM daily)
         |SELECT r.user_id, CAST(p.p AS BIGINT) AS p, nd.n AS n_days,
-        |  floor(r.y * 1e4 + 0.5) / 1e4 AS q_exceed
+        |  ${quantSql("r.y", 4)} AS q_exceed
         |FROM (VALUES ${Climate.FdcProbs.map(p => s"($p)").mkString(", ")}) AS p(p)
         |CROSS JOIN nd
         |JOIN r ON r.user_id = nd.user_id AND r.rn = (p.p * nd.n + 99) // 100"""
@@ -4616,9 +4622,9 @@ object SparkEntry {
         |SELECT user_id,
         |  strftime(DATE '2024-01-01' + CAST(x AS INTEGER), '%Y-%m-%d')
         |    AS day,
-        |  floor(y * 1e4 + 0.5) / 1e4 AS q,
-        |  floor((y - least(greatest(f, 0.0), y)) * 1e4 + 0.5) / 1e4 AS baseflow,
-        |  floor(least(greatest(f, 0.0), y) * 1e4 + 0.5) / 1e4 AS quickflow
+        |  ${quantSql("y", 4)} AS q,
+        |  ${quantSql("(y - least(greatest(f, 0.0), y))", 4)} AS baseflow,
+        |  ${quantSql("least(greatest(f, 0.0), y)", 4)} AS quickflow
         |FROM rec""".stripMargin,
 
     "pet_hargreaves" ->
@@ -4634,7 +4640,7 @@ object SparkEntry {
         |    0.0023 * ra.ra * (tmean + 17.8)
         |      * sqrt(greatest(tmax - tmin, 0.0)) AS pet
         |  FROM daily JOIN ra ON dayofyear(CAST(day AS DATE)) = ra.doy)
-        |SELECT user_id, day, floor(pet * 1e4 + 0.5) / 1e4 AS pet,
+        |SELECT user_id, day, ${quantSql("pet", 4)} AS pet,
         |  floor(sum(pet) OVER (PARTITION BY user_id ORDER BY day
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) * 1e4 + 0.5) / 1e4 AS cum_pet
         |FROM p""".stripMargin,
@@ -4657,8 +4663,8 @@ object SparkEntry {
         |        * ((ta + 5.0) / 45.0) * 1000.0
         |      ELSE 0.0 END AS pet
         |  FROM daily JOIN ra ON dayofyear(CAST(day AS DATE)) = ra.doy)
-        |SELECT user_id, day, floor(pet * 1e4 + 0.5) / 1e4 AS pet,
-        |  floor((pet - p) * 1e4 + 0.5) / 1e4 AS delta_precip_def
+        |SELECT user_id, day, ${quantSql("pet", 4)} AS pet,
+        |  ${quantSql("(pet - p)", 4)} AS delta_precip_def
         |FROM x""".stripMargin,
 
     // daily GDD quantizes once to integer 1e-4 units; the seasonal
@@ -4727,7 +4733,7 @@ object SparkEntry {
         |  FROM daily),
         |r AS (
         |  SELECT user_id,
-        |    CAST(floor(q / q_prev * 1e4 + 0.5) AS BIGINT) AS ratio_u
+        |    ${unitsSql("q / q_prev", 4)} AS ratio_u
         |  FROM l
         |  WHERE q_prev IS NOT NULL AND q < q_prev AND q_prev > 0)
         |SELECT user_id, CAST(count(*) AS BIGINT) AS n_recession,
@@ -4787,9 +4793,8 @@ object SparkEntry {
         |b AS (
         |  SELECT user_id, day,
         |    CASE WHEN tmean < 3.0
-        |      THEN CAST(floor(prcp * 1e4 + 0.5) AS BIGINT) ELSE 0 END AS snow_u,
-        |    CAST(floor(3.0 * greatest(tmean - 3.0, 0.0) * 1e4 + 0.5)
-        |      AS BIGINT) AS melt_u
+        |      THEN ${unitsSql("prcp", 4)} ELSE 0 END AS snow_u,
+        |    ${unitsSql("3.0 * greatest(tmean - 3.0, 0.0)", 4)} AS melt_u
         |  FROM daily),
         |s AS (
         |  SELECT user_id, day, snow_u,
@@ -4834,7 +4839,7 @@ object SparkEntry {
         |  FROM b JOIN m ON b.user_id = m.user_id)
         |SELECT user_id, day,
         |  CAST(bal_u AS DOUBLE) / 1e4 AS balance,
-        |  floor(spei_raw * 1e4 + 0.5) / 1e4 AS spei,
+        |  ${quantSql("spei_raw", 4)} AS spei,
         |  CASE WHEN spei_raw <= -1.0 THEN true ELSE false END AS drought
         |FROM z""".stripMargin,
 
@@ -4848,7 +4853,7 @@ object SparkEntry {
     "zonal_spi" ->
       s"""WITH z AS (
         |  ${zCteSql("event_id, user_id, event_type")}),
-        |u AS (SELECT *, CAST(floor(zscore * 1e4 + 0.5) AS BIGINT) AS zu FROM z)
+        |u AS (SELECT *, ${unitsSql("zscore", 4)} AS zu FROM z)
         |SELECT $zoneKeysSql,
         |  count(*) AS n,
         |  floor(CAST(sum(zu) AS DOUBLE) / count(zu) + 0.5) / 1e4 AS avg_z,
@@ -4919,7 +4924,7 @@ object SparkEntry {
         |      END AS z
         |  FROM cell WINDOW w AS (PARTITION BY user_id, member))
         |SELECT user_id, week, count(*) AS n_members,
-        |  floor(quantile_cont(z, 0.5) * 1e4 + 0.5) / 1e4 AS spi_median
+        |  ${quantSql("quantile_cont(z, 0.5)", 4)} AS spi_median
         |FROM z GROUP BY 1, 2""".stripMargin,
 
     // ensemble percentile bands with hand-written (n-1)*q rank
@@ -4957,13 +4962,13 @@ object SparkEntry {
     "zonal_spi_quantiles" ->
       s"""WITH z AS (
         |  ${zCteSql("event_id, user_id")}),
-        |u AS (SELECT *, CAST(floor(zscore * 1e4 + 0.5) AS BIGINT) AS zu FROM z)
+        |u AS (SELECT *, ${unitsSql("zscore", 4)} AS zu FROM z)
         |SELECT $zoneKeysSql,
         |  count(*) AS n,
         |  floor(CAST(sum(zu) AS DOUBLE) / count(zu) + 0.5) / 1e4 AS avg_z,
-        |  floor(quantile_cont(zscore, 0.1) * 1e4 + 0.5) / 1e4 AS p10_z,
-        |  floor(quantile_cont(zscore, 0.5) * 1e4 + 0.5) / 1e4 AS med_z,
-        |  floor(quantile_cont(zscore, 0.9) * 1e4 + 0.5) / 1e4 AS p90_z
+        |  ${quantSql("quantile_cont(zscore, 0.1)", 4)} AS p10_z,
+        |  ${quantSql("quantile_cont(zscore, 0.5)", 4)} AS med_z,
+        |  ${quantSql("quantile_cont(zscore, 0.9)", 4)} AS p90_z
         |FROM u GROUP BY 1, 2""".stripMargin,
 
     "zonal_poly_spi" ->
@@ -4971,7 +4976,7 @@ object SparkEntry {
         |  ${zCteSql(s"event_id, user_id, $latLonSql")}),
         |b AS (SELECT *, $basinCaseSql AS basin FROM z)
         |SELECT basin, count(*) AS n,
-        |  floor(quantile_cont(zscore, 0.5) * 1e4 + 0.5) / 1e4 AS med_z,
+        |  ${quantSql("quantile_cont(zscore, 0.5)", 4)} AS med_z,
         |  round(min(zscore), 4) AS min_z,
         |  round(max(zscore), 4) AS max_z,
         |  CAST(sum(CASE WHEN zscore <= -1.0 THEN 1 ELSE 0 END) AS BIGINT) AS drought_n
@@ -5067,11 +5072,10 @@ object SparkEntry {
         |    CAST(sf AS DOUBLE) / CAST(so AS DOUBLE) AS beta
         |  FROM d WHERE n >= 5 AND dxo > 0 AND dxf > 0 AND so <> 0)
         |SELECT user_id, n AS n_weeks,
-        |  floor((1.0 - CAST(n * sse AS DOUBLE) / CAST(dxo AS DOUBLE)) * 1e4 + 0.5)
-        |    / 1e4 AS nse,
-        |  floor(r * 1e4 + 0.5) / 1e4 AS r,
-        |  floor(alpha * 1e4 + 0.5) / 1e4 AS alpha,
-        |  floor(beta * 1e4 + 0.5) / 1e4 AS beta,
+        |  ${quantSql("(1.0 - CAST(n * sse AS DOUBLE) / CAST(dxo AS DOUBLE))", 4)} AS nse,
+        |  ${quantSql("r", 4)} AS r,
+        |  ${quantSql("alpha", 4)} AS alpha,
+        |  ${quantSql("beta", 4)} AS beta,
         |  floor((1.0 - sqrt((r - 1) * (r - 1) + (alpha - 1) * (alpha - 1)
         |    + (beta - 1) * (beta - 1))) * 1e4 + 0.5) / 1e4 AS kge
         |FROM e""".stripMargin,
@@ -5114,7 +5118,7 @@ object SparkEntry {
     "grid_aspect_rose" ->
       s"""WITH g AS ($gradientSql)
         |SELECT aspect, count(*) AS n_cells,
-        |  floor(CAST(sum(CAST(floor(slope * 1e6 + 0.5) AS BIGINT)) AS DOUBLE)
+        |  floor(CAST(sum(${unitsSql("slope", 6)}) AS DOUBLE)
         |    / count(*) / 100.0 + 0.5) / 1e4 AS mean_slope
         |FROM g GROUP BY 1""".stripMargin,
 
@@ -5130,8 +5134,7 @@ object SparkEntry {
         |  SELECT user_id, count(*) AS n_days,
         |    CAST(sum(CASE WHEN tn < 2000 THEN 1 ELSE 0 END) AS BIGINT) AS fd,
         |    CAST(sum(CASE WHEN tx > 8000 THEN 1 ELSE 0 END) AS BIGINT) AS su,
-        |    floor(CAST(sum(tx - tn) AS DOUBLE) / count(*) / 100.0 * 1e4 + 0.5)
-        |      / 1e4 AS dtr_mean
+        |    ${quantSql("CAST(sum(tx - tn) AS DOUBLE) / count(*) / 100.0", 4)} AS dtr_mean
         |  FROM d GROUP BY 1),
         |r AS (
         |  SELECT user_id, tx,
@@ -5148,8 +5151,8 @@ object SparkEntry {
         |      THEN 1 ELSE 0 END) AS BIGINT) AS n_exceed
         |  FROM d JOIN p90 USING (user_id) GROUP BY 1)
         |SELECT f.user_id, f.n_days, f.fd, f.su, f.dtr_mean,
-        |  floor(p90.tx90_thresh * 1e4 + 0.5) / 1e4 AS tx90_thresh,
-        |  floor(CAST(ex.n_exceed AS DOUBLE) / f.n_days * 1e4 + 0.5) / 1e4
+        |  ${quantSql("p90.tx90_thresh", 4)} AS tx90_thresh,
+        |  ${quantSql("CAST(ex.n_exceed AS DOUBLE) / f.n_days", 4)}
         |    AS tx90p
         |FROM flat f LEFT JOIN p90 USING (user_id)
         |LEFT JOIN ex USING (user_id)""".stripMargin,
@@ -5197,7 +5200,7 @@ object SparkEntry {
         |      THEN dd.c ELSE 0 END) AS DOUBLE) / 100.0 AS r95ptot
         |  FROM dd JOIN p95 USING (user_id) WHERE dd.wet GROUP BY 1)
         |SELECT f.user_id, f.n_days, s.cdd, s.cwd, f.r10mm, f.prcptot,
-        |  floor(p95.r95p * 1e4 + 0.5) / 1e4 AS r95p, rt.r95ptot
+        |  ${quantSql("p95.r95p", 4)} AS r95p, rt.r95ptot
         |FROM flat f LEFT JOIN spells s USING (user_id)
         |LEFT JOIN p95 USING (user_id) LEFT JOIN rt USING (user_id)""".stripMargin,
 
@@ -5665,8 +5668,8 @@ object SparkEntry {
         |    CAST(${Geo.NorthingExpr} AS DOUBLE) AS northing
         |  FROM st)
         |SELECT station, easting, northing,
-        |  floor($lonExpr * 1e6 + 0.5) / 1e6 AS lon,
-        |  floor($latExpr * 1e6 + 0.5) / 1e6 AS lat
+        |  ${quantSql(lonExpr, 6)} AS lon,
+        |  ${quantSql(latExpr, 6)} AS lat
         |FROM xy""".stripMargin
     },
 
@@ -5941,10 +5944,7 @@ object SparkEntry {
           |  FROM (
           |    SELECT d.user_id, m.member, l.lead, d.day, l.day_l,
           |      CAST(d.c AS DOUBLE) / 100.0 AS x
-          |    FROM (SELECT user_id,
-          |            $dayLabelSql AS day,
-          |            sum($centsSql) AS c
-          |          FROM events GROUP BY 1, 2) d
+          |    FROM ${seriesSql(s"$dayLabelSql AS day", s"sum($centsSql) AS c")} d
           |    CROSS JOIN (VALUES (0), (1), (2), (3), (4)) m(member)
           |    CROSS JOIN (VALUES $leadRows) l(lead, day_l)
           |    WHERE d.day <= '$refEnd'
@@ -5954,10 +5954,7 @@ object SparkEntry {
           |    FROM (
           |      SELECT d.user_id, m.member, d.day,
           |        (d.c * (100 + m.member * 3)) // 100 AS c
-          |      FROM (SELECT user_id,
-          |              $dayLabelSql AS day,
-          |              sum($centsSql) AS c
-          |            FROM events GROUP BY 1, 2) d
+          |      FROM ${seriesSql(s"$dayLabelSql AS day", s"sum($centsSql) AS c")} d
           |      CROSS JOIN (VALUES (0), (1), (2), (3), (4)) m(member)
           |      WHERE d.day > '$refEnd') f
           |    JOIN (VALUES $leadRows) l(lead, day_l) ON f.day <= l.day_l
@@ -6003,8 +6000,7 @@ object SparkEntry {
         |  count(*) AS n_unique,
         |  CAST(sum(cnt) - count(*) AS BIGINT) AS n_dup_docs,
         |  CAST(max(cnt) AS BIGINT) AS max_group,
-        |  floor(CAST(sum(cnt) - count(*) AS DOUBLE) / sum(cnt) * 1e4 + 0.5)
-        |    / 1e4 AS dup_rate
+        |  ${quantSql("CAST(sum(cnt) - count(*) AS DOUBLE) / sum(cnt)", 4)} AS dup_rate
         |FROM g GROUP BY 1""".stripMargin,
 
     "q7_volume_shipping" ->
@@ -6107,8 +6103,7 @@ object SparkEntry {
         |  FROM c),
         |fit AS (
         |  SELECT t.source, count(*) AS n_ranks,
-        |    CAST(sum(CAST(floor(w.wt * ln(CAST(t.n AS DOUBLE)) * 1e6 + 0.5)
-        |      AS BIGINT)) AS BIGINT) AS su,
+        |    CAST(sum(${unitsSql("w.wt * ln(CAST(t.n AS DOUBLE))", 6)}) AS BIGINT) AS su,
         |    CAST(sum(t.n) AS BIGINT) AS head_mass
         |  FROM t JOIN w USING (rank) WHERE t.rank <= 100 GROUP BY 1),
         |tot AS (
@@ -6116,9 +6111,8 @@ object SparkEntry {
         |    count(*) AS vocab_size
         |  FROM c GROUP BY 1)
         |SELECT tot.source, tot.vocab_size, tot.total_mass, fit.n_ranks,
-        |  floor(CAST(fit.su AS DOUBLE) / 1e6 * 1e4 + 0.5) / 1e4 AS zipf_slope,
-        |  floor(CAST(fit.head_mass AS DOUBLE) / tot.total_mass * 1e4 + 0.5)
-        |    / 1e4 AS head_share
+        |  ${quantSql("CAST(fit.su AS DOUBLE) / 1e6", 4)} AS zipf_slope,
+        |  ${quantSql("CAST(fit.head_mass AS DOUBLE) / tot.total_mass", 4)} AS head_share
         |FROM tot LEFT JOIN fit USING (source)""".stripMargin
     },
 
@@ -6136,17 +6130,17 @@ object SparkEntry {
           s"""SELECT '${sigs(i)}' AS sig_a, '${sigs(j)}' AS sig_b,
             |  CAST(n AS BIGINT) AS n,
             |  CASE WHEN $denA > 0 AND $denB > 0
-            |    THEN floor($num / ($denA * $denB) * 1e4 + 0.5) / 1e4
+            |    THEN ${quantSql(s"$num / ($denA * $denB)", 4)}
             |  END AS r
             |FROM m""".stripMargin
         }).mkString("\n        |UNION ALL\n        |")
       s"""WITH q AS ($textQualitySql),
         |v AS (
         |  SELECT n_tokens AS v0,
-        |    CAST(floor(stop_ratio * 1e4 + 0.5) AS BIGINT) AS v1,
-        |    CAST(floor(digit_ratio * 1e4 + 0.5) AS BIGINT) AS v2,
-        |    CAST(floor(mean_token_len * 1e4 + 0.5) AS BIGINT) AS v3,
-        |    CAST(floor(quality_score * 1e4 + 0.5) AS BIGINT) AS v4
+        |    ${unitsSql("stop_ratio", 4)} AS v1,
+        |    ${unitsSql("digit_ratio", 4)} AS v2,
+        |    ${unitsSql("mean_token_len", 4)} AS v3,
+        |    ${unitsSql("quality_score", 4)} AS v4
         |  FROM q),
         |m AS (SELECT count(*) AS n, ${sums.mkString(", ")} FROM v)
         |$pairSelects""".stripMargin
@@ -6190,7 +6184,7 @@ object SparkEntry {
         |      OR no_stopwords OR low_diversity THEN 1 ELSE 0 END) AS BIGINT) AS f_any_rule
         |  FROM r)
         |SELECT v.rule, v.n_fail, a.n_docs,
-        |  floor(CAST(v.n_fail AS DOUBLE) / a.n_docs * 1e4 + 0.5) / 1e4 AS fail_rate
+        |  ${quantSql("CAST(v.n_fail AS DOUBLE) / a.n_docs", 4)} AS fail_rate
         |FROM a, LATERAL (VALUES
         |  ('too_few_tokens', f_too_few_tokens),
         |  ('mean_token_len_out', f_mean_token_len_out),
@@ -6224,7 +6218,7 @@ object SparkEntry {
         |SELECT v.stage, v.rule, v.n_in, v.n_dropped,
         |  v.n_in - v.n_dropped AS n_out,
         |  CASE WHEN v.n_in > 0
-        |    THEN floor(CAST(v.n_dropped AS DOUBLE) / v.n_in * 1e4 + 0.5) / 1e4
+        |    THEN ${quantSql("CAST(v.n_dropped AS DOUBLE) / v.n_in", 4)}
         |  END AS drop_rate
         |FROM a, LATERAL (VALUES
         |  (1, 'too_few_tokens', n_docs, f1),
@@ -6283,7 +6277,7 @@ object SparkEntry {
         |  FROM (SELECT doc_id, unnest(toks) AS tok FROM base) GROUP BY 1, 2
         |), toka AS (
         |  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
-        |    floor((ln(sum(c)) - sum(c * ln(c)) / sum(c)) * 1e4 + 0.5) / 1e4 AS token_entropy
+        |    ${quantSql("(ln(sum(c)) - sum(c * ln(c)) / sum(c))", 4)} AS token_entropy
         |  FROM tokc GROUP BY 1
         |), bic AS (
         |  SELECT doc_id, bg, count(*) AS c
@@ -6293,8 +6287,8 @@ object SparkEntry {
         |        FROM base) GROUP BY 1, 2
         |), bia AS (
         |  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_bigrams,
-        |    floor((1.0 - count(*) / CAST(sum(c) AS DOUBLE)) * 1e4 + 0.5) / 1e4 AS dup_bigram_ratio,
-        |    floor((max(c) / CAST(sum(c) AS DOUBLE)) * 1e4 + 0.5) / 1e4 AS top_bigram_ratio
+        |    ${quantSql("(1.0 - count(*) / CAST(sum(c) AS DOUBLE))", 4)} AS dup_bigram_ratio,
+        |    ${quantSql("(max(c) / CAST(sum(c) AS DOUBLE))", 4)} AS top_bigram_ratio
         |  FROM bic GROUP BY 1)
         |SELECT t.doc_id, t.n_tokens, t.token_entropy,
         |       b.n_bigrams, b.dup_bigram_ratio, b.top_bigram_ratio
@@ -6460,7 +6454,7 @@ object SparkEntry {
         |), n AS (SELECT count(*) AS n_docs FROM documents),
         |scored AS (
         |  SELECT wdf.doc_id, wdf.term,
-        |    floor(wdf.tf * (floor(ln(CAST(n.n_docs AS DOUBLE) / wdf.df) * 1e6 + 0.5) / 1e6)
+        |    floor(wdf.tf * (${quantSql("ln(CAST(n.n_docs AS DOUBLE) / wdf.df)", 6)})
         |          * 1e4 + 0.5) / 1e4 AS score
         |  FROM wdf CROSS JOIN n),
         |ranked AS (
@@ -6494,8 +6488,7 @@ object SparkEntry {
     "corpus_mix_temperature" ->
       s"""WITH $mixBaseCtes,
         |su AS (
-        |  SELECT *, CAST(floor(sqrt(CAST(avail_tokens AS DOUBLE)) * 1e6 + 0.5)
-        |    AS BIGINT) AS su
+        |  SELECT *, ${unitsSql("sqrt(CAST(avail_tokens AS DOUBLE))", 6)} AS su
         |  FROM avail),
         |tot AS (SELECT CAST(sum(su) AS BIGINT) AS sum_su,
         |               CAST(sum(avail_tokens) AS BIGINT) AS total_tokens
@@ -6537,10 +6530,10 @@ object SparkEntry {
         |voc AS (SELECT count(DISTINCT cur) AS v FROM bi),
         |scored AS (
         |  SELECT prev, cur,
-        |    floor(ln((c_bi + 1) / CAST(c_prev + v AS DOUBLE)) * 1e6 + 0.5) / 1e6 AS logp
+        |    ${quantSql("ln((c_bi + 1) / CAST(c_prev + v AS DOUBLE))", 6)} AS logp
         |  FROM model CROSS JOIN voc)
         |SELECT bi.doc_id, CAST(sum(bi.n_occ) AS BIGINT) AS n_bigrams,
-        |  floor(sum(s.logp * bi.n_occ) / sum(bi.n_occ) * 1e4 + 0.5) / 1e4 AS mean_logp
+        |  ${quantSql("sum(s.logp * bi.n_occ) / sum(bi.n_occ)", 4)} AS mean_logp
         |FROM bi JOIN scored s ON bi.prev = s.prev AND bi.cur = s.cur
         |GROUP BY 1""".stripMargin,
 
@@ -6631,8 +6624,7 @@ object SparkEntry {
         |SELECT day, lvl_min, lvl_max, count(*) AS n_cells,
         |  min(lon) AS min_lon, max(lon) AS max_lon,
         |  min(lat) AS min_lat, max(lat) AS max_lat,
-        |  floor(CAST(sum(sum_c) AS DOUBLE) / (100.0 * sum(n_obs)) * 1e4 + 0.5)
-        |    / 1e4 AS v_mean
+        |  ${quantSql("CAST(sum(sum_c) AS DOUBLE) / (100.0 * sum(n_obs))", 4)} AS v_mean
         |FROM b GROUP BY 1, 2, 3""".stripMargin
     },
 
@@ -7129,7 +7121,7 @@ object SparkEntry {
         |ks AS (SELECT unnest([5, 10, 25]) AS k)
         |SELECT CAST(k AS INT) AS k, CAST(cum AS BIGINT) AS covered_tokens,
         |  CAST(total_tokens AS BIGINT) AS total_tokens,
-        |  floor(CAST(cum AS DOUBLE) / total_tokens * 1e4 + 0.5) / 1e4 AS coverage
+        |  ${quantSql("CAST(cum AS DOUBLE) / total_tokens", 4)} AS coverage
         |FROM ranked JOIN ks ON rk = k CROSS JOIN total""".stripMargin,
 
     "pii_scrub" -> {
@@ -7331,7 +7323,7 @@ object SparkEntry {
       }.mkString(",\n        |  ")
       s"""WITH q AS (
         |  SELECT vec_id, label,
-        |    CAST(floor(unnest(embedding)::DOUBLE * 1e6 + 0.5) AS BIGINT) AS eu
+        |    ${unitsSql("unnest(embedding)::DOUBLE", 6)} AS eu
         |  FROM embeddings),
         |v AS (
         |  SELECT vec_id, label, CAST(sum(eu * eu) AS BIGINT) AS nsq_u
@@ -7345,15 +7337,15 @@ object SparkEntry {
         |  FROM v)
         |SELECT label, count(*) AS n_vecs,
         |  CAST(sum(CASE WHEN nsq_u = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero,
-        |  floor(CAST(sum(norm_u) AS DOUBLE) / count(*) / 1e6 * 1e4 + 0.5) / 1e4
+        |  ${quantSql("CAST(sum(norm_u) AS DOUBLE) / count(*) / 1e6", 4)}
         |    AS mean_norm,
         |  $pct
         |FROM r GROUP BY 1""".stripMargin
     },
 
     "embedding_centroids" ->
-      """SELECT label, count(*) AS n_vecs, CAST(dim AS INT) AS dim,
-        |  floor(sum(x) / count(*) * 1e6 + 0.5) / 1e6 AS c
+      s"""SELECT label, count(*) AS n_vecs, CAST(dim AS INT) AS dim,
+        |  ${quantSql("sum(x) / count(*)", 6)} AS c
         |FROM (
         |  SELECT label, generate_subscripts(embedding, 1) AS dim,
         |    CAST(unnest(embedding) AS DOUBLE) AS x
@@ -7420,8 +7412,8 @@ object SparkEntry {
     // centroids on the shared 1e-6 grid, distances as exact integer
     // 1e-8 units, gate operands bit-identical on both engines
     "embedding_outliers" ->
-      """WITH cd AS (
-        |  SELECT label, dim, floor(sum(x) / count(*) * 1e6 + 0.5) / 1e6 AS c
+      s"""WITH cd AS (
+        |  SELECT label, dim, ${quantSql("sum(x) / count(*)", 6)} AS c
         |  FROM (SELECT label, generate_subscripts(embedding, 1) AS dim,
         |          CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings)
         |  GROUP BY 1, 2),
@@ -7538,7 +7530,7 @@ object SparkEntry {
         |    sum(m_u * m_u) AS sxx, sum(n_u * n_u) AS syy
         |  FROM paired GROUP BY 1, 2, 3)
         |SELECT user_id, neighbor_id,
-        |  floor(dist_deg * 1e4 + 0.5) / 1e4 AS dist_deg, n_days,
+        |  ${quantSql("dist_deg", 4)} AS dist_deg, n_days,
         |  CASE WHEN n_days >= 5
         |        AND n_days * sxx - sx * sx > 0
         |        AND n_days * syy - sy * sy > 0 THEN
@@ -7721,15 +7713,15 @@ object SparkEntry {
         |        list_cosine_similarity(pe[1:dd.dim], e[1:dd.dim]) AS cos_d
         |      FROM c, (VALUES (8), (16), (32)) dd(dim)),
         |tr AS (SELECT probe_id, dim, vec_id AS neighbor_id,
-        |        CAST(floor(cos_full * 1e4 + 0.5) AS BIGINT) AS cf_u,
+        |        ${unitsSql("cos_full", 4)} AS cf_u,
         |        row_number() OVER (PARTITION BY probe_id, dim
-        |          ORDER BY floor(cos_d * 1e6 + 0.5) / 1e6 DESC, vec_id ASC) AS rk
+        |          ORDER BY ${quantSql("cos_d", 6)} DESC, vec_id ASC) AS rk
         |       FROM d),
         |t10 AS (SELECT * FROM tr WHERE rk <= 10),
         |f AS (SELECT probe_id, vec_id AS neighbor_id,
-        |        CAST(floor(cos_full * 1e4 + 0.5) AS BIGINT) AS cf_u,
+        |        ${unitsSql("cos_full", 4)} AS cf_u,
         |        row_number() OVER (PARTITION BY probe_id
-        |          ORDER BY floor(cos_full * 1e6 + 0.5) / 1e6 DESC, vec_id ASC) AS rk
+        |          ORDER BY ${quantSql("cos_full", 6)} DESC, vec_id ASC) AS rk
         |      FROM c),
         |f10 AS (SELECT * FROM f WHERE rk <= 10),
         |agg AS (SELECT t.probe_id, t.dim,
@@ -7754,8 +7746,8 @@ object SparkEntry {
         |      FROM p, embeddings WHERE vec_id != probe_id),
         |r AS (SELECT probe_id, vec_id AS neighbor_id,
         |        row_number() OVER (PARTITION BY probe_id
-        |                           ORDER BY floor(cos * 1e6 + 0.5) / 1e6 DESC, vec_id ASC) AS rk,
-        |        floor(cos * 1e4 + 0.5) / 1e4 AS cosine
+        |                           ORDER BY ${quantSql("cos", 6)} DESC, vec_id ASC) AS rk,
+        |        ${quantSql("cos", 4)} AS cosine
         |      FROM c)
         |SELECT probe_id, neighbor_id, rk, cosine FROM r WHERE rk <= 10""".stripMargin,
 
@@ -7787,11 +7779,11 @@ object SparkEntry {
         |r AS (
         |  SELECT vec_id, eval_id, cos,
         |    row_number() OVER (PARTITION BY vec_id
-        |      ORDER BY floor(cos * 1e6 + 0.5) / 1e6 DESC, eval_id ASC)
+        |      ORDER BY ${quantSql("cos", 6)} DESC, eval_id ASC)
         |      AS rk
         |  FROM c)
         |SELECT vec_id, eval_id AS top_eval_id,
-        |  floor(cos * 1e4 + 0.5) / 1e4 AS top_cos,
+        |  ${quantSql("cos", 4)} AS top_cos,
         |  cos >= ${graft.operators.Similarity.SemContamThreshold}
         |    AS contaminated
         |FROM r WHERE rk = 1""".stripMargin,
@@ -7806,8 +7798,8 @@ object SparkEntry {
         |r AS (
         |  SELECT probe_id, nb_id,
         |    row_number() OVER (PARTITION BY probe_id
-        |      ORDER BY floor(list_cosine_similarity(vp.e, vc.e) * 1e6 + 0.5) / 1e6 DESC, nb_id ASC) AS rk,
-        |    floor(list_cosine_similarity(vp.e, vc.e) * 1e4 + 0.5) / 1e4 AS cosine
+        |      ORDER BY ${quantSql("list_cosine_similarity(vp.e, vc.e)", 6)} DESC, nb_id ASC) AS rk,
+        |    ${quantSql("list_cosine_similarity(vp.e, vc.e)", 4)} AS cosine
         |  FROM cand JOIN v vp ON vp.vec_id = probe_id JOIN v vc ON vc.vec_id = nb_id)
         |SELECT probe_id, nb_id AS neighbor_id, rk, cosine FROM r WHERE rk <= 10""".stripMargin,
 
@@ -7853,7 +7845,7 @@ object SparkEntry {
         |  FROM g WHERE rk <= 2 GROUP BY 1),
         |t AS (
         |  SELECT e.label,
-        |    CAST(floor(ln(p.d2 / p.d1) * 1e6 + 0.5) AS BIGINT) AS lmu_u
+        |    ${unitsSql("ln(p.d2 / p.d1)", 6)} AS lmu_u
         |  FROM p JOIN embeddings e USING (vec_id)
         |  WHERE p.d1 > 0 AND p.d2 >= p.d1)
         |SELECT label, count(*) AS n_used,
@@ -7881,7 +7873,7 @@ object SparkEntry {
         |       GROUP BY 1),
         |tot AS (SELECT count(*) AS n_vecs FROM embeddings)
         |SELECT np.tau, n_pairs, n_docs,
-        |  floor(n_docs * 1.0 / tot.n_vecs * 1e4 + 0.5) / 1e4 AS dup_rate
+        |  ${quantSql("n_docs * 1.0 / tot.n_vecs", 4)} AS dup_rate
         |FROM np JOIN nd USING (tau), tot""".stripMargin,
 
     "embedding_label_purity" ->
@@ -7889,7 +7881,7 @@ object SparkEntry {
         |$probeCosCte,
         |r AS (SELECT probe_id, nb_id,
         |        row_number() OVER (PARTITION BY probe_id
-        |                           ORDER BY floor(cos * 1e6 + 0.5) / 1e6 DESC, nb_id ASC) AS rk
+        |                           ORDER BY ${quantSql("cos", 6)} DESC, nb_id ASC) AS rk
         |      FROM c),
         |e AS (SELECT probe_id AS vec_id, nb_id AS neighbor_id
         |      FROM r WHERE rk <= 5),
@@ -7905,8 +7897,7 @@ object SparkEntry {
         |FROM j GROUP BY label""".stripMargin,
 
     "dedup_semantic" ->
-      s"""WITH RECURSIVE p AS (
-        |  SELECT vec_id AS probe_id, embedding::DOUBLE[] AS pe FROM embeddings),
+      s"""WITH RECURSIVE $allProbesCte,
         |$probeCosCte,
         |$rankedCosCte,
         |pairs AS (

@@ -91,7 +91,7 @@ case class TopKCosineExpr(left: Expression, right: Expression,
 
 /** IVF cell routing against a PLAN-REFERENCED centroid matrix — the
   * structural fix for the nlist ceiling: the literal-centroid
-  * `array_sort(array(struct(q6(score), b)…))` formulation carries an
+  * `array_sort(array(struct(quantize(score, 6), b)…))` formulation carries an
   * O(nlist·dim) literal tree per operator (which is why nlist was
   * capped at 256); here the centroids and their precomputed squared
   * norms ride reference objects serialized once per stage, and each

@@ -9,6 +9,12 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
   * which materializes a product array per row). */
 object VectorKernels {
 
+  /** `x` to 6 decimals as floor(x·1e6 + 0.5)/1e6, not BigDecimal
+    * HALF_UP: the pure IEEE chain is what the DuckDB oracle computes,
+    * bit-for-bit — the decimal-string rounding could split from it on
+    * a half-boundary. */
+  def round6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
+
   /** Cosine similarity of two equal-length double arrays; 0.0 when
     * either norm is 0. Single pass, index order (bit-for-bit
     * reproducible across engines using the same naive loop). */
@@ -50,7 +56,7 @@ object VectorKernels {
     * cells of one row's embedding, by the 6-dp-quantized score
     * ‖c‖² − 2·c·x with the cell-id tie-break. TERM-FOR-TERM the
     * literal-centroid struct-array formulation it replaces
-    * (`array_sort`/`array_min` over `q6(lit(Σc²) − 2.0·dot)` structs):
+    * (`array_sort`/`array_min` over `quantize(lit(Σc²) − 2.0·dot, 6)` structs):
     * the dot accumulates in [[dot]]'s index order, `cc(c)` is the
     * driver-side `c.map(x ⇒ x·x).sum` fold, the quantizer is the same
     * floor(x·1e6 + 0.5)/1e6 IEEE chain, and ordering is (d, b)
@@ -74,7 +80,7 @@ object VectorKernels {
       val len = math.min(n, m.length)
       var d0 = 0.0; var i = 0
       while (i < len) { d0 += emb.getDouble(i) * m(i); i += 1 }
-      val d = math.floor((cc(c) - 2.0 * d0) * 1e6 + 0.5) / 1e6
+      val d = round6(cc(c) - 2.0 * d0)
       // Ordering is Spark's nan-safe double compare — the array_sort
       // ordering this kernel replaced: NaN sorts strictly AFTER
       // +Infinity (not tied with it — a genuine +Inf key is reachable
@@ -137,7 +143,7 @@ object VectorKernels {
         val len = math.min(n, m.length)
         var d0 = 0.0; var i = 0
         while (i < len) { d0 += emb.getDouble(i) * m(i); i += 1 }
-        val d = math.floor((subCc(pid) - 2.0 * d0) * 1e6 + 0.5) / 1e6
+        val d = round6(subCc(pid) - 2.0 * d0)
         if (bestPid < 0 || nanSafeLt(d, bestD)) { bestD = d; bestPid = pid }
         sub += 1
       }
@@ -181,7 +187,7 @@ object VectorKernels {
         val len = math.min(n, m.length)
         var d0 = 0.0; var i = 0
         while (i < len) { d0 += emb.getDouble(i) * m(i); i += 1 }
-        val d = math.floor((subCc(pid) - 2.0 * d0) * 1e6 + 0.5) / 1e6
+        val d = round6(subCc(pid) - 2.0 * d0)
         if (size < k || nanSafeLt(d, keys(size - 1))) {
           var pos = 0
           while (pos < size && !nanSafeLt(d, keys(pos))) pos += 1
@@ -272,10 +278,6 @@ object VectorKernels {
     val kid = new Array[Long](k)
     val pay = new Array[Double](k)
     var size = 0
-    // floor(x·1e6 + 0.5)/1e6, not BigDecimal HALF_UP: the pure IEEE
-    // chain is what the DuckDB oracle computes, bit-for-bit — the
-    // decimal-string rounding could split from it on a half-boundary
-    def round6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
     val n = emb.numElements()
     var c = 0
     while (c < mat.length) {

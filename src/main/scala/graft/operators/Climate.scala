@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.expressions.StatColumns
-import graft.operators.TimeSeries.{byDay, dayLabel}
+import graft.operators.TimeSeries.{byDay, dayLabel, quantize, units}
 
 /** Geo/climate analytics — the reference's derived products
   * re-expressed as distributed plans (SURVEY §2 ops 12-22).
@@ -113,8 +113,7 @@ object Climate {
     * engine-invariant quantization). */
   private[graft] def zScore4(valueCol: Column,
       w: org.apache.spark.sql.expressions.WindowSpec): Column =
-    floor(zExactOfInt(TimeSeries.cents(valueCol), w)
-      * 1e4 + 0.5) / 1e4
+    quantize(zExactOfInt(TimeSeries.cents(valueCol), w), 4)
 
   /** Standardized anomaly (z-score) per (station, variable) — the
     * SPI-style index in its simplest parametric form. One window
@@ -295,14 +294,12 @@ object Climate {
         // undefined there — emit null, as for missing data (and for
         // keys with no reference-window climatology: a_stat is null,
         // the guard is not-true, null again).
-        // floor-quantized (not round()): round() re-derives a decimal
-        // representation engine-specifically; floor(x*1e4+0.5) is the
-        // same pure float ops on both engines. The oracle twin runs
-        // the identical series/continued-fraction evaluation (as
-        // recursive CTEs), so the doubles agree to ~1e-13 relative
-        // and the quantization is the only rounding step.
+        // The oracle twin runs the identical series/continued-fraction
+        // evaluation (as recursive CTEs), so the doubles agree to
+        // ~1e-13 relative and the quantization is the only rounding
+        // step.
         when(col("a_stat") > 1e-10,
-          floor(StatColumns.normQuantile(col("h_clamped")) * 1e4 + 0.5) / 1e4)
+          quantize(StatColumns.normQuantile(col("h_clamped")), 4))
           .otherwise(lit(null).cast("double")).as("spi")): _*)
   }
 
@@ -351,7 +348,7 @@ object Climate {
       .groupBy(col("user_id"),
         date_format(date_trunc("WEEK", col("ts")), "yyyy-MM-dd").as("week"))
       .agg(count(col("spi")).as("n"),
-        (floor(percentile(col("spi"), lit(0.5)) * 1e4 + 0.5) / 1e4)
+        quantize(percentile(col("spi"), lit(0.5)), 4)
           .as("spi_med"))
   }
 
@@ -443,11 +440,8 @@ object Climate {
       .join(means, Seq("user_id"), "left")
       .select(col("event_id"), col("user_id"),
         round(col("value"), 2).as("fcst_value"),
-        // floor-quantized: see quantileMap for why round() is not
-        // engine-invariant on .00005 boundaries
-        (floor((col("value")
-          + coalesce(col("ref_mean") - col("fcst_mean"), lit(0.0)))
-          * 1e4 + 0.5) / 1e4).as("corrected"))
+        quantize(col("value")
+          + coalesce(col("ref_mean") - col("fcst_mean"), lit(0.0)), 4).as("corrected"))
   }
 
   /** Linked-variable bias correction with algebraic reconstruction —
@@ -492,9 +486,9 @@ object Climate {
       .select(col("user_id"),
         // quantize the deltas once so a grid-point v±ulp from the
         // divisions floors identically everywhere downstream
-        (floor((col("r_min_mean") - col("f_min_mean")) * 1e6 + 0.5) / 1e6)
+        quantize(col("r_min_mean") - col("f_min_mean"), 6)
           .as("d_min"),
-        (floor((col("r_range_mean") - col("f_range_mean")) * 1e6 + 0.5) / 1e6)
+        quantize(col("r_range_mean") - col("f_range_mean"), 6)
           .as("d_range"))
     fc.join(deltas, Seq("user_id"))
       .withColumn("min_adj", col("vmin") + col("d_min"))
@@ -503,17 +497,15 @@ object Climate {
       .withColumn("max_adj", col("min_adj") + col("range_adj"))
       .select(col("user_id"),
         date_format(col("day"), "yyyy-MM-dd").as("day"),
-        // floor-quantized: see quantileMap for why round() is not
-        // engine-invariant on .00005 boundaries
-        (floor(col("min_adj") * 1e4 + 0.5) / 1e4).as("t_min_adj"),
-        (floor(col("max_adj") * 1e4 + 0.5) / 1e4).as("t_max_adj"))
+        quantize(col("min_adj"), 4).as("t_min_adj"),
+        quantize(col("max_adj"), 4).as("t_max_adj"))
       // the average derives from the QUANTIZED min/max, not the raw
       // ones: halving two raw doubles lands on exact half-quantum
       // boundaries where engine ulp noise flips the floor, while the
       // quantized inputs are bit-identical on both engines so every
       // later operation is too (observed: 15/3000 rows flipped)
       .withColumn("t_avg_adj",
-        floor((col("t_min_adj") + col("t_max_adj")) / 2 * 1e4 + 0.5) / 1e4)
+        quantize((col("t_min_adj") + col("t_max_adj")) / 2, 4))
   }
 
   /** Empirical quantile mapping of `fcst` onto `ref`'s distribution,
@@ -553,13 +545,8 @@ object Climate {
         when(col("fpos") === col("idx_lo"), col("v_lo")).otherwise(col("v_next")))
       .select(col("event_id"), col("user_id"),
         round(col("value"), 2).as("fcst_value"),
-        // floor-quantized instead of round(): Spark rounds the double's
-        // shortest decimal repr HALF_UP, DuckDB rounds the binary value,
-        // and interpolated results land on exact .00005 boundaries where
-        // the two disagree; floor of the same double is engine-invariant.
-        (floor((col("v_lo")
-          + (col("fpos") - col("idx_lo")) * (col("v_hi") - col("v_lo")))
-          * 1e4 + 0.5) / 1e4).as("mapped"))
+        quantize(col("v_lo")
+          + (col("fpos") - col("idx_lo")) * (col("v_hi") - col("v_lo")), 4).as("mapped"))
   }
 
   /** Quantile-map the 'click' series onto the 'view' climate. */
@@ -686,9 +673,8 @@ object Climate {
         + (col("hpos") - col("h_idx")) * (col("h_hi") - col("hv")))
     interp.select(col("event_id"), col("user_id"),
       round(col("value"), 2).as("fcst_value"),
-      (floor((col("oq") - col("hq")) * 1e4 + 0.5) / 1e4).as("delta"),
-      (floor(greatest(col("value") + (col("oq") - col("hq")), lit(0.0))
-        * 1e4 + 0.5) / 1e4).as("corrected"))
+      quantize(col("oq") - col("hq"), 4).as("delta"),
+      quantize(greatest(col("value") + (col("oq") - col("hq")), lit(0.0)), 4).as("corrected"))
   }
 
   /** Fit preamble shared by [[quantileMapFit]] and
@@ -737,7 +723,7 @@ object Climate {
       .select((col("event_id") +: kcols) ++ Seq(
         round(col("x"), 2).as("fcst_value"),
         col("oob"),
-        (floor(greatest(col("mapped_raw"), lit(0.0)) * 1e4 + 0.5) / 1e4)
+        quantize(greatest(col("mapped_raw"), lit(0.0)), 4)
           .as("corrected")): _*)
 
   /** FIT-THEN-APPLY empirical quantile mapping over a COMPOSITE key —
@@ -1040,7 +1026,7 @@ object Climate {
             .splev(col("t"), col("c"), col("x"))))
       .select((col("event_id") +: kcols) ++ Seq(
         round(col("x"), 2).as("fcst_value"), col("oob"),
-        (floor(col("raw") * 1e4 + 0.5) / 1e4).as("corrected")): _*)
+        quantize(col("raw"), 4).as("corrected")): _*)
   }
 
   /** PRETRAINED literal spline params, one row per station group —
@@ -1159,7 +1145,7 @@ object Climate {
             * (col("q_hi") - col("q_lo")) / (col("p_hi") - col("p_lo"))))
       .select(col("event_id"), col("grp"), col("var"),
         round(col("x"), 2).as("fcst_value"),
-        (floor(col("raw") * 1e4 + 0.5) / 1e4).as("corrected"))
+        quantize(col("raw"), 4).as("corrected"))
   }
 
   /** [[biasQmapKey]]'s mapping through the SPLINE transfer — the
@@ -1308,11 +1294,11 @@ object Climate {
     s.select(col("user_id"), col("n_days"),
       (col("u").cast("double") / 100.0).as("threshold"),
       col("k").as("n_exceed"),
-      (floor(col("k").cast("double") / col("n_days") * 1e4 + 0.5) / 1e4)
+      quantize(col("k").cast("double") / col("n_days"), 4)
         .as("exceed_rate"),
-      (floor(m * 1e4 + 0.5) / 1e4).as("mean_excess"),
-      (floor(lit(0.5) * (lit(1.0) - r) * 1e4 + 0.5) / 1e4).as("xi"),
-      (floor(lit(0.5) * m * (r + lit(1.0)) * 1e4 + 0.5) / 1e4).as("sigma"))
+      quantize(m, 4).as("mean_excess"),
+      quantize(lit(0.5) * (lit(1.0) - r), 4).as("xi"),
+      quantize(lit(0.5) * m * (r + lit(1.0)), 4).as("sigma"))
   }
 
   /** T-year RETURN LEVELS per station from weekly block maxima — the
@@ -1407,8 +1393,8 @@ object Climate {
         explode(array(FdcProbs.map(lit): _*)).as("p"),
         col("qs"))
       .select(col("user_id"), col("p").cast("long").as("p"), col("n_days"),
-        (floor(element_at(col("qs"),
-          expr("cast((p * n_days + 99) div 100 as int)")) * 1e4 + 0.5) / 1e4)
+        quantize(element_at(col("qs"),
+          expr("cast((p * n_days + 99) div 100 as int)")), 4)
           .as("q_exceed"))
   }
 
@@ -1471,12 +1457,10 @@ object Climate {
       .select(col("user_id"),
         date_format(date_add(lit("2024-01-01"), col("z.pts.x")), "yyyy-MM-dd")
           .as("day"),
-        (floor(col("z.pts.y") * 1e4 + 0.5) / 1e4).as("q"),
-        (floor((col("z.pts.y") -
-          least(greatest(col("z.fs"), lit(0.0)), col("z.pts.y")))
-          * 1e4 + 0.5) / 1e4).as("baseflow"),
-        (floor(least(greatest(col("z.fs"), lit(0.0)), col("z.pts.y"))
-          * 1e4 + 0.5) / 1e4).as("quickflow"))
+        quantize(col("z.pts.y"), 4).as("q"),
+        quantize(col("z.pts.y") -
+          least(greatest(col("z.fs"), lit(0.0)), col("z.pts.y")), 4).as("baseflow"),
+        quantize(least(greatest(col("z.fs"), lit(0.0)), col("z.pts.y")), 4).as("quickflow"))
   }
 
   /** Day-of-year → extraterrestrial radiation (Ra) lookup — the
@@ -1514,8 +1498,8 @@ object Climate {
         lit(0.0023) * col("ra") * (col("tmean") + 17.8)
           * sqrt(greatest(col("tmax") - col("tmin"), lit(0.0))))
       .select(col("user_id"), col("day"),
-        (floor(col("pet") * 1e4 + 0.5) / 1e4).as("pet"),
-        (floor(sum(col("pet")).over(wCum) * 1e4 + 0.5) / 1e4).as("cum_pet"))
+        quantize(col("pet"), 4).as("pet"),
+        quantize(sum(col("pet")).over(wCum), 4).as("cum_pet"))
   }
 
   /** OUDIN-style temperature-based PET and the daily potential
@@ -1546,8 +1530,8 @@ object Climate {
         * lit(1000.0)).otherwise(lit(0.0))
     daily.join(broadcast(raTbl), Seq("doy"))
       .select(col("user_id"), col("day"),
-        (floor(pet * 1e4 + 0.5) / 1e4).as("pet"),
-        (floor((pet - col("p")) * 1e4 + 0.5) / 1e4).as("delta_precip_def"))
+        quantize(pet, 4).as("pet"),
+        quantize(pet - col("p"), 4).as("delta_precip_def"))
   }
 
   /** SPEI (z-score variant) — the STANDARDIZED PRECIPITATION-
@@ -1583,7 +1567,7 @@ object Climate {
         lit(0.0023) * col("ra") * (col("tmean") + 17.8)
           * sqrt(greatest(col("tmax") - col("tmin"), lit(0.0))))
       .withColumn("bal_u",
-        floor((col("prcp") - col("pet")) * 1e4 + 0.5).cast("long"))
+        units(col("prcp") - col("pet"), 4))
     val w = Window.partitionBy(col("user_id"))
     bal
       .withColumn("n", count(lit(1)).over(w))
@@ -1598,7 +1582,7 @@ object Climate {
               / (col("n") * (col("n") - 1))))))
       .select(col("user_id"), col("day"),
         (col("bal_u").cast("double") / 1e4).as("balance"),
-        (floor(col("spei_raw") * 1e4 + 0.5) / 1e4).as("spei"),
+        quantize(col("spei_raw"), 4).as("spei"),
         when(col("spei_raw") <= -1.0, true).otherwise(false).as("drought"))
   }
 
@@ -1628,10 +1612,10 @@ object Climate {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     daily
       .withColumn("gdd_u",
-        floor(greatest(
+        units(greatest(
           (least(col("tmax"), lit(30.0))
             + greatest(least(col("tmin"), lit(30.0)), lit(10.0))) / 2.0
-            - lit(10.0), lit(0.0)) * 1e4 + 0.5).cast("long"))
+            - lit(10.0), lit(0.0)), 4))
       .select(col("user_id"), col("day"),
         (col("gdd_u").cast("double") / 1e4).as("gdd"),
         (sum(col("gdd_u")).over(wCum).cast("double") / 1e4).as("cum_gdd"))
@@ -1730,10 +1714,9 @@ object Climate {
     daily
       .withColumn("snow_u",
         when(col("tmean") < SnowT0,
-          floor(col("prcp") * 1e4 + 0.5).cast("long")).otherwise(0L))
+          units(col("prcp"), 4)).otherwise(0L))
       .withColumn("melt_u",
-        floor(lit(SnowDdf) * greatest(col("tmean") - SnowT0, lit(0.0))
-          * 1e4 + 0.5).cast("long"))
+        units(lit(SnowDdf) * greatest(col("tmean") - SnowT0, lit(0.0)), 4))
       .withColumn("cs", sum(col("snow_u") - col("melt_u")).over(wSeq))
       .select(col("user_id"), col("day"),
         (col("snow_u").cast("double") / 1e4).as("snowfall"),
@@ -2080,7 +2063,7 @@ object Climate {
       .join(r95tot, Seq("user_id"), "left")
       .select(col("user_id"), col("n_days"), col("cdd"), col("cwd"),
         col("r10mm"), col("prcptot"),
-        (floor(col("r95p") * 1e4 + 0.5) / 1e4).as("r95p"),
+        quantize(col("r95p"), 4).as("r95p"),
         col("r95ptot"))
   }
 
@@ -2128,7 +2111,7 @@ object Climate {
     gridGradient(spark, dir)
       .groupBy(col("aspect"))
       .agg(count(lit(1)).as("n_cells"),
-        (floor(sum(floor(col("slope") * 1e6 + 0.5).cast("long"))
+        (floor(sum(units(col("slope"), 6))
           .cast("double") / count(lit(1)) / 100.0 + 0.5) / 1e4)
           .as("mean_slope"))
 
@@ -2173,8 +2156,7 @@ object Climate {
         sum(col("new_cluster")).as("n_clusters"))
       .select(col("user_id"), col("n_days"),
         col("threshold"), col("n_exceed"), col("n_clusters"),
-        (floor(col("n_clusters").cast("double") / col("n_exceed")
-          * 1e4 + 0.5) / 1e4).as("theta"))
+        quantize(col("n_clusters").cast("double") / col("n_exceed"), 4).as("theta"))
   }
 
   /** Terrain RUGGEDNESS index per interior cell (`gdaldem TRI`,
@@ -2228,8 +2210,8 @@ object Climate {
       .agg(count(lit(1)).as("n_days"),
         sum(when(col("tn") < FrostCents, 1L).otherwise(0L)).as("fd"),
         sum(when(col("tx") > WarmCents, 1L).otherwise(0L)).as("su"),
-        (floor(sum(col("tx") - col("tn")).cast("double")
-          / count(lit(1)) / 100.0 * 1e4 + 0.5) / 1e4).as("dtr_mean"))
+        quantize(sum(col("tx") - col("tn")).cast("double")
+          / count(lit(1)) / 100.0, 4).as("dtr_mean"))
     val w = Window.partitionBy(col("user_id")).orderBy(col("tx"))
     val ranked = daily
       .withColumn("rn", row_number().over(w))
@@ -2252,9 +2234,8 @@ object Climate {
       .join(exceed, Seq("user_id"), "left")
       .select(col("user_id"), col("n_days"), col("fd"), col("su"),
         col("dtr_mean"),
-        (floor(col("tx90_thresh") * 1e4 + 0.5) / 1e4).as("tx90_thresh"),
-        (floor(col("n_exceed").cast("double") / col("n_days") * 1e4 + 0.5)
-          / 1e4).as("tx90p"))
+        quantize(col("tx90_thresh"), 4).as("tx90_thresh"),
+        quantize(col("n_exceed").cast("double") / col("n_days"), 4).as("tx90p"))
   }
 
   /** Terrain CURVATURE per interior cell — the second-derivative
@@ -2560,12 +2541,11 @@ object Climate {
       .withColumn("dx", col("n_days") * col("sxx") - col("sx") * col("sx"))
       .withColumn("dy", col("n_days") * col("syy") - col("sy") * col("sy"))
       .select(col("user_id"), col("neighbor_id"),
-        (floor(col("dist_deg") * 1e4 + 0.5) / 1e4).as("dist_deg"),
+        quantize(col("dist_deg"), 4).as("dist_deg"),
         col("n_days"),
         when(col("n_days") >= 5 && col("dx") > 0 && col("dy") > 0,
-          floor(col("num").cast("double")
-            / sqrt(col("dx").cast("double") * col("dy").cast("double"))
-            * 1e4 + 0.5) / 1e4).as("r"))
+          quantize(col("num").cast("double")
+            / sqrt(col("dx").cast("double") * col("dy").cast("double")), 4)).as("r"))
   }
 
   /** DOUBLE-MASS CURVE — the classic manual-QC chart for climate
@@ -2622,7 +2602,7 @@ object Climate {
       .filter(col("q_prev").isNotNull && col("q") < col("q_prev")
         && col("q_prev") > 0)
       .withColumn("ratio_u",
-        floor(col("q") / col("q_prev") * 1e4 + 0.5).cast("long"))
+        units(col("q") / col("q_prev"), 4))
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_recession"),
         (floor(percentile(col("ratio_u"), lit(0.5)) + 0.5) / 1e4).as("k"))
@@ -2930,8 +2910,8 @@ object Climate {
       .agg(count(lit(1)).as("n_cells"),
         min(col("lon")).as("min_lon"), max(col("lon")).as("max_lon"),
         min(col("lat")).as("min_lat"), max(col("lat")).as("max_lat"),
-        (floor(sum(col("sum_c")).cast("double")
-          / (lit(100.0) * sum(col("n_obs"))) * 1e4 + 0.5) / 1e4).as("v_mean"))
+        quantize(sum(col("sum_c")).cast("double")
+          / (lit(100.0) * sum(col("n_obs"))), 4).as("v_mean"))
   }
 
   /** Zonal statistics: snap pseudo-coordinates to a 30° grid zone,
@@ -2971,7 +2951,7 @@ object Climate {
       // a raw avg(zscore) double sum could land a half-quantum off
       // under a different merge order. min/max are order statistics
       // over identical bits → safe as-is.
-      .withColumn("zu", floor(col("zscore") * 1e4 + 0.5).cast("long"))
+      .withColumn("zu", units(col("zscore"), 4))
       .groupBy(col("zone_y"), col("zone_x"))
       .agg(
         count(lit(1)).as("n"),
@@ -3004,7 +2984,7 @@ object Climate {
         sum(when(col("zscore") <= -1.0, 1).otherwise(0)).cast("long")
           .as("drought_n"))
       .withColumn("extent",
-        floor(col("drought_n").cast("double") / col("n_obs") * 1e4 + 0.5) / 1e4)
+        quantize(col("drought_n").cast("double") / col("n_obs"), 4))
   }
 
   /** USDM-style DROUGHT-CLASS AREA table — [[zonalDroughtExtent]]
@@ -3025,7 +3005,7 @@ object Climate {
     val counts = cls.map { case (n, t) =>
       sum(when(col("zscore") <= t, 1).otherwise(0)).cast("long").as(s"${n}_n") }
     val shares = cls.map { case (n, _) =>
-      (floor(col(s"${n}_n").cast("double") / col("n_obs") * 1e4 + 0.5) / 1e4)
+      quantize(col(s"${n}_n").cast("double") / col("n_obs"), 4)
         .as(s"${n}_share") }
     Tables.events(spark, dir)
       .withColumn("zscore", zScore4(col("value"), w))
@@ -3122,7 +3102,7 @@ object Climate {
     val z = cell.withColumn("z", zExactOfInt(col("qc"), wKey))
     z.groupBy(col("user_id"), col("week"))
       .agg(count(lit(1)).as("n_members"),
-        (floor(percentile(col("z"), lit(0.5)) * 1e4 + 0.5) / 1e4)
+        quantize(percentile(col("z"), lit(0.5)), 4)
           .as("spi_median"))
   }
 
@@ -3244,13 +3224,12 @@ object Climate {
     val sse = s("sff") - lit(2) * s("sfo") + s("soo")
     s.filter(s("n") >= 5 && dxo > 0 && dxf > 0 && s("so") =!= 0)
       .select(col("user_id"), col("n").as("n_weeks"),
-        (floor((lit(1.0) - (s("n") * sse).cast("double") / dxo.cast("double"))
-          * 1e4 + 0.5) / 1e4).as("nse"),
-        (floor(r * 1e4 + 0.5) / 1e4).as("r"),
-        (floor(alpha * 1e4 + 0.5) / 1e4).as("alpha"),
-        (floor(beta * 1e4 + 0.5) / 1e4).as("beta"),
-        (floor((lit(1.0) - sqrt((r - 1) * (r - 1) + (alpha - 1) * (alpha - 1)
-          + (beta - 1) * (beta - 1))) * 1e4 + 0.5) / 1e4).as("kge"))
+        quantize(lit(1.0) - (s("n") * sse).cast("double") / dxo.cast("double"), 4).as("nse"),
+        quantize(r, 4).as("r"),
+        quantize(alpha, 4).as("alpha"),
+        quantize(beta, 4).as("beta"),
+        quantize(lit(1.0) - sqrt((r - 1) * (r - 1) + (alpha - 1) * (alpha - 1)
+          + (beta - 1) * (beta - 1)), 4).as("kge"))
   }
 
   /** Shared weekly (forecast-members ⋈ observation) exceedance frame
@@ -3310,10 +3289,10 @@ object Climate {
     val bs = col("se").cast("double") / (col("n_weeks") * lit(1e8))
     val base = col("no").cast("double") / col("n_weeks")
     s.select(col("user_id"), col("n_weeks"),
-      (floor(bs * 1e4 + 0.5) / 1e4).as("brier"),
-      (floor(base * 1e4 + 0.5) / 1e4).as("base_rate"),
+      quantize(bs, 4).as("brier"),
+      quantize(base, 4).as("base_rate"),
       when(col("no") > 0 && col("no") < col("n_weeks"),
-        floor((lit(1.0) - bs / (base * (lit(1.0) - base))) * 1e4 + 0.5) / 1e4)
+        quantize(lit(1.0) - bs / (base * (lit(1.0) - base)), 4))
         .as("bss"))
   }
 
@@ -3333,8 +3312,7 @@ object Climate {
       .agg(count(lit(1)).as("n_cases"), sum(col("o")).as("n_events"))
       .select(col("bin"), (col("bin") / lit(5.0)).as("p_forecast"),
         col("n_cases"), col("n_events"),
-        (floor(col("n_events").cast("double") / col("n_cases") * 1e4 + 0.5)
-          / 1e4).as("obs_freq"))
+        quantize(col("n_events").cast("double") / col("n_cases"), 4).as("obs_freq"))
 
   /** The seasonal-deficit forecast product
     * (`ingestor_knmi_evapo_fc.py:219-245,305-325`): per-member signed
@@ -3388,7 +3366,7 @@ object Climate {
     // an integer one is order-free — the prefix sums are exact, so the
     // clamp identity and the final quantize agree bit-for-bit
     bands
-      .withColumn("band_u", floor(col("band") * 1e6 + 0.5).cast("long"))
+      .withColumn("band_u", units(col("band"), 6))
       .withColumn("cs", sum(col("band_u")).over(w))
       .select(col("user_id"), col("day"), col("q"),
         (floor((col("cs") - least(lit(0L), min(col("cs")).over(w)))
@@ -3516,13 +3494,13 @@ object Climate {
     * `percentile_approx` (one-pass sketch, no sort). */
   def zonalSpiQuantiles(spark: SparkSession, dir: String): DataFrame = {
     def q(p: Double, name: String) =
-      (floor(percentile(col("zscore"), lit(p)) * 1e4 + 0.5) / 1e4).as(name)
+      quantize(percentile(col("zscore"), lit(p)), 4).as(name)
     spiZscore(spark, dir)
       .withColumn("zone_y", floor(pseudoLat(col("user_id")) / 30).cast("int"))
       .withColumn("zone_x", floor(pseudoLon(col("user_id")) / 30).cast("int"))
       // integer-unit zone mean — same merge-order-free discipline as
       // [[zonalSpi]]; order statistics stay on the quantized doubles
-      .withColumn("zu", floor(col("zscore") * 1e4 + 0.5).cast("long"))
+      .withColumn("zu", units(col("zscore"), 4))
       .groupBy(col("zone_y"), col("zone_x"))
       .agg(count(lit(1)).as("n"),
         (floor(sum(col("zu")).cast("double") / count(col("zu")) + 0.5) / 1e4)
@@ -3543,8 +3521,7 @@ object Climate {
     * its exact counterpart at small scale. */
   def zonalSpiQuantilesApprox(spark: SparkSession, dir: String): DataFrame = {
     def qa(p: Double, name: String) =
-      (floor(percentile_approx(col("zscore"), lit(p), lit(1000))
-        * 1e4 + 0.5) / 1e4).as(name)
+      quantize(percentile_approx(col("zscore"), lit(p), lit(1000)), 4).as(name)
     spiZscore(spark, dir)
       .withColumn("zone_y", floor(pseudoLat(col("user_id")) / 30).cast("int"))
       .withColumn("zone_x", floor(pseudoLon(col("user_id")) / 30).cast("int"))
@@ -3566,7 +3543,7 @@ object Climate {
       .filter(col("basin").isNotNull)
       .groupBy(col("basin"))
       .agg(count(lit(1)).as("n"),
-        (floor(percentile(col("zscore"), lit(0.5)) * 1e4 + 0.5) / 1e4)
+        quantize(percentile(col("zscore"), lit(0.5)), 4)
           .as("med_z"),
         round(min(col("zscore")), 4).as("min_z"),
         round(max(col("zscore")), 4).as("max_z"),
@@ -3614,14 +3591,10 @@ object Climate {
         "left")
       .select(wb("event_id"), wb("station"),
         round(wb("stage"), 2).as("stage"),
-        // floor-quantized: interpolated values land on .00005
-        // boundaries where round() is not engine-invariant
-        (floor(
-          when(wb("stage") < col("h_min"), col("q_min"))
+        quantize(when(wb("stage") < col("h_min"), col("q_min"))
             .when(wb("stage") >= col("h_max"), col("q_max"))
             .otherwise(seg("q") + (wb("stage") - seg("h"))
-              / (seg("h_hi") - seg("h")) * (seg("q_hi") - seg("q")))
-          * 1e4 + 0.5) / 1e4)
+              / (seg("h_hi") - seg("h")) * (seg("q_hi") - seg("q"))), 4)
           .as("discharge"))
   }
 
@@ -3646,10 +3619,9 @@ object Climate {
       .withColumn("q_prev", lag(col("value"), 1).over(w))
       .withColumn("t_prev", lag(col("ts"), 1).over(w))
       .withColumn("term_u",
-        floor((col("value") + col("q_prev")) / 2.0
+        units((col("value") + col("q_prev")) / 2.0
           * ((unix_micros(col("ts")) - unix_micros(col("t_prev"))).cast("double")
-            / 1e6)
-          * 1e4 + 0.5).cast("long"))
+            / 1e6), 4))
       .groupBy(col("user_id"), col("day"))
       .agg(count(lit(1)).as("n_samples"),
         (sum(col("term_u")).cast("double") / 1e4).as("volume"))

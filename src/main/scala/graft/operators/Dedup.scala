@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.TimeSeries.quantize
 
 /** Near-duplicate detection over the `documents` corpus — the
   * LLM-pipeline dedup family (SURVEY §2 ops 24-26).
@@ -247,8 +248,8 @@ object Dedup {
       .select(col("source"), col("n_docs"), col("n_chars"),
         coalesce(col("dropped_docs"), lit(0L)).as("dropped_docs"),
         coalesce(col("dropped_chars"), lit(0L)).as("dropped_chars"),
-        (floor(coalesce(col("dropped_chars"), lit(0L)).cast("double")
-          / col("n_chars") * 1e4 + 0.5) / 1e4).as("saved_frac"))
+        quantize(coalesce(col("dropped_chars"), lit(0L)).cast("double")
+          / col("n_chars"), 4).as("saved_frac"))
   }
 
   /** Cross-SOURCE contamination matrix — for every pair of corpus

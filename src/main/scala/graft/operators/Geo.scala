@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.TimeSeries.quantize
+
 /** Point CRS reprojection — the coordinate math behind the
   * reference's station ingest (`ingestor_aemet_stations_process.py:
   * 157-165`: AEMET station exports arrive in EPSG:25830 = ETRS89 /
@@ -126,8 +128,8 @@ object Geo {
     val (lon, lat) = utmToLonLat(col("easting"), col("northing"))
     st.select(col("user_id").as("station"),
       col("easting"), col("northing"),
-      (floor(lon * 1e6 + 0.5) / 1e6).as("lon"),
-      (floor(lat * 1e6 + 0.5) / 1e6).as("lat"))
+      quantize(lon, 6).as("lon"),
+      quantize(lat, 6).as("lat"))
   }
 
   /** DuckDB rendering of the inverse transform over columns named

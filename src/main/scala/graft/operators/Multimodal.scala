@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.TimeSeries.quantize
 
 /** Typed metadata travelling with an opaque media payload. */
 case class MediaMeta(format: String, width: Int, height: Int)
@@ -147,8 +148,7 @@ object Multimodal {
     m.select(col("doc_id"), col("meta.format").as("format"),
       col("n").as("n_bytes"),
       md5(concat(hexTerms: _*)).as("resample_fp"),
-      (floor(vals.reduce(_ + _).cast("double") / ResampleN * 1e4 + 0.5)
-        / 1e4).as("mean_sample"))
+      quantize(vals.reduce(_ + _).cast("double") / ResampleN, 4).as("mean_sample"))
   }
 
   /** Output length of [[payloadResample]] — a pipeline constant (the

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.TimeSeries.quantize
 import graft.sources.Catalog
 
 /** End-to-end process compositions — the reference's scheduled
@@ -174,13 +175,13 @@ object Pipelines {
       .otherwise((element_at(hist, (n / 2).cast("int"))
         + element_at(hist, (n / 2 + 1).cast("int"))) / 2.0)
     val despiked = ev
-      .withColumn("value_med", floor(med * 1e4 + 0.5) / 1e4)
+      .withColumn("value_med", quantize(med, 4))
       .withColumn("hod", hour(col("ts")))
     val product = despiked
       .join(TimeSeries.climatologyFit(ev), Seq("user_id", "hod"))
       .withColumn("z",
         when(col("n_obs") >= 5 && col("sd") > 0,
-          floor((col("value") - col("mu")) / col("sd") * 1e4 + 0.5) / 1e4))
+          quantize((col("value") - col("mu")) / col("sd"), 4)))
       .withColumn("is_anomaly", coalesce(abs(col("z")) > 3.0, lit(false)))
       .select(col("event_id"), col("ts"), col("user_id"),
         col("value"), col("value_med"), col("z"), col("is_anomaly"))

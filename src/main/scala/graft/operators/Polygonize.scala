@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import Climate.{byCell, microMean}
+import TimeSeries.quantize
 
 /** RASTER POLYGONIZATION + GeoJSON emission — the data-parallel core
   * of `gdal_polygonize` / `gdal_contour -p` that the reference shells
@@ -129,11 +130,10 @@ object Polygonize {
         .when(e === "B", (col("gy") + 1).cast("double"))
         .when(e === "L", col("gy") + t(col("tl"), col("bl")))
         .otherwise(col("gy") + t(col("tr"), col("br")))
-    def q6(c: Column) = floor(c * 1e6 + 0.5) / 1e6
     seg.select(col("lv").as("level"), col("gy"), col("gx"),
       col("s.seg").as("seg"),
-      q6(xOf(col("s.e1"))).as("x1"), q6(yOf(col("s.e1"))).as("y1"),
-      q6(xOf(col("s.e2"))).as("x2"), q6(yOf(col("s.e2"))).as("y2"))
+      quantize(xOf(col("s.e1")), 6).as("x1"), quantize(yOf(col("s.e1")), 6).as("y1"),
+      quantize(xOf(col("s.e2")), 6).as("x2"), quantize(yOf(col("s.e2")), 6).as("y2"))
   }
 
   def gridContourLines(spark: SparkSession, dir: String): DataFrame =

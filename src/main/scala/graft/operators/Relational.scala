@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.TimeSeries.{cents, quantize, units}
 
 /** Relational backbone over the cataloged tables.
   *
@@ -35,7 +36,6 @@ object Relational {
     * partitioning — a raw double Σ carries summation-order ulps into
     * the rounded output, and a group mean can land exactly on a
     * half-quantum of the output grid (the §5 trap). */
-  private def cents(c: Column): Column = floor(c * 100 + 0.5).cast("long")
   private def bps(c: Column): Column = floor(c * 10000 + 0.5).cast("long")
 
   /** 38-digit exact sums for money PRODUCTS (cents × basis points ≤
@@ -152,8 +152,8 @@ object Relational {
         round(col("promo_u").cast("double") / 1e6, 2).as("promo_revenue"),
         round(col("total_u").cast("double") / 1e6, 2).as("revenue"),
         when(col("total_u") > 0,
-          floor(col("promo_u").cast("double") / col("total_u").cast("double")
-            * 100.0 * 1e4 + 0.5) / 1e4).as("promo_share_pct"))
+          quantize(col("promo_u").cast("double") / col("total_u").cast("double")
+            * 100.0, 4)).as("promo_share_pct"))
   }
 
   /** Equi-width VALUE HISTOGRAM per event type — the profiling
@@ -212,8 +212,7 @@ object Relational {
     val shares = bySupp
       .withColumn("tot_u", sum(col("rev_u")).over(w))
       .withColumn("share_u",
-        floor(col("rev_u").cast("double") / col("tot_u").cast("double")
-          * 1e6 + 0.5).cast("long"))
+        units(col("rev_u").cast("double") / col("tot_u").cast("double"), 6))
     shares.groupBy(col("n_name"))
       .agg(count(lit(1)).as("n_suppliers"),
         round(min(col("tot_u")).cast("double") / 1e6, 2).as("revenue"),
@@ -271,14 +270,14 @@ object Relational {
         min(r - floor(r)).as(s"${nm}_f"))
     }
     val pctOut = qs.map { case (nm, _) =>
-      (floor((col(s"${nm}_lo") + col(s"${nm}_f")
-        * (col(s"${nm}_hi") - col(s"${nm}_lo"))) * 1e4 + 0.5) / 1e4).as(nm)
+      quantize(col(s"${nm}_lo") + col(s"${nm}_f")
+        * (col(s"${nm}_hi") - col(s"${nm}_lo")), 4).as(nm)
     }
     ranked.groupBy(col("priority"))
       .agg(sum(col("cnt")).as("n_lines"),
         (sum(col("lag_days").cast("long") * col("cnt")).as("sl") +: pctAggs): _*)
       .select(Seq(col("priority"), col("n_lines"),
-        (floor(col("sl").cast("double") / col("n_lines") * 1e4 + 0.5) / 1e4)
+        quantize(col("sl").cast("double") / col("n_lines"), 4)
           .as("mean_lag")) ++ pctOut: _*)
   }
 

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.expressions.{MatMomentsAgg, TopKAgg, VecSumAgg, VectorColumns}
+import graft.functions.VectorKernels
+import graft.operators.TimeSeries.{quantize, units}
 
 /** Embedding similarity operators (SURVEY §2 ops 27-29): exact cosine
   * near-dup pairs, brute-force top-k (the correctness baseline), and
@@ -16,18 +18,14 @@ import graft.expressions.{MatMomentsAgg, TopKAgg, VecSumAgg, VectorColumns}
   */
 object Similarity {
 
+  /** SQL text: the double array `arr` in whole 1e-6 units, elementwise
+    * floor(x·1e6 + 0.5) held as doubles, so later sums are exact. */
+  private def microUnitsSql(arr: String): String =
+    s"transform($arr, x -> cast(floor(x * 1e6 + 0.5) as double))"
+
   private def vecs(spark: SparkSession, dir: String): DataFrame =
     Tables.spread(Tables.embeddings(spark, dir), col("vec_id"))
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-
-  /** floor(x·10ᵖ + 0.5)/10ᵖ — the house engine-invariant quantizer
-    * (pure IEEE multiply/add/floor, bit-identical on Spark and
-    * DuckDB). The ANN family ranks and emits through THESE, never
-    * `round()`: Spark's round is decimal-string HALF_UP while
-    * DuckDB's is binary-double, so a sort key or output landing on a
-    * half-boundary could split the engines. */
-  private def q6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-  private def q4(c: Column): Column = floor(c * 1e4 + 0.5) / 1e4
 
   /** Deterministic bounded fit sample for the IVF/PQ quantizers: the
     * 4096 LOWEST vec_ids (TakeOrdered — a per-partition top-k heap,
@@ -266,9 +264,9 @@ object Similarity {
   private[graft] val TwoLevelProbeCells = 4
 
   /** Driver-side replay of the two-level routing for a QUERY vector:
-    * top-[[TwoLevelNprobeSuper]] supers by (q6(‖c‖²−2·c·x), id),
+    * top-[[TwoLevelNprobeSuper]] supers by (round6(‖c‖²−2·c·x), id),
     * then the [[TwoLevelProbeCells]] best product cells among their
-    * sub-cells by (q6 distance, pid) — the EXACT arithmetic of
+    * sub-cells by (round6 distance, pid) — the EXACT arithmetic of
     * [[graft.functions.VectorKernels.twoLevelCell]] (index-order
     * dots, driver ‖c‖² fold, 6-dp quantize), so the probed cell list
     * is bit-reproducible by the DuckDB oracle from the same literal
@@ -277,13 +275,12 @@ object Similarity {
   private[graft] def twoLevelProbeCells(pe: Array[Double],
       sup: Array[Array[Double]], subs: Array[Array[Array[Double]]]):
       Seq[Int] = {
-    def q6d(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
     def dist(c: Array[Double]): Double = {
       val cc = c.map(x => x * x).sum
       var d = 0.0; var i = 0
       val n = math.min(pe.length, c.length)
       while (i < n) { d += pe(i) * c(i); i += 1 }
-      q6d(cc - 2.0 * d)
+      VectorKernels.round6(cc - 2.0 * d)
     }
     val subK = subs(0).length
     val probedSupers = sup.indices.map(b => (dist(sup(b)), b))
@@ -370,7 +367,7 @@ object Similarity {
         col("vec_id") =!= col("bid")
           && (col("vec_id") % 10 < 8 || col("vec_id") < col("bid")))
       .withColumn("cosine",
-        q4(VectorColumns.cosine(col("be"), col("emb"))))
+        quantize(VectorColumns.cosine(col("be"), col("emb")), 4))
       .filter(col("cosine") >= 0.35)
       // argmax as a map-side max(struct) (r17): identical pick to the
       // row_number window — (cosine desc, vec_id asc) is total within
@@ -472,13 +469,12 @@ object Similarity {
           .as("dc"))
       .select(col("probe_id"), col("vec_id"), col("cos_full"),
         col("dc.dim").as("dim"), col("dc.cos_d").as("cos_d"))
-    val qc = (c: Column) => floor(c * 1e4 + 0.5).cast("long")
     val picks = perDim.groupBy(col("probe_id"), col("dim"))
-      .agg(TopKAgg.topk(q6(col("cos_d")), col("vec_id"),
+      .agg(TopKAgg.topk(quantize(col("cos_d"), 6), col("vec_id"),
         col("cos_full"), 10).as("top"))
       .select(col("probe_id"), col("dim"), explode(col("top")).as("t"))
       .select(col("probe_id"), col("dim"), col("t.id").as("neighbor_id"),
-        qc(col("t.payload")).as("cf_u"))
+        units(col("t.payload"), 4).as("cf_u"))
       // pinned sliver (O(probes × dims × 10) rows): the full-dim split
       // and both join sides read it
       .localCheckpoint()
@@ -507,12 +503,12 @@ object Similarity {
     * bit-for-bit against the DuckDB oracle. */
   private def topkPerProbe(scored: DataFrame, k: Int): DataFrame =
     scored.groupBy(col("probe_id"))
-      .agg(TopKAgg.topk(q6(col("cos")), col("vec_id"), col("cos"), k)
+      .agg(TopKAgg.topk(quantize(col("cos"), 6), col("vec_id"), col("cos"), k)
         .as("top"))
       .select(col("probe_id"), posexplode(col("top")))
       .select(col("probe_id"), col("col.id").as("neighbor_id"),
         (col("pos") + 1).cast("int").as("rk"),
-        q4(col("col.payload")).as("cosine"))
+        quantize(col("col.payload"), 4).as("cosine"))
 
   /** Exact k-NN GRAPH — every vector's top-k cosine neighbors, the
     * precursor structure of embedding-space curation (SemDeDup-style
@@ -559,7 +555,7 @@ object Similarity {
           corpus.map(_._1), corpus.map(_._2), k)))
       .select(col("vec_id"), col("col.id").as("neighbor_id"),
         (col("pos") + 1).cast("int").as("rk"),
-        q4(col("col.payload")).as("cosine"))
+        quantize(col("col.payload"), 4).as("cosine"))
   }
 
   /** IVF-BLOCKED k-NN graph — the scale path for [[knnGraph]]: the
@@ -636,8 +632,7 @@ object Similarity {
     * in both engines, immune to summation-order ulps (which DID
     * split a raw-double version at 1e6 half-boundaries). */
   def embeddingContamination(spark: SparkSession, dir: String): DataFrame = {
-    val quant = "transform(emb, x -> cast(floor(x * 1e6 + 0.5) as double))"
-    val v = vecs(spark, dir).withColumn("emb", expr(quant))
+    val v = vecs(spark, dir).withColumn("emb", expr(microUnitsSql("emb")))
     val probes = v
       .filter(col("vec_id") % SemContamMod === SemContamRem)
       .orderBy(col("vec_id")).limit(SemContamProbes)
@@ -665,12 +660,10 @@ object Similarity {
     * (the corpus is the only data in the container). */
   def embeddingContaminationFromParams(spark: SparkSession, dir: String,
       paramPath: String): DataFrame = {
-    val quant = "transform(emb, x -> cast(floor(x * 1e6 + 0.5) as double))"
-    val v = vecs(spark, dir).withColumn("emb", expr(quant))
+    val v = vecs(spark, dir).withColumn("emb", expr(microUnitsSql("emb")))
     val probes = spark.read.parquet(paramPath)
       .select(col("eval_id").cast("long"),
-        expr("transform(cast(embedding as array<double>), " +
-          "x -> cast(floor(x * 1e6 + 0.5) as double))").as("emb"))
+        expr(microUnitsSql("cast(embedding as array<double>)")).as("emb"))
       .orderBy(col("eval_id"))
       .limit(MaxExternalProbes + 1)
       .collect()
@@ -696,7 +689,7 @@ object Similarity {
         col("vec_id"), ids, mat, k = 1)(0))
       .select(col("vec_id"),
         col("top").getField("id").as("top_eval_id"),
-        (floor(col("top").getField("payload") * 1e4 + 0.5) / 1e4)
+        quantize(col("top").getField("payload"), 4)
           .as("top_cos"),
         (col("top").getField("payload") >= SemContamThreshold)
           .as("contaminated"))
@@ -791,7 +784,7 @@ object Similarity {
       .select(col("vec_id"),
         posexplode(VectorColumns.matVec(col("embedding"), mu, w)))
       .select(col("vec_id"), (col("pos") + 1).cast("int").as("component"),
-        (floor(col("col") * 1e6 + 0.5) / 1e6).as("value"))
+        quantize(col("col"), 6).as("value"))
   }
 
   /** Cyclic Jacobi eigen-decomposition of a symmetric matrix —
@@ -883,9 +876,9 @@ object Similarity {
       .agg(sum(col("cos_u")).as("ap_u"), count(lit(1)).as("n_l"))
     per.join(ls, Seq("probe_id"), "left")
       .select(col("probe_id"), col("n_hit"),
-        q4(col("n_hit") / col("k").cast("double")).as("recall"),
-        q4((col("bf_u").cast("double") / col("k")
-          - col("ap_u").cast("double") / col("n_l")) / 1e4).as("cos_regret"))
+        quantize(col("n_hit") / col("k").cast("double"), 4).as("recall"),
+        quantize((col("bf_u").cast("double") / col("k")
+          - col("ap_u").cast("double") / col("n_l")) / 1e4, 4).as("cos_regret"))
   }
 
   /** ANN RECALL AUDIT — the index-quality report that closes the
@@ -905,12 +898,11 @@ object Similarity {
     * knob); the audit itself joins two O(probes·k) lists. A probe the
     * index returned nothing for keeps its row with a NULL regret. */
   def annRecallAudit(spark: SparkSession, dir: String): DataFrame = {
-    val quant = (c: Column) => floor(c * 1e4 + 0.5).cast("long")
     recallRollup(
       annTopkBruteforce(spark, dir).select(col("probe_id"),
-        col("neighbor_id"), quant(col("cosine")).as("cos_u")),
+        col("neighbor_id"), units(col("cosine"), 4).as("cos_u")),
       annLshTopk(spark, dir).select(col("probe_id"),
-        col("neighbor_id"), quant(col("cosine")).as("cos_u")))
+        col("neighbor_id"), units(col("cosine"), 4).as("cos_u")))
   }
 
   /** Recall/regret audit of the TWO-LEVEL quantizer's serving lane —
@@ -920,12 +912,11 @@ object Similarity {
     * answers? Same bounded shape as every audit here: the corpus is
     * scanned by the two arms only, the rollup is O(probes). */
   def annTwoLevelRecallAudit(spark: SparkSession, dir: String): DataFrame = {
-    val quant = (c: Column) => floor(c * 1e4 + 0.5).cast("long")
     recallRollup(
       annTopkBruteforce(spark, dir).select(col("probe_id"),
-        col("neighbor_id"), quant(col("cosine")).as("cos_u")),
+        col("neighbor_id"), units(col("cosine"), 4).as("cos_u")),
       annIvfTwoLevelTopk(spark, dir).select(col("probe_id"),
-        col("neighbor_id"), quant(col("cosine")).as("cos_u")))
+        col("neighbor_id"), units(col("cosine"), 4).as("cos_u")))
   }
 
   /** EMBEDDING LABEL PURITY — the space-health metric run before
@@ -951,8 +942,8 @@ object Similarity {
         count(lit(1)).as("n_edges"),
         sum(when(col("label") === col("nb_label"), 1).otherwise(0))
           .cast("long").as("n_same"),
-        q4(sum(when(col("label") === col("nb_label"), 1).otherwise(0))
-          / count(lit(1)).cast("double")).as("purity"))
+        quantize(sum(when(col("label") === col("nb_label"), 1).otherwise(0))
+          / count(lit(1)).cast("double"), 4).as("purity"))
   }
 
   /** Sweep thresholds for [[semanticSweep]] — literals, interpolated
@@ -995,7 +986,7 @@ object Similarity {
     val total = vecs(spark, dir).agg(count(lit(1)).as("n_vecs"))
     nPairs.join(nDocs, Seq("tau")).crossJoin(total)
       .select(col("tau"), col("n_pairs"), col("n_docs"),
-        q4(col("n_docs") / col("n_vecs").cast("double")).as("dup_rate"))
+        quantize(col("n_docs") / col("n_vecs").cast("double"), 4).as("dup_rate"))
   }
 
   /** Plain Lloyd's k-means over an in-memory sample — the IVF coarse
@@ -1071,7 +1062,7 @@ object Similarity {
     // engines when two centroids land within an ulp)
     val probeBuckets = routing
       .groupBy(col("probe_id"))
-      .agg(TopKAgg.topk(q6(col("cos")), col("bucket").cast("long"),
+      .agg(TopKAgg.topk(quantize(col("cos"), 6), col("bucket").cast("long"),
         col("cos"), nprobe).as("top"))
       .select(col("probe_id"), explode(col("top.id")).as("bucket"))
       .join(probes, Seq("probe_id"))
@@ -1124,7 +1115,7 @@ object Similarity {
       .withColumn("cos", VectorColumns.cosine(col("pe"),
         col("centroid").cast("array<double>")))
       .withColumn("rn", row_number().over(Window.partitionBy(col("probe_id"))
-        .orderBy(q6(col("cos")).desc, col("bucket").asc)))
+        .orderBy(quantize(col("cos"), 6).desc, col("bucket").asc)))
       .select(col("probe_id"), col("bucket"), col("rn"))
     // first_rn: the earliest routing rank that admits the candidate
     val scored = assigned.join(broadcast(ranked), Seq("bucket"))
@@ -1134,13 +1125,13 @@ object Similarity {
       .join(v, Seq("vec_id"))
       .join(probes, Seq("probe_id"))
       .withColumn("cos", VectorColumns.cosine(col("pe"), col("emb")))
-      .withColumn("cos_u", floor(col("cos") * 1e4 + 0.5).cast("long"))
+      .withColumn("cos_u", units(col("cos"), 4))
       .select("probe_id", "vec_id", "first_rn", "cos", "cos_u")
       // pinned: every sweep rung and the truth join read this sliver
       .localCheckpoint()
     val truth = scored // nprobe = nlist admits everything: reuse
       .withColumn("rk", row_number().over(Window.partitionBy(col("probe_id"))
-        .orderBy(q6(col("cos")).desc, col("vec_id").asc)))
+        .orderBy(quantize(col("cos"), 6).desc, col("vec_id").asc)))
       .filter(col("rk") <= 10)
       .select(col("probe_id"), col("vec_id"), col("cos_u").as("t_u"))
     val tTot = truth.agg(count(lit(1)).as("n_truth"),
@@ -1157,7 +1148,7 @@ object Similarity {
     rungs
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("nprobe"), col("probe_id"))
-          .orderBy(q6(col("cos")).desc, col("vec_id").asc)))
+          .orderBy(quantize(col("cos"), 6).desc, col("vec_id").asc)))
       .join(truth.select(col("probe_id"), col("vec_id"), lit(1).as("hit")),
         Seq("probe_id", "vec_id"), "left")
       .groupBy(col("nprobe"))
@@ -1168,8 +1159,7 @@ object Similarity {
       .crossJoin(broadcast(tTot))
       .select(col("nprobe").cast("long").as("nprobe"), col("n_cands"),
         col("n_hit"), col("n_truth"),
-        (floor(col("n_hit") / col("n_truth").cast("double") * 1e4 + 0.5)
-          / 1e4).as("recall_at10"),
+        quantize(col("n_hit") / col("n_truth").cast("double"), 4).as("recall_at10"),
         (floor((col("tu") - col("iu")).cast("double")
           / col("n_truth") + 0.5) / 1e4).as("mean_regret"))
   }
@@ -1220,13 +1210,13 @@ object Similarity {
           .select(col("vec_id").as("probe_id"), col("emb").as("pe"))),
         col("vec_id") =!= col("probe_id"))
       .withColumn("cos", VectorColumns.cosine(col("pe"), col("emb")))
-      .withColumn("cos_u", floor(col("cos") * 1e4 + 0.5).cast("long"))
+      .withColumn("cos_u", units(col("cos"), 4))
       .select(col("probe_id"), col("vec_id"), col("cos"), col("cos_u"))
       // pinned: the truth ranking and all five rungs read this sliver
       .localCheckpoint()
     val truth = scoredAll
       .withColumn("rk", row_number().over(Window.partitionBy(col("probe_id"))
-        .orderBy(q6(col("cos")).desc, col("vec_id").asc)))
+        .orderBy(quantize(col("cos"), 6).desc, col("vec_id").asc)))
       .filter(col("rk") <= 10)
       .select(col("probe_id"), col("vec_id"), col("cos_u").as("t_u"))
       .localCheckpoint()
@@ -1248,7 +1238,7 @@ object Similarity {
           col("centroid").cast("array<double>")))
         .withColumn("rn", row_number().over(
           Window.partitionBy(col("probe_id"))
-            .orderBy(q6(col("cc")).desc, col("cell").asc)))
+            .orderBy(quantize(col("cc"), 6).desc, col("cell").asc)))
         .filter(col("rn") <= nprobe)
         .select(col("probe_id"), col("cell"))
       // home cells are unique per vector and routing cells distinct
@@ -1267,7 +1257,7 @@ object Similarity {
       cands.join(scoredAll, Seq("probe_id", "vec_id"))
         .withColumn("rk", row_number().over(
           Window.partitionBy(col("probe_id"))
-            .orderBy(q6(col("cos")).desc, col("vec_id").asc)))
+            .orderBy(quantize(col("cos"), 6).desc, col("vec_id").asc)))
         .join(truth.select(col("probe_id"), col("vec_id"),
           lit(1).as("hit")), Seq("probe_id", "vec_id"), "left")
         .agg(count(lit(1)).as("n_cands"),
@@ -1281,8 +1271,7 @@ object Similarity {
     rungs.crossJoin(broadcast(tTot))
       .select(col("nlist"), col("nprobe"), col("n_cands"), col("n_hit"),
         col("n_truth"),
-        (floor(col("n_hit") / col("n_truth").cast("double") * 1e4 + 0.5)
-          / 1e4).as("recall_at10"),
+        quantize(col("n_hit") / col("n_truth").cast("double"), 4).as("recall_at10"),
         (floor((col("tu") - col("iu")).cast("double")
           / col("n_truth") + 0.5) / 1e4).as("mean_regret"))
       .orderBy(col("nlist"))
@@ -1314,7 +1303,7 @@ object Similarity {
         count(lit(1)).as("n_vecs"))
       .select(col("label"), col("n_vecs"),
         posexplode(transform(col("vsum"),
-          s => floor(s / col("n_vecs") * 1e6 + 0.5) / 1e6)))
+          s => quantize(s / col("n_vecs"), 6))))
       .select(col("label"), col("n_vecs"),
         (col("pos") + 1).cast("int").as("dim"), col("col").as("c"))
   }
@@ -1341,9 +1330,7 @@ object Similarity {
   def embeddingDrift(spark: SparkSession, dir: String): DataFrame = {
     val q = Tables.embeddings(spark, dir)
       .select(col("label"), (col("vec_id") % 2).as("half"),
-        expr("""transform(cast(embedding as array<double>),
-                x -> cast(floor(x * 1e6 + 0.5) as double))""")
-          .as("eq"))
+        expr(microUnitsSql("cast(embedding as array<double>)")).as("eq"))
     val halves = q.groupBy(col("label"), col("half"))
       .agg(VecSumAgg.vecSum(col("eq")).as("s"), count(lit(1)).as("n"))
     val a = halves.filter(col("half") === 0)
@@ -1375,9 +1362,9 @@ object Similarity {
         // lands directly on the 1e-4 grid
         (floor(sqrt(col("d2_u").cast("double")) + 0.5) / 1e4).as("l2_drift"),
         when(col("na_u") > 0 && col("nb_u") > 0,
-          floor(col("dot_u").cast("double")
-            / sqrt(col("na_u").cast("double") * col("nb_u").cast("double"))
-            * 1e4 + 0.5) / 1e4).as("cos_centroid"))
+          quantize(col("dot_u").cast("double")
+            / sqrt(col("na_u").cast("double") * col("nb_u").cast("double")), 4))
+          .as("cos_centroid"))
   }
 
   /** Per-vector int8 POST-TRAINING QUANTIZATION report — the other
@@ -1431,14 +1418,14 @@ object Similarity {
         sqrt(greatest(lit(2.0) - lit(2.0) * col("c2"), lit(0.0))))
       .filter(col("d1") > 0 && col("d2") >= col("d1"))
       .withColumn("lmu_u",
-        floor(log(col("d2") / col("d1")) * 1e6 + 0.5).cast("long"))
+        units(log(col("d2") / col("d1")), 6))
       .join(labels, Seq("vec_id"))
     p.groupBy(col("label"))
       .agg(count(lit(1)).as("n_used"), sum(col("lmu_u")).as("su"))
       .select(col("label"), col("n_used"),
         when(col("su") > 0,
-          floor(col("n_used").cast("double")
-            / (col("su").cast("double") / 1e6) * 1e4 + 0.5) / 1e4)
+          quantize(col("n_used").cast("double")
+            / (col("su").cast("double") / 1e6), 4))
           .as("intrinsic_dim"))
   }
 
@@ -1506,16 +1493,16 @@ object Similarity {
         min(r - floor(r)).as(s"${nm}_f"))
     }
     val pctOut = qs.map { case (nm, _) =>
-      (floor((col(s"${nm}_lo") + col(s"${nm}_f")
-        * (col(s"${nm}_hi") - col(s"${nm}_lo"))) * 1e4 + 0.5) / 1e4).as(nm)
+      quantize(col(s"${nm}_lo") + col(s"${nm}_f")
+        * (col(s"${nm}_hi") - col(s"${nm}_lo")), 4).as(nm)
     }
     ranked.groupBy(col("label"))
       .agg(count(lit(1)).as("n_vecs"),
         (Seq(sum(when(col("nsq_u") === 0, 1L).otherwise(0L)).as("n_zero"),
           sum(col("norm_u")).as("su")) ++ pctAggs): _*)
       .select(Seq(col("label"), col("n_vecs"), col("n_zero"),
-        (floor(col("su").cast("double") / col("n_vecs") / 1e6
-          * 1e4 + 0.5) / 1e4).as("mean_norm")) ++ pctOut: _*)
+        quantize(col("su").cast("double") / col("n_vecs") / 1e6, 4).as("mean_norm"))
+        ++ pctOut: _*)
   }
 
   /** Distance-to-class-centroid OUTLIER flags — the mislabeled-vector
@@ -1539,7 +1526,7 @@ object Similarity {
       .groupBy(col("label"))
       .agg(VecSumAgg.vecSum(col("emb")).as("vsum"), count(lit(1)).as("n"))
       .select(col("label"),
-        transform(col("vsum"), s => floor(s / col("n") * 1e6 + 0.5) / 1e6)
+        transform(col("vsum"), s => quantize(s / col("n"), 6))
           .as("centroid"))
     // pin the NARROW scored projection (24 B/row, no embedding
     // array): the global-mean pass and the final flag pass both read
@@ -1598,7 +1585,7 @@ object Similarity {
     // codebooks
     val codeCols = (0 until M).map { m =>
       array_min(array((0 until ksub).map(k =>
-        struct(q6(subScore(m, books(m)(k))).as("d"), lit(k).as("k"))): _*))
+        struct(quantize(subScore(m, books(m)(k)), 6).as("d"), lit(k).as("k"))): _*))
         .getField("k").as(s"code_$m")
     }
     val encoded = v.select(col("vec_id") +: col("emb") +: codeCols: _*)
@@ -1624,8 +1611,8 @@ object Similarity {
     // which DuckDB's aggregate does not specify, so the shortlist-50
     // boundary could differ across engines or even across runs.
     val adcU = (0 until M).map(m =>
-      floor(element_at(element_at(col("lut"), m + 1),
-        col(s"code_$m") + 1) * 1e9 + 0.5).cast("long"))
+      units(element_at(element_at(col("lut"), m + 1),
+        col(s"code_$m") + 1), 9))
       .reduce(_ + _)
     val scored = encoded.join(broadcast(probeDf),
         col("vec_id") =!= col("probe_id"))
@@ -1753,12 +1740,8 @@ object Similarity {
     cappedPairsFrom(pairBuckets(spark, dir))
       .withColumn("cosine", VectorColumns.cosine(col("ea"), col("eb")))
       .filter(col("cosine") >= 0.35)
-      // floor(x·1e4 + 0.5)/1e4, not round(x, 4): pure IEEE
-      // multiply/add/floor is bit-identical across engines, while
-      // Spark's decimal-string HALF_UP and DuckDB's binary round can
-      // split on a half-boundary
       .select(col("id_a"), col("id_b"),
-        (floor(col("cosine") * 1e4 + 0.5) / 1e4).as("cosine"))
+        quantize(col("cosine"), 4).as("cosine"))
 
   /** RECALL-vs-DROPPED-MASS audit for the pairs lane — the embedding
     * twin of [[graft.operators.Dedup.lshRecallAudit]]: exhaustive
@@ -1779,7 +1762,7 @@ object Similarity {
       .join(v.select(col("vec_id").as("id_b"), col("emb").as("eb")),
         col("id_a") < col("id_b"))
       .withColumn("cos4",
-        floor(VectorColumns.cosine(col("ea"), col("eb")) * 1e4 + 0.5) / 1e4)
+        quantize(VectorColumns.cosine(col("ea"), col("eb")), 4))
       .filter(col("cos4") >= 0.35)
     decileRecall(truth, cand, Seq("id_a", "id_b"))
       .crossJoin(broadcast(droppedMass(bucketed)))
@@ -1813,7 +1796,7 @@ object Similarity {
       .join(v.select(col("vec_id").as("id_b"), col("emb").as("eb")),
         col("probe_id") =!= col("id_b"))
       .withColumn("cos4",
-        floor(VectorColumns.cosine(col("ea"), col("eb")) * 1e4 + 0.5) / 1e4)
+        quantize(VectorColumns.cosine(col("ea"), col("eb")), 4))
       .filter(col("cos4") >= 0.35)
     decileRecall(truth, cand, Seq("probe_id", "id_b"))
       .withColumn("sample_rate", lit(Dedup.AuditSampleRate))
@@ -1831,8 +1814,8 @@ object Similarity {
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_true"),
         sum(coalesce(col("found"), lit(0))).cast("long").as("n_found"),
-        (floor(sum(coalesce(col("found"), lit(0)))
-          / count(lit(1)).cast("double") * 1e4 + 0.5) / 1e4).as("recall"))
+        quantize(sum(coalesce(col("found"), lit(0)))
+          / count(lit(1)).cast("double"), 4).as("recall"))
 
   /** The embedding audits' one-row dropped-bucket ledger over the
     * pinned bucket table. */
@@ -1865,7 +1848,6 @@ object Similarity {
     * per-probe output as the fixed audit plus the `sample_rate`
     * column. */
   def annRecallAuditSampled(spark: SparkSession, dir: String): DataFrame = {
-    val quant = (c: Column) => floor(c * 1e4 + 0.5).cast("long")
     val v = vecs(spark, dir)
     val probes = v.filter(annAuditSampled(col("vec_id")))
       .select(col("vec_id").as("probe_id"), col("emb").as("pe"))
@@ -1873,7 +1855,7 @@ object Similarity {
       v.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
         .withColumn("cos", VectorColumns.cosine(col("pe"), col("emb"))), 10)
       .select(col("probe_id"), col("neighbor_id"),
-        quant(col("cosine")).as("cos_u"))
+        units(col("cosine"), 4).as("cos_u"))
     val dim = 64
     val sigCols = (0 until NumTables).map(t =>
       struct(lit(t).as("t"), signature(col("emb"), t, dim).as("sig")))
@@ -1891,7 +1873,7 @@ object Similarity {
     val lsh = topkPerProbe(
       cands.withColumn("cos", VectorColumns.cosine(col("pe"), col("emb"))), 10)
       .select(col("probe_id"), col("neighbor_id"),
-        quant(col("cosine")).as("cos_u"))
+        units(col("cosine"), 4).as("cos_u"))
     recallRollup(bf, lsh)
       .withColumn("sample_rate", lit(AnnAuditSampleRate))
   }

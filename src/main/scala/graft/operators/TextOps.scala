@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.TimeSeries.{quantize, units}
 
 /** Text-analysis + exact-dedup operators over the `documents` corpus —
   * the LLM-training-pipeline surface (SURVEY §2 ops 23, 30-33).
@@ -71,8 +72,8 @@ object TextOps {
         count(lit(1)).as("n_unique"),
         (sum(col("cnt")) - count(lit(1))).as("n_dup_docs"),
         max(col("cnt")).as("max_group"),
-        (floor((sum(col("cnt")) - count(lit(1))).cast("double")
-          / sum(col("cnt")) * 1e4 + 0.5) / 1e4).as("dup_rate"))
+        quantize((sum(col("cnt")) - count(lit(1))).cast("double")
+          / sum(col("cnt")), 4).as("dup_rate"))
   }
 
   /** The language-marker lexicons shared by [[langId]] and
@@ -143,8 +144,7 @@ object TextOps {
         sum(when(col("lang") =!= col("lang_pred"), 1L).otherwise(0L))
           .as("n_mismatch"))
       .select(col("source"), col("n_docs"), col("n_mismatch"),
-        (floor(col("n_mismatch").cast("double") / col("n_docs")
-          * 1e4 + 0.5) / 1e4).as("mismatch_rate"))
+        quantize(col("n_mismatch").cast("double") / col("n_docs"), 4).as("mismatch_rate"))
 
   /** Quality scoring: token/stopword/digit ratios + a bounded
     * composite — the classic pre-training corpus filter signals. */
@@ -234,8 +234,7 @@ object TextOps {
       }: _*)).as("x"))
       .select(col("x.rule").as("rule"), col("x.n_fail").as("n_fail"),
         col("n_docs"),
-        (floor(col("x.n_fail").cast("double") / col("n_docs") * 1e4 + 0.5)
-          / 1e4).as("fail_rate"))
+        quantize(col("x.n_fail").cast("double") / col("n_docs"), 4).as("fail_rate"))
   }
 
   /** Sequential quality FUNNEL — the attrition ledger of a staged
@@ -276,8 +275,7 @@ object TextOps {
         col("x.n_in").as("n_in"), col("x.n_dropped").as("n_dropped"),
         col("x.n_out").as("n_out"),
         when(col("x.n_in") > 0,
-          floor(col("x.n_dropped").cast("double") / col("x.n_in") * 1e4 + 0.5)
-            / 1e4).as("drop_rate"))
+          quantize(col("x.n_dropped").cast("double") / col("x.n_in"), 4)).as("drop_rate"))
   }
 
   /** Token counting: whitespace tokens, distinct tokens, regex word
@@ -398,12 +396,10 @@ object TextOps {
     bySrc.groupBy(col("shard"))
       .agg(sum(col("nd")).as("n_docs"), sum(col("nc")).as("n_chars"),
         count(lit(1)).as("n_sources"),
-        sum(floor(col("nd").cast("double") * log(col("nd").cast("double"))
-          * 1e6 + 0.5).cast("long")).as("su"))
+        sum(units(col("nd").cast("double") * log(col("nd").cast("double")), 6)).as("su"))
       .select(col("shard"), col("n_docs"), col("n_chars"), col("n_sources"),
-        (floor((log(col("n_docs").cast("double"))
-          - col("su").cast("double") / 1e6 / col("n_docs")) * 1e4 + 0.5)
-          / 1e4).as("src_entropy"))
+        quantize(log(col("n_docs").cast("double"))
+          - col("su").cast("double") / 1e6 / col("n_docs"), 4).as("src_entropy"))
   }
 
   /** Shard count of [[corpusShardManifest]] — a training-run constant
@@ -432,10 +428,10 @@ object TextOps {
   def qualitySignalCorr(spark: SparkSession, dir: String): DataFrame = {
     val q = textQuality(spark, dir).select(
       col("n_tokens").as("v0"),
-      floor(col("stop_ratio") * 1e4 + 0.5).cast("long").as("v1"),
-      floor(col("digit_ratio") * 1e4 + 0.5).cast("long").as("v2"),
-      floor(col("mean_token_len") * 1e4 + 0.5).cast("long").as("v3"),
-      floor(col("quality_score") * 1e4 + 0.5).cast("long").as("v4"))
+      units(col("stop_ratio"), 4).as("v1"),
+      units(col("digit_ratio"), 4).as("v2"),
+      units(col("mean_token_len"), 4).as("v3"),
+      units(col("quality_score"), 4).as("v4"))
     val aggs = (0 until 5).map(i => sum(col(s"v$i")).as(s"s$i")) ++
       (for { i <- 0 until 5; j <- i until 5 }
         yield sum(col(s"v$i") * col(s"v$j")).as(s"ss${i}_$j"))
@@ -451,7 +447,7 @@ object TextOps {
         struct(lit(QualitySignals(i)).as("sig_a"),
           lit(QualitySignals(j)).as("sig_b"),
           when(denA > 0 && denB > 0,
-            floor(num / (denA * denB) * 1e4 + 0.5) / 1e4).as("r"))
+            quantize(num / (denA * denB), 4)).as("r"))
       }
     m.select(col("n"), explode(array(pairStructs: _*)).as("p"))
       .select(col("p.sig_a").as("sig_a"), col("p.sig_b").as("sig_b"),
@@ -617,8 +613,8 @@ object TextOps {
     // closed so far, m = max closed-run length, s = Σ r·ln(r) over
     // closed runs; the finish lambda closes the final run. Ratios
     // divide exact integers, so they are engine-invariant; the
-    // entropy sum is floor-quantized (not round()) as everywhere
-    // else — see Climate.quantileMap.
+    // entropy sum is quantized (TimeSeries.quantize) as everywhere
+    // else.
     val tokStats = expr(
       """aggregate(array_sort(toks),
         |  named_struct('p', cast(null as string), 'r', 0L, 's', 0D),
@@ -658,20 +654,17 @@ object TextOps {
       .select(
         col("doc_id"),
         size(col("toks")).cast("long").as("n_tokens"),
-        (floor((log(size(col("toks")).cast("double"))
-            - col("sumclnc") / size(col("toks")).cast("double"))
-          * 1e4 + 0.5) / 1e4).as("token_entropy"),
+        quantize(log(size(col("toks")).cast("double"))
+            - col("sumclnc") / size(col("toks")).cast("double"), 4).as("token_entropy"),
         // the replaced left join yielded NULLs for a bigram-less doc
         when(size(col("toks")) >= 2,
           (size(col("toks")) - 1).cast("long")).as("n_bigrams"),
         when(size(col("toks")) >= 2,
-          floor((lit(1.0) - col("bi.d").cast("double")
-              / (size(col("toks")) - 1).cast("double"))
-            * 1e4 + 0.5) / 1e4).as("dup_bigram_ratio"),
+          quantize(lit(1.0) - col("bi.d").cast("double")
+              / (size(col("toks")) - 1).cast("double"), 4)).as("dup_bigram_ratio"),
         when(size(col("toks")) >= 2,
-          floor((col("bi.m").cast("double")
-              / (size(col("toks")) - 1).cast("double"))
-            * 1e4 + 0.5) / 1e4).as("top_bigram_ratio"))
+          quantize(col("bi.m").cast("double")
+              / (size(col("toks")) - 1).cast("double"), 4)).as("top_bigram_ratio"))
   }
 
   /** The composed corpus-curation pipeline in ONE plan — what a
@@ -700,9 +693,9 @@ object TextOps {
       // feeds a >= threshold, where the engines' round() divergence
       // on .00005 boundaries would flip membership
       .withColumn("quality_score",
-        floor(least(lit(1.0), col("n_tokens") / lit(100.0))
+        quantize(least(lit(1.0), col("n_tokens") / lit(100.0))
           * (lit(1.0) - (cnt(col("toks"), "the") + cnt(col("toks"), "a"))
-              / col("n_tokens").cast("double")) * 1e4 + 0.5) / 1e4)
+              / col("n_tokens").cast("double")), 4))
     val keeper = org.apache.spark.sql.expressions.Window
       .partitionBy(md5(col("norm")))
     scored
@@ -776,8 +769,7 @@ object TextOps {
       .join(broadcast(zipfWeights.toDF("rank", "wt")), Seq("rank"))
     val fit = top.groupBy(col("source"))
       .agg(count(lit(1)).as("n_ranks"),
-        sum(floor(col("wt") * log(col("n").cast("double")) * 1e6 + 0.5)
-          .cast("long")).as("su"),
+        sum(units(col("wt") * log(col("n").cast("double")), 6)).as("su"),
         sum(col("n")).as("head_mass"))
     val totals = counts.groupBy(col("source"))
       .agg(sum(col("n")).as("total_mass"),
@@ -785,10 +777,9 @@ object TextOps {
     totals.join(broadcast(fit), Seq("source"), "left")
       .select(col("source"), col("vocab_size"), col("total_mass"),
         col("n_ranks"),
-        (floor(col("su").cast("double") / 1e6 * 1e4 + 0.5) / 1e4)
+        quantize(col("su").cast("double") / 1e6, 4)
           .as("zipf_slope"),
-        (floor(col("head_mass").cast("double") / col("total_mass")
-          * 1e4 + 0.5) / 1e4).as("head_share"))
+        quantize(col("head_mass").cast("double") / col("total_mass"), 4).as("head_share"))
   }
 
   /** SpaceSaving sketch capacity for [[vocabHeavyHitters]]. */
@@ -1069,7 +1060,7 @@ object TextOps {
       .agg(max(col("n")).as("n_docs"),
         (sum(col("term")) / 1e8).as("psi_raw"))
       .select(col("bucket"), col("n_docs").cast("long").as("n_docs"),
-        (floor(col("psi_raw") * 1e6 + 0.5) / 1e6).as("psi"),
+        quantize(col("psi_raw"), 6).as("psi"),
         when(col("psi_raw") > 0.25, "shifted")
           .when(col("psi_raw") > 0.1, "drifting")
           .otherwise("stable").as("verdict"))
@@ -1145,7 +1136,7 @@ object TextOps {
       .select(col("k"),
         col("cum").cast("long").as("covered_tokens"),
         col("total_tokens"),
-        (floor(col("cum").cast("double") / col("total_tokens") * 1e4 + 0.5) / 1e4)
+        quantize(col("cum").cast("double") / col("total_tokens"), 4)
           .as("coverage"))
   }
 
@@ -1233,8 +1224,7 @@ object TextOps {
       .agg(sum(col("n_docs")).as("n_docs"),
         sum(col("n_tok")).as("avail_tokens"))
       .withColumn("su",
-        floor(sqrt(col("avail_tokens").cast("double")) * 1e6 + 0.5)
-          .cast("long"))
+        units(sqrt(col("avail_tokens").cast("double")), 6))
     val tot = avail.agg(sum(col("su")).as("sum_su"),
       sum(col("avail_tokens")).as("total_tokens"))
     val rates = avail.crossJoin(broadcast(tot))
@@ -1354,9 +1344,9 @@ object TextOps {
     val scored = tf.withColumn("df", count(lit(1)).over(wDf))
       .crossJoin(broadcast(n))
       .withColumn("idf",
-        floor(log(col("n_docs").cast("double") / col("df")) * 1e6 + 0.5) / 1e6)
+        quantize(log(col("n_docs").cast("double") / col("df")), 6))
       .withColumn("score",
-        floor(col("tf") * col("idf") * 1e4 + 0.5) / 1e4)
+        quantize(col("tf") * col("idf"), 4))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id"))
       .orderBy(col("score").desc, col("term").asc)
@@ -1432,14 +1422,13 @@ object TextOps {
       .agg(count(lit(1)).as("v"))
     val scored = model.crossJoin(vocab)
       .withColumn("logp",
-        floor(log((col("c_bi") + 1) / (col("c_prev") + col("v")).cast("double"))
-          * 1e6 + 0.5) / 1e6)
+        quantize(log((col("c_bi") + 1) / (col("c_prev") + col("v")).cast("double")), 6))
       .select(col("prev"), col("cur"), col("logp"))
     bi.join(scored, Seq("prev", "cur"))
       .groupBy(col("doc_id"))
       .agg(sum(col("n_occ")).cast("long").as("n_bigrams"),
-        (floor(sum(col("logp") * col("n_occ"))
-          / sum(col("n_occ")) * 1e4 + 0.5) / 1e4).as("mean_logp"))
+        quantize(sum(col("logp") * col("n_occ"))
+          / sum(col("n_occ")), 4).as("mean_logp"))
   }
 
   /** Collocation mining by pointwise mutual information — the phrase-
@@ -1490,8 +1479,8 @@ object TextOps {
       // P(ab) uses the bigram total = n_total - n_docs ≈ n_total; the
       // token total keeps both engines' convention identical
       .withColumn("pmi",
-        floor(log(col("n_ab").cast("double") * col("n_total")
-          / (col("n_a").cast("double") * col("n_b"))) * 1e6 + 0.5) / 1e6)
+        quantize(log(col("n_ab").cast("double") * col("n_total")
+          / (col("n_a").cast("double") * col("n_b"))), 6))
       .orderBy(col("pmi").desc, col("a").asc, col("b").asc)
       .limit(50)
       .select(col("a"), col("b"), col("n_ab"), col("pmi"))
@@ -1800,8 +1789,8 @@ object TextOps {
         coalesce(col("cut_tokens"), lit(0L)).as("cut_tokens"),
         (col("n_tokens") - coalesce(col("cut_tokens"), lit(0L)))
           .as("kept_tokens"),
-        (floor((col("n_tokens") - coalesce(col("cut_tokens"), lit(0L)))
-          / col("n_tokens").cast("double") * 1e4 + 0.5) / 1e4)
+        quantize((col("n_tokens") - coalesce(col("cut_tokens"), lit(0L)))
+          / col("n_tokens").cast("double"), 4)
           .as("kept_frac"))
       .orderBy(col("doc_id"))
   }

@@ -35,6 +35,21 @@ object TimeSeries {
     * merge-order-free, so both engines agree bit for bit. */
   private[graft] def cents(v: Column): Column = floor(v * 100 + 0.5).cast("long")
 
+  /** The output rounding rule: `c` to `digits` decimals, half up (a tie
+    * goes toward +∞), through the pure IEEE chain floor(c·10ⁿ + 0.5)/10ⁿ.
+    * Never `round(c, n)`: Spark rounds a decimal HALF_UP, DuckDB the
+    * binary double, so a value on a half-boundary could split the two
+    * engines. The scale renders as the same double literal as `1e4`. */
+  private[graft] def quantize(c: Column, digits: Int): Column = {
+    val scale = math.pow(10, digits)
+    floor(c * scale + 0.5) / scale
+  }
+
+  /** [[quantize]]'s grid as exact integer units (a long), for sums that
+    * must be merge-order-free. */
+  private[graft] def units(c: Column, digits: Int): Column =
+    floor(c * math.pow(10, digits) + 0.5).cast("long")
+
   /** Day index `x`: whole UTC days since 2024-01-01, as a long. */
   private[graft] val dayX: Column =
     datediff(date_trunc("DAY", col("ts")), lit("2024-01-01")).cast("long").as("x")
@@ -216,7 +231,7 @@ object TimeSeries {
       .withColumn("mu", sum(col("cents")).over(wAll).cast("double")
         / (lit(100.0) * count(lit(1)).over(wAll)))
       .withColumn("d_u",
-        floor((col("value") - col("mu") - lit(5.0)) * 1e6 + 0.5).cast("long"))
+        units(col("value") - col("mu") - lit(5.0), 6))
       .withColumn("cs", sum(col("d_u")).over(wSeq))
       .withColumn("cusum_u",
         col("cs") - least(lit(0L), min(col("cs")).over(wSeq)))
@@ -427,12 +442,12 @@ object TimeSeries {
         sum(col("x") * col("x")).cast("double").as("sx2"),
         (sum(col("yc") * col("yc")).cast("double") / 10000.0).as("sy2"))
       .select(col("user_id"), col("n").cast("long").as("n_obs"),
-        when(sxx > 0, floor(sxy / sxx * 1e6 + 0.5) / 1e6).as("slope_per_day"),
+        when(sxx > 0, quantize(sxy / sxx, 6)).as("slope_per_day"),
         when(sxx > 0,
-          floor((col("sy") - sxy / sxx * col("sx")) / col("n") * 1e4 + 0.5) / 1e4)
+          quantize((col("sy") - sxy / sxx * col("sx")) / col("n"), 4))
           .as("intercept"),
         when(sxx > 0 && syy > 0,
-          floor(sxy * sxy / (sxx * syy) * 1e4 + 0.5) / 1e4).as("r2"))
+          quantize(sxy * sxy / (sxx * syy), 4)).as("r2"))
   }
 
   /** Per-station THEIL–SEN trend — the robust twin of [[trend]]: the
@@ -472,11 +487,11 @@ object TimeSeries {
           " q -> (q.y - p.y) / (q.x - p.x)))"))))
       .select(col("user_id"), size(col("pts")).cast("long").as("n_days"),
         size(col("slopes")).cast("long").as("n_pairs"),
-        (floor(when(size(col("slopes")) % 2 === 1,
+        quantize(when(size(col("slopes")) % 2 === 1,
             element_at(col("slopes"), expr("cast((size(slopes) + 1) div 2 as int)")))
           .otherwise((element_at(col("slopes"), expr("cast(size(slopes) div 2 as int)"))
-            + element_at(col("slopes"), expr("cast(size(slopes) div 2 + 1 as int)"))) / 2.0)
-          * 1e6 + 0.5) / 1e6).as("sen_slope"))
+            + element_at(col("slopes"), expr("cast(size(slopes) div 2 + 1 as int)"))) / 2.0),
+          6).as("sen_slope"))
   }
 
   /** Per-station MANN–KENDALL trend TEST — the significance half of
@@ -503,6 +518,39 @@ object TimeSeries {
   def mannKendall(spark: SparkSession, dir: String): DataFrame =
     mannKendallOf(Tables.events(spark, dir))
 
+  /** Mann–Kendall S over a sorted `pts` series: each point paired with
+    * every LATER one (slice(pts, i+2, n), the theilSen enumeration),
+    * sgn cast to long so the reduction is an integer sum —
+    * merge-order-free. */
+  private val mkSignSum: Column = expr(
+    """aggregate(flatten(transform(pts, (p, i) ->
+      |  transform(slice(pts, i + 2, size(pts)),
+      |    q -> cast(sign(q.y - p.y) as bigint)))),
+      |  0L, (a, s) -> a + s)""".stripMargin)
+
+  /** Tie correction Σ t(t−1)(2t+5) of `pts`: a run-length scan over the
+    * SORTED values; the accumulator flushes each finished run's term
+    * so state is O(1) regardless of series length. */
+  private val mkTieTerm: Column = expr(
+    """aggregate(array_sort(transform(pts, p -> p.y)),
+      |  named_struct('prev', cast(null as double), 'run', 0L, 'acc', 0L),
+      |  (st, y) -> if(st.prev is not null and y = st.prev,
+      |    named_struct('prev', y, 'run', st.run + 1L, 'acc', st.acc),
+      |    named_struct('prev', y, 'run', 1L,
+      |      'acc', st.acc + st.run * (st.run - 1L) * (2L * st.run + 5L))),
+      |  st -> st.acc + st.run * (st.run - 1L) * (2L * st.run + 5L))"""
+      .stripMargin)
+
+  /** Continuity-corrected Z of `s_stat` over `var_s`; null when the
+    * variance is 0. */
+  private val mkZ: Column =
+    when(col("var_s") > 0,
+      when(col("s_stat") > 0,
+        (col("s_stat") - 1).cast("double") / sqrt(col("var_s")))
+      .when(col("s_stat") < 0,
+        (col("s_stat") + 1).cast("double") / sqrt(col("var_s")))
+      .otherwise(lit(0.0)))
+
   /** [[mannKendall]] over an arbitrary (user_id, ts, value) frame —
     * seam for the planted-trend spec. */
   private[graft] def mannKendallOf(ev: DataFrame): DataFrame = {
@@ -511,40 +559,16 @@ object TimeSeries {
     daily.groupBy(col("user_id"))
       .agg(sort_array(collect_list(struct(col("x"), col("y")))).as("pts"))
       .filter(size(col("pts")) >= 3)
-      // pairwise sign sum: slice(pts, i+2, n) pairs each point with
-      // every LATER one (the theilSen enumeration), sgn cast to long
-      // so the reduction is an integer sum — merge-order-free
-      .withColumn("s_stat", expr(
-        """aggregate(flatten(transform(pts, (p, i) ->
-          |  transform(slice(pts, i + 2, size(pts)),
-          |    q -> cast(sign(q.y - p.y) as bigint)))),
-          |  0L, (a, s) -> a + s)""".stripMargin))
-      // tie correction: run-length scan over the SORTED values; the
-      // accumulator flushes each finished run's t(t−1)(2t+5) so state
-      // is O(1) regardless of series length
-      .withColumn("tie_term", expr(
-        """aggregate(array_sort(transform(pts, p -> p.y)),
-          |  named_struct('prev', cast(null as double), 'run', 0L, 'acc', 0L),
-          |  (st, y) -> if(st.prev is not null and y = st.prev,
-          |    named_struct('prev', y, 'run', st.run + 1L, 'acc', st.acc),
-          |    named_struct('prev', y, 'run', 1L,
-          |      'acc', st.acc + st.run * (st.run - 1L) * (2L * st.run + 5L))),
-          |  st -> st.acc + st.run * (st.run - 1L) * (2L * st.run + 5L))"""
-          .stripMargin))
+      .withColumn("s_stat", mkSignSum)
+      .withColumn("tie_term", mkTieTerm)
       .withColumn("n", size(col("pts")).cast("long"))
       .withColumn("var_s",
         (col("n") * (col("n") - 1) * (col("n") * 2 + 5) - col("tie_term"))
           .cast("double") / 18.0)
-      .withColumn("z_raw",
-        when(col("var_s") > 0,
-          when(col("s_stat") > 0,
-            (col("s_stat") - 1).cast("double") / sqrt(col("var_s")))
-          .when(col("s_stat") < 0,
-            (col("s_stat") + 1).cast("double") / sqrt(col("var_s")))
-          .otherwise(lit(0.0))))
+      .withColumn("z_raw", mkZ)
       .select(col("user_id"), col("n").as("n_days"), col("s_stat"),
         col("var_s"),
-        (floor(col("z_raw") * 1e4 + 0.5) / 1e4).as("z_stat"),
+        quantize(col("z_raw"), 4).as("z_stat"),
         when(col("z_raw").isNull, "undefined")
           .when(col("z_raw") > 1.96, "increasing")
           .when(col("z_raw") < -1.96, "decreasing")
@@ -580,20 +604,8 @@ object TimeSeries {
     val per = daily.groupBy(col("user_id"), col("season"))
       .agg(sort_array(collect_list(struct(col("x"), col("y")))).as("pts"))
       .filter(size(col("pts")) >= 3)
-      .withColumn("s_m", expr(
-        """aggregate(flatten(transform(pts, (p, i) ->
-          |  transform(slice(pts, i + 2, size(pts)),
-          |    q -> cast(sign(q.y - p.y) as bigint)))),
-          |  0L, (a, s) -> a + s)""".stripMargin))
-      .withColumn("tie_m", expr(
-        """aggregate(array_sort(transform(pts, p -> p.y)),
-          |  named_struct('prev', cast(null as double), 'run', 0L, 'acc', 0L),
-          |  (st, y) -> if(st.prev is not null and y = st.prev,
-          |    named_struct('prev', y, 'run', st.run + 1L, 'acc', st.acc),
-          |    named_struct('prev', y, 'run', 1L,
-          |      'acc', st.acc + st.run * (st.run - 1L) * (2L * st.run + 5L))),
-          |  st -> st.acc + st.run * (st.run - 1L) * (2L * st.run + 5L))"""
-          .stripMargin))
+      .withColumn("s_m", mkSignSum)
+      .withColumn("tie_m", mkTieTerm)
       .withColumn("n_m", size(col("pts")).cast("long"))
       .withColumn("var_i",
         col("n_m") * (col("n_m") - 1) * (col("n_m") * 2 + 5) - col("tie_m"))
@@ -603,16 +615,10 @@ object TimeSeries {
         sum(col("s_m")).as("s_stat"),
         sum(col("var_i")).as("vi"))
       .withColumn("var_s", col("vi").cast("double") / 18.0)
-      .withColumn("z_raw",
-        when(col("var_s") > 0,
-          when(col("s_stat") > 0,
-            (col("s_stat") - 1).cast("double") / sqrt(col("var_s")))
-          .when(col("s_stat") < 0,
-            (col("s_stat") + 1).cast("double") / sqrt(col("var_s")))
-          .otherwise(lit(0.0))))
+      .withColumn("z_raw", mkZ)
       .select(col("user_id"), col("n_seasons"), col("n_total"),
         col("s_stat"), col("var_s"),
-        (floor(col("z_raw") * 1e4 + 0.5) / 1e4).as("z_stat"),
+        quantize(col("z_raw"), 4).as("z_stat"),
         when(col("z_raw").isNull, "undefined")
           .when(col("z_raw") > 1.96, "increasing")
           .when(col("z_raw") < -1.96, "decreasing")
@@ -641,9 +647,9 @@ object TimeSeries {
     daily
       .withColumn("peak", max(col("level")).over(w))
       .select(col("user_id"), col("day"),
-        (floor(col("level") * 1e4 + 0.5) / 1e4).as("level"),
-        (floor(col("peak") * 1e4 + 0.5) / 1e4).as("peak"),
-        (floor((col("peak") - col("level")) * 1e4 + 0.5) / 1e4)
+        quantize(col("level"), 4).as("level"),
+        quantize(col("peak"), 4).as("peak"),
+        quantize(col("peak") - col("level"), 4)
           .as("drawdown"))
   }
 
@@ -711,7 +717,7 @@ object TimeSeries {
         }))
       .select(col("user_id"), size(col("pts")).cast("long").as("n_days"),
         col("n_plus"), col("n_minus"), col("n_runs"),
-        (floor(col("z_raw") * 1e4 + 0.5) / 1e4).as("z_stat"),
+        quantize(col("z_raw"), 4).as("z_stat"),
         when(col("z_raw").isNull, "undefined")
           .when(abs(col("z_raw")) > 1.96, "non_random")
           .otherwise("random").as("verdict"))
@@ -769,7 +775,7 @@ object TimeSeries {
         }))
       .select(col("user_id"), col("na").as("n_pre"), col("nb").as("n_post"),
         (col("u2").cast("double") / 2.0).as("u_stat"),
-        (floor(col("z_raw") * 1e4 + 0.5) / 1e4).as("z_stat"),
+        quantize(col("z_raw"), 4).as("z_stat"),
         when(col("z_raw").isNull, "undefined")
           .when(abs(col("z_raw")) > 1.96, "shifted")
           .otherwise("consistent").as("verdict"))
@@ -806,10 +812,9 @@ object TimeSeries {
         substring(col("day"), 1, 7).as("month"))
       .agg(count(lit(1)).cast("long").as("n_days"),
         sum(when(col("y") > col("thr"), 1L).otherwise(0L)).as("n_extreme"),
-        (floor(min(col("thr")) * 1e4 + 0.5) / 1e4).as("threshold"))
+        quantize(min(col("thr")), 4).as("threshold"))
       .withColumn("extreme_share",
-        floor(col("n_extreme").cast("double") / col("n_days") * 1e4 + 0.5)
-          / 1e4)
+        quantize(col("n_extreme").cast("double") / col("n_days"), 4))
   }
 
   /** Observation validity horizon for [[coverageUptime]]: each report
@@ -858,7 +863,7 @@ object TimeSeries {
       .agg(count(lit(1)).cast("long").as("n_islands"),
         sum(col("end_s") - col("start_s")).cast("long").as("covered_s"))
       .withColumn("uptime_share",
-        floor(col("covered_s").cast("double") / 86400.0 * 1e4 + 0.5) / 1e4)
+        quantize(col("covered_s").cast("double") / 86400.0, 4))
   }
 
   /** Per-day PERCENTILE-OF-RECORD — the percent-of-normal drought
@@ -887,8 +892,8 @@ object TimeSeries {
       .withColumn("pctl", cume_dist().over(byVal))
       .withColumn("n_days", count(lit(1)).over(all).cast("long"))
       .select(col("user_id"), col("day"),
-        (floor(col("level") * 1e4 + 0.5) / 1e4).as("level"),
-        (floor(col("pctl") * 1e4 + 0.5) / 1e4).as("pctl"),
+        quantize(col("level"), 4).as("level"),
+        quantize(col("pctl"), 4).as("pctl"),
         col("n_days"))
   }
 
@@ -939,7 +944,7 @@ object TimeSeries {
     Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"),
         round(col("value"), 2).as("value"),
-        (floor(num / den * 1e4 + 0.5) / 1e4).as("ewma"))
+        quantize(num / den, 4).as("ewma"))
   }
 
   /** Ordered-sequence FUNNEL over sessions — "did signup → click →
@@ -981,8 +986,7 @@ object TimeSeries {
           .cast("long").as("longest_gap"))
       .select(col("user_id"), col("n_days"), col("expected_days"),
         col("n_gaps"), col("longest_gap"),
-        (floor(col("n_days").cast("double") / col("expected_days")
-          * 1e4 + 0.5) / 1e4).as("completeness"))
+        quantize(col("n_days").cast("double") / col("expected_days"), 4).as("completeness"))
   }
 
   /** Day-of-week × hour ACTIVITY HEATMAP — the diurnal/weekly usage
@@ -1004,7 +1008,7 @@ object TimeSeries {
       .select(col("dow").cast("int").as("dow"), col("hour"), col("n"),
         (floor(col("sc").cast("double") / col("n") + 0.5) / 100.0)
           .as("mean_value"),
-        (floor(col("n").cast("double") / col("nn") * 1e6 + 0.5) / 1e6)
+        quantize(col("n").cast("double") / col("nn"), 6)
           .as("share"))
   }
 
@@ -1022,14 +1026,13 @@ object TimeSeries {
     * existing station exchange; degenerate variances report null. */
   def seasonalStrength(spark: SparkSession, dir: String): DataFrame = {
     def q(c: Column) =
-      floor((c.cast("double") / 1e4) * (c.cast("double") / 1e4) * 1e4 + 0.5)
-        .cast("long")
+      units((c.cast("double") / 1e4) * (c.cast("double") / 1e4), 4)
     val u = seasonalDecompose(spark, dir)
       .select(col("user_id"),
-        floor(col("residual") * 1e4 + 0.5).cast("long").as("r_u"),
-        floor((col("value") - col("seasonal")) * 1e4 + 0.5).cast("long")
+        units(col("residual"), 4).as("r_u"),
+        units(col("value") - col("seasonal"), 4)
           .as("tr_u"),
-        floor((col("value") - col("trend")) * 1e4 + 0.5).cast("long")
+        units(col("value") - col("trend"), 4)
           .as("sr_u"))
     def variance(s: Column, sq: Column, n: Column) =
       sq.cast("double") / 1e4 / n -
@@ -1040,18 +1043,16 @@ object TimeSeries {
         sum(col("tr_u")).as("s_tr"), sum(q(col("tr_u"))).as("q_tr"),
         sum(col("sr_u")).as("s_sr"), sum(q(col("sr_u"))).as("q_sr"))
       .select(col("user_id"), col("n").as("n_days"),
-        (floor(variance(col("s_r"), col("q_r"), col("n")) * 1e4 + 0.5) / 1e4)
+        quantize(variance(col("s_r"), col("q_r"), col("n")), 4)
           .as("var_resid"),
         when(variance(col("s_tr"), col("q_tr"), col("n")) > 0,
-          floor(greatest(lit(0.0), lit(1.0)
+          quantize(greatest(lit(0.0), lit(1.0)
             - variance(col("s_r"), col("q_r"), col("n"))
-            / variance(col("s_tr"), col("q_tr"), col("n"))) * 1e4 + 0.5)
-            / 1e4).as("f_trend"),
+            / variance(col("s_tr"), col("q_tr"), col("n"))), 4)).as("f_trend"),
         when(variance(col("s_sr"), col("q_sr"), col("n")) > 0,
-          floor(greatest(lit(0.0), lit(1.0)
+          quantize(greatest(lit(0.0), lit(1.0)
             - variance(col("s_r"), col("q_r"), col("n"))
-            / variance(col("s_sr"), col("q_sr"), col("n"))) * 1e4 + 0.5)
-            / 1e4).as("f_seasonal"))
+            / variance(col("s_sr"), col("q_sr"), col("n"))), 4)).as("f_seasonal"))
   }
 
   /** ENTROPY RATE of the event-type chain — the predictability
@@ -1070,18 +1071,14 @@ object TimeSeries {
       .localCheckpoint() // the total and the per-state sums both read it
     val tot = m.agg(sum(col("n_trans")).as("nn"))
     m.withColumn("tu",
-        floor(-(col("n_trans").cast("double")
-          * log(col("n_trans").cast("double") / col("n_from"))) * 1e6 + 0.5)
-          .cast("long"))
+        units(-(col("n_trans").cast("double")
+          * log(col("n_trans").cast("double") / col("n_from"))), 6))
       .crossJoin(broadcast(tot))
       .groupBy(col("from_type"))
       .agg(min(col("n_from")).as("n_from"),
-        (floor(min(col("n_from")).cast("double") / min(col("nn"))
-          * 1e4 + 0.5) / 1e4).as("pi"),
-        (floor(sum(col("tu")).cast("double") / 1e6 / min(col("n_from"))
-          * 1e4 + 0.5) / 1e4).as("h_cond"),
-        (floor(sum(col("tu")).cast("double") / 1e6 / min(col("nn"))
-          * 1e4 + 0.5) / 1e4).as("h_contrib"))
+        quantize(min(col("n_from")).cast("double") / min(col("nn")), 4).as("pi"),
+        quantize(sum(col("tu")).cast("double") / 1e6 / min(col("n_from")), 4).as("h_cond"),
+        quantize(sum(col("tu")).cast("double") / 1e6 / min(col("nn")), 4).as("h_contrib"))
   }
 
   /** Funnel CONVERSION LATENCY — how long signup→purchase takes, the
@@ -1141,13 +1138,13 @@ object TimeSeries {
       .distinct().agg(count(lit(1)).as("n_sessions"))
     cum.groupBy()
       .agg(min(col("n")).as("n_converted"),
-        (Seq((floor(min(col("sl")).cast("double") / min(col("n"))
-          * 1e4 + 0.5) / 1e4).as("mean_s")) ++ pctAggs): _*)
+        (Seq(quantize(min(col("sl")).cast("double") / min(col("n")), 4).as("mean_s"))
+          ++ pctAggs): _*)
       .crossJoin(broadcast(nSessions))
       .select(Seq(col("n_sessions"), col("n_converted"),
         col("mean_s")) ++ qs.map { case (nm, _) =>
-          (floor((col(s"${nm}_lo") + col(s"${nm}_f")
-            * (col(s"${nm}_hi") - col(s"${nm}_lo"))) * 1e4 + 0.5) / 1e4)
+          quantize(col(s"${nm}_lo") + col(s"${nm}_f")
+            * (col(s"${nm}_hi") - col(s"${nm}_lo")), 4)
             .as(nm) }: _*)
   }
 
@@ -1216,7 +1213,7 @@ object TimeSeries {
       .select(col("s.stage").as("stage"), col("s.name").as("name"),
         col("s.n").as("n"),
         when(col("s.prev") > 0,
-          floor(col("s.n").cast("double") / col("s.prev") * 1e4 + 0.5) / 1e4)
+          quantize(col("s.n").cast("double") / col("s.prev"), 4))
           .as("conversion"))
   }
 
@@ -1250,7 +1247,7 @@ object TimeSeries {
       .agg(count(lit(1)).as("n_trans"))
       .withColumn("n_from", sum(col("n_trans")).over(wf))
       .withColumn("p",
-        floor(col("n_trans").cast("double") / col("n_from") * 1e4 + 0.5) / 1e4)
+        quantize(col("n_trans").cast("double") / col("n_from"), 4))
   }
 
   /** Cohort RETENTION matrix — "of the stations/users first seen on
@@ -1287,8 +1284,7 @@ object TimeSeries {
     cell.join(broadcast(size), Seq("cohort_day"))
       .select(col("cohort_day"), col("offset_days"), col("n_active"),
         col("cohort_size"),
-        (floor(col("n_active").cast("double") / col("cohort_size") * 1e4 + 0.5)
-          / 1e4).as("retention"))
+        quantize(col("n_active").cast("double") / col("cohort_size"), 4).as("retention"))
   }
 
   /** Autocorrelation lags reported by [[autocorr]]. */
@@ -1330,7 +1326,7 @@ object TimeSeries {
           .as("dev"))
       .localCheckpoint()
     val den = dev.groupBy(col("user_id"))
-      .agg(sum(floor(col("dev") * col("dev") * 1e8 + 0.5).cast("long")).as("den_u"),
+      .agg(sum(units(col("dev") * col("dev"), 8)).as("den_u"),
         count(lit(1)).as("n_days"))
     // pure EQUI-join on (station, day): each b-row fans out to its 3
     // candidate predecessors (xb − k), so matching is hash-join exact
@@ -1342,12 +1338,12 @@ object TimeSeries {
       .withColumn("xa", col("xb") - col("lag"))
     val num = dev.join(b, col("user_id") === col("ub") && col("x") === col("xa"))
       .groupBy(col("user_id"), col("lag"))
-      .agg(sum(floor(col("dev") * col("devb") * 1e8 + 0.5).cast("long")).as("num_u"),
+      .agg(sum(units(col("dev") * col("devb"), 8)).as("num_u"),
         count(lit(1)).as("n_pairs"))
     num.join(den, Seq("user_id"))
       .select(col("user_id"), col("lag"), col("n_days"), col("n_pairs"),
         when(col("n_pairs") >= 5 && col("den_u") > 0,
-          floor(col("num_u").cast("double") / col("den_u") * 1e4 + 0.5) / 1e4)
+          quantize(col("num_u").cast("double") / col("den_u"), 4))
           .as("acf"))
   }
 
@@ -1389,7 +1385,7 @@ object TimeSeries {
         col("acf1"), col("acf2"), col("acf3"),
         when(col("acf1").isNotNull && col("acf2").isNotNull &&
             col("acf3").isNotNull && n > 3,
-          floor((n * (n + 2)).cast("double") * s * 1e4 + 0.5) / 1e4)
+          quantize((n * (n + 2)).cast("double") * s, 4))
           .as("q_stat"))
       .withColumn("white_noise",
         when(col("q_stat").isNotNull,
@@ -1518,15 +1514,15 @@ object TimeSeries {
       }: _*)))
       .groupBy(col("user_id"), col("p.period").as("period"))
       .agg(count(lit(1)).as("n_days"),
-        sum(floor(col("dev") * col("p.cw") * 1e6 + 0.5).cast("long"))
+        sum(units(col("dev") * col("p.cw"), 6))
           .as("c_u"),
-        sum(floor(col("dev") * col("p.sw") * 1e6 + 0.5).cast("long"))
+        sum(units(col("dev") * col("p.sw"), 6))
           .as("s_u"))
       .select(col("user_id"), col("period").cast("long").as("period"),
         col("n_days"),
-        (floor((col("c_u").cast("double") * col("c_u").cast("double")
+        quantize((col("c_u").cast("double") * col("c_u").cast("double")
           + col("s_u").cast("double") * col("s_u").cast("double"))
-          / (col("n_days") * col("n_days")) / 1e12 * 1e4 + 0.5) / 1e4)
+          / (col("n_days") * col("n_days")) / 1e12, 4)
           .as("power"))
   }
 
@@ -1586,8 +1582,8 @@ object TimeSeries {
     val dist = graft.expressions.VectorColumns.dtw(col("s"), col("ref_s"), DtwBand)
     ser.crossJoin(broadcast(ref))
       .select(col("user_id"), col("n_days"), col("ref_days"),
-        (floor(dist * 1e4 + 0.5) / 1e4).as("dtw_dist"),
-        (floor(dist / (col("n_days") + col("ref_days")) * 1e4 + 0.5) / 1e4)
+        quantize(dist, 4).as("dtw_dist"),
+        quantize(dist / (col("n_days") + col("ref_days")), 4)
           .as("dtw_per_step"))
   }
 
@@ -1639,18 +1635,17 @@ object TimeSeries {
       .join(broadcast(ref), col("x") === col("xs"))
       .groupBy(col("user_id"), col("lag"))
       .agg(count(lit(1)).as("n_pairs"),
-        sum(floor(col("dev") * col("rdev") * 1e8 + 0.5).cast("long"))
+        sum(units(col("dev") * col("rdev"), 8))
           .as("num_u"),
-        sum(floor(col("dev") * col("dev") * 1e8 + 0.5).cast("long"))
+        sum(units(col("dev") * col("dev"), 8))
           .as("dx_u"),
-        sum(floor(col("rdev") * col("rdev") * 1e8 + 0.5).cast("long"))
+        sum(units(col("rdev") * col("rdev"), 8))
           .as("dy_u"))
       .select(col("user_id"), col("lag").cast("long").as("lag"),
         col("n_pairs"),
         when(col("n_pairs") >= 5 && col("dx_u") > 0 && col("dy_u") > 0,
-          floor(col("num_u").cast("double")
-            / sqrt(col("dx_u").cast("double") * col("dy_u").cast("double"))
-            * 1e4 + 0.5) / 1e4).as("r"))
+          quantize(col("num_u").cast("double")
+            / sqrt(col("dx_u").cast("double") * col("dy_u").cast("double")), 4)).as("r"))
   }
 
   private[graft] val HoltHorizons = Seq(1, 2, 3)
@@ -1703,9 +1698,9 @@ object TimeSeries {
         explode(array(HoltHorizons.map(lit): _*)).as("hi"),
         col("st.l").as("l"), col("st.b").as("b"))
       .select(col("user_id"), col("n_days"), col("hi").cast("long").as("h"),
-        (floor(col("l") * 1e4 + 0.5) / 1e4).as("level"),
-        (floor(col("b") * 1e4 + 0.5) / 1e4).as("trend"),
-        (floor((col("l") + col("hi") * col("b")) * 1e4 + 0.5) / 1e4)
+        quantize(col("l"), 4).as("level"),
+        quantize(col("b"), 4).as("trend"),
+        quantize(col("l") + col("hi") * col("b"), 4)
           .as("forecast"))
   }
 
@@ -1804,7 +1799,7 @@ object TimeSeries {
     counted.select(
       Seq(col("user_id"), col("n_obs")) ++
         (1 to 9).map(d => col(s"n$d")) ++ Seq(
-        (floor(chi2 * 1e4 + 0.5) / 1e4).as("chi2"),
+        quantize(chi2, 4).as("chi2"),
         (chi2 > 20.09).as("flagged")): _*)
   }
 
@@ -1938,7 +1933,7 @@ object TimeSeries {
     Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"),
         round(col("value"), 2).as("value"),
-        (floor(med * 1e4 + 0.5) / 1e4).as("rolling_med"))
+        quantize(med, 4).as("rolling_med"))
   }
 
   /** Per-station ROBUST outlier profile — the Hampel rule over the
@@ -2015,10 +2010,9 @@ object TimeSeries {
         date_format(col("d"), "yyyy-MM-dd").as("day"),
         col("v").as("value_obs"),
         when(col("v").isNotNull, col("v")).otherwise(
-          floor((col("pv") + (col("nv") - col("pv"))
+          quantize(col("pv") + (col("nv") - col("pv"))
             * (datediff(col("d"), col("pd")).cast("double")
-              / datediff(col("nd"), col("pd")).cast("double"))) * 1e4 + 0.5)
-            / 1e4).as("value_interp"),
+              / datediff(col("nd"), col("pd")).cast("double")), 4)).as("value_interp"),
         col("v").isNull.as("interpolated"))
   }
 
@@ -2051,10 +2045,9 @@ object TimeSeries {
       .agg(count(lit(1)).as("n_obs"),
         sum(col("c")).as("sc"), sum(col("c") * col("c")).as("sc2"))
       .select(col("user_id"), col("hod"), col("n_obs"),
-        (floor(col("sc").cast("double") / col("n_obs") / 100.0 * 1e6 + 0.5)
-          / 1e6).as("mu"),
+        quantize(col("sc").cast("double") / col("n_obs") / 100.0, 6).as("mu"),
         when(col("n_obs") > 1,
-          floor(sqrt(num / (nD * (nD - 1.0))) / 100.0 * 1e6 + 0.5) / 1e6)
+          quantize(sqrt(num / (nD * (nD - 1.0))) / 100.0, 6))
           .as("sd"))
   }
 
@@ -2070,9 +2063,9 @@ object TimeSeries {
       .join(climatologyFit(ev), Seq("user_id", "hod"))
       .select(col("event_id"), col("user_id"), col("hod"),
         round(col("value"), 2).as("value"),
-        (floor((col("value") - col("mu")) * 1e4 + 0.5) / 1e4).as("anom"),
+        quantize(col("value") - col("mu"), 4).as("anom"),
         when(col("n_obs") >= 5 && col("sd") > 0,
-          floor((col("value") - col("mu")) / col("sd") * 1e4 + 0.5) / 1e4)
+          quantize((col("value") - col("mu")) / col("sd"), 4))
           .as("anom_std"))
   }
 
@@ -2138,10 +2131,9 @@ object TimeSeries {
         min(when(col("acf") < invE, col("lag"))).as("decorrelation_lag"))
       .select(col("user_id"), col("n_days"), col("r1"),
         when(col("r1").isNotNull,
-          floor(col("n_days") * (lit(1.0) - g) / (lit(1.0) + g) * 1e4 + 0.5)
-            / 1e4).as("n_eff"),
+          quantize(col("n_days") * (lit(1.0) - g) / (lit(1.0) + g), 4)).as("n_eff"),
         when(col("r1").isNotNull,
-          floor((lit(1.0) + g) / (lit(1.0) - g) * 1e4 + 0.5) / 1e4).as("vif"),
+          quantize((lit(1.0) + g) / (lit(1.0) - g), 4)).as("vif"),
         col("decorrelation_lag"))
   }
 
@@ -2164,7 +2156,7 @@ object TimeSeries {
     val w = Window.partitionBy(col("user_id"))
     val u = periodogram(spark, dir)
       .select(col("user_id"), col("period"),
-        floor(col("power") * 1e4 + 0.5).cast("long").as("pu"))
+        units(col("power"), 4).as("pu"))
       .withColumn("tot_u", sum(col("pu")).over(w))
       .withColumn("max_u", max(col("pu")).over(w))
     val p = col("pu").cast("double") / col("tot_u")
@@ -2172,16 +2164,16 @@ object TimeSeries {
       .agg(count(lit(1)).as("n_periods"),
         min(col("tot_u")).as("tot_u"), min(col("max_u")).as("max_u"),
         sum(when(col("pu") > 0 && col("tot_u") > 0,
-          floor(-p * log(p) * 1e6 + 0.5).cast("long")).otherwise(0L))
+          units(-p * log(p), 6)).otherwise(0L))
           .as("h_u"),
         min(when(col("pu") === col("max_u"), col("period")))
           .as("dominant_period"))
       .select(col("user_id"), col("n_periods"), col("dominant_period"),
         when(col("tot_u") > 0,
-          floor(col("max_u").cast("double") / col("tot_u") * 1e4 + 0.5) / 1e4)
+          quantize(col("max_u").cast("double") / col("tot_u"), 4))
           .as("dominant_share"),
         when(col("tot_u") > 0,
-          floor(col("h_u").cast("double") / 1e6 / lnK * 1e4 + 0.5) / 1e4)
+          quantize(col("h_u").cast("double") / 1e6 / lnK, 4))
           .as("spectral_entropy"))
   }
 
@@ -2240,9 +2232,9 @@ object TimeSeries {
       .filter(col("jj") === col("n") && col("n") === col("m") &&
         col("n") * col("s2") - col("tot") * col("tot") > 0)
       .withColumn("rs_u",
-        floor((col("wmax") - col("wmin")).cast("double")
+        units((col("wmax") - col("wmin")).cast("double")
           / sqrt((col("n") * col("s2") - col("tot") * col("tot"))
-            .cast("double")) * 1e6 + 0.5).cast("long"))
+            .cast("double")), 6))
     val perSize = scored.groupBy(col("user_id"), col("m"))
       .agg(count(lit(1)).as("n_blocks"), sum(col("rs_u")).as("su"))
       .withColumn("mean_rs",
@@ -2255,12 +2247,12 @@ object TimeSeries {
         min(when(col("m") === HurstSizes(1), col("mean_rs"))).as("rs_mid"),
         min(when(col("m") === hi, col("mean_rs"))).as("rs_hi"))
       .select(col("user_id"),
-        (floor(col("rs_lo") * 1e4 + 0.5) / 1e4).as("rs4"),
-        (floor(col("rs_mid") * 1e4 + 0.5) / 1e4).as("rs8"),
-        (floor(col("rs_hi") * 1e4 + 0.5) / 1e4).as("rs16"),
+        quantize(col("rs_lo"), 4).as("rs4"),
+        quantize(col("rs_mid"), 4).as("rs8"),
+        quantize(col("rs_hi"), 4).as("rs16"),
         when(col("rs_lo") > 0 && col("rs_hi") > 0,
-          floor((log(col("rs_hi")) - log(col("rs_lo")))
-            / lit(2.0 * math.log(2.0)) * 1e4 + 0.5) / 1e4)
+          quantize((log(col("rs_hi")) - log(col("rs_lo")))
+            / lit(2.0 * math.log(2.0)), 4))
           .as("hurst"))
   }
 }

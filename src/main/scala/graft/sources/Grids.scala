@@ -121,42 +121,24 @@ object Grids {
 
   private[graft] case class RawTile(name: String, content: Array[Byte])
 
-  private val TileMagic: Array[Byte] = "GRFT1".getBytes("UTF-8")
+  private[graft] val TileMagic: Array[Byte] = "GRFT1".getBytes("UTF-8")
 
-  /** STUB TILE CODEC — the deterministic fake standing in for the
-    * GDAL/netCDF decode this container cannot run (the
-    * [[graft.operators.Multimodal]] decode-seam discipline): a
-    * self-describing big-endian layout
+  /** STUB TILE CODEC — the deterministic fake standing in for a
+    * GDAL/netCDF decode (the [[graft.operators.Multimodal]]
+    * decode-seam discipline): a self-describing big-endian layout
     *
     *   "GRFT1" | i16 varLen | UTF-8 var | i32 epochDay |
     *   f64 lat0, lon0, dlat, dlon | i32 ny, nx | ny·nx f64 values
     *
     * with rows north→south (lat_i = lat0 − i·dlat — TIFF row order)
-    * and columns west→east. [[encodeTile]]/[[decodeTile]] are exact
-    * inverses; swapping in a real codec changes ONLY this function —
+    * and columns west→east; the specs' tile encoder is its exact
+    * inverse. Swapping in a real codec changes ONLY this function —
     * the Spark plumbing (binaryFile source, per-file flatMap, typed
-    * schema, chunked publish) is the real product surface. */
-  def encodeTile(varName: String, epochDay: Int, lat0: Double,
-      lon0: Double, dlat: Double, dlon: Double,
-      values: Array[Array[Double]]): Array[Byte] = {
-    val vb = varName.getBytes("UTF-8")
-    val ny = values.length
-    val nx = if (ny == 0) 0 else values(0).length
-    val buf = java.nio.ByteBuffer
-      .allocate(TileMagic.length + 2 + vb.length + 4 + 32 + 8 + ny * nx * 8)
-      .order(java.nio.ByteOrder.BIG_ENDIAN)
-    buf.put(TileMagic).putShort(vb.length.toShort).put(vb)
-      .putInt(epochDay)
-      .putDouble(lat0).putDouble(lon0).putDouble(dlat).putDouble(dlon)
-      .putInt(ny).putInt(nx)
-    values.foreach(row => row.foreach(buf.putDouble))
-    buf.array()
-  }
-
-  /** Decode one tile's bytes to cells; malformed payloads (bad magic
-    * / truncated body) yield an empty iterator — the quarantine
-    * behavior of the [[Ingest]] lane, a poison file cannot kill the
-    * job. */
+    * schema, chunked publish) is the real product surface.
+    *
+    * Malformed payloads (bad magic / truncated body) yield an empty
+    * iterator — the quarantine behavior of the [[Ingest]] lane, a
+    * poison file cannot kill the job. */
   def decodeTile(bytes: Array[Byte]): Iterator[GridCell] = {
     if (bytes.length < TileMagic.length + 2) return Iterator.empty
     val buf = java.nio.ByteBuffer.wrap(bytes)
@@ -607,79 +589,6 @@ object Grids {
     out
   }
 
-  /** Minimal valid single-band GeoTIFF writer (float64 samples, one
-    * strip, both byte orders, optional DEFLATE strip) — the spec's
-    * round-trip twin of [[decodeTiff]] and a fixture generator; NOT
-    * a production export path. Tags written in required ascending
-    * order; NODATA cells must already hold the `nodata` value in
-    * `values`. */
-  def encodeTiff(ulx: Double, uly: Double, cs: Double,
-      values: Array[Array[Double]], nodata: Option[Double],
-      bigEndian: Boolean = false, deflate: Boolean = false): Array[Byte] = {
-    val ny = values.length
-    val nx = if (ny == 0) 0 else values(0).length
-    val ndBytes = nodata.map { d =>
-      val s = if (d == math.floor(d) && math.abs(d) < 1e15)
-        d.toLong.toString else d.toString
-      (s + "\u0000").getBytes("US-ASCII")
-    }
-    val n = 12 + (if (ndBytes.isDefined) 1 else 0)
-    val offScale = 8 + 2 + n * 12 + 4
-    val offTie = offScale + 24
-    val offNd = offTie + 48
-    val ndPadded = ndBytes.map(b => b.length + (b.length & 1)).getOrElse(0)
-    val offStrip = offNd + ndPadded
-    // samples first: a DEFLATE strip's byte count lands in tag 279
-    val raw = java.nio.ByteBuffer.allocate(ny * nx * 8).order(
-      if (bigEndian) java.nio.ByteOrder.BIG_ENDIAN
-      else java.nio.ByteOrder.LITTLE_ENDIAN)
-    values.foreach(_.foreach(raw.putDouble))
-    val stripData = if (!deflate) raw.array() else {
-      val d = new java.util.zip.Deflater()
-      d.setInput(raw.array())
-      d.finish()
-      val out = new Array[Byte](raw.array().length + 64)
-      val m = d.deflate(out)
-      d.end()
-      java.util.Arrays.copyOf(out, m)
-    }
-    val buf = java.nio.ByteBuffer.allocate(offStrip + stripData.length).order(
-      if (bigEndian) java.nio.ByteOrder.BIG_ENDIAN
-      else java.nio.ByteOrder.LITTLE_ENDIAN)
-    val bom = if (bigEndian) 'M'.toByte else 'I'.toByte
-    buf.put(bom).put(bom).putShort(42).putInt(8)
-    buf.putShort(n.toShort)
-    def entry(tag: Int, typ: Int, cnt: Int, value: Long): Unit = {
-      buf.putShort(tag.toShort).putShort(typ.toShort).putInt(cnt)
-      // inline SHORT occupies the LEADING 2 bytes of the value field
-      if (typ == 3 && cnt == 1) { buf.putShort(value.toShort); buf.putShort(0) }
-      else buf.putInt(value.toInt)
-      ()
-    }
-    entry(256, 3, 1, nx.toLong)
-    entry(257, 3, 1, ny.toLong)
-    entry(258, 3, 1, 64)
-    entry(259, 3, 1, if (deflate) 8L else 1L)
-    entry(262, 3, 1, 1)
-    entry(273, 4, 1, offStrip.toLong)
-    entry(277, 3, 1, 1)
-    entry(278, 4, 1, math.max(ny, 1).toLong)
-    entry(279, 4, 1, stripData.length.toLong)
-    entry(339, 3, 1, 3)
-    entry(33550, 12, 3, offScale.toLong)
-    entry(33922, 12, 6, offTie.toLong)
-    ndBytes.foreach(b => entry(42113, 2, b.length, offNd.toLong))
-    buf.putInt(0) // next-IFD terminator
-    buf.putDouble(cs).putDouble(cs).putDouble(0.0)
-    buf.putDouble(0).putDouble(0).putDouble(0)
-      .putDouble(ulx).putDouble(uly).putDouble(0)
-    ndBytes.foreach { b =>
-      buf.put(b); if ((b.length & 1) == 1) buf.put(0.toByte)
-    }
-    buf.put(stripData)
-    buf.array()
-  }
-
   /** GeoTIFF drop → decoded long rows: the binary twin of
     * [[decodeAscDrop]] (`<var>_<yyyy-MM-dd>.tif[f]` naming, one typed
     * flatMap per file at the `binaryFile`-source grain — Spark's file
@@ -709,8 +618,8 @@ object Grids {
   /** The 254-byte LE header+IFD+geo-tag prefix of the in-plan test
     * raster: 8×8, int32 samples, quarter-degree cells, UL corner
     * (−10, 44), GDAL_NODATA −2147483648 — assembled with the same
-    * layout rules [[encodeTiff]] follows, as a driver-side constant
-    * (every byte of it is structural, not data). */
+    * layout rules the specs' GeoTIFF writer follows, as a driver-side
+    * constant (every byte of it is structural, not data). */
   private lazy val TiffLeHeaderHex: String = {
     def le16(v: Int) = f"${v & 0xFF}%02X${(v >> 8) & 0xFF}%02X"
     def le32(v: Long) = (0 to 3).map(i => f"${(v >> (8 * i)) & 0xFF}%02X")
@@ -744,8 +653,8 @@ object Grids {
     * [[decodeTiffDrop]] parses the bytes back to area-centre cells.
     * The DuckDB oracle recomputes the expected decode from the same
     * source grid, so the gate proves decode ∘ encode = identity on a
-    * genuine GeoTIFF layout; the spec additionally round-trips
-    * [[encodeTiff]] fixtures (both byte orders, multi-strip,
+    * genuine GeoTIFF layout; the spec additionally round-trips its
+    * writer's fixtures (both byte orders, multi-strip,
     * malformed quarantine). All arithmetic is exact: micro-unit
     * integers, quarter-degree binary-rational centres. */
   def gridTiffDecode(spark: SparkSession, dir: String): DataFrame = {

@@ -2050,7 +2050,6 @@ object Hdf5 {
     }
     // emit the v1 header prefix + messages
     val body = m.out.toByteArray
-    val hdrStart = w.pos
     w.u8(1).u8(0).u16(countMsgs(body)).u32(1)
     w.u32(body.length).u32(0)
     val msgsStart = w.pos

@@ -23,7 +23,7 @@ import graft.operators.Climate.{byCell, microMean}
   */
 object Png {
 
-  private val Sig = Array(0x89, 0x50, 0x4E, 0x47, 0x0D, 0x0A, 0x1A, 0x0A)
+  private[graft] val Sig = Array(0x89, 0x50, 0x4E, 0x47, 0x0D, 0x0A, 0x1A, 0x0A)
     .map(_.toByte)
 
   private[graft] def channelsOf(colorType: Int): Int = colorType match {
@@ -40,7 +40,7 @@ object Png {
   /** The Adam7 pass grid: (xStart, yStart, xStep, yStep) per pass.
     * PNG spec §8.2 — empty passes (a dimension rounds to zero)
     * contribute no scanlines at all, not even filter bytes. */
-  private val Adam7 = Seq(
+  private[graft] val Adam7 = Seq(
     (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
     (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
 
@@ -252,7 +252,7 @@ object Png {
       pngChunk("IEND", Array.emptyByteArray)
   }
 
-  private def pngChunk(ctype: String, data: Array[Byte]): Array[Byte] = {
+  private[graft] def pngChunk(ctype: String, data: Array[Byte]): Array[Byte] = {
     val b = java.nio.ByteBuffer.allocate(12 + data.length)
     b.putInt(data.length).put(ctype.getBytes("US-ASCII")).put(data)
     val crc = new java.util.zip.CRC32()
@@ -261,7 +261,7 @@ object Png {
     b.array()
   }
 
-  private def deflateBytes(raw: Array[Byte]): Array[Byte] = {
+  private[graft] def deflateBytes(raw: Array[Byte]): Array[Byte] = {
     val d = new java.util.zip.Deflater(6)
     d.setInput(raw); d.finish()
     val z = new java.io.ByteArrayOutputStream(raw.length)
@@ -271,102 +271,11 @@ object Png {
     z.toByteArray
   }
 
-  private def ihdrBytes(w: Int, h: Int, depth: Int, colorType: Int,
+  private[graft] def ihdrBytes(w: Int, h: Int, depth: Int, colorType: Int,
       interlace: Int): Array[Byte] =
     java.nio.ByteBuffer.allocate(13).putInt(w).putInt(h)
       .put(depth.toByte).put(colorType.toByte)
       .put(0.toByte).put(0.toByte).put(interlace.toByte).array()
-
-  /** Fixture encoder: PALETTE image at depth 1/2/4/8, MSB-first
-    * index packing, filter-0 scanlines (filter coverage lives in the
-    * main encoder's rotation). `palette` is flat RGB triples. */
-  private[graft] def encodePngPalette(w: Int, h: Int, depth: Int,
-      palette: Array[Int], indices: Array[Int],
-      alpha: Option[Array[Int]] = None): Array[Byte] = {
-    require(palette.length % 3 == 0 && indices.length == w * h)
-    val rb = (w * depth + 7) / 8
-    val raw = new Array[Byte](h * (1 + rb))
-    for (y <- 0 until h; x <- 0 until w) {
-      val bo = x * depth
-      val pos = y * (1 + rb) + 1 + (bo >> 3)
-      raw(pos) = (raw(pos) |
-        (indices(y * w + x) << (8 - depth - (bo & 7)))).toByte
-    }
-    Sig ++ pngChunk("IHDR", ihdrBytes(w, h, depth, 3, 0)) ++
-      pngChunk("PLTE", palette.map(_.toByte)) ++
-      alpha.map(a => pngChunk("tRNS", a.map(_.toByte)))
-        .getOrElse(Array.emptyByteArray) ++
-      pngChunk("IDAT", deflateBytes(raw)) ++
-      pngChunk("IEND", Array.emptyByteArray)
-  }
-
-  /** Fixture encoder: 16-bit samples (big-endian pairs), any of the
-    * four direct color types, filter-0 scanlines. */
-  private[graft] def encodePng16(w: Int, h: Int, colorType: Int,
-      samples: Array[Int]): Array[Byte] = {
-    val ch = channelsOf(colorType)
-    require(ch > 0 && samples.length == w * h * ch)
-    val rb = w * ch * 2
-    val raw = new Array[Byte](h * (1 + rb))
-    for (y <- 0 until h; i <- 0 until w * ch) {
-      val v = samples(y * w * ch + i)
-      raw(y * (1 + rb) + 1 + i * 2) = (v >> 8).toByte
-      raw(y * (1 + rb) + 1 + i * 2 + 1) = v.toByte
-    }
-    Sig ++ pngChunk("IHDR", ihdrBytes(w, h, 16, colorType, 0)) ++
-      pngChunk("IDAT", deflateBytes(raw)) ++
-      pngChunk("IEND", Array.emptyByteArray)
-  }
-
-  /** Fixture encoder: ADAM7-interlaced 8-bit image — samples split
-    * into the seven passes (empty passes emit nothing), each pass
-    * filtered independently with the caller's per-scanline filter
-    * choice so reconstruction is exercised ACROSS pass boundaries. */
-  private[graft] def encodePngAdam7(w: Int, h: Int, colorType: Int,
-      samples: Array[Int], filterOf: Int => Int): Array[Byte] = {
-    val ch = channelsOf(colorType)
-    require(ch > 0 && samples.length == w * h * ch)
-    val body = new java.io.ByteArrayOutputStream()
-    for ((x0, y0, dx, dy) <- Adam7) {
-      val wp = if (w > x0) (w - x0 + dx - 1) / dx else 0
-      val hp = if (h > y0) (h - y0 + dy - 1) / dy else 0
-      if (wp > 0 && hp > 0) {
-        val stride = wp * ch
-        // the pass's sub-image, then filter it like a standalone image
-        val sub = Array.tabulate(hp * stride) { j =>
-          val (yy, rem) = (j / stride, j % stride)
-          samples(((y0 + yy * dy) * w + (x0 + (rem / ch) * dx)) * ch
-            + rem % ch)
-        }
-        for (y <- 0 until hp) {
-          val f = filterOf(y) % 5
-          body.write(f)
-          for (i <- 0 until stride) {
-            val x = sub(y * stride + i)
-            val a = if (i >= ch) sub(y * stride + i - ch) else 0
-            val b = if (y > 0) sub((y - 1) * stride + i) else 0
-            val c = if (y > 0 && i >= ch) sub((y - 1) * stride + i - ch)
-              else 0
-            val pred = f match {
-              case 0 => 0
-              case 1 => a
-              case 2 => b
-              case 3 => (a + b) >> 1
-              case _ =>
-                val pp = a + b - c
-                val (pa, pb, pc) =
-                  (math.abs(pp - a), math.abs(pp - b), math.abs(pp - c))
-                if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-            }
-            body.write((x - pred) & 0xFF)
-          }
-        }
-      }
-    }
-    Sig ++ pngChunk("IHDR", ihdrBytes(w, h, 8, colorType, 1)) ++
-      pngChunk("IDAT", deflateBytes(body.toByteArray)) ++
-      pngChunk("IEND", Array.emptyByteArray)
-  }
 
   /** docs(name, content) → one row per SAMPLE (name, color_type, y,
     * x, c, v) + the quarantine frame. */

@@ -37,11 +37,17 @@ object Schedule {
     * starts — the declarative form of the reference's onetime run. */
   final case class Entry(pipeline: String, cadence: String, backfillStart: String)
 
-  private val CadenceHours = Map("hour" -> 1, "day" -> 24, "week" -> 168)
+  /** The cadences [[dueTicks]] expands; it would read any other value
+    * as weekly. */
+  private val Cadences = Set("hour", "day", "week")
 
-  /** Schedule entries as a DataFrame (pipeline, cadence, backfill_start). */
+  /** Schedule entries as a DataFrame (pipeline, cadence, backfill_start).
+    * An entry whose cadence is not hour, day or week is refused. */
   def registry(spark: SparkSession, entries: Seq[Entry]): DataFrame = {
     import spark.implicits._
+    entries.foreach(e => require(Cadences(e.cadence),
+      s"schedule entry ${e.pipeline}: unknown cadence '${e.cadence}'" +
+        s" (expected one of ${Cadences.mkString(", ")})"))
     entries.toDF("pipeline", "cadence", "backfillStart")
       .select(col("pipeline"), col("cadence"),
         to_timestamp(col("backfillStart")).as("backfill_start"))

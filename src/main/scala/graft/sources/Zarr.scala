@@ -174,44 +174,6 @@ object Zarr {
     case _ => None
   }
 
-  /** Encoder-side twin of the compressor dispatch — fixture and
-    * publish seams share one codec table with the decoder. */
-  private[graft] def compressChunk(raw: Array[Byte],
-      compId: Option[String], level: Int = 1): Array[Byte] =
-    compId match {
-      case None => raw
-      case Some("zlib") =>
-        val d = new java.util.zip.Deflater(level)
-        d.setInput(raw); d.finish()
-        val out = new java.io.ByteArrayOutputStream(raw.length)
-        val buf = new Array[Byte](8192)
-        while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-        d.end(); out.toByteArray
-      case Some("gzip") =>
-        val bo = new java.io.ByteArrayOutputStream(raw.length)
-        val g = new java.util.zip.GZIPOutputStream(bo)
-        g.write(raw); g.close(); bo.toByteArray
-      case Some("lz4") =>
-        val c = net.jpountz.lz4.LZ4Factory.fastestInstance().fastCompressor()
-        val dst = new Array[Byte](4 + c.maxCompressedLength(raw.length))
-        dst(0) = (raw.length & 0xFF).toByte
-        dst(1) = ((raw.length >> 8) & 0xFF).toByte
-        dst(2) = ((raw.length >> 16) & 0xFF).toByte
-        dst(3) = ((raw.length >> 24) & 0xFF).toByte
-        val n = c.compress(raw, 0, raw.length, dst, 4)
-        java.util.Arrays.copyOf(dst, 4 + n)
-      case Some("zstd") =>
-        com.github.luben.zstd.Zstd.compress(raw, level)
-      // blosc over lz4 with byte-shuffle at the lane's f8 typesize —
-      // decode never consults these choices (the container is
-      // self-describing), so the fixture/publish twin picks the
-      // numcodecs defaults
-      case Some("blosc") =>
-        Blosc.compress(raw, typesize = 8, doShuffle = true, "lz4")
-      case Some(other) =>
-        throw new IllegalArgumentException(s"no encoder for $other")
-    }
-
   /** One chunk file → cells. Validates order=C / no filters /
     * known dtype+compressor / exact byte length, parses the chunk
     * grid position from the filename, walks elements in C-order and

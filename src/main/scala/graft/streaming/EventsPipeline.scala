@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.operators.TimeSeries.quantize
 import graft.sources.Catalog
 
 /** Streaming ingestion pipeline — the reference's scheduler-driven
@@ -405,10 +406,10 @@ object EventsPipeline {
       .withColumn("hod", hour(col("ts")))
       .join(clim, Seq("user_id", "hod"))
       .withColumn("anom",
-        floor((col("value") - col("mu")) * 1e4 + 0.5) / 1e4)
+        quantize(col("value") - col("mu"), 4))
       .withColumn("z",
         when(col("n_obs") >= 5 && col("sd") > 0,
-          floor((col("value") - col("mu")) / col("sd") * 1e4 + 0.5) / 1e4))
+          quantize((col("value") - col("mu")) / col("sd"), 4)))
       .select(col("event_id"), col("ts"), col("user_id"), col("hod"),
         col("value"), col("anom"), col("z"),
         coalesce(abs(col("z")) > 3.0, lit(false)).as("is_anomaly"))

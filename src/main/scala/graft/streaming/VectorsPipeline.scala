@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.expressions.VectorColumns
+import graft.operators.TimeSeries.quantize
 
 /** Streaming twins of the vector/ANN lanes — the live layer of the
   * two-level IVF serving path ([[graft.operators.Similarity]] owns
@@ -73,8 +74,6 @@ object VectorsPipeline {
   def streamingAnnServe(queries: DataFrame, corpus: DataFrame,
       sup: Array[Array[Double]], subs: Array[Array[Array[Double]]],
       nprobeSuper: Int, probeCells: Int, k: Int): DataFrame = {
-    val q6 = (c: Column) => floor(c * 1e6 + 0.5) / 1e6
-    val q4 = (c: Column) => floor(c * 1e4 + 0.5) / 1e4
     val home = corpus
       .withColumn("cell",
         VectorColumns.twoLevelCell(col("emb"), sup, subs, nprobeSuper))
@@ -87,12 +86,12 @@ object VectorsPipeline {
       .withColumn("cos", VectorColumns.cosine(col("qe"), col("emb")))
       .groupBy(window(col("ts"), "1 hour").as("w"), col("query_id"))
       .agg(graft.expressions.TopKAgg.topk(
-        q6(col("cos")), col("vec_id"), col("cos"), k).as("top"))
+        quantize(col("cos"), 6), col("vec_id"), col("cos"), k).as("top"))
       .select(col("w.start").as("window_start"), col("query_id"),
         posexplode(col("top")))
       .select(col("window_start"), col("query_id"),
         col("col.id").as("neighbor_id"),
         (col("pos") + 1).cast("int").as("rk"),
-        q4(col("col.payload")).as("cosine"))
+        quantize(col("col.payload"), 4).as("cosine"))
   }
 }

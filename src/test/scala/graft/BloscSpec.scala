@@ -246,7 +246,7 @@ class BloscSpec extends org.scalatest.funsuite.AnyFunSuite {
     val raw = java.nio.ByteBuffer.allocate(24)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
       .putDouble(1.25).putDouble(-7.5).putDouble(42.0).array()
-    val enc = Zarr.compressChunk(raw, Some("blosc"))
+    val enc = CodecFixtures.compressChunk(raw, Some("blosc"))
     val c = ZChunkIn("v", "v/0", enc, Seq(3), Seq(3), "<f8",
       Some("blosc"), Some("C"), has_filters = false)
     assert(Zarr.decodeChunk(c).toOption.get.toSeq === Seq(

@@ -81,7 +81,7 @@ class GridsSpec extends SparkSpec {
       (v.length * 1000 + d % 100 * 100 + i * 10 + j) * 0.25
     for (v <- vars; d <- days) {
       val values = Array.tabulate(4, 5)((i, j) => cell(v, d, i, j))
-      val bytes = Grids.encodeTile(v, d, 45.0, 10.0, 0.5, 0.5, values)
+      val bytes = CodecFixtures.encodeTile(v, d, 45.0, 10.0, 0.5, 0.5, values)
       java.nio.file.Files.write(
         new java.io.File(dropDir, s"${v}_$d.grft").toPath, bytes)
     }
@@ -403,7 +403,7 @@ class GridsSpec extends SparkSpec {
     val vals = Array.tabulate(4, 5)((y, x) => y * 10.0 + x * 0.25 - 3.5)
     for ((bigE, defl) <- Seq((false, false), (true, false),
         (false, true))) {
-      val bytes = Grids.encodeTiff(-10.0, 44.0, 0.5, vals, None,
+      val bytes = CodecFixtures.encodeTiff(-10.0, 44.0, 0.5, vals, None,
         bigEndian = bigE, deflate = defl)
       val ref = javax.imageio.ImageIO.read(
         new java.io.ByteArrayInputStream(bytes))
@@ -422,7 +422,7 @@ class GridsSpec extends SparkSpec {
       Array(1.5, 2.5, nd),
       Array(4.0, 5.25, 6.125))
     Seq(false, true).foreach { bigE =>
-      val bytes = Grids.encodeTiff(-10.0, 44.0, 0.5, vals, Some(nd), bigE)
+      val bytes = CodecFixtures.encodeTiff(-10.0, 44.0, 0.5, vals, Some(nd), bigE)
       val cells = Grids.decodeTiff("tp", 19850, bytes).toSeq
       assert(cells.length === 5, s"bigEndian=$bigE")
       val m = cells.map(c => (c.lat, c.lon) -> c.value).toMap
@@ -505,9 +505,9 @@ class GridsSpec extends SparkSpec {
     val nd = -9999.0
     val vals = Array(Array(1.5, 2.5, nd), Array(4.0, 5.25, 6.125))
     val plain = Grids.decodeTiff("tp", 1,
-      Grids.encodeTiff(-10.0, 44.0, 0.5, vals, Some(nd))).toSeq
+      CodecFixtures.encodeTiff(-10.0, 44.0, 0.5, vals, Some(nd))).toSeq
     val comp = Grids.decodeTiff("tp", 1,
-      Grids.encodeTiff(-10.0, 44.0, 0.5, vals, Some(nd), bigEndian = false,
+      CodecFixtures.encodeTiff(-10.0, 44.0, 0.5, vals, Some(nd), bigEndian = false,
         deflate = true)).toSeq
     assert(comp === plain && comp.length === 5)
 
@@ -558,7 +558,7 @@ class GridsSpec extends SparkSpec {
 
   test("decodeTiffDrop: filename parse feeds var/day; grid_tiff_decode equals the ASC lane cell-for-cell") {
     import spark.implicits._
-    val one = Grids.encodeTiff(0.0, 1.0, 1.0, Array(Array(42.0)), None)
+    val one = CodecFixtures.encodeTiff(0.0, 1.0, 1.0, Array(Array(42.0)), None)
     val out = Grids.decodeTiffDrop(Seq(
         ("drops/tp_2024-03-01.tif", one),
         ("drops/noday.tif", one),          // no _date suffix -> skipped

@@ -776,7 +776,7 @@ class MediaCodecSpec extends SparkSpec {
       val nIdx = math.min(1 << depth, 17)
       val (w, h) = (7, 4) // odd width: the last byte of a row is partial
       val idx = Array.tabulate(w * h)(i => (i * 5 + 3) % nIdx)
-      val bytes = Png.encodePngPalette(w, h, depth, pal, idx)
+      val bytes = CodecFixtures.encodePngPalette(w, h, depth, pal, idx)
       val img = Png.decodePng(bytes).toOption.get
       assert((img.width, img.height, img.colorType, img.channels)
         === ((w, h, 3, 3)))
@@ -800,7 +800,7 @@ class MediaCodecSpec extends SparkSpec {
     val pal = Array.tabulate(5 * 3)(i => (i * 53 + 11) % 256)
     val alpha = Array(255, 128, 0) // entries 3-4 past the table → 255
     val idx = Array.tabulate(6 * 3)(i => i % 5)
-    val bytes = Png.encodePngPalette(6, 3, 8, pal, idx, Some(alpha))
+    val bytes = CodecFixtures.encodePngPalette(6, 3, 8, pal, idx, Some(alpha))
     val img = Png.decodePng(bytes).toOption.get
     assert((img.channels, img.colorType) === ((4, 3)))
     for (i <- idx.indices) {
@@ -825,7 +825,7 @@ class MediaCodecSpec extends SparkSpec {
     for (colorType <- Seq(0, 2, 4, 6)) {
       val ch = Png.channelsOf(colorType)
       val samples = Array.tabulate(5 * 3 * ch)(i => (i * 9173 + 251) % 65536)
-      val bytes = Png.encodePng16(5, 3, colorType, samples)
+      val bytes = CodecFixtures.encodePng16(5, 3, colorType, samples)
       val img = Png.decodePng(bytes).toOption.get
       assert((img.width, img.height, img.channels) === ((5, 3, ch)))
       assert(img.samples.toSeq === samples.toSeq, s"colorType=$colorType")
@@ -851,7 +851,7 @@ class MediaCodecSpec extends SparkSpec {
       for (colorType <- Seq(0, 2, 6)) {
         val ch = Png.channelsOf(colorType)
         val samples = testImage(w, h, ch)
-        val bytes = Png.encodePngAdam7(w, h, colorType, samples,
+        val bytes = CodecFixtures.encodePngAdam7(w, h, colorType, samples,
           y => (y * 3 + 1) % 5)
         val img = Png.decodePng(bytes).toOption.get
         assert((img.width, img.height) === ((w, h)))

@@ -6,6 +6,9 @@ package graft
   * oracle SQL builders to unchanged SQL:
   *
   *   sbt "Test/runMain graft.OracleDump <data dir>" > oracles.txt
+  *
+  * Tokens split at whitespace and around `(`, `)` and `,`, so `(SELECT`
+  * and `( SELECT`, or `f(a,b)` and `f(a, b)`, print alike.
   */
 object OracleDump {
   def main(args: Array[String]): Unit = {
@@ -14,7 +17,7 @@ object OracleDump {
     SparkEntry.setOracleContext(spark, dir)
     SparkEntry.oracleSql.toSeq.sortBy(_._1).foreach { case (q, sql) =>
       println(s"=== $q")
-      println(sql.split("\\s+").filter(_.nonEmpty).mkString("\n"))
+      println(sql.split("\\s+|(?<=[(),])|(?=[(),])").filter(_.nonEmpty).mkString("\n"))
     }
     spark.stop()
   }

@@ -66,6 +66,15 @@ class ScheduleSpec extends SparkSpec {
       "2024-01-09 18:00:00").count() === 0)
   }
 
+  test("registry: an unknown cadence is refused by entry name, not run weekly") {
+    for (bad <- Seq("Hour", "month", "")) {
+      val err = intercept[IllegalArgumentException] {
+        Schedule.registry(spark, threeCadences :+ Schedule.Entry("typo", bad, "2024-01-01 00:00:00"))
+      }
+      assert(err.getMessage.contains("typo") && err.getMessage.contains(s"'$bad'"))
+    }
+  }
+
   test("runDue: two-pipeline schedule replays idempotently") {
     val tmp = Files.createTempDirectory("graft-sched").toFile.getAbsolutePath
     val ev = Tables.events(spark, sf)

@@ -1588,4 +1588,32 @@ class TimeSeriesSpec extends SparkSpec {
       (2L, "2023-12-31") -> 1L, (2L, "2024-01-02") -> 1L))
     assert(days.keys.forall(_._2.matches("""\d{4}-\d{2}-\d{2}""")))
   }
+
+  test("output rounding: quantize ties toward +inf, passes null, and matches the scalar rule") {
+    import spark.implicits._
+    import graft.functions.VectorKernels.round6
+    import graft.operators.TimeSeries.{quantize, units}
+    // a tie rounds toward +inf, where Spark's decimal round goes away
+    // from zero: the reason round(x, n) sites keep their own rule
+    val ties = Seq(Some(-0.00005), Some(-0.00025), None).toDF("x")
+      .select(quantize(col("x"), 4), round(col("x"), 4)).collect()
+      .map(r => (Option(r.get(0)), Option(r.get(1))))
+    assert(ties.toSeq === Seq(
+      (Some(0.0), Some(-0.0001)), (Some(-0.0002), Some(-0.0003)), (None, None)))
+    val rnd = new scala.util.Random(42)
+    val xs = Seq.fill(300)((rnd.nextDouble() - 0.5) * 2000) ++
+      Seq.tabulate(100)(k => (k - 50 + 0.5) / 1e6) ++ Seq(0.0, -0.0, 1.0)
+    val df = xs.toDF("x")
+    val digits = Seq(4, 6, 8, 9)
+    val got = df.select(col("x") +: quantize(col("x"), 6) +:
+        digits.map(d => units(col("x"), d)): _*).collect()
+    got.foreach { r =>
+      val x = r.getDouble(0)
+      assert(r.getDouble(1) == round6(x), s"round6($x)")
+      digits.zipWithIndex.foreach { case (d, i) =>
+        assert(r.getLong(2 + i) === math.floor(x * math.pow(10, d) + 0.5).toLong,
+          s"units($x, $d)")
+      }
+    }
+  }
 }

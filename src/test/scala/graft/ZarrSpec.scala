@@ -90,7 +90,7 @@ class ZarrSpec extends SparkSpec {
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
       .putDouble(1.25).putDouble(-7.5).putDouble(42.0).array()
     for (comp <- Seq(Some("lz4"), Some("zstd"))) {
-      val enc = Zarr.compressChunk(raw, comp, level = 3)
+      val enc = CodecFixtures.compressChunk(raw, comp, level = 3)
       val c = chunk(path = "v/0", shape = Seq(3), chunks = Seq(3),
         dtype = "<f8", comp = comp, content = enc)
       assert(Zarr.decodeChunk(c).toOption.get.toSeq === Seq(
@@ -109,7 +109,7 @@ class ZarrSpec extends SparkSpec {
     assert(Zarr.decodeChunk(c2).toOption.get.length === 3)
     // corrupted streams quarantine, never throw
     for (comp <- Seq(Some("lz4"), Some("zstd"))) {
-      val enc = Zarr.compressChunk(raw, comp)
+      val enc = CodecFixtures.compressChunk(raw, comp)
       val bad = enc.take(math.max(5, enc.length / 2))
       val c3 = chunk(path = "v/0", shape = Seq(3), chunks = Seq(3),
         dtype = "<f8", comp = comp, content = bad)
