@@ -2,32 +2,35 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: one JSON line with per-query wall times.
+/** Registry timer: every `SparkEntry.queries` entry, one compact JSON
+  * line on stdout naming the file that holds the full record.
   *
   * Discipline: a full UNTIMED warm-up pass first (JIT, codegen caches,
   * parquet footer caches, session warm-up land there), then N
   * INTERLEAVED timed passes — each pass runs the FULL sorted query
   * list once, and a query's reported time is the median of its
-  * per-pass times. Rounds 3 and 4 proved that timing a query's reps
-  * consecutively is structurally vulnerable to machine interference:
-  * a multi-minute external slowdown inflates ALL reps of whichever
-  * contiguous alphabetical run of queries it overlaps (r3:
-  * ts_*..zonal_*; r4: bias_reconstruct..dedup_clusters, 4-14× on
-  * unchanged code), and a median of 3 consecutive reps cannot defend
-  * against that. With interleaving the same window inflates at most
-  * one pass per query, which the cross-pass median discards. Raw
-  * per-pass times are kept in the artifact (`reps`) so any residual
-  * band is detectable post-hoc. Failures are recorded per-query
-  * (`errors` map), excluded from timings, and make the exit code
-  * nonzero instead of masquerading as a timing.
+  * per-pass times. Timing a query's reps consecutively lets a
+  * multi-minute external slowdown inflate ALL reps of whichever
+  * contiguous alphabetical run of queries it overlaps; interleaved,
+  * the same window inflates at most one pass per query, which the
+  * cross-pass median discards. Raw per-pass times are kept in the
+  * record (`reps`) so any residual band is detectable post-hoc.
+  * Failures are recorded per-query (`errors` map), excluded from
+  * timings, and make the exit code nonzero instead of masquerading as
+  * a timing.
+  *
+  * Env: SPARK_GRAFT_SF_DIR (data directory, sf0.1 by default),
+  * SPARK_GRAFT_CPUS (default 4), SPARK_GRAFT_ONLY (comma-separated
+  * subset, see [[Verify.only]]), SPARK_GRAFT_BENCH_REPS (timed passes,
+  * default 3), SPARK_GRAFT_BENCH_OUT (record path, default
+  * target/bench_results.json).
   */
 object Bench {
   /** Single-thread CPU calibration: a fixed xorshift64 spin, timed.
-    * Round-over-round per-query seconds proved incomparable across
-    * rounds (uniform ~1.4-1.6× shifts on UNCHANGED plans — the runs
-    * land on VMs with different per-core speed; see BENCH_NOTES.md).
-    * This constant-work loop gives every artifact a machine-speed
-    * denominator so a future reader can normalize before comparing. */
+    * Per-query seconds on unchanged plans shift uniformly by ~1.4-1.6×
+    * between VMs with different per-core speed (BENCH_NOTES.md); this
+    * constant-work loop gives every record a machine-speed denominator
+    * so a reader can normalize before comparing. */
   private def calibrate(): Double = {
     var x = 0x9E3779B97F4A7C15L; var i = 0
     val t0 = System.nanoTime()
@@ -39,27 +42,25 @@ object Bench {
     dt
   }
 
+  /** The timed action: a noop-format write, not count(). count lets
+    * Catalyst prune every unreferenced projection, so narrow queries
+    * (windows, hashes, regex pipelines) would "benchmark" a bare
+    * scan+count. The noop sink consumes every output column. */
+  private[graft] def exec(spark: SparkSession, sfDir: String, name: String): Unit =
+    SparkEntry.queries(name)(spark, sfDir)
+      .write.mode("overwrite").format("noop").save()
+
   def main(args: Array[String]): Unit = {
     val Reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench_results.json")
     val spark = GraftSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-
-    // SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts to a subset (triage runs).
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
-    // The timed action is a noop-format write, not count(): count lets
-    // Catalyst prune every unreferenced projection, so narrow queries
-    // (windows, hashes, regex pipelines) would "benchmark" a bare
-    // scan+count. The noop sink consumes every output column.
-    def exec(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
+      .filter(Verify.only(sys.env.get("SPARK_GRAFT_ONLY")))
 
     // warm-up: run everything once, untimed; remember what failed
     val warmErrs = names.flatMap { name =>
-      try { exec(name); None }
+      try { exec(spark, sfDir, name); None }
       catch { case e: Throwable => Some(name -> e.toString.take(200)) }
     }.toMap
 
@@ -69,7 +70,7 @@ object Bench {
       names.filterNot(errors.contains).foreach { name =>
         val t0 = System.nanoTime()
         try {
-          exec(name)
+          exec(spark, sfDir, name)
           passTimes(name) = passTimes.getOrElse(name, Nil) :+ (System.nanoTime() - t0) / 1e9
         } catch { case e: Throwable => errors(name) = e.toString.take(200) }
       }
@@ -81,11 +82,7 @@ object Bench {
         timings(name) = reps.sorted.apply(reps.size / 2)
     }
 
-    def js(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
+    val js = Verify.jsonString _
     val qs = timings.map { case (k, v) => s"${js(k)}:$v" }.mkString("{", ",", "}")
     val rs = passTimes.collect { case (k, v) if timings.contains(k) =>
       s"${js(k)}:${v.mkString("[", ",", "]")}"
@@ -95,120 +92,13 @@ object Bench {
     // calibration AFTER the passes (fully warmed JVM, idle executors)
     val calib = (1 to 3).map(_ => calibrate()).min
 
-    // --- automated round-over-round triage ---------------------------
-    // The r7 BENCH_NOTES neighborhood-effect diagnosis (in-run vs
-    // isolated timing of the worst movers) was manual; here it is
-    // machinery: read the PREVIOUS artifact (same path we are about
-    // to overwrite), normalize both rounds by their calibration spin,
-    // take the worst regression ratios, and re-run each ALONE (one
-    // warm + Reps timed back-to-back — exactly the manual
-    // SPARK_GRAFT_BENCH_ONLY triage). The artifact then carries
-    // in-run AND isolated numbers per mover, so a reader can
-    // attribute a shift to the query vs its run neighborhood without
-    // hand work. Skipped when no comparable prior artifact exists
-    // (missing file, different sf).
-    //
-    // The comparison BASELINE is a per-sf file only FULL runs update:
-    // the r10 artifact's empty triage block traced to interim
-    // subset/sf1 triage runs overwriting bench_results.json, which
-    // left the full run nothing comparable to diff against. Subset
-    // runs (SPARK_GRAFT_BENCH_ONLY) neither read nor touch the
-    // baseline.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_results.json")
-    val triageN = sys.env.getOrElse("SPARK_GRAFT_BENCH_TRIAGE_N", "5").toInt
-    val isFull = only.isEmpty
-    val sfTag = java.nio.file.Paths.get(sfDir).getFileName.toString
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val baselinePath = sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE",
-      s"bench_baseline_$sfTag.json")
-    val prev: Option[(Map[String, Double], Double)] =
-      try {
-        val p = java.nio.file.Paths.get(baselinePath)
-        if (!java.nio.file.Files.exists(p) || !isFull) None
-        else {
-          val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-          val sfOk = txt.contains("\"sf\":" + js(sfDir))
-          val qm = "\"queries\":\\{([^}]*)\\}".r.findFirstMatchIn(txt)
-            .map(_.group(1))
-          val cm = "\"calib_s\":([0-9.eE+-]+)".r.findFirstMatchIn(txt)
-            .map(_.group(1).toDouble)
-          if (!sfOk) None
-          else for (q <- qm; c <- cm) yield {
-            ("\"([^\"]+)\":([0-9.eE+-]+)".r.findAllMatchIn(q)
-              .map(m => m.group(1) -> m.group(2).toDouble).toMap, c)
-          }
-        }
-      } catch { case _: Throwable => None }
-    val triage =
-      scala.collection.mutable.LinkedHashMap[String, (Double, Double, Double, Double)]()
-    prev.foreach { case (prevQ, prevCalib) =>
-      // every mover above 1.5× normalized is isolated (r16 — the r15
-      // verdict's widener: a >1.5× regression outside the top-5 must
-      // not escape attribution), plus the top-triageN above 1.25×;
-      // hard-capped so a catastrophic round can't spend an hour
-      // isolating (the cap itself is reported via the triage size)
-      // tolerant parse: a malformed override must not abort the run
-      // AFTER every query has already executed
-      val triageMax = sys.env.get("SPARK_GRAFT_BENCH_TRIAGE_MAX")
-        .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(20)
-      val ranked = timings.toSeq.flatMap { case (n, cur) =>
-        prevQ.get(n).map(p => (n, cur, p, (cur / calib) / (p / prevCalib)))
-      }.filter(_._4 > 1.25).sortBy(-_._4)
-      val movers = ranked.zipWithIndex
-        .filter { case (m, i) => m._4 > 1.5 || i < triageN }
-        .map(_._1).take(triageMax)
-      movers.foreach { case (n, cur, p, ratio) =>
-        try {
-          exec(n) // isolated warm
-          val ts = (1 to Reps).map { _ =>
-            val t0 = System.nanoTime(); exec(n)
-            (System.nanoTime() - t0) / 1e9
-          }.sorted
-          triage(n) = (cur, ts(ts.size / 2), p, ratio)
-        } catch { case _: Throwable => () }
-      }
-    }
-    val tj = triage.map { case (k, (inRun, iso, p, r)) =>
-      s"""${js(k)}:{"in_run":$inRun,"isolated":$iso,"prev":$p,"norm_ratio":${math.rint(r * 1000) / 1000}}"""
-    }.mkString("{", ",", "}")
-
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reps":$rs,"errors":$es,"n_ok":${timings.size},"n_err":${errors.size},"passes":$Reps,"calib_s":$calib,"triage":$tj,"sf":${js(sfDir)}}"""
-    println(line)
-    // The driver keeps only a short tail of sbt stdout, which truncated
-    // 70/103 per-query timings out of the round-5 artifact. The full
-    // line is therefore also written to a repo-tracked file so every
-    // query's per-rep numbers survive verbatim.
+    // The full record (~25 KB at 283 queries × per-rep arrays) goes to
+    // the file only; stdout carries the totals, small enough to survive
+    // any log tail.
+    val record = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reps":$rs,"errors":$es,"n_ok":${timings.size},"n_err":${errors.size},"passes":$Reps,"calib_s":$calib,"sf":${js(sfDir)}}"""
     java.nio.file.Files.write(
       java.nio.file.Paths.get(outPath),
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // full CLEAN runs refresh the per-sf triage baseline; subset runs
-    // and full runs that ended with errors must not clobber it (a
-    // partially failed run would silently shrink the comparison map).
-    // The OUTGOING baseline is preserved as bench_baseline_prev_<sf>
-    // first: after a refresh the baseline file is byte-identical to
-    // bench_results.json (ratio 1.000 by construction), so without
-    // the prev snapshot the committed pair carries no round-over-round
-    // signal and a reader must dig the prior baseline out of git (the
-    // r12 verdict did exactly that — finding 3).
-    if (isFull && errors.isEmpty) {
-      val bp = java.nio.file.Paths.get(baselinePath)
-      if (java.nio.file.Files.exists(bp)) {
-        val prevPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE_PREV",
-          s"bench_baseline_prev_$sfTag.json")
-        java.nio.file.Files.copy(bp, java.nio.file.Paths.get(prevPath),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-      java.nio.file.Files.write(bp,
-        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
-    // The driver's round-over-round machinery keeps only a ~2000-char
-    // tail of stdout; the full contract line above is ~25 KB (283
-    // queries × per-rep arrays), so the tail slices into the middle of
-    // it and the parse fails (PERF_r15..r17 all have parsed: null).
-    // Emit a compact totals-only summary as the LAST stdout line —
-    // small enough to always survive the tail — while the full line
-    // (still printed above, and written verbatim to bench_results.json)
-    // remains the per-query record. Measurement methodology unchanged.
+      (record + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(s"""{"metric":"total","value":$total,"unit":"sec","n_ok":${timings.size},"n_err":${errors.size},"passes":$Reps,"calib_s":$calib,"sf":${js(sfDir)},"full_line":${js(outPath)}}""")
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)

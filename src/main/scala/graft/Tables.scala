@@ -33,14 +33,17 @@ object Tables {
     * are normalized here to a real TimestampType; under the UTC
     * session timezone the NTZ cast is exact, and the Long path is
     * exact integer division (no double roundtrip). */
-  def events(s: SparkSession, d: String): DataFrame = {
-    val raw = load(s, d, "events")
-    raw.schema("ts").dataType match {
-      case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => raw
+  def events(s: SparkSession, d: String): DataFrame = normalizeTs(load(s, d, "events"))
+
+  /** `ts` as a real TimestampType, whichever of the raw epoch-nanos
+    * long, TIMESTAMP_NTZ or a timestamp arrived: the one normalize step
+    * of the batch loaders and every streaming events frame. */
+  private[graft] def normalizeTs(df: DataFrame): DataFrame =
+    df.schema("ts").dataType match {
+      case LongType => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+      case TimestampNTZType => df.withColumn("ts", col("ts").cast("timestamp"))
+      case _ => df
     }
-  }
   /** Time-sliced events WITH parquet pushdown. The plain `events`
     * loader rewrites `ts` post-scan, which blocks predicate pushdown
     * on it; here the range predicate is applied to the RAW epoch-nanos
@@ -65,12 +68,9 @@ object Tables {
     } else {
       // TimestampType (or NTZ normalized first — exact under UTC): the
       // range predicate lands on the scan column directly so it pushes.
-      val tsNorm =
-        if (raw.schema("ts").dataType == TimestampNTZType)
-          raw.withColumn("ts", col("ts").cast("timestamp"))
-        else raw
-      val sliced = tsNorm.filter(col("ts") >= lit(startIso).cast("timestamp") &&
-        col("ts") < lit(endIso).cast("timestamp"))
+      val sliced = normalizeTs(raw)
+        .filter(col("ts") >= lit(startIso).cast("timestamp") &&
+          col("ts") < lit(endIso).cast("timestamp"))
       rawTsPred.fold(sliced)(p => sliced.filter(p(unix_micros(col("ts")) * 1000)))
     }
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.expressions.StatColumns
-import graft.operators.TimeSeries.{byDay, dayLabel, quantize, units}
+import graft.operators.TimeSeries.{byDay, centMean, dayLabel, quantize, units}
 
 /** Geo/climate analytics — the reference's derived products
   * re-expressed as distributed plans (SURVEY §2 ops 12-22).
@@ -45,6 +45,13 @@ object Climate {
     * side of every codec lane's cell join. */
   private[graft] def cellLattice(spark: SparkSession): DataFrame =
     spark.range(64).select((col("id") % 8).as("gy"), expr("id div 8").as("gx"))
+
+  /** Every lattice cell with its readings' micro-unit mean `v_us` (null
+    * where a cell has none): the source grid of the raster codec lanes,
+    * each adding its own sentinel and mask columns. */
+  private[graft] def cellMeans(spark: SparkSession, dir: String): DataFrame =
+    cellLattice(spark).join(byCell(Tables.events(spark, dir)).agg(microMean.as("v_us")),
+      Seq("gy", "gx"), "left")
 
   /** The synthetic nodata mask over `(gy, gx)`: (gx·8+gy) mod 7 = 3,
     * ~1/7 of the cells, the same cells on both engines. */
@@ -431,10 +438,8 @@ object Climate {
         sum(when(col("event_type") === "click", col("c"))).as("fs"),
         count(when(col("event_type") === "click", lit(1))).as("fn"))
       .select(col("user_id"),
-        when(col("rn") > 0,
-          col("rs").cast("double") / (col("rn") * lit(100.0))).as("ref_mean"),
-        when(col("fn") > 0,
-          col("fs").cast("double") / (col("fn") * lit(100.0))).as("fcst_mean"))
+        when(col("rn") > 0, centMean(col("rs"), col("rn"))).as("ref_mean"),
+        when(col("fn") > 0, centMean(col("fs"), col("fn"))).as("fcst_mean"))
     ev.filter(col("event_type") === "click")
       .select("event_id", "user_id", "value")
       .join(means, Seq("user_id"), "left")
@@ -477,10 +482,9 @@ object Climate {
     // division each: both engines derive the deltas from identical
     // bits, so no summation-order ulp exists to straddle a quantum
     def means(df: DataFrame, p: String) = df.groupBy(col("user_id"))
-      .agg((sum(floor(col("vmin") * 100 + 0.5).cast("long")).cast("double")
-          / (count(lit(1)) * lit(100.0))).as(s"${p}_min_mean"),
-        (sum(floor(col("vrange") * 100 + 0.5).cast("long")).cast("double")
-          / (count(lit(1)) * lit(100.0))).as(s"${p}_range_mean"))
+      .agg(
+        centMean(sum(TimeSeries.cents(col("vmin"))), count(lit(1))).as(s"${p}_min_mean"),
+        centMean(sum(TimeSeries.cents(col("vrange"))), count(lit(1))).as(s"${p}_range_mean"))
     val deltas = means(fc, "f")
       .join(means(ref, "r"), Seq("user_id"))
       .select(col("user_id"),
@@ -1338,7 +1342,7 @@ object Climate {
         sum(col("bm") * col("bm")).as("s2"))
       .where(col("n") >= 2)
     val sb = st
-      .withColumn("m", col("s1").cast("double") / (col("n") * lit(100.0)))
+      .withColumn("m", centMean(col("s1"), col("n")))
       .withColumn("beta",
         sqrt((col("n") * col("s2") - col("s1") * col("s1")).cast("double")
           / (col("n") * (col("n") - 1)) / lit(1e4)) * lit(GumbelSqrt6Pi))
@@ -1385,8 +1389,7 @@ object Climate {
       .groupBy(col("user_id"),
         datediff(to_date(date_trunc("DAY", col("ts"))), lit("2024-01-01"))
           .as("x"))
-      .agg((cents.cast("double")
-        / (count(lit(1)) * lit(100.0))).as("y"))
+      .agg(centMean(cents, count(lit(1))).as("y"))
     daily.groupBy(col("user_id"))
       .agg(sort_array(collect_list(col("y")), asc = false).as("qs"))
       .select(col("user_id"), size(col("qs")).cast("long").as("n_days"),
@@ -1436,8 +1439,7 @@ object Climate {
       .groupBy(col("user_id"),
         datediff(to_date(date_trunc("DAY", col("ts"))), lit("2024-01-01"))
           .as("x"))
-      .agg((cents.cast("double")
-        / (count(lit(1)) * lit(100.0))).as("y"))
+      .agg(centMean(cents, count(lit(1))).as("y"))
     daily.groupBy(col("user_id"))
       .agg(sort_array(collect_list(struct(col("x"), col("y")))).as("pts"))
       .filter(size(col("pts")) >= 2)
@@ -1560,7 +1562,7 @@ object Climate {
         (max(col("value")) / 10.0).as("tmax"),
         (min(col("value")) / 10.0).as("tmin"),
         (cents.cast("double") / (count(lit(1)) * lit(1000.0))).as("tmean"),
-        (cents.cast("double") / (count(lit(1)) * lit(100.0))).as("prcp"))
+        centMean(cents, count(lit(1))).as("prcp"))
       .withColumn("doy", dayofyear(to_date(col("day"))))
     val bal = daily.join(broadcast(raTbl), Seq("doy"))
       .withColumn("pet",
@@ -1708,7 +1710,7 @@ object Climate {
   private[graft] def snowPackDdmOf(ev: DataFrame): DataFrame = {
     val daily = byDay(ev)
       .agg((cents.cast("double") / (count(lit(1)) * lit(1000.0))).as("tmean"),
-        (cents.cast("double") / (count(lit(1)) * lit(100.0))).as("prcp"))
+        centMean(cents, count(lit(1))).as("prcp"))
     val wSeq = Window.partitionBy(col("user_id")).orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     daily
@@ -2595,7 +2597,7 @@ object Climate {
     * ratio; the rollup is a bounded-group percentile. */
   def recessionConstant(spark: SparkSession, dir: String): DataFrame = {
     val daily = byDay(Tables.events(spark, dir))
-      .agg((cents.cast("double") / (count(lit(1)) * lit(100.0))).as("q"))
+      .agg(centMean(cents, count(lit(1))).as("q"))
     val wOrd = Window.partitionBy(col("user_id")).orderBy(col("day"))
     daily
       .withColumn("q_prev", lag(col("q"), 1).over(wOrd))

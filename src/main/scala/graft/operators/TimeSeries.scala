@@ -66,6 +66,12 @@ object TimeSeries {
     ev.select(col("user_id"), dayX, cents(col("value")).as("yc"))
       .groupBy(col("user_id"), col("x"))
 
+  /** A group's mean reading from its exact cent sum over `n` readings:
+    * the one division of every daily and pooled mean (the oracles'
+    * `centMeanSql`). */
+  private[graft] def centMean(sumCents: Column, n: Column): Column =
+    sumCents.cast("double") / (n * lit(100.0))
+
   /** Readings grouped per (station, day label `day`). */
   private[graft] def byDay(ev: DataFrame): RelationalGroupedDataset =
     ev.groupBy(col("user_id"), dayLabel)
@@ -475,7 +481,7 @@ object TimeSeries {
     * quantized once at 1e-6. */
   def theilSen(spark: SparkSession, dir: String): DataFrame = {
     val daily = dailyCents(Tables.events(spark, dir))
-      .agg((sum(col("yc")).cast("double") / (count(lit(1)) * lit(100.0))).as("y"))
+      .agg(centMean(sum(col("yc")), count(lit(1))).as("y"))
     daily.groupBy(col("user_id"))
       .agg(sort_array(collect_list(struct(col("x"), col("y")))).as("pts"))
       .filter(size(col("pts")) >= 2)
@@ -555,7 +561,7 @@ object TimeSeries {
     * seam for the planted-trend spec. */
   private[graft] def mannKendallOf(ev: DataFrame): DataFrame = {
     val daily = dailyCents(ev)
-      .agg((sum(col("yc")).cast("double") / (count(lit(1)) * lit(100.0))).as("y"))
+      .agg(centMean(sum(col("yc")), count(lit(1))).as("y"))
     daily.groupBy(col("user_id"))
       .agg(sort_array(collect_list(struct(col("x"), col("y")))).as("pts"))
       .filter(size(col("pts")) >= 3)
@@ -599,7 +605,7 @@ object TimeSeries {
 
   private[graft] def seasonalMannKendallOf(ev: DataFrame): DataFrame = {
     val daily = dailyCents(ev)
-      .agg((sum(col("yc")).cast("double") / (count(lit(1)) * lit(100.0))).as("y"))
+      .agg(centMean(sum(col("yc")), count(lit(1))).as("y"))
       .withColumn("season", pmod(col("x"), lit(7L)))
     val per = daily.groupBy(col("user_id"), col("season"))
       .agg(sort_array(collect_list(struct(col("x"), col("y")))).as("pts"))
@@ -640,8 +646,7 @@ object TimeSeries {
     * bit-for-bit; outputs quantized once at 1e-4. */
   def drawdown(spark: SparkSession, dir: String): DataFrame = {
     val daily = byDay(Tables.events(spark, dir))
-      .agg((sum(cents(col("value"))).cast("double")
-        / (count(lit(1)) * lit(100.0))).as("level"))
+      .agg(centMean(sum(cents(col("value"))), count(lit(1))).as("level"))
     val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     daily
@@ -681,7 +686,7 @@ object TimeSeries {
     * seam for the planted alternating/clumped specs. */
   private[graft] def runsTestOf(ev: DataFrame): DataFrame = {
     val daily = dailyCents(ev)
-      .agg((sum(col("yc")).cast("double") / (count(lit(1)) * lit(100.0))).as("y"))
+      .agg(centMean(sum(col("yc")), count(lit(1))).as("y"))
     daily.groupBy(col("user_id"))
       .agg(sort_array(collect_list(struct(col("x"), col("y")))).as("pts"))
       .filter(size(col("pts")) >= 2)
@@ -748,7 +753,7 @@ object TimeSeries {
     * seam for the planted shift/no-shift specs. */
   private[graft] def mannWhitneyOf(ev: DataFrame): DataFrame = {
     val daily = dailyCents(ev)
-      .agg((sum(col("yc")).cast("double") / (count(lit(1)) * lit(100.0))).as("y"))
+      .agg(centMean(sum(col("yc")), count(lit(1))).as("y"))
       .withColumn("a", when(col("x") < 15, 1L).otherwise(0L))
     val wRank = Window.partitionBy(col("user_id")).orderBy(col("y"))
     val wTie = Window.partitionBy(col("user_id"), col("y"))
@@ -799,8 +804,7 @@ object TimeSeries {
     * exact, one final division quantized at 1e-4. */
   def extremeDayFreq(spark: SparkSession, dir: String): DataFrame = {
     val daily = byDay(Tables.events(spark, dir))
-      .agg((sum(cents(col("value"))).cast("double")
-        / (count(lit(1)) * lit(100.0))).as("y"))
+      .agg(centMean(sum(cents(col("value"))), count(lit(1))).as("y"))
     val w = Window.partitionBy(col("user_id"))
     val sorted = array_sort(collect_list(col("y")).over(w))
     daily
@@ -884,8 +888,7 @@ object TimeSeries {
     * the same distribution argument as every rolling op here. */
   def percentileOfRecord(spark: SparkSession, dir: String): DataFrame = {
     val daily = byDay(Tables.events(spark, dir))
-      .agg((sum(cents(col("value"))).cast("double")
-        / (count(lit(1)) * lit(100.0))).as("level"))
+      .agg(centMean(sum(cents(col("value"))), count(lit(1))).as("level"))
     val byVal = Window.partitionBy(col("user_id")).orderBy(col("level"))
     val all = Window.partitionBy(col("user_id"))
     daily
@@ -1290,6 +1293,18 @@ object TimeSeries {
   /** Autocorrelation lags reported by [[autocorr]]. */
   private[graft] val AcfLags = Seq(1, 2, 3)
 
+  /** Each (station, day `x`) row of a daily `sc`/`cnt` table as its
+    * deviation `dev` from the POOLED station mean (all cents / all
+    * observations; see [[autocorr]]). */
+  private def stationDevs(daily: DataFrame): DataFrame = {
+    val stats = daily.groupBy(col("user_id"))
+      .agg(sum(col("sc")).as("scs"), sum(col("cnt")).as("n_obs"))
+      .select(col("user_id"), centMean(col("scs"), col("n_obs")).as("ybar"))
+    daily.join(stats, Seq("user_id"))
+      .select(col("user_id"), col("x"),
+        (centMean(col("sc"), col("cnt")) - col("ybar")).as("dev"))
+  }
+
   /** Per-station AUTOCORRELATION of the daily series at calendar lags
     * 1–3 — the persistence diagnostic behind every forecast-skill
     * claim (an AR(1)-ish station is predictable from yesterday; white
@@ -1316,15 +1331,7 @@ object TimeSeries {
   def autocorr(spark: SparkSession, dir: String): DataFrame = {
     val daily = dailyCents(Tables.events(spark, dir))
       .agg(sum(col("yc")).as("sc"), count(lit(1)).as("cnt"))
-    val stats = daily.groupBy(col("user_id"))
-      .agg(sum(col("sc")).as("scs"), sum(col("cnt")).as("n_obs"))
-      .select(col("user_id"),
-        (col("scs").cast("double") / (col("n_obs") * lit(100.0))).as("ybar"))
-    val dev = daily.join(stats, Seq("user_id"))
-      .select(col("user_id"), col("x"),
-        ((col("sc").cast("double") / (col("cnt") * lit(100.0))) - col("ybar"))
-          .as("dev"))
-      .localCheckpoint()
+    val dev = stationDevs(daily).localCheckpoint()
     val den = dev.groupBy(col("user_id"))
       .agg(sum(units(col("dev") * col("dev"), 8)).as("den_u"),
         count(lit(1)).as("n_days"))
@@ -1497,14 +1504,7 @@ object TimeSeries {
     val daily = dailyCents(ev)
       .agg(sum(col("yc")).as("sc"), count(lit(1)).as("cnt"))
       .localCheckpoint()
-    val stats = daily.groupBy(col("user_id"))
-      .agg(sum(col("sc")).as("scs"), sum(col("cnt")).as("n_obs"))
-      .select(col("user_id"),
-        (col("scs").cast("double") / (col("n_obs") * lit(100.0))).as("ybar"))
-    daily.join(stats, Seq("user_id"))
-      .select(col("user_id"), col("x"),
-        ((col("sc").cast("double") / (col("cnt") * lit(100.0))) - col("ybar"))
-          .as("dev"))
+    stationDevs(daily)
       .withColumn("p", explode(array(PgramPeriods.map { t =>
         struct(lit(t).as("period"),
           element_at(array(pgramCos(t).map(lit): _*),
@@ -1619,19 +1619,11 @@ object TimeSeries {
       .agg(sum(col("sc")).as("rsc"), sum(col("cnt")).as("rcnt"))
       .crossJoin(broadcast(refAll))
       .select(col("x").as("rx"),
-        ((col("rsc").cast("double") / (col("rcnt") * lit(100.0)))
-          - (col("tsc").cast("double") / (col("tcnt") * lit(100.0))))
+        (centMean(col("rsc"), col("rcnt")) - centMean(col("tsc"), col("tcnt")))
           .as("rdev"))
       .withColumn("lag", explode(array(XcorrLags.map(lit): _*)))
       .select((col("rx") + col("lag")).as("xs"), col("lag"), col("rdev"))
-    val stats = daily.groupBy(col("user_id"))
-      .agg(sum(col("sc")).as("scs"), sum(col("cnt")).as("n_obs"))
-      .select(col("user_id"),
-        (col("scs").cast("double") / (col("n_obs") * lit(100.0))).as("ybar"))
-    daily.join(stats, Seq("user_id"))
-      .select(col("user_id"), col("x"),
-        ((col("sc").cast("double") / (col("cnt") * lit(100.0))) - col("ybar"))
-          .as("dev"))
+    stationDevs(daily)
       .join(broadcast(ref), col("x") === col("xs"))
       .groupBy(col("user_id"), col("lag"))
       .agg(count(lit(1)).as("n_pairs"),
@@ -1678,8 +1670,7 @@ object TimeSeries {
     * seam for the exact linear-series spec. */
   private[graft] def holtForecastOf(ev: DataFrame): DataFrame = {
     val daily = dailyCents(ev)
-      .agg((sum(col("yc")).cast("double") / (count(lit(1)) * lit(100.0)))
-        .as("y"))
+      .agg(centMean(sum(col("yc")), count(lit(1))).as("y"))
     daily.groupBy(col("user_id"))
       .agg(sort_array(collect_list(struct(col("x"), col("y")))).as("pts"))
       .filter(size(col("pts")) >= 2)

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Climate.{byCell, cellLattice, microMean, nodata}
+import graft.operators.Climate.{cellMeans, nodata}
 import Grids.{GridCell, RawTile}
 
 /** REAL GRIB edition 1 codec for the binary-drop seam — the other
@@ -223,10 +223,7 @@ object Grib {
     * decode; unpacking is (−2³¹ + (v_us+2³¹))/10⁶ = v_us/1e6, exact
     * in IEEE on both engines. */
   def gridGribDecode(spark: SparkSession, dir: String): DataFrame = {
-    val cells = cellLattice(spark).join(
-      byCell(graft.Tables.events(spark, dir))
-        .agg(microMean.as("v_us")),
-      Seq("gy", "gx"), "left")
+    val cells = cellMeans(spark, dir)
       .withColumn("present",
         !(nodata || col("v_us").isNull ||
           col("v_us") === -2147483648L))

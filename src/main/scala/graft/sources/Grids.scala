@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Climate.{byCell, cellLattice, microMean, nodata}
+import graft.operators.Climate.{byCell, cellMeans, microMean, nodata}
 
 /** Gridded-product ingest lane — the NetCDF→zarr path that ~10 of the
   * reference's ~25 processes run (`ingestor_planetary_process.py:130`
@@ -291,10 +291,7 @@ object Grids {
     // renders rectangular — absent cells are NODATA like the masked
     // ones (a ragged body would, correctly, be quarantined by the
     // parser)
-    val cells = cellLattice(spark).join(
-      byCell(graft.Tables.events(spark, dir))
-        .agg(microMean.as("v_us")),
-      Seq("gy", "gx"), "left")
+    val cells = cellMeans(spark, dir)
       .withColumn("masked",
         nodata || col("v_us").isNull)
     val header = Seq("ncols 8", "nrows 8", "xllcorner -10.0",
@@ -658,10 +655,7 @@ object Grids {
     * malformed quarantine). All arithmetic is exact: micro-unit
     * integers, quarter-degree binary-rational centres. */
   def gridTiffDecode(spark: SparkSession, dir: String): DataFrame = {
-    val cells = cellLattice(spark).join(
-      byCell(graft.Tables.events(spark, dir))
-        .agg(microMean.as("v_us")),
-      Seq("gy", "gx"), "left")
+    val cells = cellMeans(spark, dir)
       .withColumn("s32",
         when(nodata || col("v_us").isNull,
           lit(Int.MinValue.toLong)).otherwise(col("v_us")))

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Climate.{byCell, cellLattice, microMean, nodata}
+import graft.operators.Climate.{cellMeans, nodata}
 import Grids.{GridCell, RawTile}
 
 /** REAL NetCDF classic codec for the binary-drop seam — the format
@@ -317,10 +317,7 @@ object NetCdf {
     val lons = Array.tabulate(8)(j => -9.875 + 0.25 * j)
     val prefixHex = encodeGridNcPrefix("precip", epochDay, lats, lons)
       .map(b => f"$b%02X").mkString
-    val cells = cellLattice(spark).join(
-      byCell(graft.Tables.events(spark, dir))
-        .agg(microMean.as("v_us")),
-      Seq("gy", "gx"), "left")
+    val cells = cellMeans(spark, dir)
       .withColumn("s32",
         when(nodata || col("v_us").isNull,
           lit(Int.MinValue.toLong)).otherwise(col("v_us")))

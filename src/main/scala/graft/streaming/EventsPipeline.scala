@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.Tables.normalizeTs
 import graft.operators.TimeSeries.quantize
 import graft.sources.Catalog
 
@@ -34,15 +35,6 @@ object EventsPipeline {
     StructField("event_type", StringType),
     StructField("value", DoubleType),
     StructField("props", StringType)))
-
-  /** Accept the raw epoch-nanos long (legacy NANOS files read via
-    * `nanosAsLong`), TIMESTAMP_NTZ, or a real timestamp. */
-  private def normalizeTs(df: DataFrame): DataFrame =
-    df.schema("ts").dataType match {
-      case LongType => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case TimestampNTZType => df.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => df
-    }
 
   /** Hourly rollup per collection with a 2-hour watermark: state is
     * bounded to ~2h of open windows per key; late events beyond the

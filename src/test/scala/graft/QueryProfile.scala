@@ -53,9 +53,7 @@ object QueryProfile {
         }
     })
 
-    def exec(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
+    def exec(name: String): Unit = Bench.exec(spark, sfDir, name)
 
     args.foreach { name =>
       exec(name) // warm

@@ -120,4 +120,18 @@ class SessionSpec extends SparkSpec {
         s"no skewed AQEShuffleRead in:\n$plan")
     } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
   }
+
+  test("Verify.jsonString: every escaped literal parses back to its input") {
+    val in = (0 until 0x20).map(_.toChar).mkString + "\"\\ plain é"
+    val back = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(Verify.jsonString(in), classOf[String])
+    assert(back === in)
+  }
+
+  test("Verify.only: one subset rule for SPARK_GRAFT_ONLY, unset keeps all") {
+    val some = Verify.only(Some("a, b,,"))
+    assert(Seq("a", "b", "c", "", " a").filter(some) === Seq("a", "b"))
+    val names = SparkEntry.queries.keys.toSeq
+    assert(names.filter(Verify.only(None)) === names)
+  }
 }
